@@ -8,6 +8,8 @@ reproduces.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -214,3 +216,23 @@ def run_timestamp(run_ts: str | None = None) -> Column:
     gate inject a constant; live production omits it.
     """
     return F.to_timestamp(F.lit(run_ts)) if run_ts else F.current_timestamp()
+
+
+# ---------------------------------------------------------------------------
+# Higher-order function helpers
+# ---------------------------------------------------------------------------
+
+
+def bind(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row.
+
+    Spark evaluates an expression that sits inside a higher-order
+    function's lambda once per array element, and subexpression
+    elimination does not reach into lambda bodies. A per-row input
+    (a tokenized or normalized text) read inside a ``transform``
+    lambda is therefore recomputed for every element. ``bind`` passes
+    it in as a lambda variable instead — ``transform(array(value),
+    body)[0]`` — so it is computed once and ``body`` reads the
+    variable. Null ``value`` reaches ``body`` as null, exactly as an
+    inline ``body(value)`` would see it."""
+    return F.transform(F.array(value), body)[0]

@@ -74,10 +74,18 @@ def skew_guarded_self_pairs(
     aliased sides ``a``/``b``; ``ordered=True`` keeps ``a.id < b.id``
     (each unordered pair once), ``False`` keeps ``a.id != b.id``
     (both directions).
+
+    Raises ``ValueError`` naming the conf for ``saltBuckets < 1``
+    (``pmod(..., 0)`` is null and would drop every hot pair) or
+    ``hotGroupCap < 0``; a cap of 0 is legal and salts every group.
     """
     spark = base.sparkSession
     cap = int(spark.conf.get(PAIR_HOT_CAP_CONF, "100000"))
     k = int(spark.conf.get(PAIR_SALT_CONF, "32"))
+    if k < 1:
+        raise ValueError(f"{PAIR_SALT_CONF} must be >= 1, got {k}")
+    if cap < 0:
+        raise ValueError(f"{PAIR_HOT_CAP_CONF} must be >= 0, got {cap}")
     ck = base.localCheckpoint()
     hot = F.broadcast(
         ck.groupBy(F.col(group_col).alias("_hg"))

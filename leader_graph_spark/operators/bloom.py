@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from leader_graph_spark.functions.scalar import bind
+
 
 def _pos_sql(key_sql: str, i: int, m_bits: int) -> str:
     """SQL for bit position i of a key: xxhash64(key, i) mod m. The
@@ -78,10 +80,16 @@ def bloom_build(
             F.collect_list(F.struct(F.col("word_idx"), F.col("bits")))
         ).alias("wm")
     ).select(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(n_words - 1)),
-            lambda i: F.coalesce(
-                F.element_at("wm", i.cast("long")), F.lit(0).cast("long")
+        # The optimizer folds this projection into the aggregate, so an
+        # inline ``wm`` would re-run map_from_entries for every word;
+        # bind the map once per row instead.
+        bind(
+            F.col("wm"),
+            lambda wm: F.transform(
+                F.sequence(F.lit(0), F.lit(n_words - 1)),
+                lambda i: F.coalesce(
+                    F.element_at(wm, i.cast("long")), F.lit(0).cast("long")
+                ),
             ),
         ).alias("bitmap")
     )

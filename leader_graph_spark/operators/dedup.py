@@ -20,9 +20,12 @@ Scale design:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from leader_graph_spark.functions.scalar import bind
 from leader_graph_spark.graph.algorithms import _release
 from leader_graph_spark.sources.tables import fan_out
 
@@ -52,15 +55,32 @@ def tokens(text: Column | str) -> Column:
 
 def shingle_array(text_col: Column | str, n: int = 3) -> Column:
     """All n-word shingles of a text as an array column (JVM-side HOFs,
-    no explode)."""
-    toks = tokens(text_col)
-    count = F.size(toks) - F.lit(n - 1)
-    return F.when(
-        count >= 1,
-        F.transform(
-            F.sequence(F.lit(1), count),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
+    no explode).
+
+    Bind per-row inputs outside the lambda: the token array is bound
+    once per row (:func:`~leader_graph_spark.functions.scalar.bind`)
+    and the ``transform`` lambda slices the bound variable. Read
+    inline, ``split(trim(lower(text)))`` would re-run once per shingle
+    — O(L²) per document, because subexpression elimination does not
+    reach into lambda bodies. Measured on 4 cores (executor CPU of the
+    distinct shingle rows, median of 5 warm runs): 0.47 s → 0.08 s on
+    500 documents and 4.5 s → 0.35 s on 5 000; the
+    ``minhash_near_dup_docs`` query 1.15 s → 0.34 s and 9.2 s → 1.65 s."""
+    return bind(
+        tokens(text_col),
+        lambda toks: _windows(
+            F.size(toks), n, lambda i: F.array_join(F.slice(toks, i, n), " ")
         ),
+    )
+
+
+def _windows(length: Column, n: int, window: Callable[[Column], Column]) -> Column:
+    """``window(i)`` for every start ``i`` of an n-wide window over
+    ``length`` items; empty when there are fewer than n items or the
+    length is null."""
+    count = length - F.lit(n - 1)
+    return F.when(
+        count >= 1, F.transform(F.sequence(F.lit(1), count), window)
     ).otherwise(F.array().cast("array<string>"))
 
 
@@ -131,7 +151,14 @@ def minhash_signatures(
     (one hash instead of k); an instr/substr digit-extraction variant
     of the base value was ~35% slower than either — ``conv`` is the
     fast hex→int path. The DuckDB oracle (no ``conv``) reproduces the
-    identical value with instr arithmetic (verified equal)."""
+    identical value with instr arithmetic (verified equal).
+
+    The k ``min()`` aggregates already share ONE md5 per shingle:
+    subexpression elimination (which does reach aggregate inputs, unlike
+    lambda bodies) computes ``v`` once. Hoisting the md5 into a
+    projection before the aggregate measured no change (executor CPU
+    0.12-0.21 s either way on 500 documents, 0.67-0.74 s on 5 000) —
+    do not retry it."""
     v = F.conv(F.substring(F.md5("shingle"), 1, MINHASH_HEX_CHARS), 16, 10).cast("long")
     aggs = [
         F.min((F.lit(a) * v + F.lit(b)) % MINHASH_PRIME).alias(f"s{s}")
@@ -1387,15 +1414,14 @@ def char_shingle_rows(
     are the standard CJK-safe alternative, cf. CCNet/CC100 pipelines).
     Same JVM-side HOF construction as :func:`shingle_array` (sequence →
     substring, array_distinct in-row, no UDF, no pre-explode
-    shuffle)."""
-    norm = normalized(text_col)
-    count = F.length(norm) - F.lit(n - 1)
-    arr = F.when(
-        count >= 1,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), count), lambda i: norm.substr(i, F.lit(n))
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return df.select(F.col(id_col), F.explode(arr).alias("shingle"))
+    shuffle), and the same rule: bind per-row inputs outside the
+    lambda. The normalized text (a ``regexp_replace``) is bound once
+    per row; read inline it re-ran once per character window.
+    Measured on 4 cores, 12-char windows (executor CPU, median of 5
+    warm runs): 2.3 s → 0.27 s on 500 documents, 18.5 s → 2.2 s on
+    5 000; the ``char_ngram_dup_docs`` query 6.4 s → 1.5 s on 500."""
+    arr = bind(
+        normalized(text_col),
+        lambda s: _windows(F.length(s), n, lambda i: s.substr(i, F.lit(n))),
+    )
+    return df.select(F.col(id_col), F.explode(F.array_distinct(arr)).alias("shingle"))

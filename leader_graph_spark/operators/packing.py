@@ -43,7 +43,10 @@ def pack_by_cumsum(
 ) -> DataFrame:
     """Contiguous packing: documents in ``order_col`` order (default:
     ``id_col``, must be a total order) are assigned
-    ``pack_id = floor(tokens_before / budget)``.
+    ``pack_id = floor(tokens_before / budget)``. The order key must
+    also be non-null: a wide input (columns beyond the packer's own)
+    gets its assignment back through an equi-join on the key, which
+    drops rows whose key is null.
 
     A bare ``Window.orderBy`` prefix sum would move EVERY row to one
     reducer — the classic global-window trap — so this runs the

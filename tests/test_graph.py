@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from leader_graph_spark.graph.algorithms import connected_components, degrees
@@ -1155,6 +1158,42 @@ def test_skew_guarded_pairs_hot_key_split_exact(spark):
     finally:
         spark.conf.unset(PAIR_HOT_CAP_CONF)
         spark.conf.unset(PAIR_SALT_CONF)
+
+
+def _skew_guarded_pairs_with_conf(spark, key, value):
+    from leader_graph_spark.graph.derived import skew_guarded_self_pairs
+
+    df = spark.createDataFrame([("g", 1), ("g", 2)], "g string, id long")
+    spark.conf.set(key, value)
+    try:
+        return skew_guarded_self_pairs(
+            df,
+            group_col="g",
+            id_col="id",
+            emit=lambda: [F.col("a.id").alias("id_1"), F.col("b.id").alias("id_2")],
+        )
+    finally:
+        spark.conf.unset(key)
+
+
+def test_skew_guarded_pairs_rejects_zero_salt_buckets(spark):
+    """saltBuckets < 1 would make pmod(xxhash64(id), 0) null and drop
+    every hot pair silently; it must fail loudly, naming the key."""
+    from leader_graph_spark.graph.derived import PAIR_SALT_CONF
+
+    with pytest.raises(ValueError, match=re.escape(PAIR_SALT_CONF)):
+        _skew_guarded_pairs_with_conf(spark, PAIR_SALT_CONF, "0")
+
+
+def test_skew_guarded_pairs_rejects_negative_hot_cap(spark):
+    """hotGroupCap < 0 is rejected, naming the key; 0 stays legal (it
+    forces every group through the salted branch)."""
+    from leader_graph_spark.graph.derived import PAIR_HOT_CAP_CONF
+
+    with pytest.raises(ValueError, match=re.escape(PAIR_HOT_CAP_CONF)):
+        _skew_guarded_pairs_with_conf(spark, PAIR_HOT_CAP_CONF, "-1")
+    out = _skew_guarded_pairs_with_conf(spark, PAIR_HOT_CAP_CONF, "0")
+    assert [tuple(r) for r in out.collect()] == [(1, 2)]
 
 
 def test_connected_components_driver_and_loop_paths_agree(spark):

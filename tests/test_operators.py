@@ -467,6 +467,26 @@ def test_pack_by_cumsum_straddle_bound(spark):
         assert members[0].pack_offset + sum(m.toks for m in members) >= 100
 
 
+def test_pack_by_cumsum_wide_input_matches_narrow(spark):
+    """Wide input (columns beyond the packer's own) takes the
+    checkpoint-narrow-then-join-back branch; its output must equal the
+    narrow form joined with the extra columns."""
+    from leader_graph_spark.operators.packing import pack_by_cumsum
+
+    wide = spark.createDataFrame(
+        [(i, 30 + (i * 37) % 50, f"text {i}", i % 3) for i in range(100)],
+        "doc_id long, toks long, text string, grp int",
+    )
+    got = pack_by_cumsum(wide, id_col="doc_id", token_col="toks", budget=100)
+    assert got.columns == wide.columns + ["pack_id", "pack_offset"]
+    narrow = pack_by_cumsum(
+        wide.select("doc_id", "toks"), id_col="doc_id", token_col="toks", budget=100
+    )
+    want = narrow.join(wide.select("doc_id", "text", "grp"), "doc_id").select(*got.columns)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert got.count() == 100
+
+
 def test_pack_greedy_never_overflows(spark):
     from leader_graph_spark.operators.packing import pack_greedy_partitions
 
