@@ -398,6 +398,47 @@ def degrees(edges: DataFrame) -> DataFrame:
 
 
 DRIVER_CC_CONF = "spark.leader_graph_spark.cc.driverMaxEdges"
+# Bounds every driver-side graph solve — connected components' union-find
+# and label propagation's rounds: an OBSERVED symmetric edge count at or
+# under it is solved from ONE collect; above it the distributed loop runs.
+# 0 forces the loop. (merge_components' quotient path takes its limit as
+# the driver_quotient_limit argument instead.)
+
+
+def _driver_max_edges(spark) -> int:
+    """The driver-solve edge limit (``DRIVER_CC_CONF``, default 100 000).
+    A value that is not a non-negative integer raises ``ValueError``
+    naming the key, instead of silently picking a branch."""
+    raw = spark.conf.get(DRIVER_CC_CONF, "100000")
+    try:
+        limit = int(raw)
+    except ValueError:
+        raise ValueError(
+            f"{DRIVER_CC_CONF} must be a non-negative integer edge count, got {raw!r}"
+        ) from None
+    if limit < 0:
+        raise ValueError(f"{DRIVER_CC_CONF} must be >= 0, got {limit}")
+    return limit
+
+
+def _driver_frame(spark, schema: T.StructType, columns: list[list]) -> DataFrame:
+    """Hand a driver-side result back to Spark as one Arrow table, one
+    Python list per schema field. The table becomes a ``LocalRelation``:
+    no job, no Python worker, and plan statistics for the joins above
+    it. ``createDataFrame(list)`` would instead parallelize pickled rows
+    behind a ``PipelinedRDD`` — Python workers on first use and a
+    stat-less ``LogicalRDD`` (measured for the LPA handoff on the
+    benchmark's ``loops_extract`` workload, 4 cores: 0.84 s of
+    Python-worker CPU and 0.25 s more action time per pass)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _driver_components(sym: DataFrame) -> DataFrame:
@@ -430,14 +471,51 @@ def _driver_components(sym: DataFrame) -> DataFrame:
         r = find(v)
         m = comp_min.get(r)
         comp_min[r] = v if m is None or v < m else m
+    ids = sorted(members)
+    id_type = sym.schema["src"].dataType
     schema = T.StructType(
-        [
-            T.StructField("id", sym.schema["src"].dataType),
-            T.StructField("component", sym.schema["src"].dataType),
-        ]
+        [T.StructField("id", id_type), T.StructField("component", id_type)]
     )
-    return sym.sparkSession.createDataFrame(
-        [(v, comp_min[find(v)]) for v in sorted(members)], schema
+    return _driver_frame(
+        sym.sparkSession, schema, [ids, [comp_min[find(v)] for v in ids]]
+    )
+
+
+def _driver_label_propagation(sym: DataFrame, rounds: int) -> DataFrame:
+    """``rounds`` synchronous LPA rounds over ONE collect of a
+    provably-small symmetric edge set → (id, community), the exact
+    contract of :func:`label_propagation_fixed`'s loop: the vertices are
+    the distinct ``src`` values; each round a vertex adopts the most
+    frequent label among its neighbors, count ties to the MINIMUM label
+    (ids compare as the column's Spark ordering, as in
+    :func:`_driver_components`), and keeps its label with no neighbor.
+    Null endpoints behave as the loop's equi-joins make them: a null
+    ``src`` votes for no one, a vote for a null ``dst`` is dropped, and
+    the null vertex keeps its null label. Callers guard the collect with
+    an observed row count."""
+    from collections import Counter
+
+    voters: dict = {}
+    for src, dst in sym.collect():
+        voters.setdefault(src, [])
+        if src is not None and dst is not None:
+            voters.setdefault(dst, []).append(src)
+    labels = {v: v for v in voters}
+    for _ in range(rounds):
+        new = {}
+        for v, us in voters.items():
+            if us:
+                counts = Counter(labels[u] for u in us)
+                new[v] = min(counts.items(), key=lambda lc: (-lc[1], lc[0]))[0]
+            else:
+                new[v] = labels[v]
+        labels = new
+    id_type = sym.schema["src"].dataType
+    schema = T.StructType(
+        [T.StructField("id", id_type), T.StructField("community", id_type)]
+    )
+    return _driver_frame(
+        sym.sparkSession, schema, [list(labels), list(labels.values())]
     )
 
 
@@ -478,6 +556,7 @@ def connected_components(
     # magnitude smaller than its producing pipeline; checkpointing it is
     # the only sane plan. (assume_symmetrized: the auto-selector already
     # did this — see connected_components_auto.)
+    driver_max = _driver_max_edges(vertices.sparkSession)
     if assume_symmetrized:
         sym = edges
         if n_edges is None:
@@ -493,9 +572,6 @@ def connected_components(
     # pure scheduling barriers. Labels are bit-identical (min member
     # id, pinned by test + oracle). A 100 TB edge set never collects:
     # the guard reads the OBSERVED count, not an estimate.
-    driver_max = int(
-        vertices.sparkSession.conf.get(DRIVER_CC_CONF, "100000")
-    )
     if n_edges <= driver_max:
         labels = _driver_components(sym)
         if not assume_symmetrized:
@@ -1246,9 +1322,29 @@ def label_propagation_fixed(edges: DataFrame, *, rounds: int) -> DataFrame:
     label state is re-checkpointed per round to keep the plan flat
     (the min-label CC lesson).
 
+    Small graphs are solved on the driver instead: when the observed
+    symmetric edge count is at most ``DRIVER_CC_CONF`` (the limit shared
+    with connected components, default 100 000; 0 forces the loop), the
+    checkpoint is collected once, the rounds run in Python with the same
+    contract (:func:`_driver_label_propagation`) and the labels come back
+    as an Arrow ``LocalRelation`` — the checkpoint's jobs and one
+    collect in place of a checkpoint per round. At small sizes the loop's cost is
+    scheduling, not compute: on the benchmark's ``loops_extract``
+    workload (about 3 000 symmetric edges, 4 cores) the lane went from
+    18 jobs / 25 stages / 85 tasks to 9 / 9 / 21 and the workload's
+    ``cpu_s`` median from 2.68 s to 1.63 s. At the limit (20k vertices,
+    99.8k symmetric edges, 3 rounds, warm session, 4 cores) the driver
+    solve took 0.99–1.26 s against the loop's 1.34–1.55 s, with
+    identical output. Above the limit the loop below runs unchanged.
+
     Returns (id, community).
     """
+    driver_max = _driver_max_edges(edges.sparkSession)
     sym, seen = _checkpoint_observed(symmetrize(edges), n=F.count(F.lit(1)))
+    if seen["n"] <= driver_max:
+        labels = _driver_label_propagation(sym, rounds)
+        _release(sym)
+        return labels
     with _loop_exec_conf(sym.sparkSession, seen["n"]) as scope:
         sym = _loop_partitioned(sym, "src", scope)
         nodes = sym.select(F.col("src").alias("id")).distinct()

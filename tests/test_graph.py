@@ -1209,9 +1209,11 @@ def test_connected_components_driver_and_loop_paths_agree(spark):
         "src string, dst string",
     )
     verts = spark.createDataFrame([(v,) for v in "abcxypqrs" + "z"], "id string")
-    via_driver = {
-        (r.id, r.component) for r in connected_components(verts, edges).collect()
-    }
+    driver_out = connected_components(verts, edges)
+    via_driver = {(r.id, r.component) for r in driver_out.collect()}
+    # the driver labels enter the plan as an Arrow LocalRelation, not a
+    # LogicalRDD over Python workers
+    assert "LocalRelation" in driver_out._jdf.queryExecution().analyzed().toString()
     spark.conf.set(DRIVER_CC_CONF, "0")
     try:
         via_loop = {
@@ -1222,3 +1224,31 @@ def test_connected_components_driver_and_loop_paths_agree(spark):
     assert via_driver == via_loop
     assert ("z", "z") in via_driver  # isolated vertex keeps its own label
     assert {c for i, c in via_driver if i in "pqrs"} == {"p"}
+
+
+@pytest.mark.parametrize("value", ["1e5", "many", "-1"])
+def test_driver_max_edges_rejects_bad_value(spark, value):
+    """The driver-solve limit shared by CC and LPA fails loudly, naming
+    the key, instead of picking a branch from a value it cannot read;
+    0 stays legal (it forces the loop)."""
+    from leader_graph_spark.graph.algorithms import (
+        DRIVER_CC_CONF,
+        connected_components,
+        label_propagation_fixed,
+    )
+
+    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
+    verts = spark.createDataFrame([("a",), ("b",)], "id string")
+    spark.conf.set(DRIVER_CC_CONF, value)
+    try:
+        with pytest.raises(ValueError, match=re.escape(DRIVER_CC_CONF)):
+            connected_components(verts, edges)
+        with pytest.raises(ValueError, match=re.escape(DRIVER_CC_CONF)):
+            label_propagation_fixed(edges, rounds=1)
+        spark.conf.set(DRIVER_CC_CONF, "0")
+        assert {tuple(r) for r in label_propagation_fixed(edges, rounds=1).collect()} == {
+            ("a", "b"),
+            ("b", "a"),
+        }
+    finally:
+        spark.conf.unset(DRIVER_CC_CONF)

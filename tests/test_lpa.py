@@ -1,13 +1,22 @@
 """Fixed-round LPA semantics: two-clique splitting, min-label tie
-order, bipartite round-parity oscillation, and a python model replay."""
+order, bipartite round-parity oscillation, and a python model replay.
+
+Every case runs both branches of ``label_propagation_fixed``: the
+default driver solve (small graphs) and the distributed loop
+(``DRIVER_CC_CONF=0``), and requires them to agree."""
 
 from __future__ import annotations
 
+import random
 from collections import Counter
 
-from pyspark.sql import functions as F  # noqa: F401
+import pytest
+from pyspark.sql import functions as F
 
-from leader_graph_spark.graph.algorithms import label_propagation_fixed, symmetrize
+from leader_graph_spark.graph.algorithms import (
+    DRIVER_CC_CONF,
+    label_propagation_fixed,
+)
 
 
 def _model(edges: list[tuple[str, str]], rounds: int) -> dict[str, str]:
@@ -33,12 +42,28 @@ def _model(edges: list[tuple[str, str]], rounds: int) -> dict[str, str]:
     return labels
 
 
-def _run(spark, edges, rounds):
-    df = spark.createDataFrame(edges, "src string, dst string")
-    return {
-        r.id: r.community
-        for r in label_propagation_fixed(df, rounds=rounds).collect()
-    }
+def _both_branches(spark, df, rounds):
+    """(driver result, loop result) as id -> community dicts."""
+    def run():
+        rows = label_propagation_fixed(df, rounds=rounds).collect()
+        assert len({r.id for r in rows}) == len(rows)  # one row per vertex
+        return {r.id: r.community for r in rows}
+
+    via_driver = run()
+    spark.conf.set(DRIVER_CC_CONF, "0")
+    try:
+        via_loop = run()
+    finally:
+        spark.conf.unset(DRIVER_CC_CONF)
+    return via_driver, via_loop
+
+
+def _run(spark, edges, rounds, ddl="src string, dst string"):
+    via_driver, via_loop = _both_branches(
+        spark, spark.createDataFrame(edges, ddl), rounds
+    )
+    assert via_driver == via_loop, "driver and loop branches disagree"
+    return via_driver
 
 
 def test_two_cliques_with_bridge_split(spark):
@@ -78,8 +103,6 @@ def test_bipartite_round_parity(spark):
 
 
 def test_matches_model_on_random_graph(spark):
-    import random
-
     rng = random.Random(5)
     nodes = [f"n{i:02d}" for i in range(24)]
     edges = list({(a, b) for a, b in (
@@ -87,3 +110,77 @@ def test_matches_model_on_random_graph(spark):
     )})
     for rounds in (1, 3):
         assert _run(spark, edges, rounds) == _model(edges, rounds)
+
+
+def test_bigint_ids(spark):
+    # ids past 2**53 compare exactly on both branches (no float detour)
+    big = 2**62
+    edges = [(big + 3, big + 1), (big + 3, big + 2), (7, big + 3), (7, 5)]
+    for rounds in (1, 2):
+        assert _run(spark, edges, rounds, "src bigint, dst bigint") == _model(
+            edges, rounds
+        )
+
+
+def test_null_endpoint(spark):
+    # A null endpoint is a vertex of its own that keeps its null label;
+    # it casts no vote (null src never equi-joins) and a vote for it is
+    # dropped, so "c", whose only neighbor is null, keeps its own label.
+    edges = [("a", "b"), ("a", None), (None, "c")]
+    got = _run(spark, edges, 1)
+    assert got == {"a": "b", "b": "a", "c": "c", None: None}
+    assert _run(spark, edges, 2) == {"a": "a", "b": "b", "c": "c", None: None}
+
+
+def test_empty_edge_set(spark):
+    df = spark.createDataFrame([], "src bigint, dst bigint")
+    out = label_propagation_fixed(df, rounds=2)
+    assert out.schema.simpleString() == "struct<id:bigint,community:bigint>"
+    assert _both_branches(spark, df, 2) == ({}, {})
+
+
+@pytest.mark.parametrize("rounds", [1, 2, 3, 4])
+def test_count_ties_on_random_graph(spark, rounds):
+    # a sparse random graph (mean degree 2.5): most vertices see several
+    # labels once each, so the min-label tie order decides many picks
+    # (27 of 37 vertices in round 1, still 4 in round 4)
+    rng = random.Random(17)
+    nodes = [f"n{i:02d}" for i in range(40)]
+    edges = list({tuple(sorted(rng.sample(nodes, 2))) for _ in range(50)})
+    assert _run(spark, edges, rounds) == _model(edges, rounds)
+    prev = _model(edges, rounds - 1)
+    nbrs: dict[str, set] = {}
+    for s, d in edges:
+        nbrs.setdefault(s, set()).add(d)
+        nbrs.setdefault(d, set()).add(s)
+    ties = 0
+    for us in nbrs.values():
+        counts = Counter(prev[u] for u in us)
+        top = max(counts.values())
+        ties += sum(c == top for c in counts.values()) > 1
+    assert ties >= 4  # the round really is decided by tie-breaking
+
+
+def test_small_graph_solves_on_driver(spark):
+    """The driver branch submits only the edge checkpoint (under AQE a
+    shuffle-map job for the symmetrizing distinct plus its result job)
+    and one collect, then hands the labels back as an Arrow
+    LocalRelation. Per-round checkpoints (12 jobs on this graph) or a
+    createDataFrame(list) handoff (a LogicalRDD over Python workers)
+    fail here."""
+    sc = spark.sparkContext
+    edges = spark.range(30).select(
+        F.col("id").alias("src"), ((F.col("id") + 1) % 30).alias("dst")
+    )
+    group = "test_lpa_small_graph_jobs"
+    sc.setJobGroup(group, "label_propagation_fixed on a 30-cycle")
+    try:
+        out = label_propagation_fixed(edges, rounds=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 3, jobs
+    plan = out._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+    cycle = [(v, (v + 1) % 30) for v in range(30)]
+    assert {r.id: r.community for r in out.collect()} == _model(cycle, 3)
