@@ -5,6 +5,29 @@ Neo4j and never runs whole-graph analytics; at 100 TB the analytical
 equivalents are DataFrame algorithms. GraphFrames is not available in
 this environment, so the algorithms are implemented directly on the
 edge DataFrame (the same shapes GraphFrames compiles to).
+
+Loop contract. Every iterative algorithm here, and ``Pregel.run`` and
+``DFGraph.bfs`` in :mod:`graph.frames`, runs inside one :class:`_Loop`,
+which owns the whole kit; no loop body checkpoints or releases a state
+itself (``tests/test_loop_lint.py`` fails when one does):
+
+- The loop input is checkpointed ONCE, with its row count observed on
+  the same job. Left lazy, every round re-executes the pipeline that
+  produced it (for near-dup graphs the whole MinHash candidate join,
+  measured at 4-5× of the query's cost at sf0.1).
+- That count sizes the static-execution scope (:class:`_loop_exec_conf`)
+  and, inside an active scope, gates a re-checkpoint of the static join
+  side partitioned and sorted by the round key.
+- Every round state is an eager ``localCheckpoint``, so lineage is
+  truncated and the plan stays flat over any number of rounds.
+  Convergence probes ride the checkpoint's own job as observed
+  aggregates: one driver action per round, probe included (measured:
+  the CC round job count halved).
+- A frontier-sized join side takes a broadcast hint only when an
+  observed count proves it small.
+- A superseded state is released only after its successor has
+  materialized, and every state the result does not reference is
+  released when the loop exits.
 """
 
 from __future__ import annotations
@@ -141,14 +164,10 @@ def _is_memory_starvation(exc: Exception) -> bool:
 
 def _checkpoint_observed(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
     """Eagerly ``localCheckpoint`` with observation metrics riding the
-    SAME job. Iterative loops need a per-round convergence probe; run
-    as a separate ``count()``/``first()`` it doubles the driver actions
-    per round — and each action is a full scheduling barrier on a real
-    cluster, the latency floor of every loop-style query. ``observe``
-    aggregates are computed inline by the checkpoint's own job, so the
-    probe is free: one action per round, probe included (measured: CC
-    round job count halved; the bench ledger's ``jobs`` column pins
-    it).
+    SAME job (no ``aggs``: a plain checkpoint and an empty dict). Run
+    as a separate ``count()``/``first()`` a probe doubles the driver
+    actions per round — and each action is a full scheduling barrier on
+    a real cluster, the latency floor of every loop-style query.
 
     Memory-starvation recovery (round 10): a default-level checkpoint
     that DIES of execution starvation (``UNABLE_TO_ACQUIRE_MEMORY`` /
@@ -162,13 +181,17 @@ def _checkpoint_observed(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
     ContextCleaner drop the failed attempt's partial blocks before the
     retry."""
     spark = df.sparkSession
-    obs = Observation()
-    observed = df.observe(obs, *[expr.alias(name) for name, expr in aggs.items()])
-    level = _ckpt_level(spark)
-    if level is not None:
-        return observed.localCheckpoint(eager=True, storageLevel=level), obs.get
+
+    def attempt():
+        obs = Observation()
+        observed = df.observe(obs, *[e.alias(n) for n, e in aggs.items()]) if aggs else df
+        out = observed.localCheckpoint(eager=True, storageLevel=_ckpt_level(spark))
+        return out, obs.get if aggs else {}
+
+    if _ckpt_level(spark) is not None:
+        return attempt()
     try:
-        out = observed.localCheckpoint()
+        out, seen = attempt()
     except Exception as exc:  # noqa: BLE001 — filtered to starvation below
         if not _is_memory_starvation(exc):
             raise
@@ -185,18 +208,12 @@ def _checkpoint_observed(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
             spark._jvm.System.gc()  # drop the failed attempt's partial blocks
         except Exception:  # noqa: BLE001 — best-effort nudge only
             pass
-        obs2 = Observation()
-        observed2 = df.observe(obs2, *[expr.alias(name) for name, expr in aggs.items()])
-        return (
-            observed2.localCheckpoint(eager=True, storageLevel=_ckpt_level(spark)),
-            obs2.get,
-        )
+        return attempt()
     # default-level state materialized: measure it against the storage
     # budget; if it crowds execution out, auto-engage the serialized
     # level for the rest of the session AND swap in a serialized
     # conversion of this very state
-    out = _maybe_auto_serialize(spark, out) or out
-    return out, obs.get
+    return _maybe_auto_serialize(spark, out) or out, seen
 
 
 def _release(*dfs: DataFrame | None) -> None:
@@ -237,6 +254,28 @@ def _release(*dfs: DataFrame | None) -> None:
 
 
 STATIC_LOOP_CONF = "spark.leader_graph_spark.loop.staticMaxRows"
+PARTITIONED_MIN_CONF = "spark.leader_graph_spark.loop.partitionedMinRows"
+BCAST_FRONTIER_CONF = "spark.leader_graph_spark.loop.broadcastFrontierMaxRows"
+DRIVER_CC_CONF = "spark.leader_graph_spark.cc.driverMaxEdges"
+# Bounds every driver-side graph solve — connected components' union-find
+# and label propagation's rounds: an OBSERVED symmetric edge count at or
+# under it is solved from ONE collect; above it the distributed loop runs.
+# 0 forces the loop. (merge_components' quotient path takes its limit as
+# the driver_quotient_limit argument instead.)
+
+
+def _conf_int(spark, key: str, default: int, minimum: int) -> int:
+    """Integer session conf ``key`` (``default`` when unset). A value
+    that is not an integer ``>= minimum`` raises ``ValueError`` naming
+    the key, instead of silently picking a branch."""
+    raw = spark.conf.get(key, str(default))
+    try:
+        value = int(raw)
+    except (TypeError, ValueError):
+        raise ValueError(f"{key} must be an integer >= {minimum}, got {raw!r}") from None
+    if value < minimum:
+        raise ValueError(f"{key} must be >= {minimum}, got {value}")
+    return value
 
 
 class _loop_exec_conf:
@@ -284,8 +323,7 @@ class _loop_exec_conf:
 
     def __init__(self, spark, n_rows: int):
         self.spark = spark
-        conf = spark.conf
-        self.active = n_rows < int(conf.get(STATIC_LOOP_CONF, "4000000"))
+        self.active = n_rows < _conf_int(spark, STATIC_LOOP_CONF, 4_000_000, 0)
         self.n_rows = n_rows
         self.saved: dict[str, str] = {}
 
@@ -308,68 +346,107 @@ class _loop_exec_conf:
         return False
 
 
-def _loop_partitioned(
-    df: DataFrame, key: str, scope: "_loop_exec_conf", *, release: bool = True
-) -> DataFrame:
-    """Inside an ACTIVE static loop scope, re-checkpoint a STATIC
-    per-round join side hash-partitioned and sorted by the round join
-    key (r10 optimization, guide §2.4): ``localCheckpoint`` preserves
-    ``outputPartitioning``/``outputOrdering``, so every subsequent
-    round's sort-merge join elides both the exchange and the sort on
-    this side — one up-front shuffle replaces O(rounds) of them
-    (measured on ``personalized_pagerank_regions``: the membership
-    edge set re-exchanged in all 8 iterations). No-op outside static
-    mode: under AQE the coalesced partition counts are dynamic and a
-    pinned layout cannot be proven to match."""
-    if not scope.active:
-        return df
-    min_rows = int(df.sparkSession.conf.get(PARTITIONED_MIN_CONF, "10000"))
-    if scope.n_rows < min_rows:
-        # The up-front repartition+sort+checkpoint is one extra job;
-        # below ~10k rows the per-round exchange it would elide is
-        # scheduling noise and the job is a measured net loss
-        # (dedup_canonical_docs sf0.1: +0.7 s wall, −0 shuffle bytes
-        # — its dup-pair edge set is tiny while the lane's bytes live
-        # upstream in LSH candidate generation). At/above the gate
-        # the elision wins on bytes AND wall (pagerank_membership
-        # sf0.1, 15k edges × 8 rounds: shuffle 9.7 → 1.1 MB, wall
-        # 1.68 → 1.47 s best-of-7).
-        return df
-    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    out = df.repartition(parts, key).sortWithinPartitions(key).localCheckpoint()
-    if release:
-        # ``release=False`` when the input checkpoint is owned by the
-        # caller's caller (e.g. connected_components under
-        # assume_symmetrized) — releasing another owner's state would
-        # invalidate frames still referencing it.
-        _release(df)
-    return out
+class _Loop(_loop_exec_conf):
+    """The loop kit of the module docstring, as one context manager.
 
+    ``with _Loop(base, key=...) as loop`` reads every loop conf once,
+    before any job; checkpoints ``base`` with its row count observed
+    (``loop.base``, ``loop.n_rows``); opens the static scope sized from that
+    count (``static=False`` keeps the session's settings); and, in an
+    active scope of at least ``PARTITIONED_MIN_CONF`` rows, re-checkpoints
+    the base hash-partitioned and sorted by ``key``. ``localCheckpoint``
+    preserves ``outputPartitioning``/``outputOrdering``, so every round's
+    sort-merge join then skips both the exchange and the sort on that
+    side: one up-front shuffle replaces one per round (measured on
+    ``personalized_pagerank_regions``: the membership edge set was
+    re-exchanged in all 8 iterations; pagerank_membership sf0.1, 15k
+    edges × 8 rounds: shuffle 9.7 → 1.1 MB, wall 1.68 → 1.47 s
+    best-of-7). Below the gate (default 10k rows) the extra job is a
+    measured net loss (dedup_canonical_docs sf0.1: +0.7 s wall, −0
+    shuffle bytes); under AQE a pinned layout cannot be proven to match
+    the coalesced partition counts, so it is never applied there.
+    ``driver=True`` skips scope and layout when ``loop.n_rows`` is at most
+    ``DRIVER_CC_CONF`` (``loop.on_driver``): the caller then solves the
+    collected base on the driver.
 
-PARTITIONED_MIN_CONF = "spark.leader_graph_spark.loop.partitionedMinRows"
+    States live in named slots. ``step(name, df, **probes)``
+    checkpoints ``df`` with ``probes`` observed on the same job (read
+    back from ``loop.seen``), then releases the slot's previous state.
+    Stepping ``"base"`` replaces the loop input. ``keep(*names)`` marks
+    the slots whose final states back the result (a tuple slot name is
+    matched by its first element); every other slot is released on
+    exit. The starvation retry and the automatic switch to serialized
+    checkpoints apply to every step (:func:`_checkpoint_observed`)."""
 
-BCAST_FRONTIER_CONF = "spark.leader_graph_spark.loop.broadcastFrontierMaxRows"
+    def __init__(
+        self,
+        base: DataFrame,
+        *,
+        key: str | None = None,
+        static: bool = True,
+        driver: bool = False,
+    ):
+        spark = base.sparkSession
+        self.static_max = _conf_int(spark, STATIC_LOOP_CONF, 4_000_000, 0)
+        self.partitioned_min = _conf_int(spark, PARTITIONED_MIN_CONF, 10_000, 0)
+        self.bcast_max = _conf_int(spark, BCAST_FRONTIER_CONF, 1_000_000, -1)
+        self.driver_max = _conf_int(spark, DRIVER_CC_CONF, 100_000, 0)
+        self.spark, self.active, self.saved = spark, False, {}
+        self._input, self._key, self._static, self._driver = base, key, static, driver
+        self._states: dict = {}
+        self._kept: set = set()
+        self.seen: dict = {}
 
+    def __enter__(self):
+        self.step("base", self._input, n=F.count(F.lit(1)))
+        self.n_rows = self.seen["n"]
+        self.on_driver = self._driver and self.n_rows <= self.driver_max
+        self.active = self._static and not self.on_driver and self.n_rows < self.static_max
+        super().__enter__()
+        try:
+            if self._key and self.active and self.n_rows >= self.partitioned_min:
+                parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+                self.step(
+                    "base",
+                    self.base.repartition(parts, self._key).sortWithinPartitions(self._key),
+                )
+        except BaseException:
+            self.__exit__(None, None, None)
+            raise
+        return self
 
-def _maybe_broadcast(frontier: DataFrame, n_rows: int) -> DataFrame:
-    """Size-guarded broadcast hint for a loop's per-round FRONTIER side
-    (r10 optimization, guide §2.4/§3.1): checkpointed loop states are
-    ``LogicalRDD`` leaves with no statistics, so Catalyst prices them
-    at ``defaultSizeInBytes`` and NEVER broadcasts them — every round
-    then sort-merge-joins the full static edge table (measured on
-    ``weighted_sssp_copurchase`` at sf0.1: the 18.4 MB symmetrized
-    edge set re-exchanged in all six rounds for frontiers of a few
-    thousand rows). The frontier's exact row count rides the previous
-    round's checkpoint observation (zero extra actions), so the hint
-    engages only when the frontier is PROVABLY at most
-    ``spark.leader_graph_spark.loop.broadcastFrontierMaxRows`` rows
-    (default 1M — tens of MB framed, comfortably inside executor
-    memory at any deployment size); a 100 TB frontier of hundreds of
-    millions of vertices stays on the shuffled path unchanged."""
-    limit = int(frontier.sparkSession.conf.get(BCAST_FRONTIER_CONF, "1000000"))
-    if 0 <= n_rows <= limit:
-        return F.broadcast(frontier)
-    return frontier
+    def __exit__(self, *exc):
+        _release(*[
+            df for name, df in self._states.items()
+            if (name[0] if isinstance(name, tuple) else name) not in self._kept
+        ])
+        return super().__exit__(*exc)
+
+    @property
+    def base(self) -> DataFrame:
+        return self._states["base"]
+
+    def step(self, name, df: DataFrame, **probes) -> DataFrame:
+        out, self.seen = _checkpoint_observed(df, **probes)
+        _release(self._states.get(name))
+        self._states[name] = out
+        return out
+
+    def keep(self, *names) -> None:
+        self._kept.update(names)
+
+    def broadcast(self, df: DataFrame, n_rows: int) -> DataFrame:
+        """Broadcast hint for a per-round FRONTIER side whose row count
+        ``n_rows`` is proven by an observation (r10, guide §2.4/§3.1):
+        checkpointed states are ``LogicalRDD`` leaves without statistics,
+        so Catalyst never broadcasts them on its own — every round then
+        sort-merge-joined the full static edge table (measured on
+        ``weighted_sssp_copurchase`` at sf0.1: the 18.4 MB symmetrized
+        edge set re-exchanged in all six rounds for frontiers of a few
+        thousand rows). The hint engages only at most
+        ``BCAST_FRONTIER_CONF`` rows (default 1M — tens of MB framed;
+        -1 disables it), so a 100 TB frontier stays shuffled."""
+        return F.broadcast(df) if 0 <= n_rows <= self.bcast_max else df
 
 
 def symmetrize(edges: DataFrame, *, disjoint_directions: bool = False) -> DataFrame:
@@ -395,30 +472,6 @@ def degrees(edges: DataFrame) -> DataFrame:
     return symmetrize(edges).groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("degree")
     )
-
-
-DRIVER_CC_CONF = "spark.leader_graph_spark.cc.driverMaxEdges"
-# Bounds every driver-side graph solve — connected components' union-find
-# and label propagation's rounds: an OBSERVED symmetric edge count at or
-# under it is solved from ONE collect; above it the distributed loop runs.
-# 0 forces the loop. (merge_components' quotient path takes its limit as
-# the driver_quotient_limit argument instead.)
-
-
-def _driver_max_edges(spark) -> int:
-    """The driver-solve edge limit (``DRIVER_CC_CONF``, default 100 000).
-    A value that is not a non-negative integer raises ``ValueError``
-    naming the key, instead of silently picking a branch."""
-    raw = spark.conf.get(DRIVER_CC_CONF, "100000")
-    try:
-        limit = int(raw)
-    except ValueError:
-        raise ValueError(
-            f"{DRIVER_CC_CONF} must be a non-negative integer edge count, got {raw!r}"
-        ) from None
-    if limit < 0:
-        raise ValueError(f"{DRIVER_CC_CONF} must be >= 0, got {limit}")
-    return limit
 
 
 def _driver_frame(spark, schema: T.StructType, columns: list[list]) -> DataFrame:
@@ -524,15 +577,12 @@ def connected_components(
     edges: DataFrame,
     *,
     max_iter: int = 25,
-    assume_symmetrized: bool = False,
-    n_edges: int | None = None,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation.
 
     Each vertex starts labeled with its own id; every round each vertex
     takes the min of its label and its neighbors' labels; converges in
-    O(graph diameter) rounds. ``localCheckpoint`` truncates lineage each
-    round so plans stay flat. At 100 TB scale the same loop applies
+    O(graph diameter) rounds. At 100 TB scale the same loop applies
     (diameter of social-style graphs is small); for adversarial
     long-path graphs swap in the large-star/small-star variant — the
     per-round primitive (join + min-agg) is identical.
@@ -549,21 +599,6 @@ def connected_components(
     convergence, and the dual-path equality is pinned by
     ``test_connected_components_driver_and_loop_paths_agree``.
     """
-    # Materialize the (small) edge list once: left lazy, every round
-    # re-executes the upstream edge-producing pipeline (for near-dup
-    # graphs that's the whole MinHash candidate join — measured 4-5× of
-    # the query's cost at sf0.1). At 100 TB the edge list is orders of
-    # magnitude smaller than its producing pipeline; checkpointing it is
-    # the only sane plan. (assume_symmetrized: the auto-selector already
-    # did this — see connected_components_auto.)
-    driver_max = _driver_max_edges(vertices.sparkSession)
-    if assume_symmetrized:
-        sym = edges
-        if n_edges is None:
-            n_edges = edges.count()  # checkpointed by the caller — cheap
-    else:
-        sym, seen = _checkpoint_observed(symmetrize(edges), n=F.count(F.lit(1)))
-        n_edges = seen["n"]
     # Size-guarded driver swap (r10, same policy and limit family as
     # merge_components' quotient path): a provably-small edge set is
     # solved by union-find from ONE collect instead of O(diameter)
@@ -572,92 +607,11 @@ def connected_components(
     # pure scheduling barriers. Labels are bit-identical (min member
     # id, pinned by test + oracle). A 100 TB edge set never collects:
     # the guard reads the OBSERVED count, not an estimate.
-    if n_edges <= driver_max:
-        labels = _driver_components(sym)
-        if not assume_symmetrized:
-            _release(sym)
-        return _with_isolated(vertices, labels)
-    with _loop_exec_conf(vertices.sparkSession, n_edges) as scope:
-        own_sym = not assume_symmetrized
-        part = _loop_partitioned(sym, "dst", scope, release=own_sym)
-        if part is not sym:
-            sym, own_sym = part, True
-        state = _active_vertices(sym)
-        labels = state
-        for _ in range(max_iter):
-            # The convergence probe rides the SAME job as the round's
-            # checkpoint (`_changed` is a free column of the round join;
-            # the observed sum is computed inline by the checkpoint
-            # action) — ONE driver action per round, probe included.
-            stepped, seen = _checkpoint_observed(
-                _min_propagation_round(sym, labels, with_changed=True),
-                changed=F.sum(F.col("_changed").cast("long")),
-            )
-            _release(state)
-            state = stepped
-            labels = stepped.select("id", "component")
-            if not seen["changed"]:
-                break
-    if own_sym:
-        _release(sym)
+    with _Loop(symmetrize(edges), key="dst", driver=True) as loop:
+        if loop.on_driver:
+            return _with_isolated(vertices, _driver_components(loop.base))
+        labels = _converged_labels(loop, loop.base, max_iter)
     return _with_isolated(vertices, labels)
-
-
-NARROW_CC_CONF = "spark.leader_graph_spark.cc.narrowLabelMinEdges"
-
-
-def connected_components_auto(
-    vertices: DataFrame,
-    edges: DataFrame,
-    *,
-    max_iter: int = 25,
-    choice: dict | None = None,
-) -> DataFrame:
-    """Config-thresholded selection between the string-label CC and its
-    narrow-label scale twin — the "one call-site change" the SCALE.md
-    narrow-CC addendum promised, now a knob:
-
-    - the symmetrized edge set is checkpointed ONCE with its count
-      observed on the same job (no extra action), then handed to the
-      chosen variant (``assume_symmetrized=True`` — no double
-      materialization);
-    - NARROW is chosen when the ids are strings AND the undirected
-      edge count ≥ ``spark.leader_graph_spark.cc.narrowLabelMinEdges``
-      (session conf, default 10_000_000). Rationale: the narrow twin
-      cuts PER-ROUND label-stream shuffle ~5x (measured at the 10x
-      replica: 3.0 → 0.6 MB/round — SCALE.md round-7), but pays a
-      one-time vertex ranking; below the threshold the rank build
-      costs more than the rounds save, above it the per-round stream
-      dominates (at 100 TB it IS the cost).
-
-    Output is bit-identical either way (equality test-pinned).
-    ``choice`` (optional dict) receives {"variant", "n_edges",
-    "threshold"} — observability/test hook."""
-    conf = vertices.sparkSession.conf
-    threshold = int(conf.get(NARROW_CC_CONF, "10000000"))
-    sym, seen = _checkpoint_observed(symmetrize(edges), n=F.count(F.lit(1)))
-    id_is_string = dict(vertices.dtypes).get("id") == "string"
-    use_narrow = id_is_string and seen["n"] >= threshold
-    if choice is not None:
-        choice.update(
-            variant="narrow" if use_narrow else "string",
-            n_edges=seen["n"],
-            threshold=threshold,
-        )
-    if use_narrow:
-        out = connected_components_narrow(
-            vertices, sym, max_iter=max_iter, assume_symmetrized=True
-        )
-    else:
-        out = connected_components(
-            vertices, sym, max_iter=max_iter, assume_symmetrized=True,
-            n_edges=seen["n"],
-        )
-    # Both variants end on a checkpointed label state; the returned plan
-    # no longer references the symmetrized edge set — release it here
-    # (this function owns it when assume_symmetrized was delegated).
-    _release(sym)
-    return out
 
 
 def connected_components_narrow(
@@ -665,7 +619,6 @@ def connected_components_narrow(
     edges: DataFrame,
     *,
     max_iter: int = 25,
-    assume_symmetrized: bool = False,
 ) -> DataFrame:
     """Narrow-label scale twin of :func:`connected_components`: the
     32-char md5 vertex ids this engine uses as content keys make every
@@ -676,43 +629,24 @@ def connected_components_narrow(
     to id labels in one final join. Output is bit-identical to the
     string form (same min-reachable-id labeling; equality
     test-pinned), with per-round shuffle width cut ~5x (measured in
-    bytes at the 10x replica: 3.0 -> 0.6 MB/round — SCALE.md round-7).
-
-    ``assume_symmetrized``: the caller (``connected_components_auto``)
-    already holds a checkpointed undirected edge set — skip the
-    symmetrize+checkpoint."""
-    sym = edges if assume_symmetrized else symmetrize(edges).localCheckpoint()
-    all_ids = (
-        vertices.select("id")
-        .unionByName(sym.select(F.col("src").alias("id")))
-        .distinct()
-    )
-    ranked = ranked_vertices(all_ids.select(F.col("id").alias("v")), checkpoint=True)
-    r_src = ranked.select(F.col("v").alias("src"), F.col("rank0").alias("isrc"))
-    r_dst = ranked.select(F.col("v").alias("dst"), F.col("rank0").alias("idst"))
-    int_edges = (
-        sym.join(r_src, "src")
-        .join(r_dst, "dst")
-        .select(F.col("isrc").alias("src"), F.col("idst").alias("dst"))
-        .localCheckpoint()
-    )
-    if not assume_symmetrized:
-        # ranked + int_edges are materialized; the string edge set is
-        # dead from here on (when this function owns it).
-        _release(sym)
-    state = _active_vertices(int_edges)
-    labels = state
-    for _ in range(max_iter):
-        stepped, seen = _checkpoint_observed(
-            _min_propagation_round(int_edges, labels, with_changed=True),
-            changed=F.sum(F.col("_changed").cast("long")),
+    bytes at the 10x replica: 3.0 -> 0.6 MB/round — SCALE.md round-7)."""
+    with _Loop(symmetrize(edges), static=False) as loop:
+        all_ids = (
+            vertices.select("id")
+            .unionByName(loop.base.select(F.col("src").alias("id")))
+            .distinct()
         )
-        _release(state)
-        state = stepped
-        labels = stepped.select("id", "component")
-        if not seen["changed"]:
-            break
-    _release(int_edges)
+        ranked = ranked_vertices(all_ids.select(F.col("id").alias("v")), checkpoint=True)
+        r_src = ranked.select(F.col("v").alias("src"), F.col("rank0").alias("isrc"))
+        r_dst = ranked.select(F.col("v").alias("dst"), F.col("rank0").alias("idst"))
+        # the int edge set replaces the string one as the loop's base
+        int_edges = loop.step(
+            "base",
+            loop.base.join(r_src, "src")
+            .join(r_dst, "dst")
+            .select(F.col("isrc").alias("src"), F.col("idst").alias("dst")),
+        )
+        labels = _converged_labels(loop, int_edges, max_iter)
     # map int ranks back to id labels; isolated vertices label themselves
     comp_name = ranked.select(
         F.col("rank0").alias("component"), F.col("v").alias("component_id")
@@ -728,6 +662,23 @@ def connected_components_narrow(
         .join(named, "id", "left")
         .select("id", F.coalesce("component", F.col("id")).alias("component"))
     )
+
+
+def _converged_labels(loop: _Loop, sym: DataFrame, max_iter: int) -> DataFrame:
+    """Min-label propagation over ``sym`` until no label changes (or
+    ``max_iter`` rounds) — the loop body of both CC variants. The
+    ``changed`` probe is a free column of the round join."""
+    labels = loop.step("labels", _active_vertices(sym))
+    for _ in range(max_iter):
+        labels = loop.step(
+            "labels",
+            _min_propagation_round(sym, labels, with_changed=True),
+            changed=F.sum(F.col("_changed").cast("long")),
+        ).select("id", "component")
+        if not loop.seen["changed"]:
+            break
+    loop.keep("labels")
+    return labels
 
 
 def _active_vertices(sym: DataFrame) -> DataFrame:
@@ -746,7 +697,6 @@ def _active_vertices(sym: DataFrame) -> DataFrame:
         sym.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
-        .localCheckpoint()
     )
 
 
@@ -808,7 +758,6 @@ def connected_components_two_phase(
     value-identical (both are "minimum reachable id"), which the
     recursive-CTE oracle of ``connected_components_membership``
     verifies in full for the registered query."""
-    sym = symmetrize(edges).localCheckpoint()
 
     def canonical(e: DataFrame) -> DataFrame:
         # undirected edge set as (lo, hi), self-loops dropped
@@ -824,17 +773,6 @@ def connected_components_two_phase(
         return e.select(F.col("lo").alias("src"), F.col("hi").alias("dst")).unionByName(
             e.select(F.col("hi").alias("src"), F.col("lo").alias("dst"))
         )
-
-    def ckpt_fingerprint(e: DataFrame):
-        # order-free set fingerprint (bit_xor cannot overflow under
-        # ANSI — a hash SUM can and did), observed inline by the
-        # checkpoint job: one action per round, fingerprint included.
-        out, row = _checkpoint_observed(
-            e,
-            n=F.count(F.lit(1)),
-            h=F.bit_xor(F.xxhash64("lo", "hi")),
-        )
-        return out, (row["n"], row["h"])
 
     def large_star(e: DataFrame) -> DataFrame:
         # per center u: every neighbor v > u connects to
@@ -862,21 +800,23 @@ def connected_components_two_phase(
         )
         return canonical(moved)
 
-    # The edge state shrinks toward one star per component while the
-    # session keeps shuffle.partitions-many tasks per stage; coalescing
-    # the tiny state each round cuts per-round scheduler cost (the
-    # dominant term at local scale — and the per-barrier term a cluster
-    # pays too). 8 partitions is plenty for a state that is orders of
-    # magnitude smaller than the input corpus.
-    e, fp = ckpt_fingerprint(canonical(sym).coalesce(8))
-    _release(sym)
-    for _ in range(max_iter):
-        new_e, nfp = ckpt_fingerprint(small_star(large_star(e)).coalesce(8))
-        _release(e)
-        e = new_e
-        if nfp == fp:
-            break
-        fp = nfp
+    with _Loop(symmetrize(edges), static=False) as loop:
+        # The edge state shrinks toward one star per component while the
+        # session keeps shuffle.partitions-many tasks per stage; coalescing
+        # the tiny state each round cuts per-round scheduler cost (the
+        # dominant term at local scale — and the per-barrier term a cluster
+        # pays too). 8 partitions is plenty for a state that is orders of
+        # magnitude smaller than the input corpus. The order-free set
+        # fingerprint uses bit_xor, which cannot overflow under ANSI (a
+        # hash SUM can and did).
+        fingerprint = dict(n=F.count(F.lit(1)), h=F.bit_xor(F.xxhash64("lo", "hi")))
+        e = loop.step("base", canonical(loop.base).coalesce(8), **fingerprint)
+        for _ in range(max_iter):
+            fp = loop.seen
+            e = loop.step("base", small_star(large_star(e)).coalesce(8), **fingerprint)
+            if loop.seen == fp:
+                break
+        loop.keep("base")
     # converged: stars (leaf, center=min). A component minimum appears
     # only as `hi`'s partner — label every vertex by min neighbor, the
     # center labels itself.
@@ -915,27 +855,20 @@ def min_propagation(
     so halving barriers recovers the pointer-jump's measured win with
     none of its risk; at cluster scale the same trade holds per
     whole-cluster barrier round-trip."""
-    # One-shot edge materialization — see connected_components: without
-    # it each round recomputes the upstream pair-producing pipeline.
     # Rounds run over the ACTIVE subgraph only (see _active_vertices);
     # edge-less vertices join back once at the end. Output is identical
     # to full-vertex propagation — an isolated vertex can neither give
     # nor receive a label — so the unrolled SQL oracle is unchanged.
-    sym, seen = _checkpoint_observed(symmetrize(edges), n=F.count(F.lit(1)))
-    with _loop_exec_conf(sym.sparkSession, seen["n"]) as scope:
-        sym = _loop_partitioned(sym, "dst", scope)
-        state = _active_vertices(sym)
-        labels = state
+    with _Loop(symmetrize(edges), key="dst") as loop:
+        labels = loop.step("labels", _active_vertices(loop.base))
         done = 0
         while done < rounds:
             hops = min(hops_per_checkpoint, rounds - done)
             for _ in range(hops):
-                labels = _min_propagation_round(sym, labels)
-            labels = labels.localCheckpoint()
-            _release(state)
-            state = labels
+                labels = _min_propagation_round(loop.base, labels)
+            labels = loop.step("labels", labels)
             done += hops
-    _release(sym)
+        loop.keep("labels")
     return _with_isolated(vertices, labels)
 
 
@@ -953,34 +886,45 @@ def pagerank_fixed_point(
 
     Per iteration: one join edges⋈ranks (equi on src, co-partitioned
     after the first shuffle) + one aggregation on dst —
-    the same shape GraphX Pregel compiles to. ``localCheckpoint``
-    truncates lineage so the plan stays flat over many rounds.
+    the same shape GraphX Pregel compiles to.
     Returns (id, rank) with rank in micro-units (initial = 1_000_000).
     """
-    # Materialize the edge list (and its derived degree table) once —
-    # left lazy they re-execute their producing pipeline every
-    # iteration (see connected_components). The edge count rides the
-    # checkpoint job (observe) and sizes the static-execution scope.
-    edges, seen = _checkpoint_observed(
-        edges.select("src", "dst"), n=F.count(F.lit(1))
-    )
-    with _loop_exec_conf(edges.sparkSession, seen["n"]) as scope:
-        edges = _loop_partitioned(edges, "src", scope)
-        # Checkpoint the vertex set (r10): left lazy, every round's
-        # new_ranks re-ran the union+distinct over the edge set — two
-        # full edge passes per iteration for a vertex-sized table. The
-        # in-partition sort lets each round's SMJ against contrib skip
-        # the sort as well as the exchange.
+    return _fixed_point_rank(edges, None, iterations, 85)
+
+
+def _fixed_point_rank(
+    edges: DataFrame, sources: DataFrame | None, iterations: int, damping_pct: int
+) -> DataFrame:
+    """The loop of both integer PageRanks: teleport mass lands on every
+    vertex (``sources`` None: 150 000 micro-units, initial rank
+    1 000 000) or only on the ``sources`` seeds (``teleport`` and
+    initial rank scaled by ``is_seed``)."""
+    with _Loop(edges.select("src", "dst"), key="src") as loop:
+        edges = loop.base
         nodes = (
             edges.select("src")
             .unionByName(edges.select(F.col("dst").alias("src")))
             .distinct()
             .select(F.col("src").alias("id"))
-            .sortWithinPartitions("id")
-            .localCheckpoint()
         )
-        outd = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")).localCheckpoint()
-        ranks = nodes.select("id", F.lit(1000000).cast("bigint").alias("rank")).localCheckpoint()
+        if sources is None:
+            teleport, initial = F.lit(150000), F.lit(1000000).cast("bigint")
+        else:
+            nodes = nodes.join(
+                F.broadcast(sources.select(F.col("id"), F.lit(1).alias("_seed"))),
+                "id",
+                "left",
+            ).select("id", F.coalesce("_seed", F.lit(0)).alias("is_seed"))
+            teleport = (F.col("is_seed") * ((100 - damping_pct) * 10000)).cast("bigint")
+            initial = (F.col("is_seed") * 1000000).cast("bigint")
+        # Checkpoint the vertex set (r10): left lazy, every round's
+        # new_ranks re-ran the union+distinct over the edge set — two
+        # full edge passes per iteration for a vertex-sized table. The
+        # in-partition sort lets each round's SMJ against contrib skip
+        # the sort as well as the exchange.
+        nodes = loop.step("nodes", nodes.sortWithinPartitions("id"))
+        outd = loop.step("outd", edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")))
+        ranks = loop.step("ranks", nodes.select("id", initial.alias("rank")))
         for _ in range(iterations):
             contrib = (
                 edges.join(ranks, edges.src == ranks.id)
@@ -988,19 +932,18 @@ def pagerank_fixed_point(
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.sum(F.expr("rank div d")).alias("s"))
             )
-            new_ranks = (
-                nodes.join(contrib, "id", "left")
-                .select(
+            ranks = loop.step(
+                "ranks",
+                nodes.join(contrib, "id", "left").select(
                     "id",
-                    (F.lit(150000) + F.expr("(coalesce(s, CAST(0 AS BIGINT)) * 85) div 100"))
+                    (teleport + F.expr(
+                        f"(coalesce(s, CAST(0 AS BIGINT)) * {damping_pct}) div 100"
+                    ))
                     .cast("bigint")
                     .alias("rank"),
-                )
-                .localCheckpoint()
+                ),
             )
-            _release(ranks)
-            ranks = new_ranks
-    _release(edges, outd, nodes)
+        loop.keep("ranks")
     return ranks
 
 
@@ -1009,46 +952,13 @@ def khop_distances(
 ) -> DataFrame:
     """Multi-source BFS over the undirected view: shortest hop distance
     (≤ ``k``) from ANY source vertex — the "everyone within N hops of
-    X" reachability query of a leadership/social graph.
-
-    Pregel-style frontier expansion, exactly ``k`` fixed rounds (no
-    convergence action, so an unrolled SQL oracle reproduces it): each
-    round joins the current frontier to the edge list (shuffle keyed by
-    vertex id — the BFS shape GraphFrames/GraphX compile to), and an
-    anti-join against the visited set keeps every vertex's FIRST
-    (= minimum) hop count and stops re-expansion, so total work is
-    O(edges within k hops), not O(walks). ``localCheckpoint`` truncates
-    lineage per round. An empty frontier makes remaining rounds no-ops
-    (joins against zero rows), keeping the plan deterministic for the
-    oracle rather than data-dependent.
+    X" reachability query of a leadership/social graph. One merged
+    frontier (:func:`_lane_bfs` with lane ``["id"]``).
 
     Returns (id, dist) for every vertex reachable within k hops;
-    sources themselves are dist 0.
+    sources themselves are dist 0 (``dist`` INT).
     """
-    # One-shot edge materialization — see connected_components.
-    sym, seen = _checkpoint_observed(symmetrize(edges), n=F.count(F.lit(1)))
-    with _loop_exec_conf(sym.sparkSession, seen["n"]) as scope:
-        sym = _loop_partitioned(sym, "src", scope)
-        visited = sources.select("id", F.lit(0).alias("dist")).localCheckpoint()
-        frontier = visited.select("id")
-        prev_frontier: DataFrame | None = None
-        for r in range(1, k + 1):
-            frontier = (
-                sym.join(frontier, sym.src == frontier.id)
-                .select(F.col("dst").alias("id"))
-                .distinct()
-                .join(visited, "id", "left_anti")
-                .localCheckpoint()
-            )
-            _release(prev_frontier)
-            prev_frontier = frontier
-            new_visited = visited.unionByName(
-                frontier.select("id", F.lit(r).alias("dist"))
-            ).localCheckpoint()
-            _release(visited)
-            visited = new_visited
-    _release(sym, prev_frontier)
-    return visited
+    return _lane_bfs(edges, sources.select("id", F.lit(0).alias("dist")), ["id"], k)
 
 
 def multi_source_distances(
@@ -1058,53 +968,62 @@ def multi_source_distances(
     separately — the primitive behind distance-based centralities
     (closeness, harmonic, eccentricity estimates), where
     ``khop_distances``' single merged frontier only answers "distance
-    from ANY source". State and frontier carry (id, pivot) pairs, so
-    per-round work is bounded by |V| x |pivots| rather than walks; the
-    anti-join on BOTH columns keeps each (vertex, pivot) lane's FIRST
-    (= minimum) hop count, exactly the ``khop_distances`` recipe run
-    per pivot in one shared loop. At scale the pivot set is the
-    sampling knob: Eppstein-Wang style centrality estimation keeps
-    |pivots| fixed as V grows, so the state stays a constant multiple
-    of the vertex set.
+    from ANY source". State and frontier carry (id, pivot) pairs
+    (:func:`_lane_bfs` with lane ``["id", "pivot"]``), so per-round work
+    is bounded by |V| x |pivots| rather than walks. At scale the pivot
+    set is the sampling knob: Eppstein-Wang style centrality estimation
+    keeps |pivots| fixed as V grows, so the state stays a constant
+    multiple of the vertex set.
 
     Returns (id, pivot, dist) for every vertex within k hops of each
-    pivot; each pivot itself appears at dist 0.
+    pivot; each pivot itself appears at dist 0 (``dist`` BIGINT).
     """
-    sym, seen = _checkpoint_observed(symmetrize(edges), n=F.count(F.lit(1)))
-    with _loop_exec_conf(sym.sparkSession, seen["n"]) as scope:
-        sym = _loop_partitioned(sym, "src", scope)
-        # dedupe seeds: a pivot id supplied twice (e.g. a dimension
-        # table replicated at a scale twin) would otherwise plant
-        # duplicate (id, pivot) dist-0 lanes that the per-lane
-        # anti-join preserves forever, inflating every count built on
-        # the result (caught by the sf1 replica, where nation rows are
-        # duplicated 10x and n_reached read 14 instead of 5).
-        visited = (
-            pivots.select("id")
-            .distinct()
-            .select(
-                "id", F.col("id").alias("pivot"), F.lit(0).cast("bigint").alias("dist")
-            )
-            .localCheckpoint()
-        )
-        frontier = visited.select("id", "pivot")
-        prev_frontier: DataFrame | None = None
+    # dedupe seeds: a pivot id supplied twice (e.g. a dimension
+    # table replicated at a scale twin) would otherwise plant
+    # duplicate (id, pivot) dist-0 lanes that the per-lane
+    # anti-join preserves forever, inflating every count built on
+    # the result (caught by the sf1 replica, where nation rows are
+    # duplicated 10x and n_reached read 14 instead of 5).
+    seeds = (
+        pivots.select("id")
+        .distinct()
+        .select("id", F.col("id").alias("pivot"), F.lit(0).cast("bigint").alias("dist"))
+    )
+    return _lane_bfs(edges, seeds, ["id", "pivot"], k)
+
+
+def _lane_bfs(edges: DataFrame, seeds: DataFrame, lane: list[str], k: int) -> DataFrame:
+    """Pregel-style frontier expansion over the undirected view, exactly
+    ``k`` fixed rounds (no convergence action, so an unrolled SQL oracle
+    reproduces it). ``seeds`` carries the ``lane`` columns (``id`` first)
+    plus ``dist`` 0, whose type every round keeps. Each round joins the
+    frontier to the edge list (shuffle keyed by vertex id — the BFS
+    shape GraphFrames/GraphX compile to), and an anti-join against the
+    visited set on the whole lane keeps every lane's FIRST (= minimum)
+    hop count and stops re-expansion, so total work is O(edges within k
+    hops), not O(walks). An empty frontier makes remaining rounds no-ops
+    (joins against zero rows), keeping the plan deterministic for the
+    oracle rather than data-dependent."""
+    with _Loop(symmetrize(edges), key="src") as loop:
+        sym = loop.base
+        visited = loop.step("visited", seeds)
+        dist_type = visited.schema["dist"].dataType
+        frontier = visited.select(*lane)
         for r in range(1, k + 1):
-            frontier = (
+            frontier = loop.step(
+                "frontier",
                 sym.join(frontier, sym.src == frontier.id)
-                .select(F.col("dst").alias("id"), "pivot")
+                .select(F.col("dst").alias("id"), *lane[1:])
                 .distinct()
-                .join(visited, ["id", "pivot"], "left_anti")
-                .localCheckpoint()
+                .join(visited, lane, "left_anti"),
             )
-            _release(prev_frontier)
-            prev_frontier = frontier
-            new_visited = visited.unionByName(
-                frontier.select("id", "pivot", F.lit(r).cast("bigint").alias("dist"))
-            ).localCheckpoint()
-            _release(visited)
-            visited = new_visited
-    _release(sym, prev_frontier)
+            visited = loop.step(
+                "visited",
+                visited.unionByName(
+                    frontier.select(*lane, F.lit(r).cast(dist_type).alias("dist"))
+                ),
+            )
+        loop.keep("visited")
     return visited
 
 
@@ -1170,66 +1089,23 @@ def weighted_sssp(
     wants relaxed (symmetrize first for undirected graphs); ``sources``
     carries (id), seeded at dist 0. Unlike BFS, a visited anti-join is
     WRONG here (a later path may be cheaper than the first), so each
-    round relaxes only the DELTA frontier — vertices whose distance
-    improved last round — and folds candidates into the running
-    minimum with :func:`_min_fold` (one tagged-union hash aggregate —
-    value-identical to the full-outer join + ``least`` fold it
-    replaced, at one exchange per round instead of two). Work per
-    round is
-    O(edges incident to improved vertices), the standard delta
-    optimization, and provably equal to all-edge relaxation because
-    min-folding is monotone. ``localCheckpoint`` truncates lineage per
-    round; at 100 TB the round primitive (join keyed by vertex id +
+    round relaxes only the DELTA frontier (:func:`_delta_relax`). At
+    100 TB the round primitive (join keyed by vertex id +
     map-side-combinable min) is the same shuffle shape GraphX/Pregel
     compile SSSP to.
 
     Returns (id, dist) for every vertex reached within ``rounds``
     relaxations; sources themselves are dist 0.
     """
-    sym, seen = _checkpoint_observed(edges, n=F.count(F.lit(1)))
-    with _loop_exec_conf(sym.sparkSession, seen["n"]):
-        # dedupe seeds: duplicate source rows would ride through the
-        # full-outer fold as duplicate per-id rows in every round and
-        # the final result (same hazard multi_source_distances guards).
-        # The seed/improved counts ride the checkpoints' own jobs and
-        # feed the per-round frontier-broadcast guard (zero extra
-        # actions; _maybe_broadcast).
-        dist, sseen = _checkpoint_observed(
-            sources.select("id")
-            .distinct()
-            .select("id", F.lit(0).cast("bigint").alias("dist")),
-            n=F.count(F.lit(1)),
-        )
-        frontier, n_frontier = dist, sseen["n"]
-        prev_state: DataFrame = dist  # superseded once round 1's fold lands
-        for _ in range(rounds):
-            fr = _maybe_broadcast(frontier, n_frontier)
-            relaxed = sym.join(fr, sym.src == fr.id).select(
-                F.col("dst").alias("id"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-            )
-            folded, fseen = _checkpoint_observed(
-                _min_fold(dist, relaxed, "dist"),
-                i=F.sum(F.col("_improved").cast("bigint")),
-            )
-            # the previous round's fold (or the seed state) is dead only
-            # now that this round's fold is materialized; the FINAL fold
-            # backs the returned frame and must stay resident.
-            _release(prev_state)
-            prev_state = folded
-            n_frontier = fseen["i"] or 0
-            dist = folded.select("id", F.col("ndist").alias("dist"))
-            frontier = folded.where(F.col("_improved")).select(
-                "id", F.col("ndist").alias("dist")
-            )
-            # Fixed point: no distance improved, so every remaining
-            # unrolled round is a provable no-op (min-folding is
-            # monotone and idempotent) — same early-exit contract as
-            # kcore_subgraph. The observation made the probe free.
-            if n_frontier == 0:
-                break
-    _release(sym)
-    return dist.select("id", "dist")
+    return _delta_relax(
+        edges,
+        sources,
+        "dist",
+        lambda e: e.select(
+            F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("dist")
+        ),
+        rounds=rounds,
+    )
 
 
 def temporal_earliest_arrival(
@@ -1244,54 +1120,78 @@ def temporal_earliest_arrival(
     source itself was reached cannot transmit). Relaxation per round:
     ``arr'(v) = min(arr(v), min{t : (u,v,t) ∈ contacts, t ≥ arr(u)})``,
     exactly ``rounds`` rounds (bounded-hop earliest arrival — the
-    fixed-round oracle contract of ``weighted_sssp``, whose delta
-    frontier, broadcast-guarded frontier join, early exit and
-    :func:`_min_fold` this reuses; seeds deduped for the same
-    replica-duplication hazard). Scale shape per round: one join keyed
-    by vertex id against the contact list (broadcast-hash while the
-    frontier is provably small) plus one map-side-combined min-fold
-    aggregate — contacts shuffle ONCE up front, the running state is
-    the only per-round stream.
+    fixed-round oracle contract and delta-frontier relaxation of
+    ``weighted_sssp``, :func:`_delta_relax`). Scale shape per round:
+    one join keyed by vertex id against the contact list
+    (broadcast-hash while the frontier is provably small) plus one
+    map-side-combined min-fold aggregate — contacts shuffle ONCE up
+    front (partitioned by ``src``), the running state is the only
+    per-round stream.
 
     Returns (id, arrival) for every vertex reachable time-respectingly
     within ``rounds`` contact hops; seeds themselves are arrival 0.
     """
-    sym, seen = _checkpoint_observed(contacts, n=F.count(F.lit(1)))
-    with _loop_exec_conf(sym.sparkSession, seen["n"]) as scope:
-        sym = _loop_partitioned(sym, "src", scope)
-        arr, sseen = _checkpoint_observed(
-            seeds.select("id")
-            .distinct()
-            .select("id", F.lit(0).cast("bigint").alias("arrival")),
+    return _delta_relax(
+        contacts,
+        seeds,
+        "arrival",
+        lambda e: e.where(F.col("t") >= F.col("arrival")).select(
+            F.col("dst").alias("id"), F.col("t").alias("arrival")
+        ),
+        rounds=rounds,
+        key="src",
+    )
+
+
+def _delta_relax(
+    edges: DataFrame,
+    seeds: DataFrame,
+    col: str,
+    relax,
+    *,
+    rounds: int,
+    key: str | None = None,
+) -> DataFrame:
+    """Delta-frontier min relaxation shared by :func:`weighted_sssp` and
+    :func:`temporal_earliest_arrival`: the running per-vertex minimum
+    ``col`` starts at 0 on the (deduped) seeds; each round ``relax``
+    maps the edges joined to the frontier — the vertices whose value
+    improved last round, broadcast while their observed count is small
+    — to candidate (id, ``col``) rows, and :func:`_min_fold` folds them
+    into the state (one tagged-union hash aggregate — value-identical to
+    the full-outer join + ``least`` fold it replaced, at one exchange
+    per round instead of two). Work per round is O(edges incident to
+    improved vertices), provably equal to all-edge relaxation because
+    min-folding is monotone. A round that improves nothing is a fixed
+    point: every remaining unrolled round is a provable no-op (monotone
+    and idempotent), so the loop stops there. ``key`` partitions the
+    edge side for the round join."""
+    with _Loop(edges, key=key) as loop:
+        # dedupe seeds: duplicate source rows would ride through the
+        # fold as duplicate per-id rows in every round and the final
+        # result (same hazard multi_source_distances guards).
+        state = loop.step(
+            "state",
+            seeds.select("id").distinct().select("id", F.lit(0).cast("bigint").alias(col)),
             n=F.count(F.lit(1)),
         )
-        frontier, n_frontier = arr, sseen["n"]
-        prev_state: DataFrame = arr
+        frontier, n_frontier = state, loop.seen["n"]
         for _ in range(rounds):
-            fr = _maybe_broadcast(frontier, n_frontier)
-            relaxed = (
-                sym.join(fr, sym.src == fr.id)
-                .where(F.col("t") >= F.col("arrival"))
-                .select(F.col("dst").alias("id"), F.col("t").alias("arrival"))
-            )
-            folded, fseen = _checkpoint_observed(
-                _min_fold(arr, relaxed, "arrival"),
+            fr = loop.broadcast(frontier, n_frontier)
+            folded = loop.step(
+                "state",
+                _min_fold(state, relax(loop.base.join(fr, loop.base.src == fr.id)), col),
                 i=F.sum(F.col("_improved").cast("bigint")),
             )
-            _release(prev_state)
-            prev_state = folded
-            n_frontier = fseen["i"] or 0
-            arr = folded.select("id", F.col("narrival").alias("arrival"))
+            n_frontier = loop.seen["i"] or 0
+            state = folded.select("id", F.col("n" + col).alias(col))
             frontier = folded.where(F.col("_improved")).select(
-                "id", F.col("narrival").alias("arrival")
+                "id", F.col("n" + col).alias(col)
             )
-            # Fixed point: nothing improved, so every remaining unrolled
-            # round is a provable no-op (min-folding is monotone and
-            # idempotent — weighted_sssp's early-exit contract).
             if n_frontier == 0:
                 break
-    _release(sym)
-    return arr.select("id", "arrival")
+        loop.keep("state")
+    return state.select("id", col)
 
 
 def label_propagation_fixed(edges: DataFrame, *, rounds: int) -> DataFrame:
@@ -1315,12 +1215,9 @@ def label_propagation_fixed(edges: DataFrame, *, rounds: int) -> DataFrame:
     and a join back onto the label table. The label state is one row
     per vertex with an observed count riding its checkpoint, so the
     label side of the edge join and the pick side of the fold-back
-    join take provably-guarded broadcast hints (``_maybe_broadcast``)
+    join take provably-guarded broadcast hints (``_Loop.broadcast``)
     — with the edge list re-checkpointed partitioned by the round key,
-    no round re-exchanges anything but the two narrow aggregates. The
-    symmetric edge list is materialized once (``localCheckpoint``);
-    label state is re-checkpointed per round to keep the plan flat
-    (the min-label CC lesson).
+    no round re-exchanges anything but the two narrow aggregates.
 
     Small graphs are solved on the driver instead: when the observed
     symmetric edge count is at most ``DRIVER_CC_CONF`` (the limit shared
@@ -1328,8 +1225,8 @@ def label_propagation_fixed(edges: DataFrame, *, rounds: int) -> DataFrame:
     checkpoint is collected once, the rounds run in Python with the same
     contract (:func:`_driver_label_propagation`) and the labels come back
     as an Arrow ``LocalRelation`` — the checkpoint's jobs and one
-    collect in place of a checkpoint per round. At small sizes the loop's cost is
-    scheduling, not compute: on the benchmark's ``loops_extract``
+    collect in place of a checkpoint per round. At small sizes the
+    loop's cost is scheduling, not compute: on the benchmark's ``loops_extract``
     workload (about 3 000 symmetric edges, 4 cores) the lane went from
     18 jobs / 25 stages / 85 tasks to 9 / 9 / 21 and the workload's
     ``cpu_s`` median from 2.68 s to 1.63 s. At the limit (20k vertices,
@@ -1339,22 +1236,18 @@ def label_propagation_fixed(edges: DataFrame, *, rounds: int) -> DataFrame:
 
     Returns (id, community).
     """
-    driver_max = _driver_max_edges(edges.sparkSession)
-    sym, seen = _checkpoint_observed(symmetrize(edges), n=F.count(F.lit(1)))
-    if seen["n"] <= driver_max:
-        labels = _driver_label_propagation(sym, rounds)
-        _release(sym)
-        return labels
-    with _loop_exec_conf(sym.sparkSession, seen["n"]) as scope:
-        sym = _loop_partitioned(sym, "src", scope)
+    with _Loop(symmetrize(edges), key="src", driver=True) as loop:
+        if loop.on_driver:
+            return _driver_label_propagation(loop.base, rounds)
+        sym = loop.base
         nodes = sym.select(F.col("src").alias("id")).distinct()
-        labels, lseen = _checkpoint_observed(
-            nodes.select("id", F.col("id").alias("label")), n=F.count(F.lit(1))
+        labels = loop.step(
+            "labels", nodes.select("id", F.col("id").alias("label")), n=F.count(F.lit(1))
         )
-        n_nodes = lseen["n"]
+        n_nodes = loop.seen["n"]
         for _ in range(rounds):
             cnt = (
-                sym.join(_maybe_broadcast(labels, n_nodes), sym.src == labels.id)
+                sym.join(loop.broadcast(labels, n_nodes), sym.src == labels.id)
                 .groupBy(F.col("dst").alias("nid"), "label")
                 .agg(F.count(F.lit(1)).alias("c"))
             )
@@ -1363,66 +1256,14 @@ def label_propagation_fixed(edges: DataFrame, *, rounds: int) -> DataFrame:
                 .agg(F.min(F.struct((-F.col("c")).alias("nc"), F.col("label"))).alias("m"))
                 .select(F.col("nid").alias("id"), F.col("m.label").alias("new_label"))
             )
-            new_labels = (
-                labels.join(_maybe_broadcast(pick, n_nodes), "id", "left")
-                .select("id", F.coalesce("new_label", "label").alias("label"))
-                .localCheckpoint()
+            labels = loop.step(
+                "labels",
+                labels.join(loop.broadcast(pick, n_nodes), "id", "left").select(
+                    "id", F.coalesce("new_label", "label").alias("label")
+                ),
             )
-            _release(labels)
-            labels = new_labels
-    _release(sym)
+        loop.keep("labels")
     return labels.select("id", F.col("label").alias("community"))
-
-
-def min_propagation_jumped(
-    vertices: DataFrame, edges: DataFrame, *, distance: int
-) -> DataFrame:
-    """Min-label propagation with a POINTER-JUMP accelerator: each of
-    ``distance`` rounds takes the neighbor minimum and then replaces
-    every label by ``least(label, label-of-label)``.
-
-    SOUNDNESS NOTE (round-5 fix): the coverage guarantee comes ONLY
-    from the ``distance`` neighbor-min rounds — exactly the plain
-    :func:`min_propagation` bound. The jump is a pure accelerator: a
-    vertex's label is always the id of some vertex in its own
-    component (propagation invariant), so chasing ``label(label(v))``
-    can only move the label further DOWN toward the component minimum,
-    never outside the component — it may reach convergence in fewer
-    rounds but can never make the result wrong. An earlier version ran
-    only ``⌈log``-ish rounds on the claim that the jump doubles the
-    covered radius (cₖ = 2·(cₖ₋₁+1)); that recurrence is UNSOUND —
-    jumping to the ball-minimum's label adds only that one vertex's
-    ball, not a radius-doubling — and an adversarially ordered path
-    (ids 2-5-4-3-1) splits into two components under it. See
-    ``test_jumped_propagation_adversarial_path``. A provably
-    O(log n)-round alternative is the large-star/small-star algorithm
-    (Kiveris et al., "Connected Components in MapReduce and Beyond"),
-    whose primitive differs; this function keeps the plain-propagation
-    round count and contract: identical to :func:`min_propagation`
-    whenever ``distance`` ≥ the component diameter."""
-    sym, seen = _checkpoint_observed(symmetrize(edges), n=F.count(F.lit(1)))
-    with _loop_exec_conf(sym.sparkSession, seen["n"]):
-        state = _active_vertices(sym)
-        labels = state
-        for _ in range(distance):
-            labels = _min_propagation_round(sym, labels)
-            jump_to = labels.select(
-                F.col("id").alias("_jid"), F.col("component").alias("_jcomp")
-            )
-            labels = (
-                labels.join(jump_to, labels.component == F.col("_jid"), "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("component"), F.coalesce("_jcomp", F.col("component"))
-                    ).alias("component"),
-                )
-                .localCheckpoint()
-            )
-            _release(state)
-            state = labels
-    _release(sym)
-    return _with_isolated(vertices, labels)
 
 
 def kcore_subgraph(
@@ -1446,12 +1287,8 @@ def kcore_subgraph(
 
     Returns (id, degree): surviving vertices with their final in-core
     degree."""
-    sym, seen = _checkpoint_observed(
-        symmetrize(edges, disjoint_directions=disjoint_directions),
-        n=F.count(F.lit(1)),
-    )
-    e, n_edges = sym, seen["n"]
-    with _loop_exec_conf(e.sparkSession, n_edges):
+    with _Loop(symmetrize(edges, disjoint_directions=disjoint_directions)) as loop:
+        e, n_edges = loop.base, loop.n_rows
         for _ in range(rounds):
             # Early exit at the fixed point: peeling is idempotent, so
             # stopping when a round removes nothing returns EXACTLY what
@@ -1459,8 +1296,7 @@ def kcore_subgraph(
             # contract is preserved while the engine pays only the peel
             # depth (measured: the shipped graph converges by round 4 of
             # 8; rounds 5-8 were pure checkpoint+semi-join overhead, ~2x
-            # of the query at 10x scale). The surviving-edge count rides
-            # the checkpoint job itself (observe) — one action per round.
+            # of the query at 10x scale).
             keep = (
                 e.groupBy("src")
                 .agg(F.count(F.lit(1)).alias("deg"))
@@ -1478,29 +1314,30 @@ def kcore_subgraph(
             # it moves (vertex, partial-count) rows, not edges. A
             # 100 TB survivor set past the guard keeps the shuffled
             # path unchanged.
-            kb = _maybe_broadcast(keep, n_edges // max(k, 1))
-            new_e, seen = _checkpoint_observed(
+            kb = loop.broadcast(keep, n_edges // max(k, 1))
+            e = loop.step(
+                "base",
                 e.join(kb, "src", "semi").join(
                     kb.withColumnRenamed("src", "dst"), "dst", "semi"
                 ),
                 n=F.count(F.lit(1)),
             )
-            _release(e)
-            e = new_e
-            n_next = seen["n"]
-            if n_next == n_edges:
+            if loop.seen["n"] == n_edges:
                 break
-            n_edges = n_next
-        # Checkpoint the SMALL per-vertex output and release the
-        # surviving-edge state: returned lazy, the plan pins the
-        # edge-sized block (120M rows at the x100 replica — the
+            n_edges = loop.seen["n"]
+        # Checkpoint the SMALL per-vertex output; the surviving-edge
+        # state is released on exit. Returned lazy, the plan would pin
+        # the edge-sized block (120M rows at the x100 replica — the
         # largest checkpoint in the engine) until the periodic-GC
         # backstop, and back-to-back runs swing ±45% from the
         # accumulated storage (round-8 third-decade battery).
-        out = e.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).cast("bigint").alias("degree")
-        ).localCheckpoint()
-        _release(e)
+        out = loop.step(
+            "out",
+            e.groupBy(F.col("src").alias("id")).agg(
+                F.count(F.lit(1)).cast("bigint").alias("degree")
+            ),
+        )
+        loop.keep("out")
     return out
 
 
@@ -1620,48 +1457,51 @@ def strongly_connected_components(
     function raises rather than returning partial labels.
 
     Returns (id, component) for every vertex (isolated ⇒ own id)."""
-    e_all, seen = _checkpoint_observed(
-        edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct(),
-        n=F.count(F.lit(1)),
-    )
-    with _loop_exec_conf(vertices.sparkSession, seen["n"]):
-        verts = vertices.select("id").distinct()
-        assigned: list[DataFrame] = []
-        remaining, seen = _checkpoint_observed(verts, n=F.count(F.lit(1)))
-        n_remaining = seen["n"]
+    verts = vertices.select("id").distinct()
+    assigned: list[DataFrame] = []
+    with _Loop(
+        edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
+    ) as loop:
+        e_all = loop.base
+        remaining = loop.step("remaining", verts, n=F.count(F.lit(1)))
+        n_remaining = loop.seen["n"]
         for _ in range(max_phases):
             if n_remaining == 0:
                 break
             # -- trim singleton SCCs ---------------------------------------
-            for _ in range(max_rounds):
+            # A round's survivors are the next round's `remaining`, which
+            # the round after still anti-joins against: trim states take
+            # turns in two slots.
+            for r in range(max_rounds):
                 e_r = e_all.join(
                     remaining.withColumnRenamed("id", "src"), "src", "semi"
                 ).join(remaining.withColumnRenamed("id", "dst"), "dst", "semi")
                 has_in = e_r.select(F.col("dst").alias("id")).distinct()
                 has_out = e_r.select(F.col("src").alias("id")).distinct()
-                keep, seen = _checkpoint_observed(
+                keep = loop.step(
+                    ("trim", r % 2),
                     remaining.join(has_in, "id", "semi").join(has_out, "id", "semi"),
                     n=F.count(F.lit(1)),
                 )
-                n_keep = seen["n"]
+                n_keep = loop.seen["n"]
                 if n_keep == n_remaining:
-                    _release(keep)
                     break
-                assigned.append(remaining.join(keep, "id", "anti").select(
-                    "id", F.col("id").alias("component")
-                ).localCheckpoint())
-                _release(remaining)
+                assigned.append(loop.step(
+                    ("assigned", len(assigned)),
+                    remaining.join(keep, "id", "anti").select(
+                        "id", F.col("id").alias("component")
+                    ),
+                ))
                 remaining, n_remaining = keep, n_keep
             if n_remaining == 0:
                 break
             # -- forward min-color to convergence --------------------------
-            e_r = (
+            e_r = loop.step(
+                "e_r",
                 e_all.join(remaining.withColumnRenamed("id", "src"), "src", "semi")
-                .join(remaining.withColumnRenamed("id", "dst"), "dst", "semi")
-                .localCheckpoint()
+                .join(remaining.withColumnRenamed("id", "dst"), "dst", "semi"),
             )
             colors = remaining.select("id", F.col("id").alias("color"))
-            color_state: DataFrame | None = None
             for _ in range(max_rounds):
                 pred_min = (
                     e_r.join(colors, e_r.src == colors.id)
@@ -1671,18 +1511,16 @@ def strongly_connected_components(
                 new_color = F.least(
                     F.col("color"), F.coalesce(F.col("pmin"), F.col("color"))
                 )
-                stepped, seen = _checkpoint_observed(
+                colors = loop.step(
+                    "colors",
                     colors.join(pred_min, "id", "left").select(
                         "id",
                         new_color.alias("color"),
                         (new_color != F.col("color")).alias("_changed"),
                     ),
                     changed=F.sum(F.col("_changed").cast("long")),
-                )
-                _release(color_state)
-                color_state = stepped
-                colors = stepped.select("id", "color")
-                if not seen["changed"]:
+                ).select("id", "color")
+                if not loop.seen["changed"]:
                     break
             else:
                 # Exhausting the round budget mid-propagation would hand MARK
@@ -1694,9 +1532,8 @@ def strongly_connected_components(
                     f"{max_rounds} rounds (diameter exceeds budget)"
                 )
             # -- backward mark within color classes ------------------------
-            marked = colors.where(F.col("id") == F.col("color")).localCheckpoint()
+            marked = loop.step("marked", colors.where(F.col("id") == F.col("color")))
             frontier = marked
-            prev_frontier: DataFrame | None = None
             for _ in range(max_rounds):
                 preds = (
                     e_r.join(frontier, e_r.dst == frontier.id)
@@ -1705,16 +1542,12 @@ def strongly_connected_components(
                 )
                 # stay inside the color class, and only newly marked rows
                 same_color = preds.join(colors, ["id", "color"], "semi")
-                frontier, seen = _checkpoint_observed(
-                    same_color.join(marked, "id", "anti"), n=F.count(F.lit(1))
+                frontier = loop.step(
+                    "frontier", same_color.join(marked, "id", "anti"), n=F.count(F.lit(1))
                 )
-                _release(prev_frontier)
-                prev_frontier = frontier
-                if not seen["n"]:
+                if not loop.seen["n"]:
                     break
-                new_marked = marked.unionByName(frontier).localCheckpoint()
-                _release(marked)
-                marked = new_marked
+                marked = loop.step("marked", marked.unionByName(frontier))
             else:
                 # A frontier still alive after max_rounds means the extracted
                 # set is a PARTIAL SCC; its unmarked members would get a
@@ -1723,24 +1556,20 @@ def strongly_connected_components(
                     f"SCC backward mark did not converge within "
                     f"{max_rounds} rounds (diameter exceeds budget)"
                 )
-            assigned.append(
-                marked.select("id", F.col("color").alias("component")).localCheckpoint()
+            assigned.append(loop.step(
+                ("assigned", len(assigned)),
+                marked.select("id", F.col("color").alias("component")),
+            ))
+            remaining = loop.step(
+                "remaining", remaining.join(marked, "id", "anti"), n=F.count(F.lit(1))
             )
-            new_remaining, seen = _checkpoint_observed(
-                remaining.join(marked, "id", "anti"), n=F.count(F.lit(1))
+            n_remaining = loop.seen["n"]
+        if n_remaining:
+            raise RuntimeError(
+                f"SCC did not converge within {max_phases} phases "
+                f"({n_remaining} vertices unassigned)"
             )
-            _release(remaining, marked, color_state, e_r, prev_frontier)
-            remaining = new_remaining
-            n_remaining = seen["n"]
-    if n_remaining:
-        raise RuntimeError(
-            f"SCC did not converge within {max_phases} phases "
-            f"({n_remaining} vertices unassigned)"
-        )
-    # the assigned outputs are independently checkpointed — the edge set
-    # and the (now empty) remaining state are dead and must not stay
-    # pinned until the periodic-GC backstop fires
-    _release(e_all, remaining)
+        loop.keep("assigned")
     out = assigned[0] if assigned else verts.select(
         "id", F.col("id").alias("component")
     ).limit(0)
@@ -1976,52 +1805,7 @@ def personalized_pagerank_fixed_point(
             f"damping_pct must be a whole percent in [0, 100], got {damping_pct!r} "
             "(the integer fixed-point form keeps the unrolled oracle bit-exact)"
         )
-    edges, seen = _checkpoint_observed(
-        edges.select("src", "dst"), n=F.count(F.lit(1))
-    )
-    with _loop_exec_conf(edges.sparkSession, seen["n"]) as scope:
-        edges = _loop_partitioned(edges, "src", scope)
-        nodes = (
-            edges.select("src")
-            .unionByName(edges.select(F.col("dst").alias("src")))
-            .distinct()
-            .select(F.col("src").alias("id"))
-        )
-        outd = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")).localCheckpoint()
-        seeded = nodes.join(
-            F.broadcast(sources.select(F.col("id"), F.lit(1).alias("_seed"))),
-            "id",
-            "left",
-        ).select("id", F.coalesce("_seed", F.lit(0)).alias("is_seed"))
-        seeded = seeded.sortWithinPartitions("id").localCheckpoint()
-        teleport_micro = (100 - damping_pct) * 10000
-        teleport = (F.col("is_seed") * teleport_micro).cast("bigint")
-        ranks = seeded.select(
-            "id", (F.col("is_seed") * 1000000).cast("bigint").alias("rank")
-        ).localCheckpoint()
-        for _ in range(iterations):
-            contrib = (
-                edges.join(ranks, edges.src == ranks.id)
-                .join(outd, "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum(F.expr("rank div d")).alias("s"))
-            )
-            new_ranks = (
-                seeded.join(contrib, "id", "left")
-                .select(
-                    "id",
-                    (teleport + F.expr(
-                        f"(coalesce(s, CAST(0 AS BIGINT)) * {damping_pct}) div 100"
-                    ))
-                    .cast("bigint")
-                    .alias("rank"),
-                )
-                .localCheckpoint()
-            )
-            _release(ranks)
-            ranks = new_ranks
-    _release(edges, outd, seeded)
-    return ranks
+    return _fixed_point_rank(edges, sources, iterations, damping_pct)
 
 
 def ancestor_closure(parents: DataFrame, *, max_rounds: int) -> DataFrame:
@@ -2036,38 +1820,32 @@ def ancestor_closure(parents: DataFrame, *, max_rounds: int) -> DataFrame:
     ancestor id), accumulating (node, anc, depth) rows. Fixed
     ``max_rounds`` (an empty frontier makes remaining rounds no-op
     joins) so a recursive-CTE oracle reproduces it exactly; chains
-    stop naturally at nodes with no parent row. ``localCheckpoint``
-    truncates lineage per round. Output size is O(nodes × depth) —
+    stop naturally at nodes with no parent row. Output size is O(nodes × depth) —
     bounded for the shallow trees org hierarchies actually are
     (fanout-f forests have depth log_f n).
     """
-    par, seen = _checkpoint_observed(
-        parents.select("child", "parent"), n=F.count(F.lit(1))
-    )
-    with _loop_exec_conf(par.sparkSession, seen["n"]):
-        frontier = par.select(
-            F.col("child").alias("node"),
-            F.col("parent").alias("anc"),
-            F.lit(1).alias("depth"),
-        ).localCheckpoint()
-        closure = frontier
-        prev_frontier: DataFrame | None = None
+    with _Loop(parents.select("child", "parent")) as loop:
+        par = loop.base
+        closure = loop.step(
+            "closure",
+            par.select(
+                F.col("child").alias("node"),
+                F.col("parent").alias("anc"),
+                F.lit(1).alias("depth"),
+            ),
+        )
+        frontier = closure
         for _ in range(2, max_rounds + 1):
-            frontier = (
-                frontier.join(par, frontier.anc == par.child)
-                .select(
+            frontier = loop.step(
+                "frontier",
+                frontier.join(par, frontier.anc == par.child).select(
                     frontier.node,
                     par.parent.alias("anc"),
                     (frontier.depth + 1).alias("depth"),
-                )
-                .localCheckpoint()
+                ),
             )
-            _release(prev_frontier)
-            prev_frontier = frontier
-            new_closure = closure.unionByName(frontier).localCheckpoint()
-            _release(closure)
-            closure = new_closure
-    _release(par, prev_frontier)
+            closure = loop.step("closure", closure.unionByName(frontier))
+        loop.keep("closure")
     return closure
 
 
@@ -2096,23 +1874,17 @@ def pivot_betweenness(
     |V|·|pivots| — plus a (vertex, pivot) partial-sum for σ. Backward
     is k-1 joins of the edge list against two adjacent BFS levels,
     each keyed on vertex id; nothing ever materializes per-path."""
-    sym, seen = _checkpoint_observed(
-        edges.select("src", "dst"), n=F.count(F.lit(1))
-    )
-    with _loop_exec_conf(sym.sparkSession, seen["n"]) as scope:
+    with _Loop(edges.select("src", "dst"), key="src") as loop:
         # r11 (VERDICT r10 next-6): the per-pivot BFS predates the r10
-        # loop kit — apply it wholesale. The static edge side is
-        # re-checkpointed partitioned+sorted by the round key once
-        # (every round's SMJ elides exchange and sort); the frontier /
-        # visited / level slices ride observed counts (zero extra
-        # actions: each count is an Observation on a checkpoint the
-        # loop materializes anyway) and take broadcast hints under the
+        # loop kit — apply it wholesale. The frontier / visited / level
+        # slices ride observed counts and take broadcast hints under the
         # same provable-size guard as SSSP; an empty frontier ends the
         # forward pass (remaining rounds are no-op joins) and caps the
         # backward pass at the deepest REACHED level (shallower levels
         # see identical inputs; deeper ones contribute zero rows).
-        sym = _loop_partitioned(sym, "src", scope)
-        visited, vseen = _checkpoint_observed(
+        sym = loop.base
+        visited = loop.step(
+            "visited",
             pivots.select(
                 "id",
                 F.col("id").alias("pv"),
@@ -2121,37 +1893,33 @@ def pivot_betweenness(
             ),
             n=F.count(F.lit(1)),
         )
-        frontier, n_frontier = visited, vseen["n"]
-        n_visited = vseen["n"]
-        prev_frontier: DataFrame | None = None
+        frontier, n_frontier = visited, loop.seen["n"]
+        n_visited = n_frontier
         last_level = 0
         for r in range(1, k + 1):
             if n_frontier == 0:
                 break
             msgs = sym.join(
-                _maybe_broadcast(frontier, n_frontier), sym.src == frontier.id
+                loop.broadcast(frontier, n_frontier), sym.src == frontier.id
             ).select(F.col("dst").alias("id"), "pv", "sigma")
-            frontier, fseen = _checkpoint_observed(
+            frontier = loop.step(
+                "frontier",
                 msgs.groupBy("id", "pv")
                 .agg(F.sum("sigma").alias("sigma"))
                 .join(
-                    _maybe_broadcast(visited.select("id", "pv"), n_visited),
+                    loop.broadcast(visited.select("id", "pv"), n_visited),
                     ["id", "pv"],
                     "left_anti",
                 )
                 .select("id", "pv", F.lit(r).alias("dist"), "sigma"),
                 n=F.count(F.lit(1)),
             )
-            _release(prev_frontier)
-            prev_frontier = frontier
-            n_frontier = fseen["n"]
+            n_frontier = loop.seen["n"]
             if n_frontier == 0:
                 break
             last_level = r
             n_visited += n_frontier
-            new_visited = visited.unionByName(frontier).localCheckpoint()
-            _release(visited)
-            visited = new_visited
+            visited = loop.step("visited", visited.unionByName(frontier))
 
         # level 1's backward round would only produce the pivots' own
         # (dist 0) dependencies, which betweenness excludes — stop at 2.
@@ -2182,9 +1950,9 @@ def pivot_betweenness(
             # same guard as the forward frontier, so neither join
             # re-exchanges the edge stream.
             contrib = (
-                sym.join(_maybe_broadcast(upper, n_visited), sym.src == upper.u_id)
+                sym.join(loop.broadcast(upper, n_visited), sym.src == upper.u_id)
                 .join(
-                    _maybe_broadcast(lower, n_visited),
+                    loop.broadcast(lower, n_visited),
                     (F.col("dst") == F.col("w_id")) & (F.col("pv") == F.col("w_pv")),
                 )
                 .select(
@@ -2205,15 +1973,12 @@ def pivot_betweenness(
                     F.lit(level - 1).alias("dist"),
                     "delta",
                 )
-                .localCheckpoint()
             )
-            if delta is None:
-                delta = du
-            else:
-                merged = delta.unionByName(du).localCheckpoint()
-                _release(delta, du)
-                delta = merged
-    _release(sym, prev_frontier, visited)
+            delta = loop.step(
+                "delta",
+                du if delta is None else delta.unionByName(loop.step("du", du)),
+            )
+        loop.keep("delta")
     if delta is None:
         # forward pass never reached depth 2 (early exit) — the
         # backward loop had nothing to fold; same empty result the

@@ -200,14 +200,12 @@ class DFGraph:
         join linear in reachable paths instead of exploding on cyclic
         graphs).
 
-        Checkpoint discipline (same as every loop in
-        :mod:`graph.algorithms`): each level's expanded path set is
-        ``localCheckpoint``-ed with the target-hit probe OBSERVED on
-        the same job — one driver action per level, bounded plan depth
-        (without it, level k replans and recomputes the whole k-deep
-        join lineage and the probe doubles the actions — exponential
-        replanning by depth 8 on a real graph)."""
-        from leader_graph_spark.graph.algorithms import _checkpoint_observed, _release
+        Each level's expanded path set is a loop state with the
+        target-hit probe observed on its checkpoint (the loop contract
+        of :mod:`graph.algorithms`); without the per-level checkpoint,
+        level k replans and recomputes the whole k-deep join lineage —
+        exponential replanning by depth 8 on a real graph."""
+        from leader_graph_spark.graph.algorithms import _Loop
 
         to_f = F.expr(toExpr) if isinstance(toExpr, str) else toExpr
         from_f = F.expr(fromExpr) if isinstance(fromExpr, str) else fromExpr
@@ -223,32 +221,30 @@ class DFGraph:
             return hit0.select("from", F.col("from").alias("to"))
         targets = v.filter(to_f).select(F.struct(*v.columns).alias("to"))
         paths = start.select(F.struct(*v.columns).alias("from"))
-        prev_step = None
-        for k in range(1, maxPathLength + 1):
-            prev = "from" if k == 1 else f"v{k - 1}"
-            e = edges.select(F.struct(*edges.columns).alias(f"e{k - 1}"))
-            # expand one hop and left-join the target set in the SAME
-            # checkpointed step: hit rows carry a non-null `to`, the
-            # probe is an observed count on the checkpoint job, and
-            # both the hit branch and the continuation reuse the
-            # materialized step (no double computation).
-            stepped, seen_counts = _checkpoint_observed(
-                paths.join(e, F.col(f"{prev}.id") == F.col(f"e{k - 1}.src")).join(
-                    targets, F.col(f"e{k - 1}.dst") == F.col("to.id"), "left"
-                ),
-                hits=F.count(F.col("to.id")),
-            )
-            _release(prev_step)
-            prev_step = stepped
-            if seen_counts["hits"]:
-                return stepped.where(F.col("to.id").isNotNull())
-            vk = v.select(F.struct(*v.columns).alias(f"v{k}"))
-            paths = stepped.drop("to").join(
-                vk, F.col(f"e{k - 1}.dst") == F.col(f"v{k}.id")
-            )
-            for s in ["from"] + [f"v{i}" for i in range(1, k)]:
-                paths = paths.filter(F.col(f"v{k}.id") != F.col(f"{s}.id"))
-        _release(prev_step)
+        with _Loop(edges, static=False) as loop:
+            for k in range(1, maxPathLength + 1):
+                prev = "from" if k == 1 else f"v{k - 1}"
+                e = loop.base.select(F.struct(*edges.columns).alias(f"e{k - 1}"))
+                # expand one hop and left-join the target set in the SAME
+                # checkpointed step: hit rows carry a non-null `to`, and
+                # both the hit branch and the continuation reuse the
+                # materialized step (no double computation).
+                stepped = loop.step(
+                    "step",
+                    paths.join(e, F.col(f"{prev}.id") == F.col(f"e{k - 1}.src")).join(
+                        targets, F.col(f"e{k - 1}.dst") == F.col("to.id"), "left"
+                    ),
+                    hits=F.count(F.col("to.id")),
+                )
+                if loop.seen["hits"]:
+                    loop.keep("step")
+                    return stepped.where(F.col("to.id").isNotNull())
+                vk = v.select(F.struct(*v.columns).alias(f"v{k}"))
+                paths = stepped.drop("to").join(
+                    vk, F.col(f"e{k - 1}.dst") == F.col(f"v{k}.id")
+                )
+                for s in ["from"] + [f"v{i}" for i in range(1, k)]:
+                    paths = paths.filter(F.col(f"v{k}.id") != F.col(f"{s}.id"))
         return hit0.select("from", F.col("from").alias("to")).limit(0)
 
     # -- algorithm delegates ----------------------------------------------
@@ -412,9 +408,8 @@ class Pregel:
 
     Scale shape: per superstep ONE triplet build (two vertex-struct
     joins) + one union + one hash aggregation + one state join — the
-    identical plan the hand-written loops use — and the round state is
-    ``localCheckpoint``-ed with the superseded round released
-    (the storage discipline of :mod:`graph.algorithms`), so plan depth
+    identical plan the hand-written loops use — and the round state is a
+    loop state of :mod:`graph.algorithms`' loop contract, so plan depth
     and executor storage stay bounded at any iteration count."""
 
     MSG_COL = "_pregel_msg_"
@@ -468,7 +463,7 @@ class Pregel:
         return self
 
     def run(self) -> DataFrame:
-        from leader_graph_spark.graph.algorithms import _release
+        from leader_graph_spark.graph.algorithms import _Loop
 
         if not self._vcols:
             raise ValueError("pregel needs at least one withVertexColumn")
@@ -483,57 +478,62 @@ class Pregel:
         base = self._g.vertices
         updated = {name for name, _, _ in self._vcols}
         passthrough = [c for c in base.columns if c not in updated]
-        v = base.select(
-            *passthrough,
-            *[as_col(init).alias(name) for name, init, _ in self._vcols],
-        ).localCheckpoint()
-        edges = self._g.edges.select(
-            F.col("src").alias("__esrc"),
-            F.col("dst").alias("__edst"),
-            F.struct(*self._g.edges.columns).alias("edge"),
-        ).localCheckpoint()
-
-        for _ in range(self._max_iter):
-            vs = v.select(F.col("id").alias("__vid"), F.struct(*v.columns).alias("__vs"))
-            triplets = (
-                edges.join(vs, F.col("__esrc") == F.col("__vid"))
-                .withColumnRenamed("__vs", "src")
-                .drop("__vid")
-                .join(
-                    v.select(
-                        F.col("id").alias("__vid"), F.struct(*v.columns).alias("dst")
-                    ),
-                    F.col("__edst") == F.col("__vid"),
-                )
-            )
-            parts = [
-                triplets.select(
-                    F.col("src.id").alias("id"), as_col(m).alias(Pregel.MSG_COL)
-                )
-                for m in self._to_src
-            ] + [
-                triplets.select(
-                    F.col("dst.id").alias("id"), as_col(m).alias(Pregel.MSG_COL)
-                )
-                for m in self._to_dst
-            ]
-            msgs = parts[0]
-            for p in parts[1:]:
-                msgs = msgs.unionByName(p)
-            agg = (
-                msgs.where(F.col(Pregel.MSG_COL).isNotNull())
-                .groupBy("id")
-                .agg(as_col(self._agg).alias(Pregel.MSG_COL))
-            )
-            new_v = (
-                v.join(agg, "id", "left")
-                .select(
+        with _Loop(
+            self._g.edges.select(
+                F.col("src").alias("__esrc"),
+                F.col("dst").alias("__edst"),
+                F.struct(*self._g.edges.columns).alias("edge"),
+            ),
+            static=False,
+        ) as loop:
+            edges = loop.base
+            v = loop.step(
+                "v",
+                base.select(
                     *passthrough,
-                    *[as_col(upd).alias(name) for name, _, upd in self._vcols],
-                )
-                .localCheckpoint()
+                    *[as_col(init).alias(name) for name, init, _ in self._vcols],
+                ),
             )
-            _release(v)
-            v = new_v
-        _release(edges)
+            for _ in range(self._max_iter):
+                vs = v.select(
+                    F.col("id").alias("__vid"), F.struct(*v.columns).alias("__vs")
+                )
+                triplets = (
+                    edges.join(vs, F.col("__esrc") == F.col("__vid"))
+                    .withColumnRenamed("__vs", "src")
+                    .drop("__vid")
+                    .join(
+                        v.select(
+                            F.col("id").alias("__vid"), F.struct(*v.columns).alias("dst")
+                        ),
+                        F.col("__edst") == F.col("__vid"),
+                    )
+                )
+                parts = [
+                    triplets.select(
+                        F.col("src.id").alias("id"), as_col(m).alias(Pregel.MSG_COL)
+                    )
+                    for m in self._to_src
+                ] + [
+                    triplets.select(
+                        F.col("dst.id").alias("id"), as_col(m).alias(Pregel.MSG_COL)
+                    )
+                    for m in self._to_dst
+                ]
+                msgs = parts[0]
+                for p in parts[1:]:
+                    msgs = msgs.unionByName(p)
+                agg = (
+                    msgs.where(F.col(Pregel.MSG_COL).isNotNull())
+                    .groupBy("id")
+                    .agg(as_col(self._agg).alias(Pregel.MSG_COL))
+                )
+                v = loop.step(
+                    "v",
+                    v.join(agg, "id", "left").select(
+                        *passthrough,
+                        *[as_col(upd).alias(name) for name, _, upd in self._vcols],
+                    ),
+                )
+            loop.keep("v")
         return v

@@ -8,7 +8,15 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from leader_graph_spark.graph.algorithms import connected_components, degrees
+from leader_graph_spark.graph.algorithms import (
+    BCAST_FRONTIER_CONF,
+    DRIVER_CC_CONF,
+    PARTITIONED_MIN_CONF,
+    STATIC_LOOP_CONF,
+    connected_components,
+    degrees,
+    label_propagation_fixed,
+)
 from leader_graph_spark.graph.derived import (
     current_colleague_edges,
     historical_colleague_edges,
@@ -171,77 +179,39 @@ def test_khop_distance_strata(spark, sf_smoke):
     assert by_dist[1] == load_table(spark, sf_smoke, "nation").select("n_name").distinct().count()
 
 
-def test_jumped_propagation_equals_plain(spark):
-    """Pointer-jumped propagation must produce the same converged
-    labels as plain fixed-round propagation on a graph whose diameter
-    equals the covered distance — including a path graph (worst case
-    for propagation) and isolated vertices."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from leader_graph_spark.graph.algorithms import (
-        min_propagation,
-        min_propagation_jumped,
-    )
-
-    # path 1-2-3-4-5 (diameter 4), triangle 10-11-12, isolated 99
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12)],
-        "src long, dst long",
-    )
-    vertices = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 4, 5, 10, 11, 12, 99)], "id long"
-    )
-    plain = {
-        (r.id, r.component)
-        for r in min_propagation(vertices, edges, rounds=4).collect()
-    }
-    jumped = {
-        (r.id, r.component)
-        for r in min_propagation_jumped(vertices, edges, distance=4).collect()
-    }
-    assert plain == jumped
-    assert (99, 99) in jumped and (5, 1) in jumped and (12, 10) in jumped
-
-
-def test_jumped_propagation_adversarial_path(spark):
-    """Regression for the unsound radius-doubling round count (round-5
-    advice, high): on a path whose vertex ids are ordered so the jump
-    target never points toward the minimum, the old ⌈log⌉-round
-    variant split one component in two. The fixed variant runs the
-    full ``distance`` neighbor rounds (jump = accelerator only) and
-    must agree with plain propagation AND with the true component
-    minimum on every adversarial ordering."""
-    from leader_graph_spark.graph.algorithms import (
-        min_propagation,
-        min_propagation_jumped,
-    )
+def test_min_propagation_reaches_component_minimum(spark):
+    """Fixed-round propagation with rounds >= the component diameter
+    gives every vertex its TRUE component minimum — on a path graph
+    (worst case for propagation) with a triangle and an isolated
+    vertex, and on adversarially ordered paths whose ids decrease away
+    from the tail minimum (the counterexamples that split one component
+    in two under the retired pointer-jump round count)."""
+    from leader_graph_spark.graph.algorithms import min_propagation
 
     cases = [
-        # path 2-5-4-3-1 (diameter 4): the exact counterexample from
-        # the advice — the old variant left vertex 2 in component 2.
-        ([(2, 5), (5, 4), (4, 3), (3, 1)], 4, [1, 2, 3, 4, 5]),
-        # 9-vertex path with ids decreasing away from the tail min.
+        # path 1-2-3-4-5 (diameter 4), triangle 10-11-12, isolated 99
+        (
+            [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12)],
+            4,
+            {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10, 99: 99},
+        ),
+        # path 2-5-4-3-1 (diameter 4)
+        ([(2, 5), (5, 4), (4, 3), (3, 1)], 4, {i: 1 for i in range(1, 6)}),
+        # 9-vertex path with ids decreasing away from the tail min
         (
             [(2, 9), (9, 8), (8, 7), (7, 6), (6, 5), (5, 4), (4, 3), (3, 1)],
             8,
-            [1, 2, 3, 4, 5, 6, 7, 8, 9],
+            {i: 1 for i in range(1, 10)},
         ),
     ]
-    for edge_rows, dist, ids in cases:
+    for edge_rows, rounds, want in cases:
         edges = spark.createDataFrame(edge_rows, "src long, dst long")
-        vertices = spark.createDataFrame([(i,) for i in ids], "id long")
-        jumped = {
-            (r.id, r.component)
-            for r in min_propagation_jumped(
-                vertices, edges, distance=dist
-            ).collect()
+        vertices = spark.createDataFrame([(i,) for i in want], "id long")
+        got = {
+            r.id: r.component
+            for r in min_propagation(vertices, edges, rounds=rounds).collect()
         }
-        plain = {
-            (r.id, r.component)
-            for r in min_propagation(vertices, edges, rounds=dist).collect()
-        }
-        assert jumped == {(i, 1) for i in ids}
-        assert plain == jumped
+        assert got == want
 
 
 def test_two_phase_cc_matches_propagation(spark):
@@ -355,51 +325,6 @@ def test_merge_components_chained_batches(spark):
         got = {(r.id, r.component) for r in labels.collect()}
         assert got == want, d
     assert {c for _, c in got} == {1}
-
-
-def test_connected_components_auto_knob(spark):
-    """The config-thresholded narrow-label selection: both branches
-    produce bit-identical labels, and the session conf drives which
-    one runs (threshold above/below the edge count)."""
-    from leader_graph_spark.graph.algorithms import (
-        NARROW_CC_CONF,
-        connected_components_auto,
-    )
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y")], "src string, dst string"
-    )
-    verts = spark.createDataFrame([(v,) for v in "abcxyz"], "id string")
-    want = {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"), ("z", "z")}
-    try:
-        spark.conf.set(NARROW_CC_CONF, "1")
-        pick: dict = {}
-        got = {
-            (r.id, r.component)
-            for r in connected_components_auto(verts, edges, choice=pick).collect()
-        }
-        assert pick["variant"] == "narrow" and pick["n_edges"] == 6
-        assert got == want
-        spark.conf.set(NARROW_CC_CONF, "1000000")
-        pick = {}
-        got = {
-            (r.id, r.component)
-            for r in connected_components_auto(verts, edges, choice=pick).collect()
-        }
-        assert pick["variant"] == "string"
-        assert got == want
-    finally:
-        spark.conf.unset(NARROW_CC_CONF)
-    # bigint ids never take the narrow path (nothing to narrow)
-    iedges = spark.createDataFrame([(1, 2)], "src long, dst long")
-    iverts = spark.createDataFrame([(1,), (2,)], "id long")
-    pick = {}
-    spark.conf.set(NARROW_CC_CONF, "1")
-    try:
-        connected_components_auto(iverts, iedges, choice=pick).collect()
-    finally:
-        spark.conf.unset(NARROW_CC_CONF)
-    assert pick["variant"] == "string"
 
 
 def test_merge_components_driver_path_equals_distributed(spark):
@@ -527,22 +452,27 @@ def test_symmetrize_disjoint_directions_identity(spark):
 
 
 def test_iterative_loops_release_superseded_checkpoints(spark):
-    """The round-7 checkpoint-lifecycle fix, pinned: after an iterative
-    algorithm completes, only its LIVE states (final labels + any
-    lookup tables its returned lazy plan references) may remain
-    persisted — superseded round states must be gone WITHOUT waiting
-    for the async ContextCleaner (whose periodic GC defaults to 30
-    minutes; the 30x battery OOM'd on exactly that lag)."""
+    """The round-7 checkpoint-lifecycle fix, pinned for every loop:
+    after an iterative algorithm completes, only its LIVE states (final
+    labels + any lookup tables its returned lazy plan references) may
+    remain persisted — superseded round states must be gone WITHOUT
+    waiting for the async ContextCleaner (whose periodic GC defaults to
+    30 minutes; the 30x battery OOM'd on exactly that lag)."""
     from pyspark.sql import functions as F
 
-    from leader_graph_spark.graph.algorithms import (
-        connected_components,
-        kcore_subgraph,
-        pagerank_fixed_point,
-    )
+    from leader_graph_spark.graph import algorithms as alg
+    from leader_graph_spark.graph.frames import DFGraph, Pregel
 
     def n_persisted():
         return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    def loop_branch(run):
+        # force the distributed loop where a driver solve would run
+        spark.conf.set(DRIVER_CC_CONF, "0")
+        try:
+            return run()
+        finally:
+            spark.conf.unset(DRIVER_CC_CONF)
 
     # a path graph converges in several rounds — enough to leak if
     # superseded states weren't released
@@ -552,22 +482,55 @@ def test_iterative_loops_release_superseded_checkpoints(spark):
     vertices = edges.select(F.col("src").alias("id")).unionByName(
         edges.select(F.col("dst").alias("id"))
     ).distinct()
-
-    base = n_persisted()
-    cc = connected_components(vertices, edges)
-    cc.count()
-    after_cc = n_persisted()
-    # live: final label state (1). Headroom of 2 tolerates engine
-    # internals, but a leak of one state PER ROUND (12+ here) fails.
-    assert after_cc - base <= 3, f"CC leaked checkpoints: {after_cc - base}"
-
-    kcore_subgraph(edges, k=2, rounds=8).count()
-    after_kcore = n_persisted()
-    assert after_kcore - after_cc <= 3, f"kcore leaked: {after_kcore - after_cc}"
-
-    pagerank_fixed_point(edges, iterations=8).count()
-    after_pr = n_persisted()
-    assert after_pr - after_kcore <= 3, f"pagerank leaked: {after_pr - after_kcore}"
+    seeds = spark.createDataFrame([("v00",)], "id string")
+    pivots = spark.createDataFrame([("v00",), ("v12",)], "id string")
+    weighted = edges.withColumn("w", F.lit(2).cast("long"))
+    contacts = edges.withColumn("t", F.lit(5).cast("long"))
+    g = DFGraph(vertices, edges)
+    runs = {
+        "CC": lambda: alg.connected_components(vertices, edges),
+        "CC loop": lambda: loop_branch(lambda: alg.connected_components(vertices, edges)),
+        "two-phase CC": lambda: alg.connected_components_two_phase(vertices, edges),
+        "kcore": lambda: alg.kcore_subgraph(edges, k=2, rounds=8),
+        "pagerank": lambda: alg.pagerank_fixed_point(edges, iterations=8),
+        "personalized pagerank": lambda: alg.personalized_pagerank_fixed_point(
+            edges, seeds, iterations=8
+        ),
+        "min_propagation": lambda: alg.min_propagation(vertices, edges, rounds=6),
+        "khop": lambda: alg.khop_distances(edges, seeds, k=6),
+        "multi-source": lambda: alg.multi_source_distances(edges, pivots, k=6),
+        "sssp": lambda: alg.weighted_sssp(weighted, seeds, rounds=6),
+        "temporal": lambda: alg.temporal_earliest_arrival(contacts, seeds, rounds=6),
+        "LPA loop": lambda: loop_branch(lambda: alg.label_propagation_fixed(edges, rounds=4)),
+        "ancestor closure": lambda: alg.ancestor_closure(
+            edges.select(F.col("dst").alias("child"), F.col("src").alias("parent")),
+            max_rounds=8,
+        ),
+        "betweenness": lambda: alg.pivot_betweenness(
+            alg.symmetrize(edges), pivots, k=6
+        ),
+        "pregel": lambda: (
+            g.pregel.setMaxIter(8)
+            .withVertexColumn(
+                "comp",
+                F.col("id"),
+                F.least(F.col("comp"), F.coalesce(Pregel.msg(), F.col("comp"))),
+            )
+            .sendMsgToDst(Pregel.src("comp"))
+            .sendMsgToSrc(Pregel.dst("comp"))
+            .aggMsgs(F.min(Pregel.msg()))
+            .run()
+        ),
+        "bfs": lambda: g.bfs("id = 'v00'", "id = 'v06'"),
+    }
+    for name, run in runs.items():
+        before = n_persisted()
+        run().count()
+        # live: the final state(s) the result references. Headroom
+        # tolerates engine internals, but a leak of one state PER ROUND
+        # (6+ here) fails.
+        leaked = n_persisted() - before
+        assert leaked <= 3, f"{name} leaked checkpoints: {leaked}"
 
 
 def test_narrow_cc_releases_rank_and_edge_states(spark):
@@ -993,42 +956,45 @@ def test_temporal_earliest_arrival_respects_time_order(spark):
 
 
 def test_loop_partitioned_gate_and_layout(spark):
-    """_loop_partitioned (r10): below partitionedMinRows the input is
-    returned UNTOUCHED (the up-front repartition job is a measured net
-    loss for tiny loop states); at/above it the checkpoint comes back
-    hash-partitioned on the round key with the scope's pinned partition
-    count, so per-round SMJs elide the exchange+sort on that side."""
-    from leader_graph_spark.graph.algorithms import (
-        PARTITIONED_MIN_CONF,
-        _loop_exec_conf,
-        _loop_partitioned,
-        _release,
-    )
+    """_Loop's static-side layout (r10): in an active static scope of at
+    least partitionedMinRows rows the loop input comes back
+    hash-partitioned and sorted on the round key with the scope's
+    pinned partition count, so per-round SMJs elide the exchange+sort
+    on that side; below the gate the input checkpoint is used as it is
+    (the up-front repartition job is a measured net loss for tiny loop
+    states)."""
+    from leader_graph_spark.graph.algorithms import PARTITIONED_MIN_CONF, _Loop
 
     df = spark.range(100).select(
         F.col("id").cast("string").alias("src"), F.lit("x").alias("dst")
-    ).localCheckpoint()
-    with _loop_exec_conf(spark, 100_000) as scope:
-        # scope.n_rows (100k) >= default gate (10k): layout applied
-        out = _loop_partitioned(df, "src", scope, release=False)
-        assert out is not df
-        assert out.rdd.getNumPartitions() == int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
-        assert sorted(r.src for r in out.collect()) == sorted(
-            str(i) for i in range(100)
-        )
-        _release(out)
-    with _loop_exec_conf(spark, 9_999) as scope:
-        # below the gate: identity — no extra job, no new checkpoint
-        assert _loop_partitioned(df, "src", scope, release=False) is df
-    spark.conf.set(PARTITIONED_MIN_CONF, "200000")
-    try:
-        with _loop_exec_conf(spark, 100_000) as scope:
-            assert _loop_partitioned(df, "src", scope, release=False) is df
-    finally:
-        spark.conf.unset(PARTITIONED_MIN_CONF)
-    _release(df)
+    )
+
+    def layout(min_rows):
+        if min_rows is not None:
+            spark.conf.set(PARTITIONED_MIN_CONF, min_rows)
+        try:
+            with _Loop(df, key="src") as loop:
+                plan = loop.base._jdf.queryExecution().executedPlan()
+                assert sorted(r.src for r in loop.base.collect()) == sorted(
+                    str(i) for i in range(100)
+                )
+                return (
+                    plan.outputPartitioning().toString(),
+                    plan.outputOrdering().toString(),
+                    loop.base.rdd.getNumPartitions(),
+                    int(spark.conf.get("spark.sql.shuffle.partitions")),
+                )
+        finally:
+            spark.conf.unset(PARTITIONED_MIN_CONF)
+
+    # n = 100 rows >= a gate of 100: layout applied
+    part, order, n_parts, static_parts = layout("100")
+    assert part.startswith("hashpartitioning(src") and "ASC" in order
+    assert n_parts == static_parts
+    # below the gate (conf or default 10k): the plain input checkpoint
+    for min_rows in ("101", None):
+        part, *_ = layout(min_rows)
+        assert "hashpartitioning" not in part
 
 
 def test_min_fold_equals_full_outer_fold(spark):
@@ -1199,9 +1165,8 @@ def test_skew_guarded_pairs_rejects_negative_hot_cap(spark):
 def test_connected_components_driver_and_loop_paths_agree(spark):
     """ADVICE r10: the default driverMaxEdges guard routes every
     unit-scale graph through the driver union-find, leaving the
-    distributed loop (own_sym release + _loop_partitioned branch)
-    untested. Force DRIVER_CC_CONF=0 and pin the two paths equal —
-    same pattern as the kcore and LCC dual-path tests."""
+    distributed loop untested. Force DRIVER_CC_CONF=0 and pin the two
+    paths equal — same pattern as the kcore and LCC dual-path tests."""
     from leader_graph_spark.graph.algorithms import DRIVER_CC_CONF, connected_components
 
     edges = spark.createDataFrame(
@@ -1226,29 +1191,43 @@ def test_connected_components_driver_and_loop_paths_agree(spark):
     assert {c for i, c in via_driver if i in "pqrs"} == {"p"}
 
 
-@pytest.mark.parametrize("value", ["1e5", "many", "-1"])
-def test_driver_max_edges_rejects_bad_value(spark, value):
-    """The driver-solve limit shared by CC and LPA fails loudly, naming
-    the key, instead of picking a branch from a value it cannot read;
-    0 stays legal (it forces the loop)."""
-    from leader_graph_spark.graph.algorithms import (
-        DRIVER_CC_CONF,
-        connected_components,
-        label_propagation_fixed,
-    )
-
+@pytest.mark.parametrize(
+    "key, value",
+    [pytest.param(DRIVER_CC_CONF, v, id=v) for v in ("1e5", "many", "-1")]
+    + [
+        pytest.param(key, v, id=f"{key.rsplit('.', 1)[1]}-{v}")
+        for key, bad in (
+            (STATIC_LOOP_CONF, ("4e6", "-1")),
+            (PARTITIONED_MIN_CONF, ("many", "-1")),
+            (BCAST_FRONTIER_CONF, ("1.5", "-2")),
+        )
+        for v in bad
+    ],
+)
+def test_driver_max_edges_rejects_bad_value(spark, key, value):
+    """Every loop conf (the driver-solve limit shared by CC and LPA, the
+    static-scope row limit, the partitioned-layout gate and the frontier
+    broadcast limit) is read once per loop before any job and fails
+    loudly, naming the key, instead of picking a branch from a value it
+    cannot read; 0 stays legal for the driver limit (it forces the loop)
+    and -1 for the broadcast limit (it disables the hint)."""
     edges = spark.createDataFrame([("a", "b")], "src string, dst string")
     verts = spark.createDataFrame([("a",), ("b",)], "id string")
-    spark.conf.set(DRIVER_CC_CONF, value)
+    spark.conf.set(key, value)
     try:
-        with pytest.raises(ValueError, match=re.escape(DRIVER_CC_CONF)):
+        with pytest.raises(ValueError, match=re.escape(key)):
             connected_components(verts, edges)
-        with pytest.raises(ValueError, match=re.escape(DRIVER_CC_CONF)):
+        with pytest.raises(ValueError, match=re.escape(key)):
             label_propagation_fixed(edges, rounds=1)
-        spark.conf.set(DRIVER_CC_CONF, "0")
+    finally:
+        spark.conf.unset(key)
+    spark.conf.set(DRIVER_CC_CONF, "0")
+    spark.conf.set(BCAST_FRONTIER_CONF, "-1")
+    try:
         assert {tuple(r) for r in label_propagation_fixed(edges, rounds=1).collect()} == {
             ("a", "b"),
             ("b", "a"),
         }
     finally:
         spark.conf.unset(DRIVER_CC_CONF)
+        spark.conf.unset(BCAST_FRONTIER_CONF)
