@@ -179,39 +179,47 @@ def test_khop_distance_strata(spark, sf_smoke):
     assert by_dist[1] == load_table(spark, sf_smoke, "nation").select("n_name").distinct().count()
 
 
-def test_min_propagation_reaches_component_minimum(spark):
-    """Fixed-round propagation with rounds >= the component diameter
-    gives every vertex its TRUE component minimum — on a path graph
-    (worst case for propagation) with a triangle and an isolated
-    vertex, and on adversarially ordered paths whose ids decrease away
-    from the tail minimum (the counterexamples that split one component
-    in two under the retired pointer-jump round count)."""
+def _assert_min_propagation_labels(spark, edge_rows, rounds, want):
     from leader_graph_spark.graph.algorithms import min_propagation
 
-    cases = [
-        # path 1-2-3-4-5 (diameter 4), triangle 10-11-12, isolated 99
-        (
-            [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12)],
-            4,
-            {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10, 99: 99},
-        ),
-        # path 2-5-4-3-1 (diameter 4)
-        ([(2, 5), (5, 4), (4, 3), (3, 1)], 4, {i: 1 for i in range(1, 6)}),
-        # 9-vertex path with ids decreasing away from the tail min
-        (
-            [(2, 9), (9, 8), (8, 7), (7, 6), (6, 5), (5, 4), (4, 3), (3, 1)],
-            8,
-            {i: 1 for i in range(1, 10)},
-        ),
-    ]
-    for edge_rows, rounds, want in cases:
-        edges = spark.createDataFrame(edge_rows, "src long, dst long")
-        vertices = spark.createDataFrame([(i,) for i in want], "id long")
-        got = {
-            r.id: r.component
-            for r in min_propagation(vertices, edges, rounds=rounds).collect()
-        }
-        assert got == want
+    edges = spark.createDataFrame(edge_rows, "src long, dst long")
+    vertices = spark.createDataFrame([(i,) for i in want], "id long")
+    got = {
+        r.id: r.component
+        for r in min_propagation(vertices, edges, rounds=rounds).collect()
+    }
+    assert got == want
+
+
+def test_min_propagation_reaches_component_minimum(spark):
+    """Fixed-round propagation with rounds >= the component diameter
+    gives every vertex its TRUE component minimum on a path graph (worst
+    case for propagation) with a triangle and an isolated vertex."""
+    # path 1-2-3-4-5 (diameter 4), triangle 10-11-12, isolated 99
+    _assert_min_propagation_labels(
+        spark,
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12)],
+        4,
+        {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10, 99: 99},
+    )
+
+
+def test_min_propagation_adversarial_path(spark):
+    """Adversarially ordered paths whose ids decrease away from the tail
+    minimum (the counterexamples that split one component in two under
+    the retired pointer-jump round count) still reach the true component
+    minimum within diameter rounds."""
+    # path 2-5-4-3-1 (diameter 4)
+    _assert_min_propagation_labels(
+        spark, [(2, 5), (5, 4), (4, 3), (3, 1)], 4, {i: 1 for i in range(1, 6)}
+    )
+    # 9-vertex path with ids decreasing away from the tail min
+    _assert_min_propagation_labels(
+        spark,
+        [(2, 9), (9, 8), (8, 7), (7, 6), (6, 5), (5, 4), (4, 3), (3, 1)],
+        8,
+        {i: 1 for i in range(1, 10)},
+    )
 
 
 def test_two_phase_cc_matches_propagation(spark):
