@@ -32,6 +32,8 @@ itself (``tests/test_loop_lint.py`` fails when one does):
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -258,10 +260,12 @@ PARTITIONED_MIN_CONF = "spark.leader_graph_spark.loop.partitionedMinRows"
 BCAST_FRONTIER_CONF = "spark.leader_graph_spark.loop.broadcastFrontierMaxRows"
 DRIVER_CC_CONF = "spark.leader_graph_spark.cc.driverMaxEdges"
 # Bounds every driver-side graph solve — connected components' union-find
-# and label propagation's rounds: an OBSERVED symmetric edge count at or
-# under it is solved from ONE collect; above it the distributed loop runs.
-# 0 forces the loop. (merge_components' quotient path takes its limit as
-# the driver_quotient_limit argument instead.)
+# and label propagation's rounds (:func:`_driver_or_loop`): an edge list
+# whose OBSERVED raw row count and symmetric distinct pair count are both
+# at or under it is solved from ONE Arrow collect; otherwise the
+# distributed loop runs. 0 forces the loop with no raw-edge checkpoint.
+# (merge_components' quotient path takes its limit as the
+# driver_quotient_limit argument instead.)
 
 
 def _conf_int(spark, key: str, default: int, minimum: int) -> int:
@@ -276,6 +280,16 @@ def _conf_int(spark, key: str, default: int, minimum: int) -> int:
     if value < minimum:
         raise ValueError(f"{key} must be >= {minimum}, got {value}")
     return value
+
+
+def _loop_confs(spark) -> tuple[int, int, int]:
+    """The static-scope row limit, the partitioned-layout gate and the
+    frontier broadcast limit, read (and validated) before any job."""
+    return (
+        _conf_int(spark, STATIC_LOOP_CONF, 4_000_000, 0),
+        _conf_int(spark, PARTITIONED_MIN_CONF, 10_000, 0),
+        _conf_int(spark, BCAST_FRONTIER_CONF, 1_000_000, -1),
+    )
 
 
 class _loop_exec_conf:
@@ -365,9 +379,8 @@ class _Loop(_loop_exec_conf):
     measured net loss (dedup_canonical_docs sf0.1: +0.7 s wall, −0
     shuffle bytes); under AQE a pinned layout cannot be proven to match
     the coalesced partition counts, so it is never applied there.
-    ``driver=True`` skips scope and layout when ``loop.n_rows`` is at most
-    ``DRIVER_CC_CONF`` (``loop.on_driver``): the caller then solves the
-    collected base on the driver.
+    Whether a graph is solved on the driver instead is decided before
+    any loop is built (:func:`_driver_or_loop`).
 
     States live in named slots. ``step(name, df, **probes)``
     checkpoints ``df`` with ``probes`` observed on the same job (read
@@ -384,15 +397,11 @@ class _Loop(_loop_exec_conf):
         *,
         key: str | None = None,
         static: bool = True,
-        driver: bool = False,
     ):
         spark = base.sparkSession
-        self.static_max = _conf_int(spark, STATIC_LOOP_CONF, 4_000_000, 0)
-        self.partitioned_min = _conf_int(spark, PARTITIONED_MIN_CONF, 10_000, 0)
-        self.bcast_max = _conf_int(spark, BCAST_FRONTIER_CONF, 1_000_000, -1)
-        self.driver_max = _conf_int(spark, DRIVER_CC_CONF, 100_000, 0)
+        self.static_max, self.partitioned_min, self.bcast_max = _loop_confs(spark)
         self.spark, self.active, self.saved = spark, False, {}
-        self._input, self._key, self._static, self._driver = base, key, static, driver
+        self._input, self._key, self._static = base, key, static
         self._states: dict = {}
         self._kept: set = set()
         self.seen: dict = {}
@@ -400,8 +409,7 @@ class _Loop(_loop_exec_conf):
     def __enter__(self):
         self.step("base", self._input, n=F.count(F.lit(1)))
         self.n_rows = self.seen["n"]
-        self.on_driver = self._driver and self.n_rows <= self.driver_max
-        self.active = self._static and not self.on_driver and self.n_rows < self.static_max
+        self.active = self._static and self.n_rows < self.static_max
         super().__enter__()
         try:
             if self._key and self.active and self.n_rows >= self.partitioned_min:
@@ -494,14 +502,66 @@ def _driver_frame(spark, schema: T.StructType, columns: list[list]) -> DataFrame
     return spark.createDataFrame(table, schema)
 
 
-def _driver_components(sym: DataFrame) -> DataFrame:
-    """Union-find over ONE collect of a provably-small edge set →
-    (id, component = minimum member id), bit-identical to converged
+def _collect_pairs(edges: DataFrame) -> set:
+    """The symmetric distinct ``(src, dst)`` pair set of a provably-small
+    edge list — the set :func:`symmetrize` computes — from ONE Arrow
+    collect (``toArrow``: no Python worker, no pickled rows) and Python
+    set building, so no shuffle. Pairs compare as Python values: ids
+    exactly as the column's Spark ordering and equality (bigints
+    numerically, strings as UTF8), and a null endpoint equal to another
+    null, as in ``distinct``. Callers guard the collect with an observed
+    row count; this function never decides size itself."""
+    table = edges.select("src", "dst").toArrow()
+    src, dst = table.column("src").to_pylist(), table.column("dst").to_pylist()
+    return set(zip(src, dst)) | set(zip(dst, src))
+
+
+@contextmanager
+def _driver_or_loop(edges: DataFrame, *, key: str):
+    """Read a graph's ``(src, dst)`` edge list ONCE and decide where to
+    solve it. Yields ``(pairs, id_type, None)`` for a driver solve or
+    ``(None, None, loop)``, a :class:`_Loop` over ``symmetrize(edges)``
+    keyed by ``key``.
+
+    The raw projection is checkpointed with its row count observed on
+    the same job — one job, no exchange. At most ``DRIVER_CC_CONF`` rows
+    it is collected once (:func:`_collect_pairs`); when the symmetric
+    pair set is within the limit too, the checkpoint is released and the
+    driver solves. Otherwise the loop runs over ``symmetrize`` of the
+    raw checkpoint, which is released once the loop base has
+    materialized, so a graph past the limit pays this one narrow
+    checkpoint job more than a loop entered directly. Reading the raw
+    edges, not their symmetric view, keeps the ``distinct`` shuffle off
+    the driver branch: on the benchmark's LPA lane (about 3 000 edges)
+    that shuffle carried all of the workload's shuffle bytes.
+    ``DRIVER_CC_CONF=0`` enters the loop directly, with no raw
+    checkpoint. Every loop conf is read before any job, so a bad value
+    fails on either branch."""
+    spark = edges.sparkSession
+    limit = _conf_int(spark, DRIVER_CC_CONF, 100_000, 0)
+    _loop_confs(spark)
+    raw = None
+    if limit:
+        raw, seen = _checkpoint_observed(edges.select("src", "dst"), n=F.count(F.lit(1)))
+        if seen["n"] <= limit:
+            pairs = _collect_pairs(raw)
+            if len(pairs) <= limit:
+                id_type = raw.schema["src"].dataType
+                _release(raw)
+                yield pairs, id_type, None
+                return
+    with _Loop(symmetrize(edges if raw is None else raw), key=key) as loop:
+        _release(raw)
+        yield None, None, loop
+
+
+def _driver_components(spark, pairs: set, id_type: T.DataType) -> DataFrame:
+    """Union-find over a small symmetric pair set (:func:`_collect_pairs`)
+    → (id, component = minimum member id), bit-identical to converged
     min-label propagation (ids compare exactly as the column's Spark
-    ordering: bigints numerically, strings as UTF8 — the same
-    equivalence ``merge_components`` pins in tests). Callers guard the
-    collect with an observed row count; this function never decides
-    size itself."""
+    ordering — the same equivalence ``merge_components`` pins in tests).
+    A pair with a null endpoint joins nothing, as in the loop's
+    equi-joins, and a null id gets no label here."""
     parent: dict = {}
 
     def find(x):
@@ -512,8 +572,10 @@ def _driver_components(sym: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for row in sym.collect():
-        ra, rb = find(row.src), find(row.dst)
+    for src, dst in pairs:
+        if src is None or dst is None:
+            continue
+        ra, rb = find(src), find(dst)
         if ra != rb:
             parent[ra] = rb
     members = set(parent)
@@ -525,31 +587,28 @@ def _driver_components(sym: DataFrame) -> DataFrame:
         m = comp_min.get(r)
         comp_min[r] = v if m is None or v < m else m
     ids = sorted(members)
-    id_type = sym.schema["src"].dataType
     schema = T.StructType(
         [T.StructField("id", id_type), T.StructField("component", id_type)]
     )
-    return _driver_frame(
-        sym.sparkSession, schema, [ids, [comp_min[find(v)] for v in ids]]
-    )
+    return _driver_frame(spark, schema, [ids, [comp_min[find(v)] for v in ids]])
 
 
-def _driver_label_propagation(sym: DataFrame, rounds: int) -> DataFrame:
-    """``rounds`` synchronous LPA rounds over ONE collect of a
-    provably-small symmetric edge set → (id, community), the exact
-    contract of :func:`label_propagation_fixed`'s loop: the vertices are
-    the distinct ``src`` values; each round a vertex adopts the most
-    frequent label among its neighbors, count ties to the MINIMUM label
-    (ids compare as the column's Spark ordering, as in
-    :func:`_driver_components`), and keeps its label with no neighbor.
-    Null endpoints behave as the loop's equi-joins make them: a null
-    ``src`` votes for no one, a vote for a null ``dst`` is dropped, and
-    the null vertex keeps its null label. Callers guard the collect with
-    an observed row count."""
+def _driver_label_propagation(
+    spark, pairs: set, id_type: T.DataType, rounds: int
+) -> DataFrame:
+    """``rounds`` synchronous LPA rounds over a small symmetric pair set
+    (:func:`_collect_pairs`) → (id, community), the exact contract of
+    :func:`label_propagation_fixed`'s loop: the vertices are the distinct
+    ``src`` values; each round a vertex adopts the most frequent label
+    among its neighbors, count ties to the MINIMUM label (ids compare as
+    the column's Spark ordering, as in :func:`_driver_components`), and
+    keeps its label with no neighbor. Null endpoints behave as the loop's
+    equi-joins make them: a null ``src`` votes for no one, a vote for a
+    null ``dst`` is dropped, and the null vertex keeps its null label."""
     from collections import Counter
 
     voters: dict = {}
-    for src, dst in sym.collect():
+    for src, dst in pairs:
         voters.setdefault(src, [])
         if src is not None and dst is not None:
             voters.setdefault(dst, []).append(src)
@@ -563,13 +622,10 @@ def _driver_label_propagation(sym: DataFrame, rounds: int) -> DataFrame:
             else:
                 new[v] = labels[v]
         labels = new
-    id_type = sym.schema["src"].dataType
     schema = T.StructType(
         [T.StructField("id", id_type), T.StructField("community", id_type)]
     )
-    return _driver_frame(
-        sym.sparkSession, schema, [list(labels), list(labels.values())]
-    )
+    return _driver_frame(spark, schema, [list(labels), list(labels.values())])
 
 
 def connected_components(
@@ -590,8 +646,12 @@ def connected_components(
     Returns (id, component) where component is the minimum vertex id in
     the component.
 
+    Small graphs are solved on the driver (:func:`_driver_or_loop`: one
+    narrow checkpoint of the raw edges, one Arrow collect, union-find in
+    Python); the rest run the loop.
+
     Semantics note (ADVICE r10): the size-guarded DRIVER union-find
-    below always returns the fully CONVERGED labeling — ``max_iter``
+    always returns the fully CONVERGED labeling — ``max_iter``
     bounds only the distributed loop. For graphs under the driver
     threshold whose component diameter exceeds ``max_iter`` the two
     paths would differ; every registered caller either uses the
@@ -607,9 +667,11 @@ def connected_components(
     # pure scheduling barriers. Labels are bit-identical (min member
     # id, pinned by test + oracle). A 100 TB edge set never collects:
     # the guard reads the OBSERVED count, not an estimate.
-    with _Loop(symmetrize(edges), key="dst", driver=True) as loop:
-        if loop.on_driver:
-            return _with_isolated(vertices, _driver_components(loop.base))
+    with _driver_or_loop(edges, key="dst") as (pairs, id_type, loop):
+        if loop is None:
+            return _with_isolated(
+                vertices, _driver_components(edges.sparkSession, pairs, id_type)
+            )
         labels = _converged_labels(loop, loop.base, max_iter)
     return _with_isolated(vertices, labels)
 
@@ -1219,26 +1281,28 @@ def label_propagation_fixed(edges: DataFrame, *, rounds: int) -> DataFrame:
     — with the edge list re-checkpointed partitioned by the round key,
     no round re-exchanges anything but the two narrow aggregates.
 
-    Small graphs are solved on the driver instead: when the observed
-    symmetric edge count is at most ``DRIVER_CC_CONF`` (the limit shared
-    with connected components, default 100 000; 0 forces the loop), the
-    checkpoint is collected once, the rounds run in Python with the same
-    contract (:func:`_driver_label_propagation`) and the labels come back
-    as an Arrow ``LocalRelation`` — the checkpoint's jobs and one
-    collect in place of a checkpoint per round. At small sizes the
-    loop's cost is scheduling, not compute: on the benchmark's ``loops_extract``
-    workload (about 3 000 symmetric edges, 4 cores) the lane went from
-    18 jobs / 25 stages / 85 tasks to 9 / 9 / 21 and the workload's
-    ``cpu_s`` median from 2.68 s to 1.63 s. At the limit (20k vertices,
-    99.8k symmetric edges, 3 rounds, warm session, 4 cores) the driver
-    solve took 0.99–1.26 s against the loop's 1.34–1.55 s, with
-    identical output. Above the limit the loop below runs unchanged.
+    Small graphs are solved on the driver instead: when the observed raw
+    edge count and the symmetric pair count are both at most
+    ``DRIVER_CC_CONF`` (the limit shared with connected components,
+    default 100 000; 0 forces the loop), the raw edges are checkpointed
+    and collected once with no shuffle (:func:`_driver_or_loop`), the
+    rounds run in Python with the same contract
+    (:func:`_driver_label_propagation`) and the labels come back as an
+    Arrow ``LocalRelation`` — two jobs in place of a checkpoint per
+    round. At small sizes the loop's cost is scheduling, not compute:
+    on ``lpa_membership_communities`` at sf0.01 (about 3 000 symmetric
+    edges, 4 cores) the forced loop runs 15 jobs / 22 stages / 82 tasks
+    and shuffles 679 kB, the driver solve 5 / 5 / 10 and no bytes. At
+    the limit (19 857 vertices, 49 900 raw and 99 800 symmetric edges,
+    3 rounds, warm session, 4 cores) the driver solve took 0.88–1.04 s
+    against the loop's 1.92–2.46 s, with identical output. Above the
+    limit the loop below runs unchanged.
 
     Returns (id, community).
     """
-    with _Loop(symmetrize(edges), key="src", driver=True) as loop:
-        if loop.on_driver:
-            return _driver_label_propagation(loop.base, rounds)
+    with _driver_or_loop(edges, key="src") as (pairs, id_type, loop):
+        if loop is None:
+            return _driver_label_propagation(edges.sparkSession, pairs, id_type, rounds)
         sym = loop.base
         nodes = sym.select(F.col("src").alias("id")).distinct()
         labels = loop.step(
@@ -1370,7 +1434,7 @@ def merge_components(
     quotient graph is sized by the DELTA's component touches, so for
     typical incremental batches it is tiny — up to
     ``driver_quotient_limit`` edges its components are solved by
-    driver-side union-find from ONE collect (the iterative quotient
+    driver-side union-find from ONE Arrow collect (the iterative quotient
     CC was ~60 scheduling barriers of pure fixed overhead, the single
     biggest local line item of the headline bench), with labels =
     min member id, bit-identical to :func:`connected_components`
@@ -1393,12 +1457,15 @@ def merge_components(
     )
     q_edges, seen = _checkpoint_observed(q_edges, n=F.count(F.lit(1)))
     if seen["n"] <= driver_quotient_limit:
-        mapping = _driver_components(q_edges).select(
+        pairs = _collect_pairs(q_edges)
+        # driver path consumed the quotient in one collect — release it
+        _release(q_edges)
+        mapping = _driver_components(
+            q_edges.sparkSession, pairs, q_edges.schema["src"].dataType
+        ).select(
             F.col("id").alias("component"),
             F.col("component").alias("new_component"),
         )
-        # driver path consumed the quotient in one collect — release it
-        _release(q_edges)
     else:
         q_vertices = (
             q_edges.select(F.col("src").alias("id"))

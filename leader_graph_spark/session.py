@@ -57,6 +57,11 @@ def get_spark(app_name: str = "leader_graph_spark", shuffle_partitions: int | No
         # for any long-lived session running a mixed workload.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
         .config("spark.sql.session.timeZone", "UTC")
+        # The events table has shipped ``ts`` as TIMESTAMP(NANOS), which
+        # Spark reads only in this legacy mode (as BIGINT nanoseconds;
+        # sources.tables converts it). Set once here so that loading a
+        # table never changes session conf as a side effect.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # ContextCleaner backstop for one-shot localCheckpoints whose

@@ -30,10 +30,10 @@ def _events_stream_schema(
     """Physical schema for the events landing files, via a one-time
     driver-side batch probe. The driver's parquet has shipped ``ts`` as
     both TIMESTAMP(NANOS) (reads as bigint under the nanosAsLong legacy
-    conf) and plain timestamp[us] with no timezone (reads as
-    TIMESTAMP_NTZ) — the file-stream source needs an explicit schema,
-    so it must match whichever variant is on disk."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    conf, which :func:`session.get_spark` sets) and plain timestamp[us]
+    with no timezone (reads as TIMESTAMP_NTZ) — the file-stream source
+    needs an explicit schema, so it must match whichever variant is on
+    disk."""
     reader = spark.read
     if recursive:
         reader = reader.option("recursiveFileLookup", "true")

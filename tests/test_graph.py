@@ -1174,29 +1174,91 @@ def test_connected_components_driver_and_loop_paths_agree(spark):
     """ADVICE r10: the default driverMaxEdges guard routes every
     unit-scale graph through the driver union-find, leaving the
     distributed loop untested. Force DRIVER_CC_CONF=0 and pin the two
-    paths equal — same pattern as the kcore and LCC dual-path tests."""
-    from leader_graph_spark.graph.algorithms import DRIVER_CC_CONF, connected_components
+    paths equal — same pattern as the kcore and LCC dual-path tests —
+    on the inputs the driver read's Python de-duplication must get
+    right (duplicate rows, both directions of an edge, a self-loop, a
+    null endpoint, bigint ids past 2**53), and at the two limits only
+    one of the observed counts meets: raw rows > limit >= symmetric
+    pairs (looped without a collect) and raw rows <= limit < symmetric
+    pairs (collected, then looped)."""
+    big = 2**62
+    cases = [
+        (
+            [("a", "b"), ("a", "b"), ("b", "a"), ("b", "c"), ("x", "y"), ("x", "x"),
+             ("p", "q"), ("q", "r"), ("r", "s"), ("n", None), (None, "m")],
+            list("abcxypqrsnm") + ["z", None],
+            "string",
+        ),
+        (
+            [(big + 3, big + 1), (big + 1, big + 3), (big + 2, big + 1),
+             (7, 5), (7, 5), (5, 7), (7, 5), (5, 5), (5, 5)],
+            [big + 1, big + 2, big + 3, 5, 7, 9],
+            "bigint",
+        ),
+    ]
 
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r"), ("r", "s")],
-        "src string, dst string",
-    )
-    verts = spark.createDataFrame([(v,) for v in "abcxypqrs" + "z"], "id string")
-    driver_out = connected_components(verts, edges)
-    via_driver = {(r.id, r.component) for r in driver_out.collect()}
-    # the driver labels enter the plan as an Arrow LocalRelation, not a
-    # LogicalRDD over Python workers
-    assert "LocalRelation" in driver_out._jdf.queryExecution().analyzed().toString()
-    spark.conf.set(DRIVER_CC_CONF, "0")
-    try:
-        via_loop = {
-            (r.id, r.component) for r in connected_components(verts, edges).collect()
-        }
-    finally:
-        spark.conf.unset(DRIVER_CC_CONF)
-    assert via_driver == via_loop
+    def labels(edges, verts, limit=None):
+        if limit is not None:
+            spark.conf.set(DRIVER_CC_CONF, str(limit))
+        try:
+            out = connected_components(verts, edges)
+            return {(r.id, r.component) for r in out.collect()}, out
+        finally:
+            spark.conf.unset(DRIVER_CC_CONF)
+
+    by_case = []
+    for rows, ids, id_type in cases:
+        edges = spark.createDataFrame(rows, f"src {id_type}, dst {id_type}")
+        verts = spark.createDataFrame([(v,) for v in ids], f"id {id_type}")
+        via_driver, driver_out = labels(edges, verts)
+        # the driver labels enter the plan as an Arrow LocalRelation, not
+        # a LogicalRDD over Python workers
+        assert "LocalRelation" in driver_out._jdf.queryExecution().analyzed().toString()
+        via_loop = labels(edges, verts, 0)[0]
+        assert via_driver == via_loop
+        by_case.append(via_driver)
+        n_raw = len(rows)
+        n_sym = len({(s, d) for s, d in rows} | {(d, s) for s, d in rows})
+        assert n_raw != n_sym
+        for limit in (n_sym, n_raw - 1) if n_raw > n_sym else (n_raw, n_sym - 1):
+            at_limit, out = labels(edges, verts, limit)
+            assert "LocalRelation" not in out._jdf.queryExecution().analyzed().toString()
+            assert at_limit == via_loop, f"loop at driver limit {limit} disagrees"
+
+    via_driver = by_case[0]
     assert ("z", "z") in via_driver  # isolated vertex keeps its own label
-    assert {c for i, c in via_driver if i in "pqrs"} == {"p"}
+    assert {c for i, c in via_driver if i in tuple("pqrs")} == {"p"}
+    assert {c for i, c in via_driver if i in tuple("abc")} == {"a"}
+    assert ("x", "x") in via_driver and ("y", "x") in via_driver
+    # a null endpoint joins nothing: n and m stay their own components,
+    # and the null vertex has no label
+    assert {("n", "n"), ("m", "m"), (None, None)} <= via_driver
+
+
+def test_connected_components_small_graph_solves_on_driver(spark):
+    """CC's driver branch submits only the raw edge checkpoint and one
+    Arrow collect: two jobs of one stage each, no shuffle stage.
+    Symmetrizing before the read adds a shuffle-map job for its
+    distinct; the loop adds a checkpoint per round."""
+    sc = spark.sparkContext
+    edges = spark.range(30).select(
+        F.col("id").alias("src"), ((F.col("id") + 1) % 30).alias("dst")
+    )
+    verts = spark.range(32)
+    group = "test_cc_small_graph_jobs"
+    sc.setJobGroup(group, "connected_components on a 30-cycle")
+    try:
+        out = connected_components(verts, edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) <= 2, jobs
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    assert len(stages) <= 2, stages
+    assert {(r.id, r.component) for r in out.collect()} == {
+        (v, 0 if v < 30 else v) for v in range(32)
+    }
 
 
 @pytest.mark.parametrize(

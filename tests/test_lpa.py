@@ -3,7 +3,9 @@ order, bipartite round-parity oscillation, and a python model replay.
 
 Every case runs both branches of ``label_propagation_fixed``: the
 default driver solve (small graphs) and the distributed loop
-(``DRIVER_CC_CONF=0``), and requires them to agree."""
+(``DRIVER_CC_CONF=0``), and requires them to agree. It also runs the
+loop reached through the driver read at a limit that only one of the
+two observed counts (raw rows, symmetric pairs) meets."""
 
 from __future__ import annotations
 
@@ -42,25 +44,46 @@ def _model(edges: list[tuple[str, str]], rounds: int) -> dict[str, str]:
     return labels
 
 
-def _both_branches(spark, df, rounds):
-    """(driver result, loop result) as id -> community dicts."""
-    def run():
-        rows = label_propagation_fixed(df, rounds=rounds).collect()
-        assert len({r.id for r in rows}) == len(rows)  # one row per vertex
-        return {r.id: r.community for r in rows}
-
-    via_driver = run()
-    spark.conf.set(DRIVER_CC_CONF, "0")
+def _with_limit(spark, limit, run):
+    spark.conf.set(DRIVER_CC_CONF, str(limit))
     try:
-        via_loop = run()
+        return run()
     finally:
         spark.conf.unset(DRIVER_CC_CONF)
+
+
+def _boundary_limit(edges) -> int | None:
+    """A driver limit that exactly one of the two observed counts meets:
+    the raw row count when the symmetric pair set is larger (collected,
+    then looped), the pair count when duplicates make the raw rows more
+    (looped without a collect); None when the counts are equal."""
+    n_raw = len(edges)
+    n_sym = len({(s, d) for s, d in edges} | {(d, s) for s, d in edges})
+    return None if n_raw == n_sym else min(n_raw, n_sym)
+
+
+def _both_branches(spark, df, rounds, limit=None):
+    """(driver result, loop result) as id -> community dicts; with a
+    ``limit`` the loop reached at that driver limit must equal both."""
+    def run():
+        out = label_propagation_fixed(df, rounds=rounds)
+        rows = out.collect()
+        assert len({r.id for r in rows}) == len(rows)  # one row per vertex
+        return {r.id: r.community for r in rows}, out
+
+    via_driver = run()[0]
+    via_loop = _with_limit(spark, 0, run)[0]
+    if limit is not None:
+        at_limit, out = _with_limit(spark, limit, run)
+        plan = out._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() != "LocalRelation", "limit did not force the loop"
+        assert at_limit == via_loop, f"loop at driver limit {limit} disagrees"
     return via_driver, via_loop
 
 
 def _run(spark, edges, rounds, ddl="src string, dst string"):
     via_driver, via_loop = _both_branches(
-        spark, spark.createDataFrame(edges, ddl), rounds
+        spark, spark.createDataFrame(edges, ddl), rounds, _boundary_limit(edges)
     )
     assert via_driver == via_loop, "driver and loop branches disagree"
     return via_driver
@@ -132,6 +155,17 @@ def test_null_endpoint(spark):
     assert _run(spark, edges, 2) == {"a": "a", "b": "b", "c": "c", None: None}
 
 
+def test_duplicate_reversed_and_self_loop_edges(spark):
+    # The driver read de-duplicates in Python what the loop's distinct
+    # does: a duplicated row, an edge given in both directions and a
+    # self-loop (a vertex that votes for its own label) must count once.
+    edges = [("a", "b")] * 3 + [("b", "a"), ("b", "c"), ("c", "c"), ("c", "c"), ("c", "d")]
+    # raw rows 8 > pair count 7: at limit 7 the loop runs without a collect
+    assert _boundary_limit(edges) == 7
+    for rounds in (1, 2):
+        assert _run(spark, edges, rounds) == _model(edges, rounds)
+
+
 def test_empty_edge_set(spark):
     df = spark.createDataFrame([], "src bigint, dst bigint")
     out = label_propagation_fixed(df, rounds=2)
@@ -162,12 +196,12 @@ def test_count_ties_on_random_graph(spark, rounds):
 
 
 def test_small_graph_solves_on_driver(spark):
-    """The driver branch submits only the edge checkpoint (under AQE a
-    shuffle-map job for the symmetrizing distinct plus its result job)
-    and one collect, then hands the labels back as an Arrow
-    LocalRelation. Per-round checkpoints (12 jobs on this graph) or a
-    createDataFrame(list) handoff (a LogicalRDD over Python workers)
-    fail here."""
+    """The driver branch submits only the raw edge checkpoint and one
+    Arrow collect — two jobs of one stage each, no shuffle stage — then
+    hands the labels back as an Arrow LocalRelation. Symmetrizing before
+    the read (a shuffle-map job for its distinct), per-round checkpoints
+    (12 jobs on this graph) or a createDataFrame(list) handoff (a
+    LogicalRDD over Python workers) fail here."""
     sc = spark.sparkContext
     edges = spark.range(30).select(
         F.col("id").alias("src"), ((F.col("id") + 1) % 30).alias("dst")
@@ -178,8 +212,11 @@ def test_small_graph_solves_on_driver(spark):
         out = label_propagation_fixed(edges, rounds=3)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 3, jobs
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) <= 2, jobs
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    assert len(stages) <= 2, stages
     plan = out._jdf.queryExecution().analyzed()
     assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
     cycle = [(v, (v + 1) % 30) for v in range(30)]
