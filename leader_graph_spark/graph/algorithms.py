@@ -261,9 +261,13 @@ BCAST_FRONTIER_CONF = "spark.leader_graph_spark.loop.broadcastFrontierMaxRows"
 DRIVER_CC_CONF = "spark.leader_graph_spark.cc.driverMaxEdges"
 # Bounds every driver-side graph solve — connected components' union-find
 # and label propagation's rounds (:func:`_driver_or_loop`): an edge list
-# whose OBSERVED raw row count and symmetric distinct pair count are both
-# at or under it is solved from ONE Arrow collect; otherwise the
-# distributed loop runs. 0 forces the loop with no raw-edge checkpoint.
+# whose OBSERVED raw row count is at or under it is solved from ONE Arrow
+# collect of those rows (the symmetric pair set built from them is at
+# most twice the limit); past it, one whose observed symmetric pair
+# count is at or under it is collected from that symmetric checkpoint
+# instead; otherwise the distributed loop runs. It bounds the rows a
+# collect brings to the driver. 0 forces the loop with no raw-edge
+# checkpoint.
 # (merge_components' quotient path takes its limit as the
 # driver_quotient_limit argument instead.)
 
@@ -364,8 +368,10 @@ class _Loop(_loop_exec_conf):
     """The loop kit of the module docstring, as one context manager.
 
     ``with _Loop(base, key=...) as loop`` reads every loop conf once,
-    before any job; checkpoints ``base`` with its row count observed
-    (``loop.base``, ``loop.n_rows``); opens the static scope sized from that
+    before any job (or takes them already read, as ``_confs``);
+    checkpoints ``base`` with its row count observed (``loop.base``,
+    ``loop.n_rows``), or adopts a ``base`` that is already such a
+    checkpoint of ``_n_rows`` rows; opens the static scope sized from that
     count (``static=False`` keeps the session's settings); and, in an
     active scope of at least ``PARTITIONED_MIN_CONF`` rows, re-checkpoints
     the base hash-partitioned and sorted by ``key``. ``localCheckpoint``
@@ -397,17 +403,25 @@ class _Loop(_loop_exec_conf):
         *,
         key: str | None = None,
         static: bool = True,
+        _confs: tuple[int, int, int] | None = None,
+        _n_rows: int | None = None,
     ):
         spark = base.sparkSession
-        self.static_max, self.partitioned_min, self.bcast_max = _loop_confs(spark)
+        self.static_max, self.partitioned_min, self.bcast_max = (
+            _confs or _loop_confs(spark)
+        )
         self.spark, self.active, self.saved = spark, False, {}
         self._input, self._key, self._static = base, key, static
+        self._n_rows = _n_rows
         self._states: dict = {}
         self._kept: set = set()
         self.seen: dict = {}
 
     def __enter__(self):
-        self.step("base", self._input, n=F.count(F.lit(1)))
+        if self._n_rows is None:
+            self.step("base", self._input, n=F.count(F.lit(1)))
+        else:
+            self._states["base"], self.seen = self._input, {"n": self._n_rows}
         self.n_rows = self.seen["n"]
         self.active = self._static and self.n_rows < self.static_max
         super().__enter__()
@@ -525,33 +539,40 @@ def _driver_or_loop(edges: DataFrame, *, key: str):
 
     The raw projection is checkpointed with its row count observed on
     the same job — one job, no exchange. At most ``DRIVER_CC_CONF`` rows
-    it is collected once (:func:`_collect_pairs`); when the symmetric
-    pair set is within the limit too, the checkpoint is released and the
-    driver solves. Otherwise the loop runs over ``symmetrize`` of the
-    raw checkpoint, which is released once the loop base has
-    materialized, so a graph past the limit pays this one narrow
-    checkpoint job more than a loop entered directly. Reading the raw
-    edges, not their symmetric view, keeps the ``distinct`` shuffle off
-    the driver branch: on the benchmark's LPA lane (about 3 000 edges)
-    that shuffle carried all of the workload's shuffle bytes.
+    it is collected once (:func:`_collect_pairs`), released, and solved
+    on the driver: the limit bounds the collected rows, and the
+    symmetric pair set built from them holds at most twice as many.
+    Reading the raw edges, not their symmetric view, keeps the
+    ``distinct`` shuffle off this branch: on the benchmark's LPA lane
+    (about 3 000 edges) that shuffle carried all of the workload's
+    shuffle bytes. Past the limit ``symmetrize`` of the raw checkpoint
+    is checkpointed with its pair count observed and the raw checkpoint
+    released; a pair set within the limit (a heavily duplicated edge
+    list) is then collected and solved on the driver, and a larger one
+    becomes the loop's base as it stands. Either way the graph pays one
+    narrow checkpoint job more than a symmetric read would; measured on
+    100 000 raw edges (4 cores, warm), CC's loop took 3.43–3.88 s
+    through this job against 3.49–3.89 s entered directly.
     ``DRIVER_CC_CONF=0`` enters the loop directly, with no raw
-    checkpoint. Every loop conf is read before any job, so a bad value
-    fails on either branch."""
+    checkpoint. Every conf is read once, before any job, so a bad loop
+    conf fails on either branch."""
     spark = edges.sparkSession
     limit = _conf_int(spark, DRIVER_CC_CONF, 100_000, 0)
-    _loop_confs(spark)
-    raw = None
+    confs = _loop_confs(spark)
+    base, n_rows = symmetrize(edges), None
     if limit:
-        raw, seen = _checkpoint_observed(edges.select("src", "dst"), n=F.count(F.lit(1)))
+        small, seen = _checkpoint_observed(edges.select("src", "dst"), n=F.count(F.lit(1)))
+        if seen["n"] > limit:
+            sym, seen = _checkpoint_observed(symmetrize(small), n=F.count(F.lit(1)))
+            _release(small)
+            small, base, n_rows = sym, sym, seen["n"]
         if seen["n"] <= limit:
-            pairs = _collect_pairs(raw)
-            if len(pairs) <= limit:
-                id_type = raw.schema["src"].dataType
-                _release(raw)
-                yield pairs, id_type, None
-                return
-    with _Loop(symmetrize(edges if raw is None else raw), key=key) as loop:
-        _release(raw)
+            pairs = _collect_pairs(small)
+            id_type = small.schema["src"].dataType
+            _release(small)
+            yield pairs, id_type, None
+            return
+    with _Loop(base, key=key, _confs=confs, _n_rows=n_rows) as loop:
         yield None, None, loop
 
 
@@ -1282,10 +1303,11 @@ def label_propagation_fixed(edges: DataFrame, *, rounds: int) -> DataFrame:
     no round re-exchanges anything but the two narrow aggregates.
 
     Small graphs are solved on the driver instead: when the observed raw
-    edge count and the symmetric pair count are both at most
-    ``DRIVER_CC_CONF`` (the limit shared with connected components,
-    default 100 000; 0 forces the loop), the raw edges are checkpointed
-    and collected once with no shuffle (:func:`_driver_or_loop`), the
+    edge count is at most ``DRIVER_CC_CONF`` (the limit shared with
+    connected components, default 100 000; 0 forces the loop), the raw
+    edges are checkpointed and collected once with no shuffle, and past
+    it a symmetric pair set within the limit is collected from its
+    checkpoint (:func:`_driver_or_loop`); the
     rounds run in Python with the same contract
     (:func:`_driver_label_propagation`) and the labels come back as an
     Arrow ``LocalRelation`` — two jobs in place of a checkpoint per
@@ -1293,9 +1315,9 @@ def label_propagation_fixed(edges: DataFrame, *, rounds: int) -> DataFrame:
     on ``lpa_membership_communities`` at sf0.01 (about 3 000 symmetric
     edges, 4 cores) the forced loop runs 15 jobs / 22 stages / 82 tasks
     and shuffles 679 kB, the driver solve 5 / 5 / 10 and no bytes. At
-    the limit (19 857 vertices, 49 900 raw and 99 800 symmetric edges,
-    3 rounds, warm session, 4 cores) the driver solve took 0.88–1.04 s
-    against the loop's 1.92–2.46 s, with identical output. Above the
+    the limit (39 718 vertices, 100 000 raw and 200 000 symmetric edges,
+    3 rounds, warm session, 4 cores) the driver solve took 1.36–1.96 s
+    against the loop's 1.88–2.88 s, with identical output. Above the
     limit the loop below runs unchanged.
 
     Returns (id, community).

@@ -1177,10 +1177,11 @@ def test_connected_components_driver_and_loop_paths_agree(spark):
     paths equal — same pattern as the kcore and LCC dual-path tests —
     on the inputs the driver read's Python de-duplication must get
     right (duplicate rows, both directions of an edge, a self-loop, a
-    null endpoint, bigint ids past 2**53), and at the two limits only
-    one of the observed counts meets: raw rows > limit >= symmetric
-    pairs (looped without a collect) and raw rows <= limit < symmetric
-    pairs (collected, then looped)."""
+    null endpoint, bigint ids past 2**53), and at the smallest limit one
+    of the two observed counts meets — raw rows <= limit < symmetric
+    pairs (solved from the raw rows) and raw rows > limit >= symmetric
+    pairs (solved from the symmetric checkpoint) — and one below it,
+    where the loop runs over that symmetric checkpoint."""
     big = 2**62
     cases = [
         (
@@ -1220,10 +1221,12 @@ def test_connected_components_driver_and_loop_paths_agree(spark):
         n_raw = len(rows)
         n_sym = len({(s, d) for s, d in rows} | {(d, s) for s, d in rows})
         assert n_raw != n_sym
-        for limit in (n_sym, n_raw - 1) if n_raw > n_sym else (n_raw, n_sym - 1):
+        boundary = min(n_raw, n_sym)
+        for limit, on_driver in ((boundary, True), (boundary - 1, False)):
             at_limit, out = labels(edges, verts, limit)
-            assert "LocalRelation" not in out._jdf.queryExecution().analyzed().toString()
-            assert at_limit == via_loop, f"loop at driver limit {limit} disagrees"
+            plan = out._jdf.queryExecution().analyzed().toString()
+            assert ("LocalRelation" in plan) == on_driver, f"limit {limit}: wrong branch"
+            assert at_limit == via_loop, f"driver limit {limit} disagrees with the loop"
 
     via_driver = by_case[0]
     assert ("z", "z") in via_driver  # isolated vertex keeps its own label

@@ -3,9 +3,10 @@ order, bipartite round-parity oscillation, and a python model replay.
 
 Every case runs both branches of ``label_propagation_fixed``: the
 default driver solve (small graphs) and the distributed loop
-(``DRIVER_CC_CONF=0``), and requires them to agree. It also runs the
-loop reached through the driver read at a limit that only one of the
-two observed counts (raw rows, symmetric pairs) meets."""
+(``DRIVER_CC_CONF=0``), and requires them to agree. Where the raw row
+and symmetric pair counts differ, it also runs the driver solve at the
+smallest limit one of them meets and the loop one below it, both
+reached through the driver read's raw checkpoint."""
 
 from __future__ import annotations
 
@@ -53,10 +54,10 @@ def _with_limit(spark, limit, run):
 
 
 def _boundary_limit(edges) -> int | None:
-    """A driver limit that exactly one of the two observed counts meets:
-    the raw row count when the symmetric pair set is larger (collected,
-    then looped), the pair count when duplicates make the raw rows more
-    (looped without a collect); None when the counts are equal."""
+    """The smallest driver limit one of the two observed counts meets,
+    min(raw rows, symmetric pairs): at it the driver solves from the raw
+    rows when they are fewer, and from the symmetric checkpoint when
+    duplicates make them more. None when the counts are equal."""
     n_raw = len(edges)
     n_sym = len({(s, d) for s, d in edges} | {(d, s) for s, d in edges})
     return None if n_raw == n_sym else min(n_raw, n_sym)
@@ -64,7 +65,8 @@ def _boundary_limit(edges) -> int | None:
 
 def _both_branches(spark, df, rounds, limit=None):
     """(driver result, loop result) as id -> community dicts; with a
-    ``limit`` the loop reached at that driver limit must equal both."""
+    ``limit`` the driver solve at it and the loop one below it must
+    equal both."""
     def run():
         out = label_propagation_fixed(df, rounds=rounds)
         rows = out.collect()
@@ -74,10 +76,13 @@ def _both_branches(spark, df, rounds, limit=None):
     via_driver = run()[0]
     via_loop = _with_limit(spark, 0, run)[0]
     if limit is not None:
-        at_limit, out = _with_limit(spark, limit, run)
-        plan = out._jdf.queryExecution().analyzed()
-        assert plan.getClass().getSimpleName() != "LocalRelation", "limit did not force the loop"
-        assert at_limit == via_loop, f"loop at driver limit {limit} disagrees"
+        for at, on_driver in ((limit, True), (limit - 1, False)):
+            got, out = _with_limit(spark, at, run)
+            plan = out._jdf.queryExecution().analyzed()
+            assert (plan.getClass().getSimpleName() == "LocalRelation") == on_driver, (
+                f"driver limit {at} took the wrong branch"
+            )
+            assert got == via_loop, f"driver limit {at} disagrees with the loop"
     return via_driver, via_loop
 
 
@@ -160,7 +165,8 @@ def test_duplicate_reversed_and_self_loop_edges(spark):
     # does: a duplicated row, an edge given in both directions and a
     # self-loop (a vertex that votes for its own label) must count once.
     edges = [("a", "b")] * 3 + [("b", "a"), ("b", "c"), ("c", "c"), ("c", "c"), ("c", "d")]
-    # raw rows 8 > pair count 7: at limit 7 the loop runs without a collect
+    # raw rows 8 > pair count 7: at limit 7 the driver solves from the
+    # symmetric checkpoint, at 6 the loop runs over it
     assert _boundary_limit(edges) == 7
     for rounds in (1, 2):
         assert _run(spark, edges, rounds) == _model(edges, rounds)
