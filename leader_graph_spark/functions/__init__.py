@@ -1,3 +1,3 @@
-from leader_graph_spark.functions import scalar, text
+from leader_graph_spark.functions import scalar
 
-__all__ = ["scalar", "text"]
+__all__ = ["scalar"]

@@ -100,12 +100,6 @@ def absolutize_url(c: Column | str, base: str) -> Column:
     return F.when(col.startswith("/"), F.concat(F.lit(base), col)).otherwise(col)
 
 
-def strip_title_suffix(c: Column | str, suffix: str = "_百度百科") -> Column:
-    """``title.split(suffix)[0]``
-    (``html_extractor/extract_content_from_remark.py:136-139``)."""
-    return F.substring_index(c, suffix, 1)
-
-
 # ---------------------------------------------------------------------------
 # List packing / unpacking (F11-F13)
 # ---------------------------------------------------------------------------
@@ -131,16 +125,6 @@ def pack_list(c: Column | str, sep: str = ",") -> Column:
 # ---------------------------------------------------------------------------
 # Interval / month-scalar math (F15-F17)
 # ---------------------------------------------------------------------------
-
-
-def months_scalar(year: Column | str, month: Column | str, *, open_end: bool) -> Column:
-    """``year*12 + month`` with the reference's open-bound null handling:
-    a missing start month counts as January, a missing end month as
-    December (``src/mysql2neo4j.py:273-274,411-415``).
-    """
-    y = F.col(year) if isinstance(year, str) else year
-    m = F.col(month) if isinstance(month, str) else month
-    return y * 12 + F.coalesce(m, F.lit(12 if open_end else 1))
 
 
 def ts_months_scalar(ts: Column | str) -> Column:
@@ -184,12 +168,6 @@ def format_period(start_months: Column, end_months: Column) -> Column:
 # ---------------------------------------------------------------------------
 # JSON / misc (F18, F21, F22)
 # ---------------------------------------------------------------------------
-
-
-def byte_length(c: Column | str) -> Column:
-    """UTF-8 byte length (``utils/content_validator.py:83`` uses
-    ``len(html.encode('utf-8'))`` — bytes, not chars)."""
-    return F.octet_length(c)
 
 
 def truncate_chars(c: Column | str, n: int = 65000) -> Column:

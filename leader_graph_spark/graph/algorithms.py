@@ -270,6 +270,14 @@ DRIVER_CC_CONF = "spark.leader_graph_spark.cc.driverMaxEdges"
 # checkpoint.
 # (merge_components' quotient path takes its limit as the
 # driver_quotient_limit argument instead.)
+DEDUP_DRIVER_CONF = "spark.leader_graph_spark.dedup.driverMaxBytes"
+# Bounds the driver-side MinHash near-dup solve
+# (operators.dedup.minhash_near_duplicates): a corpus whose (id, text)
+# projection Spark's optimizer estimates at or under this many bytes is
+# shingled by Spark, collected once as Arrow and solved in Python; past
+# it the distributed plan runs. The estimate needs no job. The default
+# sits at half the crossover measured there. 0 forces the distributed
+# plan.
 
 
 def _conf_int(spark, key: str, default: int, minimum: int) -> int:

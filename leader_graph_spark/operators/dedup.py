@@ -24,9 +24,15 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from leader_graph_spark.functions.scalar import bind
-from leader_graph_spark.graph.algorithms import _release
+from leader_graph_spark.graph.algorithms import (
+    DEDUP_DRIVER_CONF,
+    _conf_int,
+    _driver_frame,
+    _release,
+)
 from leader_graph_spark.sources.tables import fan_out
 
 HEX = "0123456789abcdef"
@@ -257,6 +263,9 @@ def jaccard_on_pairs(
     )
 
 
+DEDUP_DRIVER_DEFAULT = 256 * 1024
+
+
 def minhash_near_duplicates(
     df: DataFrame,
     *,
@@ -270,6 +279,28 @@ def minhash_near_duplicates(
     """Full MinHash-LSH near-dup pipeline: shingle → signature → band
     buckets → candidate pairs → exact-Jaccard verification ≥ threshold.
     Output: (id_1, id_2, jaccard rounded to 6).
+
+    Two branches, chosen before any job. When the optimizer's size
+    estimate of the ``(id, text)`` projection is at most
+    ``DEDUP_DRIVER_CONF`` bytes (and the ids are integers or plain
+    strings), the corpus is solved on the driver
+    (:func:`_driver_near_duplicates`): ONE Arrow collect of Spark's own
+    distinct shingle arrays, then hashing, banding and verification in
+    Python, handed back as a ``LocalRelation``. On a small corpus the
+    distributed plan's cost is scheduling, not compute: measured on the
+    benchmark's 500-document corpus (4 cores), its five jobs spent
+    0.2-0.3 s of 0.9 s CPU on executors, the rest on plan analysis, AQE
+    stage planning and broadcasts. The driver branch's cost grows with
+    the corpus (its collect shingles a single-split table on one core)
+    where the distributed plan's stays near its scheduling floor.
+    Measured on generated corpora (4 cores, warm, median of 5; the
+    query's plan build plus a noop write), driver against distributed
+    wall: 500 documents (26 KB estimated) 0.28 vs 0.98 s, 5 000
+    (255 KB) 0.72 vs 0.97 s, 7 500 (386 KB) 0.99 vs 1.11 s, 10 000
+    (508 KB) 1.35 vs 1.40 s. The default limit, ``DEDUP_DRIVER_DEFAULT``
+    (256 KiB), sits at half that crossover.
+
+    Past the limit the distributed plan below runs.
 
     Shuffle economics (measured at sf0.1): the signature stage consumes
     NON-distinct shingles — duplicates cannot change a min, so the
@@ -289,6 +320,18 @@ def minhash_near_duplicates(
     bucket stream outgrows it — a step function, linear in content on
     both sides. At cluster scale the SMJ regime is simply correct; an
     ever-growing bucket stream cannot stay broadcast."""
+    limit = _conf_int(df.sparkSession, DEDUP_DRIVER_CONF, DEDUP_DRIVER_DEFAULT, 0)
+    docs = df.select(id_col, text_col)
+    if limit and _driver_solvable(docs, id_col, text_col, limit):
+        return _driver_near_duplicates(
+            docs,
+            id_col=id_col,
+            text_col=text_col,
+            shingle_n=shingle_n,
+            num_hashes=num_hashes,
+            bands=bands,
+            threshold=threshold,
+        )
     fanned = fan_out(df)
     sh_all = shingle_rows(
         fanned, id_col=id_col, text_col=text_col, n=shingle_n, distinct=False
@@ -313,6 +356,137 @@ def minhash_near_duplicates(
         )
     )
     return jac.filter(F.col("jaccard") >= threshold).select(
+        "id_1", "id_2", F.round("jaccard", 6).alias("jaccard")
+    )
+
+
+def _driver_solvable(docs: DataFrame, id_col: str, text_col: str, limit: int) -> bool:
+    """Whether the driver branch may take ``docs``: the optimizer's size
+    estimate (no job) is within ``limit``, and Python compares the ids
+    and shingles as Spark does — integer or default-collation string
+    ids, default-collation text (a collated string would make Spark's
+    distinct and intersect case- or accent-insensitive)."""
+    id_type, text_type = docs.schema[id_col].dataType, docs.schema[text_col].dataType
+    if not (isinstance(id_type, T.IntegralType) or id_type == T.StringType()):
+        return False
+    if text_type != T.StringType():
+        return False
+    return docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= limit
+
+
+def driver_shingle_sets(df: DataFrame, *, id_col: str, text_col: str, n: int) -> DataFrame:
+    """``(id, sh)``: each row's distinct n-word shingles as
+    ``array<binary>`` — the driver branch's one collect. Spark
+    normalizes and shingles (:func:`shingle_array`), so lowercasing,
+    trimming and whitespace splitting stay Spark's own; binary arrives
+    in Python as the UTF-8 bytes md5 hashes and sets compare."""
+    return df.select(
+        F.col(id_col),
+        F.array_distinct(shingle_array(text_col, n)).cast("array<binary>").alias("sh"),
+    )
+
+
+def _driver_near_duplicates(
+    docs: DataFrame,
+    *,
+    id_col: str,
+    text_col: str,
+    shingle_n: int,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+) -> DataFrame:
+    """The distributed pipeline's exact result, computed in Python from
+    one Arrow collect of :func:`driver_shingle_sets`.
+
+    It keeps the distributed semantics row for row. Signatures group by
+    id, so an id with several rows is signed from the union of their
+    shingles, and a doc with no shingles gets no signature. A null id
+    never pairs (``id_1 < id_2`` is null there). Verification joins
+    the candidate pairs to the per-ROW shingle sets, so a pair emits
+    one row per (row of ``id_1``, row of ``id_2``). Base values,
+    affine minimums and band keys are the ones
+    :func:`minhash_signatures` and :func:`lsh_band_buckets` compute;
+    the Jaccard is the same double division, and Spark rounds it. A
+    row pair whose two shingle sets are both empty divides 0 by 0 and
+    fails, as the distributed plan's ANSI division does."""
+    import hashlib
+
+    import numpy as np
+    import pyarrow.compute as pc
+
+    table = driver_shingle_sets(docs, id_col=id_col, text_col=text_col, n=shingle_n).toArrow()
+    ids = table.column(0).to_pylist()
+    lists = table.column(1).combine_chunks()
+    offsets = lists.offsets.to_numpy()
+    offsets = offsets - offsets[0]
+    # Each distinct shingle is hashed once: rows hold dictionary codes,
+    # and codes are equal exactly when the shingles' bytes are.
+    shingles = pc.dictionary_encode(lists.flatten())
+    codes = shingles.indices.to_numpy(zero_copy_only=False)
+    base = np.fromiter(  # leading 28 bits of each shingle's md5
+        (int.from_bytes(hashlib.md5(sh).digest()[:4], "big") >> 4
+         for sh in shingles.dictionary.to_pylist()),
+        dtype=np.int64,
+        count=len(shingles.dictionary),
+    )
+    rows_of: dict = {}
+    for r, i in enumerate(ids):
+        if i is not None:
+            rows_of.setdefault(i, []).append(r)
+
+    pairs: set = set()
+    # Rows with at least one shingle, each reduced over its own codes
+    # (the empty rows between them span nothing). An id's minimums are
+    # the minimums over its rows; a null id is never signed.
+    full = np.flatnonzero(offsets[1:] > offsets[:-1])
+    signed = [j for j, r in enumerate(full.tolist()) if ids[r] is not None]
+    if signed:
+        a, b = (np.array(c, dtype=np.int64)[:, None] for c in zip(*minhash_coeffs(num_hashes)))
+        row_mins = np.minimum.reduceat(
+            ((a * base + b) % MINHASH_PRIME)[:, codes], offsets[full], axis=1
+        ).T[signed]
+        slot: dict = {}
+        owner = np.array([slot.setdefault(ids[r], len(slot)) for r in full[signed].tolist()])
+        sigs = np.full((len(slot), num_hashes), MINHASH_PRIME, dtype=np.int64)
+        np.minimum.at(sigs, owner, row_mins)
+        rows_per_band = num_hashes // bands
+        buckets: dict = {}
+        for i, sig in zip(slot, sigs.tolist()):
+            for band in range(bands):
+                part = sig[band * rows_per_band : (band + 1) * rows_per_band]
+                key = hashlib.md5("|".join(map(str, part)).encode()).digest()
+                buckets.setdefault((band, key), []).append(i)
+        for members in buckets.values():
+            for x in members:
+                pairs.update((x, y) for y in members if x < y)
+
+    sets: dict = {}
+
+    def row_set(r):
+        if r not in sets:
+            sets[r] = frozenset(codes[offsets[r] : offsets[r + 1]].tolist())
+        return sets[r]
+
+    id_1, id_2, jaccards = [], [], []
+    for x, y in pairs:
+        for s1 in map(row_set, rows_of[x]):
+            for s2 in map(row_set, rows_of[y]):
+                inter = len(s1 & s2)
+                jaccard = inter / float(len(s1) + len(s2) - inter)
+                if jaccard >= threshold:
+                    id_1.append(x)
+                    id_2.append(y)
+                    jaccards.append(jaccard)
+    id_type = docs.schema[id_col].dataType
+    schema = T.StructType(
+        [
+            T.StructField("id_1", id_type),
+            T.StructField("id_2", id_type),
+            T.StructField("jaccard", T.DoubleType()),
+        ]
+    )
+    return _driver_frame(docs.sparkSession, schema, [id_1, id_2, jaccards]).select(
         "id_1", "id_2", F.round("jaccard", 6).alias("jaccard")
     )
 

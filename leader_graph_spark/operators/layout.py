@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 ZBITS = 16  # bits kept per dimension; 2 dims -> 32-bit z-values
@@ -92,24 +92,6 @@ def zorder_key_sql(col_exprs: Sequence[str], bits: int = ZBITS) -> str:
             # INT32 '<<' from overflowing at bit 31.
             terms.append(f"(CAST((({e}) >> {b}) & 1 AS BIGINT) << {n * b + d})")
     return "(" + " + ".join(terms) + ")"
-
-
-def zorder_layout(
-    df: DataFrame,
-    *,
-    dims: Sequence[str],
-    n_files: int,
-    bits: int = ZBITS,
-) -> DataFrame:
-    """Assign every row its z-value and target file: rank-normalize the
-    dimensions is the caller's job (``normalize_dim``); here ``dims``
-    are already in [0, 2**bits). The write path is then
-    ``repartitionByRange(n_files, zval).sortWithinPartitions(zval)`` —
-    same mechanics as ``sources.files.compact_dir`` but clustering a
-    SPACE-FILLING CURVE instead of a single key, so per-file min/max
-    prune on every dimension."""
-    zval = zorder_key([F.col(d) for d in dims], bits).alias("zval")
-    return df.select("*", zval)
 
 
 def hilbert_key_py(bits: int, x: int, y: int) -> int:

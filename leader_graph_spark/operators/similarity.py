@@ -216,6 +216,11 @@ def ann_lsh_topk(
     import pandas as pd
     from pyspark.sql import types as T
 
+    from leader_graph_spark.graph.algorithms import _conf_int
+
+    rows_per_task = _conf_int(
+        emb.sparkSession, "spark.leader_graph_spark.lsh.rowsPerTask", 4096, 1
+    )
     n_rows = None
     if target_bucket is not None:
         n_rows = emb.count()
@@ -233,11 +238,6 @@ def ann_lsh_topk(
     # action), size the seams to ≥ rowsPerTask rows per task and only
     # ever SHRINK below the default parallelism: a corpus past
     # cores × rowsPerTask rows keeps today's plan unchanged.
-    rows_per_task = int(
-        emb.sparkSession.conf.get(
-            "spark.leader_graph_spark.lsh.rowsPerTask", "4096"
-        )
-    )
     default_par = emb.sparkSession.sparkContext.defaultParallelism
     hash_par = None
     if n_rows is not None:

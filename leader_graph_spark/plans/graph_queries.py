@@ -1064,9 +1064,16 @@ def supplier_clustering_coefficients(spark: SparkSession, sf_dir: str) -> DataFr
       graph must not ride a broadcast. Its edge list and degrees now
       also derive from the checkpointed block relation (one explode /
       one aggregate) instead of a second full pair shuffle."""
-    from leader_graph_spark.graph.algorithms import _checkpoint_observed, _release
+    from leader_graph_spark.graph.algorithms import (
+        _checkpoint_observed,
+        _conf_int,
+        _release,
+    )
     from leader_graph_spark.graph.derived import skew_guarded_self_pairs
 
+    bcast_max = _conf_int(
+        spark, "spark.leader_graph_spark.lcc.broadcastMaxBytes", 64 * 1024 * 1024, 0
+    )
     li = load_table(spark, sf_dir, "lineitem")
     sp = li.select(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")).distinct()
     pairs = skew_guarded_self_pairs(
@@ -1085,11 +1092,6 @@ def supplier_clustering_coefficients(spark: SparkSession, sf_dir: str) -> DataFr
         .groupBy("u", "blk")
         .agg(F.expr("bit_or(bit)").alias("bits")),
         n_entries=F.count(F.lit(1)),
-    )
-    bcast_max = int(
-        spark.conf.get(
-            "spark.leader_graph_spark.lcc.broadcastMaxBytes", str(64 * 1024 * 1024)
-        )
     )
     # Conservative bytes per broadcast map entry: 4 B block key + 8 B
     # bits + ~20 B hashed-relation/row overhead, single broadcast.

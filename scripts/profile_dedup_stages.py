@@ -18,7 +18,9 @@ or from the propagation rounds (cluster-structure-driven):
                 (pairs + propagation + election should ~= shipped;
                 the checkpoint seam is already inside the shipped op)
 
-Interleaved best-of-N at sf0.1 on the driver's documents table.
+Interleaved best-of-N on the sf0.1 documents table, with the
+driver-side MinHash branch turned off (``DEDUP_DRIVER_CONF=0``) so
+every stage is the distributed one.
 """
 
 from __future__ import annotations
@@ -31,7 +33,11 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
-from leader_graph_spark.graph.algorithms import min_propagation, symmetrize
+from leader_graph_spark.graph.algorithms import (
+    DEDUP_DRIVER_CONF,
+    min_propagation,
+    symmetrize,
+)
 from leader_graph_spark.operators.dedup import minhash_near_duplicates
 from leader_graph_spark.plans.dedup_queries import (
     BANDS,
@@ -63,6 +69,9 @@ def _pairs(spark, sf_dir):
 
 def main():
     spark = get_spark("profile_dedup_stages")
+    # Profile the distributed MinHash stages: a corpus within the limit
+    # would otherwise be solved on the driver from one collect.
+    spark.conf.set(DEDUP_DRIVER_CONF, "0")
     dedup_canonical_docs(spark, WARM_DIR).write.format("noop").mode("overwrite").save()
     meta = {}
     timings: dict[str, list[float]] = {

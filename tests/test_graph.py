@@ -905,6 +905,21 @@ def test_lcc_adjacency_intersection_matches_naive(spark, sf_smoke):
     assert got_oriented == expect
 
 
+@pytest.mark.parametrize("value", ["-1", "64MB"])
+def test_lcc_broadcast_limit_rejects_bad_values(spark, sf_smoke, value):
+    """A bad broadcast limit fails naming its key, before any job,
+    instead of silently picking the oriented path."""
+    from leader_graph_spark.plans.graph_queries import supplier_clustering_coefficients
+
+    conf = "spark.leader_graph_spark.lcc.broadcastMaxBytes"
+    spark.conf.set(conf, value)
+    try:
+        with pytest.raises(ValueError, match=re.escape(conf)):
+            supplier_clustering_coefficients(spark, sf_smoke)
+    finally:
+        spark.conf.unset(conf)
+
+
 def test_weighted_sssp_relaxes_cheaper_multihop(spark):
     """A later, longer path that is CHEAPER must overwrite the first
     distance written — the case the BFS visited-set shortcut would get

@@ -167,6 +167,7 @@ def test_dedup_builders_bind_per_row_inputs(spark):
     """The shingle, MinHash and char-shingle builders themselves."""
     from leader_graph_spark.operators.dedup import (
         char_shingle_rows,
+        driver_shingle_sets,
         minhash_signatures,
         shingle_array,
         shingle_rows,
@@ -181,6 +182,8 @@ def test_dedup_builders_bind_per_row_inputs(spark):
             id_col="doc_id",
         ),
         char_shingle_rows(df, id_col="doc_id", text_col="text", n=5),
+        # the driver-side MinHash branch's one collect
+        driver_shingle_sets(df, id_col="doc_id", text_col="text", n=3),
     ]
     for f in frames:
         assert lambda_invariants(f) == []
@@ -188,10 +191,19 @@ def test_dedup_builders_bind_per_row_inputs(spark):
 
 def test_dedup_and_text_queries_bind_per_row_inputs(spark, sf_smoke):
     """Every registered dedup and text query, at sf0.001 (only the
-    plan is inspected)."""
+    plan is inspected). The MinHash lanes would hand back the driver
+    branch's local result, so the distributed plan is forced
+    (``DEDUP_DRIVER_CONF=0``) and linted; the driver branch's collect
+    projection is linted in :func:`test_dedup_builders_bind_per_row_inputs`."""
+    from leader_graph_spark.graph.algorithms import DEDUP_DRIVER_CONF
+
     names = sorted(n for n, s in REGISTRY.items() if s.spark.__module__ in _TEXT_MODULES)
     assert len(names) >= 30
-    _lint_queries(spark, names, sf_smoke)
+    spark.conf.set(DEDUP_DRIVER_CONF, "0")
+    try:
+        _lint_queries(spark, names, sf_smoke)
+    finally:
+        spark.conf.unset(DEDUP_DRIVER_CONF)
 
 
 @pytest.mark.slow  # builds every registered query's plan at sf0.01, ~150 s

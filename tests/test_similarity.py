@@ -4,6 +4,9 @@ duplicates."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from leader_graph_spark.operators.dedup import (
@@ -58,6 +61,20 @@ def test_ann_lsh_recall_vs_bruteforce(spark, sf_dir):
     # 4 tables × 4 planes (OR-amplified): nearest-neighbor cosines in
     # this data are weak (~0.33), so recall ~0.4-0.6 is expected.
     assert hits / total > 0.35, f"recall {hits}/{total}"
+
+
+@pytest.mark.parametrize("value", ["0", "-5", "many"])
+def test_lsh_rows_per_task_rejects_bad_values(spark, sf_smoke, value):
+    """A zero, negative or non-integer seam size fails naming its key,
+    instead of dividing by zero or silently picking one partition."""
+    conf = "spark.leader_graph_spark.lsh.rowsPerTask"
+    emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet").limit(50)
+    spark.conf.set(conf, value)
+    try:
+        with pytest.raises(ValueError, match=re.escape(conf)):
+            ann_lsh_topk(emb, k=5, dim=64, target_bucket=1024)
+    finally:
+        spark.conf.unset(conf)
 
 
 def test_ann_ivf_structure(spark, sf_dir):
