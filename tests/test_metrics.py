@@ -78,6 +78,31 @@ BENCH_BUDGETS: dict[str, tuple[float, int]] = {
 }
 
 
+# The MinHash lanes solve every testdata corpus on the driver
+# (operators.dedup.minhash_near_duplicates within DEDUP_DRIVER_CONF),
+# so their BENCH_BUDGETS entries above bound the distributed plan only
+# when that branch is off: test_distributed_minhash_bytes_budget runs
+# them at DEDUP_DRIVER_CONF=0 (measured at sf0.001: 0.42 MB / 5 jobs
+# and 0.51 MB / 11 jobs). These bound the driver branch the lanes take
+# by default, measured at 0 MB / 2 jobs (the collect and the action)
+# and 0.028 MB / 14 jobs (the propagation over the local pair list).
+DRIVER_MINHASH_BUDGETS: dict[str, tuple[float, int]] = {
+    "minhash_near_dup_docs": (0.0, 3),
+    "dedup_canonical_docs": (0.06, 18),
+}
+
+
+def _bytes_budget(spark, sf_dir, name, mb_budget, jobs_budget):
+    spec = bench_queries()[name]
+    led = measure_query(spark, lambda: spec.bench_spark(spark, sf_dir)).as_dict()
+    mb = led["shuffle_read_mb"] + led["shuffle_write_mb"]
+    assert mb <= mb_budget, f"{name}: {mb:.3f} shuffle MB > budget {mb_budget}"
+    assert led["disk_spill_mb"] == 0, f"{name}: spilled {led['disk_spill_mb']} MB to disk"
+    assert led["jobs"] <= jobs_budget, (
+        f"{name}: {led['jobs']} driver actions > budget {jobs_budget}"
+    )
+
+
 def test_budget_table_covers_every_bench_query():
     assert sorted(BENCH_BUDGETS) == sorted(bench_queries())
 
@@ -115,12 +140,20 @@ def test_measurements_are_isolated(spark):
 
 @pytest.mark.parametrize("name", sorted(BENCH_BUDGETS))
 def test_bench_query_bytes_budget(spark, sf_smoke, name):
-    spec = bench_queries()[name]
-    led = measure_query(spark, lambda: spec.bench_spark(spark, sf_smoke)).as_dict()
-    mb = led["shuffle_read_mb"] + led["shuffle_write_mb"]
-    mb_budget, jobs_budget = BENCH_BUDGETS[name]
-    assert mb <= mb_budget, f"{name}: {mb:.3f} shuffle MB > budget {mb_budget}"
-    assert led["disk_spill_mb"] == 0, f"{name}: spilled {led['disk_spill_mb']} MB to disk"
-    assert led["jobs"] <= jobs_budget, (
-        f"{name}: {led['jobs']} driver actions > budget {jobs_budget}"
-    )
+    _bytes_budget(spark, sf_smoke, name, *BENCH_BUDGETS[name])
+
+
+@pytest.mark.parametrize("name", sorted(DRIVER_MINHASH_BUDGETS))
+def test_distributed_minhash_bytes_budget(spark, sf_smoke, name):
+    from leader_graph_spark.graph.algorithms import DEDUP_DRIVER_CONF
+
+    spark.conf.set(DEDUP_DRIVER_CONF, "0")
+    try:
+        _bytes_budget(spark, sf_smoke, name, *BENCH_BUDGETS[name])
+    finally:
+        spark.conf.unset(DEDUP_DRIVER_CONF)
+
+
+@pytest.mark.parametrize("name", sorted(DRIVER_MINHASH_BUDGETS))
+def test_driver_minhash_bytes_budget(spark, sf_smoke, name):
+    _bytes_budget(spark, sf_smoke, name, *DRIVER_MINHASH_BUDGETS[name])

@@ -117,6 +117,19 @@ def test_fixed_corpus_edge_cases(spark):
     assert sum(1 for a, b, _ in got if (a, b) == (1, 2)) == 2
 
 
+def test_id_with_several_rows_signs_from_their_union(spark):
+    """Id 1's rows are a copy of id 2 and a short unrelated text: the
+    union of their shingles has mostly the copy's minimums, so the ids
+    collide in a band, and the copy's row verifies at 1.0. Signing
+    from either row alone would miss or find the pair by row order."""
+    copy = " ".join(f"w{i}" for i in range(42))
+    other = " ".join(f"v{i}" for i in range(42))
+    rows = [(1, copy), (1, "short other text"), (2, copy)]
+    rows += [(3, "short other text"), (3, other), (4, other)]  # copy last
+    got = _assert_equal(spark, _docs(spark, rows))
+    assert (1, 2, 1.0) in got and (3, 4, 1.0) in got
+
+
 def test_string_ids_and_shingle_sizes(spark):
     rows = [
         ("a", "x y z w v u t s r q"),
@@ -157,6 +170,54 @@ def test_empty_row_pairs_fail_alike(spark):
     text = "one two three four five six seven"
     df = _docs(spark, [(1, text), (1, ""), (2, text), (2, None)])
     assert _both_branches(spark, df, threshold=0.5) == ["0/0", "0/0"]
+
+
+def test_empty_row_pairs_drop_alike_without_ansi(spark):
+    """With ANSI division off, the (empty, empty) row pair's 0/0 is a
+    null Jaccard that the threshold filter drops, on both branches."""
+    text = "one two three four five six seven"
+    df = _docs(spark, [(1, text), (1, ""), (2, text), (2, None)])
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        for threshold in (0.0, 0.5):
+            got = _assert_equal(spark, df, threshold=threshold)
+            assert (1, 2, 1.0) in got and len(got) == (3 if threshold == 0.0 else 1)
+    finally:
+        spark.conf.unset("spark.sql.ansi.enabled")
+
+
+def test_bucket_pair_guard_falls_back_to_distributed(spark):
+    """Three copies of one document fill each of the 4 bands' buckets
+    with 3 member pairs: 12 bucket pairs solve on the driver at a
+    bound of 12, and a bound of 11 hands the corpus to the
+    distributed plan (no local result), with the same rows."""
+    text = " ".join(f"w{i}" for i in range(20))
+    df = _docs(spark, [(1, text), (2, text), (3, text), (4, "x y z w")])
+    spark.conf.set(DEDUP_DRIVER_CONF, _FORCE_DRIVER)
+    kw = dict(id_col="doc_id", text_col="text")
+    try:
+        results = []
+        for bound in (12, 11):
+            with mock.patch.object(dedup, "DEDUP_DRIVER_MAX_PAIRS", bound):
+                got = minhash_near_duplicates(df, **kw)
+                plan = got._jdf.queryExecution().optimizedPlan().toString()
+                results.append(("Join" in plan, sorted(map(tuple, got.collect()))))
+    finally:
+        spark.conf.unset(DEDUP_DRIVER_CONF)
+    (joined_at_12, rows_12), (joined_at_11, rows_11) = results
+    assert (joined_at_12, joined_at_11) == (False, True)
+    assert rows_12 == rows_11 == [(1, 2, 1.0), (1, 3, 1.0), (2, 3, 1.0)]
+
+
+def test_many_copies_equal_distributed(spark):
+    """A duplicate-heavy corpus — 60 documents, copies of 3 templates,
+    some with a word appended — pairs every copy alike on both
+    branches."""
+    templates = [" ".join(f"t{t}w{i}" for i in range(12 + 4 * t)) for t in range(3)]
+    rows = [(i, templates[i % 3] + (" extra" if i % 5 == 0 else "")) for i in range(60)]
+    got = {(a, b) for a, b, _ in _assert_equal(spark, _docs(spark, rows))}
+    exact = [i for i in range(60) if i % 5]  # unaltered copies collide in every band
+    assert {(a, b) for a in exact for b in exact if a < b and a % 3 == b % 3} <= got
 
 
 _WORDS = ["a", "B", "ça", "été", "İ", "Σ", "中文", "x1"]

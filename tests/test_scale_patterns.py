@@ -189,6 +189,8 @@ SHUFFLE_BUDGETS = {
     "flagship_colleagues_bucketed": 2,
     "flagship_colleagues_interval": 2,
     "local_supplier_volume": 1,
+    # the distributed plan (test_minhash_shuffle_budget_both_branches
+    # forces it; the driver branch testdata takes has none)
     "minhash_near_dup_docs": 6,
     "pricing_summary": 1,
     # r11 hot-school skew guard: the initial (pre-AQE) plan carries the
@@ -288,15 +290,38 @@ def test_topk_queries_plan_take_ordered(spark, sf_smoke):
         assert "TakeOrderedAndProject" in plan, name
 
 
-@pytest.mark.parametrize("name", sorted(SHUFFLE_BUDGETS))
-def test_bench_query_shuffle_budget(spark, sf_smoke, name):
+def _bench_shuffles(spark, sf_dir, name) -> int:
     from leader_graph_spark.plans import bench_queries
 
     spec = bench_queries()[name]
-    plan = spec.bench_spark(spark, sf_smoke)._jdf.queryExecution().executedPlan().toString()
-    shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
+    plan = spec.bench_spark(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    return plan.count("Exchange") - plan.count("BroadcastExchange")
+
+
+@pytest.mark.parametrize("name", sorted(SHUFFLE_BUDGETS))
+def test_bench_query_shuffle_budget(spark, sf_smoke, name):
+    shuffles = _bench_shuffles(spark, sf_smoke, name)
     assert shuffles <= SHUFFLE_BUDGETS[name], (
         f"{name}: {shuffles} shuffles > budget {SHUFFLE_BUDGETS[name]}"
+    )
+
+
+def test_minhash_shuffle_budget_both_branches(spark, sf_smoke):
+    """``minhash_near_dup_docs`` takes the driver branch at every
+    testdata scale, whose result is a local relation with no exchange;
+    its ``SHUFFLE_BUDGETS`` entry bounds the distributed plan, forced
+    here with ``DEDUP_DRIVER_CONF=0``."""
+    from leader_graph_spark.graph.algorithms import DEDUP_DRIVER_CONF
+
+    name = "minhash_near_dup_docs"
+    assert _bench_shuffles(spark, sf_smoke, name) == 0
+    spark.conf.set(DEDUP_DRIVER_CONF, "0")
+    try:
+        shuffles = _bench_shuffles(spark, sf_smoke, name)
+    finally:
+        spark.conf.unset(DEDUP_DRIVER_CONF)
+    assert shuffles <= SHUFFLE_BUDGETS[name], (
+        f"{name} distributed: {shuffles} shuffles > budget {SHUFFLE_BUDGETS[name]}"
     )
 
 
