@@ -966,26 +966,3 @@ def portrait_url_table(df: DataFrame, *, id_col: str, html_col: str) -> DataFram
             )
 
     return df.select(id_col, html_col).mapInPandas(run, out_schema)
-
-
-def person_links_udtf():
-    """X3 as a native Python UDTF (Spark 4): one (id, html) row in, N
-    (name, url, uuid) link rows out — the lateral-join form of
-    ``extract_person_links`` for SQL users
-    (``leader/update_c_org_leader_info.py:75-206``). Register with
-    ``spark.udtf.register("extract_person_links", person_links_udtf())``
-    then ``SELECT l.* FROM pages, LATERAL extract_person_links(id,
-    html) l``. The mapInPandas path (:func:`extract_links_table`)
-    remains the Arrow-batched bulk surface; the UDTF is row-at-a-time
-    and priced accordingly."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="org_id bigint, name string, url string, uuid string")
-    class PersonLinksUDTF:
-        def eval(self, org_id: int, html: str):
-            for link in extract_person_links(
-                html or "", heading_keywords=("机构领导", "现任领导")
-            ):
-                yield org_id, link["name"], link["url"], link["uuid"]
-
-    return PersonLinksUDTF

@@ -135,13 +135,6 @@ def ts_months_scalar(ts: Column | str) -> Column:
     return F.year(c) * 12 + F.month(c)
 
 
-def format_month_scalar(months: Column) -> Column:
-    """Zero-padded ``YYYY.MM`` for one months-scalar (month 1-12)."""
-    y = ((months - 1) / 12).cast("int")
-    m = ((months - 1) % 12) + 1
-    return F.concat(y.cast("string"), F.lit("."), F.lpad(m.cast("string"), 2, "0"))
-
-
 def format_period(start_months: Column, end_months: Column) -> Column:
     """Zero-padded ``YYYY.MM-YYYY.MM`` overlap-period string
     (``src/mysql2neo4j.py:317-324,448-453``). Input is months-scalars

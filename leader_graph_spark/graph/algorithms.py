@@ -267,9 +267,8 @@ DRIVER_CC_CONF = "spark.leader_graph_spark.cc.driverMaxEdges"
 # count is at or under it is collected from that symmetric checkpoint
 # instead; otherwise the distributed loop runs. It bounds the rows a
 # collect brings to the driver. 0 forces the loop with no raw-edge
-# checkpoint.
-# (merge_components' quotient path takes its limit as the
-# driver_quotient_limit argument instead.)
+# checkpoint. merge_components bounds its quotient graph's driver solve
+# by it too (0 sends the quotient to the loop).
 DEDUP_DRIVER_CONF = "spark.leader_graph_spark.dedup.driverMaxBytes"
 # Bounds the driver-side MinHash near-dup solve
 # (operators.dedup.minhash_near_duplicates): a corpus whose (id, text)
@@ -1440,13 +1439,10 @@ def merge_components(
     new_edges: DataFrame,
     *,
     max_iter: int = 25,
-    driver_quotient_limit: int = 100_000,
 ) -> DataFrame:
     """Incremental connected-components maintenance: fold a batch of
     NEW edges into an existing (id, component) labeling without
-    re-running CC over the historical edge set — the graph analog of
-    the repo's algebraic state merges (``merge_algebraic_state``,
-    incremental MinHash index probes).
+    re-running CC over the historical edge set.
 
     Mechanics: each new edge collapses to an edge between its
     endpoints' CURRENT components (endpoints unseen by the labeling
@@ -1462,8 +1458,8 @@ def merge_components(
 
     Scale swap (size-guarded like the ranked-vertex path): the
     quotient graph is sized by the DELTA's component touches, so for
-    typical incremental batches it is tiny — up to
-    ``driver_quotient_limit`` edges its components are solved by
+    typical incremental batches it is tiny — up to ``DRIVER_CC_CONF``
+    edges (read before any job) its components are solved by
     driver-side union-find from ONE Arrow collect (the iterative quotient
     CC was ~60 scheduling barriers of pure fixed overhead, the single
     biggest local line item of the headline bench), with labels =
@@ -1471,7 +1467,8 @@ def merge_components(
     (min-reachable-id; ids compare as ASCII/UTF8 — equality
     test-pinned against the distributed path). Above the limit the
     distributed loop runs — a 100 TB delta touching millions of
-    components never lands on the driver."""
+    components never lands on the driver; 0 forces the loop."""
+    limit = _conf_int(new_edges.sparkSession, DRIVER_CC_CONF, 100_000, 0)
     sym = symmetrize(new_edges)
     lab_src = labels.select(F.col("id").alias("src"), F.col("component").alias("csrc"))
     lab_dst = labels.select(F.col("id").alias("dst"), F.col("component").alias("cdst"))
@@ -1486,7 +1483,7 @@ def merge_components(
         .distinct()
     )
     q_edges, seen = _checkpoint_observed(q_edges, n=F.count(F.lit(1)))
-    if seen["n"] <= driver_quotient_limit:
+    if limit and seen["n"] <= limit:
         pairs = _collect_pairs(q_edges)
         # driver path consumed the quotient in one collect — release it
         _release(q_edges)

@@ -72,60 +72,3 @@ def asof_join_backward(
         F.col(f"__match.{c}").alias(f"asof_{c}") for c in right_payload
     ]
     return merged.filter(F.col("__side") == 1).select(*out_cols)
-
-
-def asof_join_forward(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    left_key: str,
-    right_key: str,
-    left_ts: str,
-    right_ts: str,
-    right_payload: list[str],
-) -> DataFrame:
-    """Left as-of join, FORWARD direction: for every left row, the
-    EARLIEST right row with ``right_ts >= left_ts`` on the same key —
-    "the next restock after this stockout", "the first response after
-    this request". Same union trick as :func:`asof_join_backward` with
-    the window reversed: right rows sort BEFORE left rows at equal ts
-    (side 0) and the ``first(ignorenulls)`` frame looks FORWARD, so the
-    inclusive >= falls out of the same tie ordering. One shuffle on the
-    key, no pair blowup. ``right`` must be unique per (key, ts)."""
-    l_struct = F.struct(*[F.col(c) for c in left.columns])
-    r_struct = F.struct(*[F.col(c) for c in right_payload])
-    l_type = left.select(*left.columns).schema.simpleString().removeprefix("struct")
-    r_type = right.select(*right_payload).schema.simpleString().removeprefix("struct")
-
-    tagged_r = right.select(
-        F.col(right_key).alias("__k"),
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias("__side"),
-        F.lit(None).cast(f"struct{l_type}").alias("__l"),
-        r_struct.alias("__r"),
-    )
-    tagged_l = left.select(
-        F.col(left_key).alias("__k"),
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias("__side"),
-        l_struct.alias("__l"),
-        F.lit(None).cast(f"struct{r_type}").alias("__r"),
-    )
-
-    # side 0 (right) sorts before side 1 (left) at equal ts; the frame
-    # [current, +inf) therefore EXCLUDES a right row at the same ts…
-    # unless we order right rows AFTER left rows. Flip the side order:
-    # left first (side 1 → sort key 0) so an equal-ts right row is
-    # inside the forward frame → inclusive >=.
-    w = (
-        Window.partitionBy("__k")
-        .orderBy("__ts", F.desc("__side"))
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-    merged = tagged_r.unionByName(tagged_l).withColumn(
-        "__match", F.first("__r", ignorenulls=True).over(w)
-    )
-    out_cols = [F.col(f"__l.{c}").alias(c) for c in left.columns] + [
-        F.col(f"__match.{c}").alias(f"asof_{c}") for c in right_payload
-    ]
-    return merged.filter(F.col("__side") == 1).select(*out_cols)

@@ -371,9 +371,10 @@ def minhash_near_duplicates(
         .select(
             "id_1",
             "id_2",
-            (inter / (F.size("sh_1") + F.size("sh_2") - inter).cast("double")).alias(
-                "jaccard"
-            ),
+            # a row pair of two empty sets has no Jaccard: null, not 0/0
+            (inter / F.nullif(F.size("sh_1") + F.size("sh_2") - inter, F.lit(0)).cast(
+                "double"
+            )).alias("jaccard"),
         )
     )
     return jac.filter(F.col("jaccard") >= threshold).select(
@@ -432,10 +433,8 @@ def _driver_near_duplicates(
     affine minimums and band keys are the ones
     :func:`minhash_signatures` and :func:`lsh_band_buckets` compute;
     the Jaccard is the same double division, and Spark rounds it. A
-    row pair whose two shingle sets are both empty divides 0 by 0: it
-    fails under ANSI division (``spark.sql.ansi.enabled``, Spark 4's
-    default), as the distributed plan does, and is dropped without it,
-    as the distributed plan's null Jaccard is."""
+    row pair whose two shingle sets are both empty has no Jaccard: it
+    is dropped, as the distributed plan drops its null Jaccard."""
     import hashlib
 
     import numpy as np
@@ -514,14 +513,11 @@ def _driver_near_duplicates(
     ]
     sets = [frozenset(np.frombuffer(key, dtype=codes.dtype).tolist()) for key in cls]
     class_pairs, which = np.unique(row_cls[r1] * len(sets) + row_cls[r2], return_inverse=True)
-    ansi = docs.sparkSession.conf.get("spark.sql.ansi.enabled", "true").lower() == "true"
     jaccard = np.empty(len(class_pairs))
     for u, (c1, c2) in enumerate(zip(*np.divmod(class_pairs, len(sets)))):
         s1, s2 = sets[c1], sets[c2]
         inter = len(s1 & s2)
         union = len(s1) + len(s2) - inter
-        if union == 0 and ansi:
-            raise ZeroDivisionError("Jaccard of two empty shingle sets (0/0)")
         jaccard[u] = inter / union if union else np.nan  # NaN fails the filter
     jaccard = jaccard[which.reshape(-1)]
     keep = jaccard >= threshold
@@ -1605,11 +1601,11 @@ def confusable_skeleton(text) -> "F.Column":
     """Lower + whitespace-collapse + homoglyph fold: the dedup key that
     spoofed duplicates (Cyrillic 'а' for Latin 'a', Greek 'ο' for 'o')
     cannot evade. Pure built-ins (``translate``), so the same skeleton
-    is computable in ANSI-ish SQL for the oracle; compose with
-    :func:`~leader_graph_spark.operators.quality.normalize_unicode`
-    (NFKC) upstream when compatibility forms (full-width digits,
-    ligatures) are also in play — that seam is Python and stays out of
-    the oracle-checked path."""
+    is computable in ANSI-ish SQL for the oracle; compose with an
+    upstream NFKC normalization when compatibility forms (full-width
+    digits, ligatures) are also in play — Spark has no built-in
+    normalizer, so that seam is Python and stays out of the
+    oracle-checked path."""
     return F.translate(normalized(text), _CONFUSABLE_FROM, _CONFUSABLE_TO)
 
 

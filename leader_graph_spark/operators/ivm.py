@@ -1,8 +1,9 @@
 """Incremental view maintenance (IVM) for joins.
 
-``operators/skew.py:merge_algebraic_state`` keeps AGGREGATE views fresh
-without rescanning history; this module does the same for JOIN views —
-the other half of a warehouse's derived-table layer. Given a stored
+``operators/skew.py`` keeps AGGREGATE views fresh without rescanning
+history (sketch merges, retraction-aware state); this module does the
+same for JOIN views — the other half of a warehouse's derived-table
+layer. Given a stored
 join result over (L, R) and insert-deltas (ΔL, ΔR), the delta of the
 join is the standard differential rule
 

@@ -22,53 +22,14 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 ZBITS = 16  # bits kept per dimension; 2 dims -> 32-bit z-values
 
 
-def _interleave_terms(col: Column, n_dims: int, offset: int, bits: int = ZBITS) -> Column:
-    """Σ_b ((col >> b) & 1) << (n_dims·b + offset) — unrolled so the
-    whole key is one constant-folded JVM expression."""
-    terms = [
-        F.shiftleft(
-            F.shiftright(col, b).bitwiseAND(F.lit(1)), n_dims * b + offset
-        )
-        for b in range(bits)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def zorder_key(cols: Sequence[Column], bits: int = ZBITS) -> Column:
-    """Morton code of already-normalized non-negative integer columns
-    (each < 2**bits): bit b of dimension d lands at position
-    ``len(cols)·b + d``."""
-    out = _interleave_terms(cols[0], len(cols), 0, bits)
-    for d, c in enumerate(cols[1:], start=1):
-        out = out + _interleave_terms(c, len(cols), d, bits)
-    return out
-
-
-def normalize_dim(
-    col_expr: str, lo: int | str, hi: int | str, bits: int = ZBITS
-) -> Column:
-    """Scale an integer SQL expression from [lo, hi] onto [0, 2**bits)
-    with exact BIGINT arithmetic:
-    ``((expr - lo) * (2**bits - 1)) div (hi - lo)`` (hi > lo; bounds
-    are metadata constants or columns of a broadcast one-row
-    aggregate, never a per-row subquery — and integer ``div``, not
-    float division, so the oracle agrees bit-for-bit)."""
-    return F.expr(normalize_dim_sql(col_expr, lo, hi, bits))
-
-
 def normalize_dim_sql(col_expr: str, lo: int | str, hi: int | str, bits: int = ZBITS) -> str:
-    """SQL text of :func:`normalize_dim`, valid in BOTH Spark SQL and
-    DuckDB. Neither engine shares an integer-division spelling (Spark:
-    ``div``, DuckDB: ``//``), so exact floor division of non-negative
+    """SQL text rank-normalizing ``col_expr`` from ``[lo, hi]`` onto
+    ``[0, 2^bits - 1]``, valid in BOTH Spark SQL and DuckDB. Neither
+    engine shares an integer-division spelling (Spark: ``div``, DuckDB:
+    ``//``), so exact floor division of non-negative
     BIGINTs is spelled ``(num - num % den) / den``: the numerator is
     made exactly divisible first, the ``/`` result is then an integral
     double (< 2^53 by construction) and casts back losslessly."""
@@ -78,8 +39,8 @@ def normalize_dim_sql(col_expr: str, lo: int | str, hi: int | str, bits: int = Z
 
 
 def zorder_key_sql(col_exprs: Sequence[str], bits: int = ZBITS) -> str:
-    """Portable SQL text of :func:`zorder_key` over already-normalized
-    integer expressions: the same unrolled
+    """Portable SQL text of the z-order (Morton) key over
+    already-normalized integer expressions: the unrolled
     ``((x >> b) & 1) << (n·b + d)`` sum, emitted as literal arithmetic
     (``&``, ``<<``, ``>>`` parse identically in Spark SQL and DuckDB)."""
     n = len(col_exprs)

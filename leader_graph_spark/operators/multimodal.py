@@ -26,14 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-IMAGE_META_SCHEMA = T.StructType(
-    [
-        T.StructField("format", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
 
 def decode_available() -> bool:
     """True when a real image codec is importable."""
@@ -170,133 +162,6 @@ def extract_image_features(
             )
 
     return df.select(id_col, payload_col).mapInPandas(run, out_schema)
-
-
-def resize_images(
-    df: DataFrame,
-    *,
-    id_col: str,
-    payload_col: str = "payload",
-    meta_col: str = "meta",
-    target_w: int = 224,
-    target_h: int = 224,
-) -> DataFrame:
-    """Resize step of the media pipeline (model-input normalization).
-    The pixel transform is behind the same codec seam as decode — real
-    deployments call PIL/opencv here — but everything the engine is
-    responsible for is real: the payload column is REPLACED (a resized
-    blob, here a deterministic digest-derived stand-in of plausible
-    size), the metadata struct is rewritten to the target dimensions
-    with the original size preserved, and the work is a map-side
-    ``mapInPandas`` — no shuffle, blobs never leave their partition.
-    """
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("payload", T.BinaryType()),
-            T.StructField(
-                "meta",
-                T.StructType(
-                    list(IMAGE_META_SCHEMA.fields)
-                    + [
-                        T.StructField("orig_width", T.IntegerType()),
-                        T.StructField("orig_height", T.IntegerType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            from leader_graph_spark.operators import pngcodec
-
-            for rid, payload, meta in zip(pdf[id_col], pdf[payload_col], pdf[meta_col]):
-                raw = bytes(payload)
-                real = None
-                try:
-                    if raw[:8] == pngcodec.PNG_MAGIC:
-                        # REAL resize path (round-5): stdlib PNG decode →
-                        # nearest-neighbor resample → re-encode. Actual
-                        # source dimensions override the metadata claim.
-                        w, h, ch, px = pngcodec.decode_png(raw)
-                        real = (
-                            pngcodec.encode_png(
-                                target_w,
-                                target_h,
-                                pngcodec.resize_nearest(px, w, h, ch, target_w, target_h),
-                                channels=ch,
-                            ),
-                            w,
-                            h,
-                        )
-                    elif decode_available():
-                        # REAL non-PNG path (JPEG/WEBP…) under the
-                        # [multimodal] extra: PIL decode → nearest resample
-                        # (deterministic) → re-encode in the source format.
-                        import io
-
-                        from PIL import Image
-
-                        img = Image.open(io.BytesIO(raw))
-                        fmt = img.format or "JPEG"
-                        ow, oh = img.size
-                        out = io.BytesIO()
-                        img.convert("RGB").resize(
-                            (target_w, target_h), Image.NEAREST
-                        ).save(out, format=fmt)
-                        real = (out.getvalue(), ow, oh)
-                    elif raw[:2] == b"\xff\xd8":
-                        # REAL JPEG path without PIL (round-9): hermetic
-                        # baseline T.81 decode → nearest resample →
-                        # hermetic re-encode.
-                        from leader_graph_spark.operators import jpegcodec
-
-                        w, h, ch, px = jpegcodec.decode_jpeg(raw)
-                        real = (
-                            jpegcodec.encode_jpeg(
-                                target_w,
-                                target_h,
-                                pngcodec.resize_nearest(px, w, h, ch, target_w, target_h),
-                                channels=ch,
-                                quality=90,
-                            ),
-                            w,
-                            h,
-                        )
-                except ValueError:
-                    # corrupt/truncated payload the codec rejects:
-                    # fall to the deterministic stand-in rather than
-                    # failing the Spark task
-                    real = None
-                if real is not None:
-                    resized, orig_w, orig_h = real
-                else:
-                    # deterministic stand-in: digest-seeded bytes scaled
-                    # to ~3 bytes/pixel of the TARGET size so downstream
-                    # size accounting behaves like a real resize.
-                    seed = hashlib.md5(raw + f"|{target_w}x{target_h}".encode()).digest()
-                    resized = (seed * (target_w * target_h * 3 // len(seed) + 1))[
-                        : target_w * target_h * 3
-                    ]
-                    orig_w, orig_h = meta["width"], meta["height"]
-                rows.append(
-                    (
-                        rid,
-                        resized,
-                        {
-                            "format": meta["format"],
-                            "width": target_w,
-                            "height": target_h,
-                            "orig_width": orig_w,
-                            "orig_height": orig_h,
-                        },
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[id_col, "payload", "meta"])
-
-    return df.select(id_col, payload_col, meta_col).mapInPandas(run, out_schema)
 
 
 FRAME_SCHEMA_FIELDS = [

@@ -16,7 +16,6 @@ codegen.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -271,30 +270,3 @@ def unigram_lm_scores(
         .cast("bigint")
         .alias("avg_token_prob_nano"),
     )
-
-
-def normalize_unicode(df: DataFrame, *, text_col: str, form: str = "NFC") -> DataFrame:
-    """Unicode normalization of a text column (NFC/NFKC) — the
-    preprocessing step exact dedup silently depends on: "café" composed
-    (U+00E9) and decomposed (e + U+0301) are DIFFERENT md5 keys but the
-    same text to every human and tokenizer, so an un-normalized corpus
-    under-dedups. Spark has no built-in normalizer; this is an
-    Arrow-batched scalar ``pandas_udf`` over ``unicodedata`` — the
-    sanctioned Python seam, vectorized per batch, no shuffle (pure
-    map-side). Replaces ``text_col`` in place so every downstream
-    dedup/fingerprint operator composes unchanged.
-
-    NFKC additionally folds compatibility forms (full-width digits,
-    ligatures) — the aggressive choice for dedup keys; NFC is the
-    lossless default.
-    """
-    import unicodedata
-
-    if form not in ("NFC", "NFD", "NFKC", "NFKD"):
-        raise ValueError(f"unknown normalization form: {form}")
-
-    @F.pandas_udf("string")
-    def _norm(s: pd.Series) -> pd.Series:
-        return s.map(lambda x: unicodedata.normalize(form, x) if x is not None else None)
-
-    return df.withColumn(text_col, _norm(F.col(text_col)))

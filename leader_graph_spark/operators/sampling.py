@@ -13,10 +13,6 @@ extended to per-stratum quotas and weighted sampling.
   scale this is a single shuffle on the stratum key, and a skewed
   stratum is still one partition's sort (use the salted count path if
   a stratum alone exceeds an executor).
-- :func:`hash_sample` — Bernoulli-style p-sample with no shuffle at
-  all (pure map-side predicate): take rows whose key-hash bucket falls
-  under p. Counts are binomial, not exact, but the plan is a filter —
-  the form to prefer at 100 TB when ±0.1% on the sample size is fine.
 """
 
 from __future__ import annotations
@@ -32,17 +28,6 @@ def _hash_bucket(key_col: str, salt: str) -> "F.Column":
     any engine with md5 + hex arithmetic (cf. doc_hash_split)."""
     h = F.md5(F.concat(F.lit(salt), F.lit("|"), F.col(key_col).cast("string")))
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % _HASH_MOD
-
-
-def hash_sample(
-    df: DataFrame, *, key_col: str, fraction: float, salt: str = "sample"
-) -> DataFrame:
-    """Map-side deterministic sample: keep rows whose hash bucket <
-    fraction × 1e6. No shuffle, no state; re-running on re-partitioned
-    or incrementally-grown data keeps every previously-sampled row
-    (append-stable), which is what incremental dataset refreshes
-    need."""
-    return df.filter(_hash_bucket(key_col, salt) < int(fraction * _HASH_MOD))
 
 
 def stratified_sample_exact(

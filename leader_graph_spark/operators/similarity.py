@@ -28,10 +28,6 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
-
-
 def brute_force_topk(
     emb: DataFrame,
     *,
@@ -576,126 +572,3 @@ def quantization_report(
         .otherwise(F.lit(0.0))
         .alias("cos_fidelity"),
     ).withColumn("scale", F.round("scale", 6))
-
-
-# ---------------------------------------------------------------------------
-# Persistable IVF index: build once, probe with partition pruning
-# ---------------------------------------------------------------------------
-
-
-def build_ivf_index(
-    emb: DataFrame,
-    path: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_mod: int = 40,
-) -> None:
-    """Materialize the IVF index as a LAKE ARTIFACT (the deployment
-    form of :func:`ann_ivf_topk`, which recomputes its structure per
-    query): ``<path>/centroids`` (tiny) and ``<path>/lists`` — every
-    vector with its precomputed norm, PARTITIONED BY assigned centroid,
-    so the directory layout IS the inverted list structure. Build cost
-    is paid once per corpus version; daily query batches probe the
-    artifact (see :func:`ivf_probe_topk`) without touching the
-    assignment pipeline — the same build-once/probe-many contract as
-    the MinHash band index (``dedup.lsh_band_buckets``).
-
-    Centroid selection is ``id % mod`` — deliberately engine-portable
-    so the DuckDB oracles (and :func:`ann_ivf_topk`, whose output the
-    probe must reproduce exactly) can pin the same pick; the cost is a
-    dense-numeric-id assumption. Round-5 advice fix: when that
-    assumption fails the pick is EMPTY and every subsequent probe of
-    the written index would silently return zero rows — so an empty
-    pick now raises at build time instead."""
-    centroids = emb.filter(F.col(id_col) % centroid_mod == 0).select(
-        F.col(id_col).alias("centroid_id"),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
-    )
-    if centroids.limit(1).count() == 0:
-        raise ValueError(
-            f"build_ivf_index: centroid_mod={centroid_mod} selected zero "
-            "centroids from the corpus — lower centroid_mod below the "
-            "corpus row count"
-        )
-    from leader_graph_spark.sources.tables import fan_out
-
-    vecs = (
-        fan_out(emb)
-        .select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
-        .withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
-    )
-    sim_c = F.round(
-        dot(F.col("v"), F.col("cvec"))
-        / (F.col("nrm") * F.sqrt(dot(F.col("cvec"), F.col("cvec")))),
-        6,
-    )
-    w_assign = Window.partitionBy("id").orderBy(F.desc("csim"), F.asc("centroid_id"))
-    assigned = (
-        vecs.crossJoin(F.broadcast(centroids))
-        .select("id", "v", "nrm", "centroid_id", sim_c.alias("csim"))
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("id", "v", "nrm", "centroid_id")
-    )
-    centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-    assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(f"{path}/lists")
-
-
-def ivf_probe_topk(
-    spark,
-    path: str,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 1,
-) -> DataFrame:
-    """Query-time probe of a persisted IVF index: each query vector is
-    assigned its ``nprobe`` nearest centroids (broadcast — centroids
-    are tiny) and joins ONLY those inverted lists. Because the lists
-    are directory-partitioned by centroid, the equi-join on
-    ``centroid_id`` triggers DYNAMIC PARTITION PRUNING on the index
-    scan — the engine provably reads just the probed lists, not the
-    corpus (plan-asserted in tests). Self-matches are excluded so
-    probing the corpus with itself reproduces :func:`ann_ivf_topk`."""
-    centroids = spark.read.parquet(f"{path}/centroids")
-    lists = spark.read.parquet(f"{path}/lists")
-    from leader_graph_spark.sources.tables import fan_out
-
-    q = (
-        fan_out(queries)
-        .select(F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("qv"))
-        .withColumn("qn", F.sqrt(dot(F.col("qv"), F.col("qv"))))
-    )
-    sim_c = F.round(
-        dot(F.col("qv"), F.col("cvec"))
-        / (F.col("qn") * F.sqrt(dot(F.col("cvec"), F.col("cvec")))),
-        6,
-    )
-    w_probe = Window.partitionBy("qid").orderBy(F.desc("csim"), F.asc("centroid_id"))
-    probes = (
-        q.crossJoin(F.broadcast(centroids))
-        .select("qid", "qv", "qn", "centroid_id", sim_c.alias("csim"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= nprobe)
-        .select("qid", "qv", "qn", "centroid_id")
-    )
-    scored = (
-        probes.join(lists, "centroid_id")
-        .filter(F.col("qid") != F.col("id"))
-        .select(
-            F.col("qid").alias("id"),
-            F.col("id").alias("neighbor_id"),
-            F.round(dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6).alias(
-                "cosine_sim"
-            ),
-        )
-    )
-    w = Window.partitionBy("id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "neighbor_id", "cosine_sim", F.col("rank").cast("int").alias("rank"))
-    )

@@ -111,37 +111,12 @@ def salted_join(
     return big_s.join(small_s, [key, "__salt"], how).drop("__salt")
 
 
-def merge_algebraic_state(state: DataFrame, delta: DataFrame, *, keys: list[str]) -> DataFrame:
-    """Incremental aggregation maintenance: merge a stored aggregate
-    state with the aggregate of newly arrived rows — the pattern that
-    keeps a 100 TB metric table fresh without rescanning history.
-
-    Works for ALGEBRAIC aggregates (count/sum/min/max, and avg as
-    sum+count): state ⊕ delta is itself a groupBy over the union of two
-    aggregate tables — associative and commutative, so daily partial
-    states can merge in any order (unlike holistic aggregates like
-    exact median, which need the sketch route; see
-    ``approx_order_price_percentiles``).
-
-    Expects both inputs to carry columns n (count) and total (sum)."""
-    return (
-        state.unionByName(delta)
-        .groupBy(*keys)
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("total").cast("decimal(28,6)").alias("total"),
-            F.min("min_v").alias("min_v"),
-            F.max("max_v").alias("max_v"),
-        )
-    )
-
-
 def distinct_sketches(
     df: DataFrame, *, keys: Sequence[str], value_col: str, lg_k: int = 12
 ) -> DataFrame:
     """Per-key HLL sketches for HOLISTIC distinct-count maintenance —
-    the route :func:`merge_algebraic_state` can't take (COUNT DISTINCT
-    is not algebraic: distinct sets don't add).
+    the route an algebraic state merge can't take (COUNT DISTINCT is
+    not algebraic: distinct sets don't add).
 
     Each partition of history (a day, an ingest batch) aggregates once
     into a ``hll_sketch_agg`` binary; sketches then merge in any order
@@ -180,8 +155,8 @@ def apply_retractable_delta(
     weight_col: str = "w",
 ) -> DataFrame:
     """Maintain per-key (n, total, min_v, max_v) under INSERTS *and*
-    DELETES — the retraction half :func:`merge_algebraic_state`
-    deliberately excludes.
+    DELETES — the retraction half an insert-only state merge cannot
+    express.
 
     ``changes`` carries ``weight_col`` = +1 (insert) / −1 (delete).
     Count and sum retract algebraically (weighted sums); min/max do

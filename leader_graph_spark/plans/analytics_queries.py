@@ -436,10 +436,10 @@ def hll_incremental_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental COUNT DISTINCT via HLL sketch state: three "ingest
     batch" partitions each aggregate once into per-key sketches, and
     the merge (pointwise register max) estimates without rescanning
-    history — the holistic-aggregate state maintenance that
-    ``merge_algebraic_state`` cannot express. HLL registers are
-    engine-specific, so the driver row carries the EXACT count plus
-    two Spark-computed assertions the value hash pins (oracle emits
+    history — the holistic-aggregate state maintenance that an
+    algebraic (count/sum/min/max) state merge cannot express. HLL
+    registers are engine-specific, so the driver row carries the EXACT
+    count plus two Spark-computed assertions the value hash pins (oracle emits
     literal TRUE for both): the merged estimate is within 5% of exact,
     and merge-then-estimate is within 2% of the single-pass estimate
     over the whole table. NOT pinned as exact equality: DataSketches

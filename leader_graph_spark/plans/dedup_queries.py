@@ -702,9 +702,8 @@ def homoglyph_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     content-hash dedup byte-for-byte — collapse to one key. Same md5
     groupBy scale shape as ``exact_dedup_docs``; the fold is a single
     ``translate`` over an auditable map embedded identically in both
-    engines. Compose with NFKC (`operators/quality.py:
-    normalize_unicode`, the Python seam) when compatibility forms are
-    in play."""
+    engines. Compose with an upstream NFKC normalization when
+    compatibility forms are in play."""
     docs = load_table(spark, sf_dir, "documents")
     return confusable_dedup_keys(docs, id_col="doc_id", text_col="text")
 

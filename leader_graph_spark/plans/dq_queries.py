@@ -264,29 +264,6 @@ def lineitem_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def observed_rule_metrics(df: DataFrame, rules: dict[str, "F.Column"]):
-    """Attach the DQ rule pack to a pass the pipeline ALREADY makes:
-    ``df.observe`` evaluates the violation counters inside whatever
-    action the returned DataFrame feeds (a sink write, a downstream
-    aggregate) — at 100 TB the difference between "DQ costs one more
-    full scan" (``dq_rule_violations``'s standalone audit) and "DQ is
-    free metadata on the write you were doing anyway". Returns
-    (instrumented_df, observation); read ``observation.get`` AFTER the
-    first action. Counters only (sum/count) — observe() requires
-    aggregates that need no shuffle of their own.
-
-    Equality with the standalone aggregation is pinned in
-    tests/test_dq_observe.py.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation("dq_rules")
-    aggs = [F.count(F.lit(1)).alias("n_checked")] + [
-        F.sum(F.when(cond, 1).otherwise(0)).alias(name) for name, cond in rules.items()
-    ]
-    return df.observe(obs, *aggs), obs
-
-
 # Benford's-law expected first-digit shares in ppm — PRECOMPUTED
 # literals (log10(1+1/d)), so neither engine evaluates a log and the
 # whole audit is integer arithmetic.

@@ -256,7 +256,7 @@ def histogram_sketch_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact, needs a per-group sort) and ``approx_order_price_percentiles``
     (t-digest, engine-specific state ⇒ rows-only check): bin counts are
     plain integers that merge by addition across partitions/batches/
-    days (the same ⊕ contract as ``merge_algebraic_state``), the error
+    days (the same ⊕ contract as an algebraic count/sum merge), the error
     is bounded by the bin width (range/1000 here, pinned against the
     exact percentile in tests), and — unlike the t-digest — every step
     is exactly reproducible, so this sketch gets a FULL value oracle.

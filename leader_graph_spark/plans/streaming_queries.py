@@ -1,6 +1,7 @@
-"""Event-time window queries over ``events`` — batch twins of the
-Structured Streaming jobs (stream == batch asserted in
-tests/test_streaming.py; these oracles give the correctness gate)."""
+"""Event-time queries over ``events``: tumbling, sliding and session
+windows and an event-time interval join, each with the oracle the
+correctness gate checks. The tumbling window also runs as a Structured
+Streaming job (stream == batch asserted in tests/test_streaming.py)."""
 
 from __future__ import annotations
 
@@ -115,11 +116,10 @@ FROM events c JOIN events p
 
 @query("clicks_with_recent_purchase", _CLICK_PURCHASE_ORACLE, tags=("streaming-join",))
 def clicks_with_recent_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the stream-stream join (`streaming/jobs.py:
-    click_purchase_join_stream`): clicks × same-user purchases within
-    the preceding hour. The streaming form carries watermarks on both
-    sides so join state is evictable; the batch form is the same plan
-    without state. Equivalence asserted in tests/test_streaming.py."""
+    """Event-time interval join: clicks × same-user purchases within
+    the preceding hour. As a stream-stream join it would carry
+    watermarks on both sides so join state is evictable; the batch form
+    is the same plan without state."""
     events = load_table(spark, sf_dir, "events")
     clicks = events.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("click_ts")

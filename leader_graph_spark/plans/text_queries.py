@@ -1024,7 +1024,6 @@ def corpus_curation_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _CMS_DEPTH = 4
-_CMS_WIDTH = 256  # bucket = first 2 md5 hex chars -> 0..255, no modulo
 
 
 def _cms_bucket_sql(expr: str, salt: int) -> str:
@@ -1307,7 +1306,7 @@ def arrow_grouped_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (here deliberately simple per-lang stats so the identity oracle
     pins the API's correctness: grouping completeness, Arrow type
     mapping, and column round-trip). The rest of the repo's Python
-    seams use mapInPandas/applyInPandasWithState; this query documents
+    seams use mapInPandas/applyInPandas; this query documents
     the third, pandas-free lane and its batch shape."""
     import pyarrow as pa
 

@@ -3,7 +3,7 @@
 - S1/S3: CSV scan incl. directory multi-file union (native multi-path);
 - S2: Excel via pandas → ``createDataFrame`` (no native Spark source);
 - S4: CSV with required-field validation (utf-8-sig tolerant);
-- K3/K4: JSON sinks (partitioned per key / single consolidated file).
+- K3: JSON sink partitioned per key.
 """
 
 from __future__ import annotations
@@ -263,96 +263,8 @@ def read_tabular_dir(spark: SparkSession, directory: str) -> DataFrame:
     return out
 
 
-def read_binary_dir(
-    spark: SparkSession,
-    path: str,
-    *,
-    glob: str | None = None,
-    recursive: bool = False,
-) -> DataFrame:
-    """Media landing-zone scan via the built-in ``binaryFile`` source:
-    one row per file with (path, modificationTime, length, content
-    BINARY) — the lake entry point for the multimodal pipeline
-    (``operators/multimodal.py`` consumes the ``content`` column).
-
-    Scale notes: the reader parallelizes across files (one file = one
-    or more splits), column pruning drops ``content`` entirely for
-    metadata-only queries (count/size audits never read the bytes),
-    and ``pathGlobFilter`` prunes non-matching files at listing time —
-    set it to e.g. ``*.png`` rather than filtering on the path column
-    after the scan."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    return reader.load(path)
-
-
 def write_json_per_key(df: DataFrame, path: str, *, key_col: str) -> None:
     """K3: per-key JSON output (one directory per key value) —
     ``partitionBy`` replaces the reference's one-file-per-person loop
     (``leader/bio_processor_qwen.py:436-490``)."""
     df.write.mode("overwrite").partitionBy(key_col).json(path)
-
-
-def write_json_single(df: DataFrame, path: str) -> None:
-    """K4: consolidated JSON dump (driver-side collect avoided; coalesce
-    keeps one output file).
-
-    ``coalesce(1)`` funnels the entire write through ONE task — correct
-    for the reference's single-file boundary dump it reproduces, but a
-    deliberate serialization point: at 100 TB use the plain partitioned
-    ``df.write.json(path)`` (or :func:`write_json_per_key`) and let the
-    sink stay parallel."""
-    df.coalesce(1).write.mode("overwrite").json(path)
-
-
-def write_orc(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:
-    """ORC sink (native Spark datasource; columnar + predicate-pushdown
-    capable like parquet — the interchange format half the Hadoop world
-    still speaks)."""
-    df.write.mode(mode).orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan. Filters and column pruning push down exactly as with
-    parquet (verified in tests via round-trip equality)."""
-    return spark.read.orc(path)
-
-
-def compact_dir(
-    spark: SparkSession,
-    in_dir: str,
-    out_dir: str,
-    *,
-    target_file_mb: int = 128,
-    sort_cols: list[str] | None = None,
-) -> int:
-    """Small-files compaction — the lake-maintenance job every
-    streaming sink (foreachBatch appends, per-batch files) eventually
-    needs: N tiny files → ceil(bytes / target) right-sized files.
-
-    File count derives from actual input BYTES (driver-side listing via
-    the scan's own file index, no data pass). With ``sort_cols`` the
-    output is additionally range-partitioned + sorted so each file
-    covers a disjoint key range — parquet min/max stats then let later
-    scans skip whole files (poor man's clustering; at warehouse scale
-    the same call sites switch to table-format clustering).
-
-    Returns the number of files written."""
-    import os
-
-    df = spark.read.parquet(in_dir)
-    total_bytes = 0
-    for uri in df.inputFiles():
-        p = uri.removeprefix("file:")
-        if os.path.exists(p):
-            total_bytes += os.path.getsize(p)
-    n_files = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))
-    if sort_cols:
-        out = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(*sort_cols)
-    else:
-        out = df.repartition(n_files)
-    out.write.mode("overwrite").parquet(out_dir)
-    return n_files

@@ -193,21 +193,6 @@ def test_html_to_events_chain(spark):
     assert study.start_year == 1980 and study.end_year == 1984
 
 
-def test_person_links_python_udtf(spark):
-    from leader_graph_spark.extract.html import person_links_udtf
-
-    spark.udtf.register("extract_person_links_t", person_links_udtf())
-    spark.createDataFrame(
-        [(1, FIXTURE_HTML), (2, "<p>no headings</p>")], "org_id bigint, html string"
-    ).createOrReplaceTempView("pages_udtf_test")
-    rows = spark.sql(
-        "SELECT l.org_id, l.name, l.uuid FROM pages_udtf_test p, "
-        "LATERAL extract_person_links_t(p.org_id, p.html) l"
-    ).collect()
-    assert len(rows) > 0 and all(r.org_id == 1 for r in rows)
-    assert all(len(r.uuid) == 32 for r in rows)
-
-
 def test_parser_fuzz_never_crashes():
     """The stdlib-based page parser must survive arbitrary malformed
     tag soup (unclosed tags, stray brackets, void elements in odd

@@ -16,6 +16,7 @@ from leader_graph_spark.graph.algorithms import (
     connected_components,
     degrees,
     label_propagation_fixed,
+    merge_components,
 )
 from leader_graph_spark.graph.derived import (
     current_colleague_edges,
@@ -335,14 +336,11 @@ def test_merge_components_chained_batches(spark):
     assert {c for _, c in got} == {1}
 
 
-def test_merge_components_driver_path_equals_distributed(spark):
+def test_merge_components_driver_path_equals_distributed(spark, monkeypatch):
     """The size-guarded driver-side union-find over the quotient graph
     must be bit-identical to the distributed quotient CC it replaces
-    (driver_quotient_limit=0 forces the distributed branch)."""
-    from leader_graph_spark.graph.algorithms import (
-        connected_components,
-        merge_components,
-    )
+    (``cc.driverMaxEdges=0`` forces the loop, and the loop must run)."""
+    from leader_graph_spark.graph import algorithms
 
     base = spark.createDataFrame(
         [("a", "b"), ("c", "d"), ("x", "y")], "src string, dst string"
@@ -357,13 +355,21 @@ def test_merge_components_driver_path_equals_distributed(spark):
         [("b", "c"), ("n1", "n2"), ("n2", "d"), ("a", "d")],
         "src string, dst string",
     )
+    loops = []
+    enter = algorithms._Loop.__enter__
+    monkeypatch.setattr(
+        algorithms._Loop, "__enter__", lambda loop: loops.append(loop) or enter(loop)
+    )
     via_driver = {
         (r.id, r.component) for r in merge_components(labels, delta).collect()
     }
-    via_dist = {
-        (r.id, r.component)
-        for r in merge_components(labels, delta, driver_quotient_limit=0).collect()
-    }
+    assert not loops
+    spark.conf.set(DRIVER_CC_CONF, "0")
+    try:
+        via_dist = {(r.id, r.component) for r in merge_components(labels, delta).collect()}
+    finally:
+        spark.conf.unset(DRIVER_CC_CONF)
+    assert loops
     assert via_driver == via_dist
     assert {c for i, c in via_driver if i in "abcd"} == {"a"}
 
@@ -1307,6 +1313,17 @@ def test_driver_max_edges_rejects_bad_value(spark, key, value):
             connected_components(verts, edges)
         with pytest.raises(ValueError, match=re.escape(key)):
             label_propagation_fixed(edges, rounds=1)
+        if key == DRIVER_CC_CONF:
+            labels = spark.createDataFrame([("a", "a")], "id string, component string")
+            group = f"merge_bad_conf_{value}"
+            sc = spark.sparkContext
+            sc.setJobGroup(group, group)
+            try:
+                with pytest.raises(ValueError, match=re.escape(key)):
+                    merge_components(labels, edges)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert not sc.statusTracker().getJobIdsForGroup(group)  # before any job
     finally:
         spark.conf.unset(key)
     spark.conf.set(DRIVER_CC_CONF, "0")

@@ -5,7 +5,7 @@ A corpus whose ``(id, text)`` size estimate is within
 ``DEDUP_DRIVER_CONF`` is solved in Python from one Arrow collect; past
 it (and always at ``DEDUP_DRIVER_CONF=0``) the distributed plan runs.
 Every case here runs both branches on the same input and requires the
-same rows — or the same failure — so the branch the registry's small
+same rows, so the branch the registry's small
 corpora take stays equal to the one larger corpora take.
 """
 
@@ -16,7 +16,6 @@ from unittest import mock
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.errors import ArithmeticException
 from pyspark.sql import types as T
 
 from leader_graph_spark.graph.algorithms import DEDUP_DRIVER_CONF, _driver_frame
@@ -62,17 +61,11 @@ def _run(spark, limit: str, fn, *args, **kw):
 
 def _both_branches(spark, df, **kw):
     """Rows of the driver branch and of the distributed plan (asserting
-    each branch was taken), or ``"0/0"`` for a branch that failed on a
-    row pair whose two shingle sets are both empty."""
+    each branch was taken)."""
     kw = {"id_col": "doc_id", "text_col": "text", **kw}
     out = []
     for limit, on_driver in ((_FORCE_DRIVER, True), ("0", False)):
-        try:
-            ran_driver, rows = _run(spark, limit, minhash_near_duplicates, df, **kw)
-        except (ZeroDivisionError, ArithmeticException) as exc:
-            assert isinstance(exc, ZeroDivisionError) or "DIVIDE_BY_ZERO" in str(exc)
-            out.append("0/0")
-            continue
+        ran_driver, rows = _run(spark, limit, minhash_near_duplicates, df, **kw)
         assert ran_driver is on_driver
         out.append(rows)
     return out
@@ -163,27 +156,29 @@ def test_half_way_rounding_is_spark_half_up(spark):
     assert got[(0, 3)] == 0.976563  # 125/128 = 0.9765625
 
 
-def test_empty_row_pairs_fail_alike(spark):
+def _empty_row_pairs_drop_alike(spark, ansi: str):
     """Two ids that pair through their non-empty rows, each with an
-    empty row too: the (empty, empty) row pair divides 0 by 0, which
-    fails on both branches."""
+    empty row too: the (empty, empty) row pair has no Jaccard, and both
+    branches drop it."""
     text = "one two three four five six seven"
     df = _docs(spark, [(1, text), (1, ""), (2, text), (2, None)])
-    assert _both_branches(spark, df, threshold=0.5) == ["0/0", "0/0"]
-
-
-def test_empty_row_pairs_drop_alike_without_ansi(spark):
-    """With ANSI division off, the (empty, empty) row pair's 0/0 is a
-    null Jaccard that the threshold filter drops, on both branches."""
-    text = "one two three four five six seven"
-    df = _docs(spark, [(1, text), (1, ""), (2, text), (2, None)])
-    spark.conf.set("spark.sql.ansi.enabled", "false")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
     try:
         for threshold in (0.0, 0.5):
             got = _assert_equal(spark, df, threshold=threshold)
             assert (1, 2, 1.0) in got and len(got) == (3 if threshold == 0.0 else 1)
     finally:
         spark.conf.unset("spark.sql.ansi.enabled")
+
+
+def test_empty_row_pairs_drop_alike_with_ansi(spark):
+    """ANSI division on (Spark 4's default): no DIVIDE_BY_ZERO."""
+    _empty_row_pairs_drop_alike(spark, "true")
+
+
+def test_empty_row_pairs_drop_alike_without_ansi(spark):
+    """ANSI division off: the same rows."""
+    _empty_row_pairs_drop_alike(spark, "false")
 
 
 def test_bucket_pair_guard_falls_back_to_distributed(spark):

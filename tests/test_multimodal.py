@@ -1,31 +1,9 @@
-"""Multimodal resize and video frame-sampling plumbing: payload/meta
-rewrite, uniform stride policy, short-clip behavior, determinism."""
+"""Multimodal plumbing: image codecs and features, video frame
+sampling (uniform stride policy, short clips), audio windows."""
 
 from __future__ import annotations
 
 import pytest
-
-def test_resize_rewrites_payload_and_meta(spark, sf_smoke):
-    from leader_graph_spark.operators.multimodal import attach_fake_payloads, resize_images
-    from leader_graph_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_smoke, "documents").limit(8)
-    mm = attach_fake_payloads(docs, text_col="text", id_col="doc_id")
-    out = resize_images(mm, id_col="doc_id", target_w=64, target_h=48).collect()
-    orig = {r.doc_id: r.meta for r in mm.collect()}
-    assert len(out) == 8
-    for r in out:
-        assert (r.meta.width, r.meta.height) == (64, 48)
-        assert (r.meta.orig_width, r.meta.orig_height) == (
-            orig[r.doc_id].width, orig[r.doc_id].height,
-        )
-        assert r.meta.format == orig[r.doc_id].format
-        assert len(r.payload) == 64 * 48 * 3  # plausible resized size
-    # deterministic: same input → same resized bytes
-    again = resize_images(mm, id_col="doc_id", target_w=64, target_h=48).collect()
-    assert {(r.doc_id, bytes(r.payload)) for r in out} == {
-        (r.doc_id, bytes(r.payload)) for r in again
-    }
 
 
 def test_frame_sampling_uniform_and_short_clips(spark):
@@ -101,37 +79,6 @@ def test_extract_features_real_png_payloads(spark):
     assert got[2].phash == "0" * 16
 
 
-def test_resize_images_real_png_path(spark):
-    """PNG payloads resize for REAL: output decodes to the target
-    dimensions and the metadata carries the actual source size (not
-    the metadata claim)."""
-    from pyspark.sql import functions as F
-
-    from leader_graph_spark.operators.multimodal import resize_images
-    from leader_graph_spark.operators.pngcodec import decode_png, encode_png
-
-    px = bytes((x * 13) % 256 for x in range(10 * 6 * 3))
-    payload = encode_png(10, 6, px, channels=3)
-    df = spark.createDataFrame(
-        [(1, bytearray(payload))], "img_id long, payload binary"
-    ).select(
-        "img_id",
-        "payload",
-        F.struct(
-            F.lit("png").alias("format"),
-            F.lit(999).alias("width"),    # wrong on purpose
-            F.lit(999).alias("height"),
-        ).alias("meta"),
-    )
-    out = resize_images(df, id_col="img_id", target_w=4, target_h=4).collect()[0]
-    w, h, ch, rpx = decode_png(bytes(out.payload))
-    assert (w, h, ch) == (4, 4, 3)
-    assert out.meta["width"] == 4 and out.meta["height"] == 4
-    assert out.meta["orig_width"] == 10 and out.meta["orig_height"] == 6
-    # spot-check nearest-neighbor: target (0,0) samples source (0,0)
-    assert rpx[:3] == px[:3]
-
-
 def test_png_decoder_rejects_malformed_payloads():
     import pytest as _pytest
 
@@ -161,17 +108,15 @@ def test_real_jpeg_decode_and_resize(spark):
     """Real-JPEG lane, hermetic since round 9: a baseline JPEG encoded
     by the vendored T.81 codec (jpegcodec.py) flows through
     extract_image_features (real decode: true mean pixel, real
-    pixel-derived phash) and resize_images (real nearest resample,
-    re-encoded JPEG out). When Pillow IS installed (the [multimodal]
-    extra), the same fixture is additionally cross-checked against
-    PIL's independent decoder."""
+    pixel-derived phash), and its decoded pixels resample
+    (``pngcodec.resize_nearest``) and re-encode to a 4x4 JPEG. When
+    Pillow IS installed (the [multimodal] extra), the same fixture is
+    additionally cross-checked against PIL's independent decoder."""
     import numpy as np
 
     from leader_graph_spark.operators.jpegcodec import decode_jpeg, encode_jpeg
-    from leader_graph_spark.operators.multimodal import (
-        extract_image_features,
-        resize_images,
-    )
+    from leader_graph_spark.operators.multimodal import extract_image_features
+    from leader_graph_spark.operators.pngcodec import resize_nearest
 
     # 8x6 gradient JPEG, quality 95 (deterministic encode)
     rgb = bytes(
@@ -192,11 +137,9 @@ def test_real_jpeg_decode_and_resize(spark):
     assert abs(feats.mean_pixel - src_mean) < 2 / 255
     assert feats.n_bytes == len(payload)
 
-    out = resize_images(df, id_col="id", target_w=4, target_h=4).collect()[0]
-    rw, rh, rch, rpx = decode_jpeg(bytes(out.payload))
-    assert (rw, rh, rch) == (4, 4, 3)
-    assert out.meta["width"] == 4 and out.meta["height"] == 4
-    assert out.meta["orig_width"] == 8 and out.meta["orig_height"] == 6
+    w, h, ch, px = decode_jpeg(payload)
+    small = encode_jpeg(4, 4, resize_nearest(px, w, h, ch, 4, 4), channels=ch, quality=95)
+    assert decode_jpeg(small)[:3] == (4, 4, 3)
 
     try:  # independent-decoder cross-check when the extra is installed
         import io
@@ -304,20 +247,6 @@ def test_corrupt_jpeg_payload_falls_back_to_fake(spark):
     digest = hashlib.md5(bad).digest()
     assert rows[0].phash == digest.hex()[:16]
     assert rows[0].n_bytes == len(bad)
-
-
-def test_corrupt_jpeg_payload_resize_falls_back_to_standin(spark):
-    from leader_graph_spark.operators.multimodal import resize_images
-
-    bad = b"\xff\xd8\xff\xe0 corrupt, no scan"
-    df = spark.createDataFrame(
-        [(1, bad, ("jpeg", 64, 48))],
-        "id long, payload binary, meta struct<format:string,width:int,height:int>",
-    )
-    rows = resize_images(df, id_col="id", target_w=16, target_h=16).collect()
-    assert len(rows) == 1
-    assert len(rows[0].payload) == 16 * 16 * 3  # stand-in sized to target
-    assert rows[0].meta.orig_width == 64  # metadata claim preserved
 
 
 def test_audio_window_stats_partial_window_and_values(spark):

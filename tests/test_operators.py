@@ -19,7 +19,6 @@ from leader_graph_spark.sources.files import (
     MissingFieldsError,
     read_csv,
     read_tabular_dir,
-    write_json_single,
 )
 
 
@@ -40,14 +39,6 @@ def test_read_tabular_dir_union(spark, tmp_path):
     assert "_source_file" in df.columns
 
 
-def test_write_json_single(spark, tmp_path):
-    df = spark.createDataFrame([(1, "a")], "id int, v string")
-    out = str(tmp_path / "out")
-    write_json_single(df, out)
-    back = spark.read.json(out)
-    assert back.count() == 1
-
-
 def test_multimodal_plumbing(spark, sf_smoke):
     docs = spark.read.parquet(f"{sf_smoke}/documents.parquet").limit(20)
     mm = attach_fake_payloads(docs, text_col="text", id_col="doc_id")
@@ -64,12 +55,12 @@ def test_binary_dir_landing_to_features(spark, tmp_path):
     on disk, the scan yields (path, content) rows, glob pruning keeps
     only the media extension, and the blob column feeds the same
     mapInPandas feature extractor the parquet-backed path uses."""
-    from leader_graph_spark.sources.files import read_binary_dir
-
     for i in range(5):
         (tmp_path / f"img_{i}.png").write_bytes(b"fakepixels-%d" % i)
     (tmp_path / "notes.txt").write_text("not media")
-    landed = read_binary_dir(spark, str(tmp_path), glob="*.png")
+    landed = (
+        spark.read.format("binaryFile").option("pathGlobFilter", "*.png").load(str(tmp_path))
+    )
     assert dict(landed.dtypes)["content"] == "binary"
     assert landed.count() == 5  # txt pruned at listing time
     named = landed.select(
@@ -176,35 +167,6 @@ def test_asof_join_backward_semantics(spark):
     assert len(got) == 4
 
 
-def test_asof_join_forward_semantics(spark):
-    from leader_graph_spark.operators.asof import asof_join_forward
-
-    left = spark.createDataFrame(
-        [(1, 10, "a"), (1, 20, "b"), (1, 16, "c"), (2, 10, "d")],
-        "k long, t long, lv string",
-    )
-    right = spark.createDataFrame(
-        [(1, 10, "r10"), (1, 15, "r15"), (3, 1, "rx")], "k long, t long, rv string"
-    )
-    out = asof_join_forward(
-        left, right, left_key="k", right_key="k", left_ts="t", right_ts="t",
-        right_payload=["t", "rv"],
-    )
-    got = {(r.k, r.t): (r.asof_t, r.asof_rv) for r in out.collect()}
-    assert got[(1, 10)] == (10, "r10")   # equal ts is inclusive
-    assert got[(1, 16)] == (None, None)  # nothing at-or-after
-    assert got[(1, 20)] == (None, None)
-    assert got[(2, 10)] == (None, None)  # key absent on right
-    assert len(got) == 4
-    # forward/backward duality on a denser key
-    left2 = spark.createDataFrame([(1, 12, "x")], "k long, t long, lv string")
-    fwd = asof_join_forward(
-        left2, right, left_key="k", right_key="k", left_ts="t", right_ts="t",
-        right_payload=["t", "rv"],
-    ).collect()[0]
-    assert (fwd.asof_t, fwd.asof_rv) == (15, "r15")  # next at-or-after
-
-
 def test_salted_join_matches_plain(spark):
     from leader_graph_spark.operators.skew import salted_join
 
@@ -299,33 +261,6 @@ def test_frequent_terms_approx_registered_query_bounds(spark, sf_dir):
     exact_heavy = {t for t, c in counts.items() if c > support * n}
     assert exact_heavy == reported
     assert exact_heavy, "support threshold leaves no heavy hitters — vacuous"
-
-
-def test_orc_round_trip(spark, sf_smoke, tmp_path):
-    from leader_graph_spark.sources.files import read_orc, write_orc
-    from leader_graph_spark.sources.tables import load_table
-
-    nation = load_table(spark, sf_smoke, "nation")
-    write_orc(nation, str(tmp_path / "nation_orc"))
-    back = read_orc(spark, str(tmp_path / "nation_orc"))
-    assert {tuple(r) for r in back.collect()} == {tuple(r) for r in nation.collect()}
-    plan = back.filter(back.n_nationkey == 3)._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(n_nationkey), EqualTo(n_nationkey,3)]" in plan
-
-
-def test_compact_dir_small_files(spark, sf_smoke, tmp_path):
-    from leader_graph_spark.sources.files import compact_dir
-    from leader_graph_spark.sources.tables import load_table
-
-    orders = load_table(spark, sf_smoke, "orders")
-    frag = str(tmp_path / "fragmented")
-    orders.repartition(40).write.parquet(frag)  # simulate streaming-sink litter
-    assert len(spark.read.parquet(frag).inputFiles()) == 40
-    out = str(tmp_path / "compacted")
-    n = compact_dir(spark, frag, out, target_file_mb=128, sort_cols=["o_orderdate"])
-    files = spark.read.parquet(out).inputFiles()
-    assert len(files) == n == 1  # sf0.001 orders ≪ 128 MB
-    assert spark.read.parquet(out).count() == orders.count()
 
 
 def test_write_json_per_key_partitions(spark, sf_smoke, tmp_path):
@@ -517,21 +452,16 @@ def test_pack_greedy_never_overflows(spark):
 
 
 def test_sampling_determinism_and_quota(spark, sf_smoke):
-    from leader_graph_spark.operators.sampling import hash_sample, stratified_sample_exact
+    from leader_graph_spark.operators.sampling import stratified_sample_exact
     from leader_graph_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_smoke, "documents").select("doc_id", "lang")
-    s1 = {r.doc_id for r in hash_sample(docs, key_col="doc_id", fraction=0.2).collect()}
     # partition-layout independence: same membership after repartition
-    s2 = {
-        r.doc_id
-        for r in hash_sample(docs.repartition(7), key_col="doc_id", fraction=0.2).collect()
-    }
+    s1 = {r.doc_id for r in stratified_sample_exact(
+        docs, strata_col="lang", key_col="doc_id", fraction=0.2).collect()}
+    s2 = {r.doc_id for r in stratified_sample_exact(
+        docs.repartition(7), strata_col="lang", key_col="doc_id", fraction=0.2).collect()}
     assert s1 == s2 and 0 < len(s1) < docs.count()
-    # append-stability: sample of a superset contains sample of the subset
-    half = docs.filter(F.col("doc_id") < 250)
-    sh = {r.doc_id for r in hash_sample(half, key_col="doc_id", fraction=0.2).collect()}
-    assert sh == {d for d in s1 if d < 250}
 
     strat = stratified_sample_exact(
         docs, strata_col="lang", key_col="doc_id", fraction=0.1

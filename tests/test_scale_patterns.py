@@ -146,38 +146,6 @@ def test_bloom_filter_join_pruning_at_scale(spark, sf_smoke):
             spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
 
 
-def test_incremental_agg_merge_equals_full_recompute(spark, sf_smoke):
-    """state ⊕ delta == full recompute for algebraic aggregates: the
-    history partition is aggregated once, new-day rows aggregate
-    separately, and the merged state matches aggregating everything
-    from scratch — no history rescan."""
-    from pyspark.sql import functions as F
-
-    from leader_graph_spark.operators.skew import merge_algebraic_state
-    from leader_graph_spark.sources.tables import load_table
-
-    orders = load_table(spark, sf_smoke, "orders")
-    cutoff = "1999-01-01"
-
-    def agg(df):
-        return df.groupBy("o_orderpriority").agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("decimal(28,6)").alias("total"),
-            F.min("o_totalprice").alias("min_v"),
-            F.max("o_totalprice").alias("max_v"),
-        )
-
-    state = agg(orders.filter(F.col("o_orderdate") < cutoff))
-    delta = agg(orders.filter(F.col("o_orderdate") >= cutoff))
-    assert orders.filter(F.col("o_orderdate") >= cutoff).count() > 0
-    merged = {
-        tuple(r)
-        for r in merge_algebraic_state(state, delta, keys=["o_orderpriority"]).collect()
-    }
-    full = {tuple(r) for r in agg(orders).collect()}
-    assert merged == full
-
-
 SHUFFLE_BUDGETS = {
     # Committed plan-shape budgets for the headline bench queries:
     # count of non-broadcast Exchange nodes in the executed plan.
@@ -331,8 +299,8 @@ def test_hll_sketch_state_merge(spark, sf_smoke):
     within 2% (register merge is pointwise max, but DataSketches
     unions promote through HLL_8 and re-encoded registers can land a
     few counts apart — observed at sf0.1), and within 5% of the exact
-    distinct count — the incremental route for the metrics
-    merge_algebraic_state cannot maintain."""
+    distinct count — the incremental route for the metrics an
+    algebraic state merge cannot maintain."""
     from pyspark.sql import functions as F
 
     from leader_graph_spark.operators.skew import distinct_sketches, merge_distinct_sketches
@@ -529,7 +497,6 @@ def test_dynamic_partition_pruning(spark, tmp_path, sf_smoke):
     # the pruned scan reads only the purchase partition's rows
     n_purchase = fact.filter("event_type = 'purchase'").count()
     assert joined.count() == n_purchase
-
 
 
 def test_aqe_skew_join_splits_hot_partition(spark):

@@ -342,43 +342,6 @@ def test_pq_adc_self_match_and_recall(spark, sf_dir):
     assert len(adc & exact) / len(exact) > 0.25
 
 
-def test_ivf_index_probe_matches_inmemory_and_prunes(spark, sf_smoke, tmp_path):
-    """The persisted IVF index probed with the corpus itself (nprobe=1)
-    must reproduce ann_ivf_topk exactly, and the probe join must
-    trigger dynamic partition pruning on the directory-partitioned
-    inverted lists — the engine reads probed lists, not the corpus."""
-    from leader_graph_spark.operators.similarity import (
-        ann_ivf_topk,
-        build_ivf_index,
-        ivf_probe_topk,
-    )
-    from leader_graph_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_smoke, "embeddings")
-    path = str(tmp_path / "ivf_index")
-    build_ivf_index(emb, path, id_col="vec_id", vec_col="embedding", centroid_mod=40)
-
-    probed = ivf_probe_topk(
-        spark, path, emb, id_col="vec_id", vec_col="embedding", k=5, nprobe=1
-    )
-    inmem = ann_ivf_topk(emb, id_col="vec_id", vec_col="embedding", k=5, centroid_mod=40)
-    got = sorted(tuple(r) for r in probed.collect())
-    want = sorted(tuple(r) for r in inmem.collect())
-    assert got == want and len(want) > 0
-
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower(), plan[:1500]
-    # nprobe widens candidate lists monotonically: results can only improve
-    wide = ivf_probe_topk(
-        spark, path, emb, id_col="vec_id", vec_col="embedding", k=5, nprobe=3
-    )
-    sims_narrow = {(r.id, r.rank): r.cosine_sim for r in probed.collect()}
-    sims_wide = {(r.id, r.rank): r.cosine_sim for r in wide.collect()}
-    assert all(
-        sims_wide[key] >= sims_narrow[key] - 1e-9 for key in sims_narrow if key in sims_wide
-    )
-
-
 def test_containment_catches_what_jaccard_misses(spark):
     """A short doc quoted inside a much longer one: containment ≈ 1,
     Jaccard low. The prefix-filtered operator must find it, agree with
@@ -560,24 +523,6 @@ def test_shingle_rows_duplicate_id_contract(spark):
     ).collect()
     assert len(cross) == 3
     assert len(set((r.doc_id, r.shingle) for r in cross)) == 3
-
-
-def test_ivf_index_empty_centroid_pick_raises(spark, tmp_path):
-    """Round-5 advice (low): sparse ids where no id % centroid_mod == 0
-    must raise at build time instead of silently writing an index whose
-    every probe returns zero rows."""
-    import pytest as _pytest
-
-    from leader_graph_spark.operators.similarity import build_ivf_index
-
-    emb = spark.createDataFrame(
-        [(7, [1.0, 0.0]), (13, [0.0, 1.0]), (21, [1.0, 1.0])],
-        ["vec_id", "embedding"],
-    )
-    with _pytest.raises(ValueError, match="zero\\s+centroids"):
-        build_ivf_index(
-            emb, str(tmp_path / "ivf"), centroid_mod=5
-        )
 
 
 def test_char_shingles_handle_cjk(spark):

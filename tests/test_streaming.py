@@ -4,14 +4,21 @@ from __future__ import annotations
 
 import tempfile
 
-import pytest
-
 from leader_graph_spark.plans import REGISTRY
-from leader_graph_spark.streaming.jobs import run_available_now, tumbling_counts_stream
+from leader_graph_spark.streaming.jobs import (
+    read_events_stream,
+    run_available_now,
+    tumbling_counts,
+)
+
+
+def _tumbling_stream(spark, sf_dir):
+    # watermarked streaming twin of events_tumbling_hourly
+    return tumbling_counts(read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour"))
 
 
 def test_stream_tumbling_equals_batch(spark, sf_smoke):
-    sdf = tumbling_counts_stream(spark, sf_smoke, window="1 hour", watermark="1 hour")
+    sdf = _tumbling_stream(spark, sf_smoke)
     with tempfile.TemporaryDirectory() as ckpt:
         streamed = run_available_now(sdf, name="tumbling_test", checkpoint=ckpt)
         batch = REGISTRY["events_tumbling_hourly"].spark(spark, sf_smoke)
@@ -21,45 +28,12 @@ def test_stream_tumbling_equals_batch(spark, sf_smoke):
         assert len(s) > 0
 
 
-def test_stateful_running_counts(spark, sf_smoke):
-    from leader_graph_spark.streaming.jobs import run_available_now, user_running_counts_stream
-    from leader_graph_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    sdf = user_running_counts_stream(spark, sf_smoke)
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("running_counts_test")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = {
-            r.user_id: (r.n_events, round(r.total_value, 2))
-            for r in spark.table("running_counts_test").collect()
-        }
-    events = load_table(spark, sf_smoke, "events")
-    want = {
-        r.user_id: (r.n, round(r.total, 2))
-        for r in events.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert got == want
-
-
 def test_foreach_batch_sink(spark, sf_smoke, tmp_path):
-    from leader_graph_spark.streaming.jobs import (
-        run_foreach_batch_to_parquet,
-        tumbling_counts_stream,
-    )
+    from leader_graph_spark.streaming.jobs import run_foreach_batch_to_parquet
 
     out = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
-    sdf = tumbling_counts_stream(spark, sf_smoke)
+    sdf = _tumbling_stream(spark, sf_smoke)
     run_foreach_batch_to_parquet(sdf, out_dir=out, checkpoint=ckpt)
     landed = spark.read.parquet(out)
     n1 = landed.count()
@@ -69,7 +43,7 @@ def test_foreach_batch_sink(spark, sf_smoke, tmp_path):
     # at 0): the dynamic partition overwrite must replace the batch's
     # own partition, not append duplicates.
     run_foreach_batch_to_parquet(
-        tumbling_counts_stream(spark, sf_smoke),
+        _tumbling_stream(spark, sf_smoke),
         out_dir=out,
         checkpoint=str(tmp_path / "ckpt_replay"),
     )
@@ -126,26 +100,6 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert rows[dt.datetime(2024, 1, 1, 0, 0)] == 1.0  # 99.0 dropped as too late
 
 
-def test_stream_stream_join_equals_batch(spark, sf_smoke):
-    import tempfile
-
-    from leader_graph_spark.streaming.jobs import (
-        click_purchase_join_stream,
-        run_available_now,
-    )
-
-    sdf = click_purchase_join_stream(spark, sf_smoke)
-    with tempfile.TemporaryDirectory() as ckpt:
-        streamed = run_available_now(
-            sdf, name="ss_join_test", checkpoint=ckpt, output_mode="append"
-        )
-        batch = REGISTRY["clicks_with_recent_purchase"].spark(spark, sf_smoke)
-        s = {tuple(r) for r in streamed.collect()}
-        b = {tuple(r) for r in batch.collect()}
-        assert s == b
-        assert len(s) > 0
-
-
 def test_stream_dedup_within_watermark(spark, sf_smoke):
     import tempfile
 
@@ -199,80 +153,6 @@ def test_ts_parquet_unit_guard(tmp_path, sf_smoke):
     assert ts_parquet_unit(no_ts) is None
 
 
-def test_stateful_running_counts_transformwithstate(spark, sf_smoke):
-    """The Spark-4 transformWithStateInPandas path produces the same
-    per-user running aggregates as the batch groupBy (and as the
-    applyInPandasWithState variant it supersedes). GATED like the
-    live-JDBC test: the TWS state protocol speaks protobuf and this
-    container ships no `protobuf` package — without it the TWS driver
-    worker crashes before user code runs (verified by minimal repro)."""
-    pytest.importorskip("google.protobuf")
-    from pyspark.sql import functions as F
-
-    from leader_graph_spark.sources.tables import load_table
-    from leader_graph_spark.streaming.jobs import user_running_counts_tws
-
-    sdf = user_running_counts_tws(spark, sf_smoke)
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("running_counts_tws_test")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = {
-            r.user_id: (r.n_events, round(r.total_value, 2))
-            for r in spark.table("running_counts_tws_test").collect()
-        }
-    events = load_table(spark, sf_smoke, "events")
-    want = {
-        r.user_id: (r.n, round(r.total, 2))
-        for r in events.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_streaming_join_view_maintenance(spark, sf_smoke, tmp_path):
-    """foreachBatch IVM: the maintained events⋈dim view must equal the
-    batch join over ALL events after the stream drains, across multiple
-    micro-batches, and a replay must not duplicate view rows."""
-    from pyspark.sql import functions as F
-
-    from leader_graph_spark.sources.tables import load_table
-    from leader_graph_spark.streaming.jobs import (
-        read_events_stream,
-        run_join_view_maintenance,
-    )
-
-    events = load_table(spark, sf_smoke, "events")
-    dim = (
-        events.select("user_id").distinct()
-        .withColumn("family", (F.col("user_id") % 3).cast("int"))
-    )
-    view = str(tmp_path / "join_view")
-    sdf = read_events_stream(spark, sf_smoke).select("event_id", "user_id")
-    run_join_view_maintenance(
-        sdf, dim, on="user_id", view_dir=view, checkpoint=str(tmp_path / "ck1")
-    )
-    maintained = spark.read.parquet(view).select("event_id", "user_id", "family")
-    expected = events.select("event_id", "user_id").join(dim, "user_id").select(
-        "event_id", "user_id", "family"
-    )
-    assert sorted(map(tuple, maintained.collect())) == sorted(map(tuple, expected.collect()))
-    # replay with a fresh checkpoint: batch ids restart → partitions
-    # overwrite in place, view stays exactly-once.
-    run_join_view_maintenance(
-        read_events_stream(spark, sf_smoke).select("event_id", "user_id"),
-        dim, on="user_id", view_dir=view, checkpoint=str(tmp_path / "ck2"),
-    )
-    assert spark.read.parquet(view).count() == expected.count()
-
-
 def test_checkpoint_only_new_across_runs(spark, sf_smoke, tmp_path):
     """The reference's incremental 'only new' runs, as checkpointed
     source offsets (§2.9d): a second AvailableNow pass over a landing
@@ -312,202 +192,6 @@ def test_checkpoint_only_new_across_runs(spark, sf_smoke, tmp_path):
     landed = spark.read.parquet(out)
     assert landed.count() == events.count()  # no re-emission of batch 1
     assert landed.select("event_id").distinct().count() == events.count()
-
-
-
-@pytest.mark.slow  # watermark-expiry wait dominates, ~45 s
-def test_stream_stream_left_outer_emits_null_rows(spark, tmp_path):
-    """Left-outer stream-stream join: a click with no purchase in its
-    window must eventually emit WITH NULLS — but the watermark that
-    evicts (and therefore emits) unmatched state is computed from
-    PREVIOUS batches, so each flush needs a later trigger whose
-    restored watermark has passed the click's window: the drains below
-    append far-future sentinels and re-run on the same checkpoint (the
-    documented outer-join lateness contract)."""
-    import datetime as dt
-
-    from leader_graph_spark.streaming.jobs import click_purchase_join_stream
-
-    base = dt.datetime(2024, 1, 1)
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ck")
-
-    def drain():
-        events = spark.readStream.schema(
-            spark.read.parquet(landing).schema
-        ).parquet(landing)
-        q = (
-            click_purchase_join_stream(
-                spark, landing, join_type="left_outer", events=events
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        import glob as _g
-        if not _g.glob(f"{out}/*.parquet"):
-            return {}
-        return {r.click_id: r.purchase_id for r in spark.read.parquet(out).collect()}
-
-    rows = [
-        (1, base + dt.timedelta(minutes=10), 1, "purchase", 1.0, "{}"),
-        (2, base + dt.timedelta(minutes=30), 1, "click", 1.0, "{}"),   # matched
-        (3, base + dt.timedelta(minutes=30), 2, "click", 1.0, "{}"),   # no purchase
-        (4, base + dt.timedelta(minutes=200), 3, "click", 1.0, "{}"),  # no purchase
-    ]
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(landing)
-    got = drain()
-    assert got.get(2) == 1          # matched pair emits immediately
-    assert 3 not in got and 4 not in got  # unmatched still held in state
-
-    # the global watermark is min(click-side, purchase-side) and each
-    # side only sees ITS event type, so a sentinel must advance BOTH
-    # streams: one far-future click and one far-future purchase.
-    for days in (10, 20):
-        sentinel = [
-            (90 + days, base + dt.timedelta(days=days), 900 + days, "click", 0.0, "{}"),
-            (80 + days, base + dt.timedelta(days=days), 800 + days, "purchase", 0.0, "{}"),
-        ]
-        spark.createDataFrame(sentinel, schema).coalesce(1).write.mode("append").parquet(landing)
-        got = drain()
-
-    assert got[2] == 1
-    assert got[3] is None           # never-purchased clicks flushed with nulls
-    assert got[4] is None
-
-
-@pytest.mark.slow  # multi-batch stateful equivalence sweep, ~25 s
-def test_stateful_sessionizer_matches_builtin(spark, tmp_path):
-    """The custom event-time-timeout sessionizer must reproduce the
-    built-in session_window semantics exactly: in-batch gap splits emit
-    immediately, the final open session flushes when the watermark
-    passes last+gap (sentinel drain), and session_end+gap equals the
-    built-in's window end."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from leader_graph_spark.streaming.jobs import session_windows, user_sessions_stateful
-
-    base = dt.datetime(2024, 1, 1)
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    mk = lambda i, minutes, uid: (i, base + dt.timedelta(minutes=minutes), uid, "view", 1.0, "{}")  # noqa: E731
-    rows = [
-        mk(1, 0, 1), mk(2, 3, 1), mk(3, 4, 1),     # user 1, session A (3 events)
-        mk(4, 30, 1), mk(5, 33, 1),                # user 1, session B
-        mk(6, 10, 2),                              # user 2, singleton
-        mk(7, 60, 2), mk(8, 64, 2), mk(9, 69, 2),  # user 2, chained session
-    ]
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ck")
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(landing)
-
-    def drain():
-        src = spark.readStream.schema(spark.read.parquet(landing).schema).parquet(landing)
-        q = (
-            user_sessions_stateful(spark, landing, gap="5 minutes", events=src)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    drain()
-    # flush: two sentinel drains (watermark lags one trigger)
-    for i, days in enumerate((10, 20)):
-        spark.createDataFrame(
-            [mk(100 + i, days * 24 * 60, 99)], schema
-        ).coalesce(1).write.mode("append").parquet(landing)
-        drain()
-
-    got = {
-        (r.user_id, r.session_start, r.session_end + dt.timedelta(minutes=5), r.n_events)
-        for r in spark.read.parquet(out).collect()
-        if r.user_id != 99
-    }
-    batch = spark.createDataFrame(rows, schema)
-    want = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in session_windows(batch, gap="5 minutes").collect()
-    }
-    assert got == want
-    assert len(want) == 4
-
-
-@pytest.mark.slow  # multi-batch late-data replay, ~30 s
-def test_stateful_sessionizer_late_older_events(spark, tmp_path):
-    """Regression (round-5 advice, low): a late-but-in-watermark event
-    OLDER than the carried session must not shrink session_end. The old
-    forward-only merge let any negative delta pass the gap test and
-    then moved session_end backward; the interval merge must instead
-    (a) backward-extend the session when the late event is within gap
-    of session_start, and (b) emit a separate session when it is not —
-    matching batch session_window over the union of all events."""
-    import datetime as dt
-
-    from leader_graph_spark.streaming.jobs import session_windows, user_sessions_stateful
-
-    base = dt.datetime(2024, 1, 1)
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    mk = lambda i, minutes, uid: (i, base + dt.timedelta(minutes=minutes), uid, "view", 1.0, "{}")  # noqa: E731
-    batch1 = [mk(1, 10, 1), mk(2, 12, 1)]          # carried session [10, 12]
-    batch2 = [mk(3, 8, 1), mk(4, 0, 1)]            # late: 8 extends back, 0 is its own
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ck")
-
-    def drain():
-        src = spark.readStream.schema(spark.read.parquet(landing).schema).parquet(landing)
-        q = (
-            user_sessions_stateful(spark, landing, gap="5 minutes", events=src)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    for rows in (batch1, batch2):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(landing)
-        drain()
-    for i, days in enumerate((10, 20)):  # sentinel drains advance the watermark
-        spark.createDataFrame(
-            [mk(100 + i, days * 24 * 60, 99)], schema
-        ).coalesce(1).write.mode("append").parquet(landing)
-        drain()
-
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.read.parquet(out).collect()
-        if r.user_id != 99
-    }
-    batch = spark.createDataFrame(batch1 + batch2, schema)
-    want = {
-        (r.user_id, r.session_start, r.session_end - dt.timedelta(minutes=5), r.n_events)
-        for r in session_windows(batch, gap="5 minutes").collect()
-    }
-    assert got == want
-    # the merged session backward-extends to minute 8, never shrinks
-    assert (1, base + dt.timedelta(minutes=8), base + dt.timedelta(minutes=12), 3) in got
-    assert (1, base, base, 1) in got
 
 
 def test_foreach_batch_crash_recovery_exactly_once(spark, tmp_path):
@@ -563,108 +247,3 @@ def test_foreach_batch_crash_recovery_exactly_once(spark, tmp_path):
     assert {(r.k, r.v) for r in got.collect()} == set(src_rows)
     # no duplicate keys survived the replay
     assert got.groupBy("k").count().where(F.col("count") > 1).count() == 0
-
-
-def test_late_event_dead_letter_split(spark, tmp_path):
-    """Rows older than high-water − lateness at ARRIVAL time divert to
-    the late sink; everything lands in exactly one sink; a batch's own
-    rows never mark each other late."""
-    import datetime as dt
-
-    from leader_graph_spark.streaming.jobs import run_split_late_events
-
-    base = dt.datetime(2024, 1, 1)
-    schema = "event_id long, ts timestamp"
-    landing = str(tmp_path / "landing")
-    dirs = {d: str(tmp_path / d) for d in ("out", "late", "state", "ck")}
-
-    def drain():
-        sdf = spark.readStream.schema(spark.read.parquet(landing).schema).parquet(landing)
-        run_split_late_events(
-            spark,
-            sdf,
-            ts_col="ts",
-            out_dir=dirs["out"],
-            late_dir=dirs["late"],
-            state_dir=dirs["state"],
-            checkpoint=dirs["ck"],
-            lateness_sec=3600,
-        )
-
-    # batch 1: hours 0 and 10 — intra-batch spread is NOT lateness
-    b1 = [(1, base), (2, base + dt.timedelta(hours=10))]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(landing)
-    drain()
-    assert spark.read.parquet(dirs["out"]).count() == 2
-    import os
-
-    assert not os.path.exists(dirs["late"]) or not any(
-        f.endswith(".parquet") for f in os.listdir(dirs["late"])
-    )
-
-    # batch 2: hour 5 (late vs high-water 10 − 1h) and hour 9.5 (in grace)
-    b2 = [(3, base + dt.timedelta(hours=5)), (4, base + dt.timedelta(hours=9, minutes=30))]
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(landing)
-    drain()
-    ok = {r.event_id for r in spark.read.parquet(dirs["out"]).collect()}
-    late = {r.event_id for r in spark.read.parquet(dirs["late"]).collect()}
-    assert ok == {1, 2, 4}
-    assert late == {3}
-
-
-def test_late_split_replay_does_not_self_mark_late(spark, tmp_path):
-    """ADVICE r5 (low): crash between the state append and the
-    checkpoint commit -> Spark replays the batch while the state dir
-    already holds that batch's own max(ts). The cutoff must ignore
-    state rows with _batch_id >= current, or the replayed batch reroutes
-    its own oldest rows to the late sink (different placement between
-    attempts). Simulated by deleting the checkpoint commit file after a
-    successful drain and re-draining."""
-    import datetime as dt
-    import os
-
-    from leader_graph_spark.streaming.jobs import run_split_late_events
-
-    base = dt.datetime(2024, 1, 1)
-    schema = "event_id long, ts timestamp"
-    landing = str(tmp_path / "landing")
-    dirs = {d: str(tmp_path / d) for d in ("out", "late", "state", "ck")}
-
-    def drain():
-        sdf = spark.readStream.schema(spark.read.parquet(landing).schema).parquet(landing)
-        run_split_late_events(
-            spark,
-            sdf,
-            ts_col="ts",
-            out_dir=dirs["out"],
-            late_dir=dirs["late"],
-            state_dir=dirs["state"],
-            checkpoint=dirs["ck"],
-            lateness_sec=3600,
-        )
-
-    # one batch spanning 10 hours: hour 0 is NOT late relative to its
-    # own batch's hour-10 max
-    rows = [(1, base), (2, base + dt.timedelta(hours=10))]
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(landing)
-    drain()
-    assert spark.read.parquet(dirs["out"]).count() == 2
-
-    # crash simulation: the state append for batch 0 is on disk, but the
-    # checkpoint commit is gone -> restart replays batch 0
-    commits = os.path.join(dirs["ck"], "commits")
-    committed = [f for f in os.listdir(commits) if not f.startswith(".")]
-    assert committed  # sanity: there was a commit to delete
-    for f in os.listdir(commits):  # the .crc twins too, or the rename fails
-        os.remove(os.path.join(commits, f))
-    drain()
-
-    # replay must place rows exactly as the first attempt did
-    ok = {r.event_id for r in spark.read.parquet(dirs["out"]).collect()}
-    assert ok == {1, 2}
-    late_files = (
-        [f for f in os.listdir(dirs["late"]) if f.endswith(".parquet")]
-        if os.path.exists(dirs["late"])
-        else []
-    )
-    assert spark.read.parquet(dirs["late"]).count() == 0 if late_files else True

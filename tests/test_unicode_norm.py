@@ -1,40 +1,20 @@
-"""Unicode normalization: composed/decomposed forms collapse, NFKC
-folds compatibility characters, and exact dedup composes correctly."""
+"""Unicode normalization and exact dedup: composed and decomposed forms
+of one text hash apart until the text is normalized."""
 
 from __future__ import annotations
 
 import unicodedata
 
-from leader_graph_spark.operators.quality import normalize_unicode
-
-
-def test_nfc_collapses_decomposed_forms(spark):
-    composed = "café"             # é as one code point
-    decomposed = "café"          # e + combining acute
-    assert composed != decomposed
-    df = spark.createDataFrame([(1, composed), (2, decomposed), (3, None)], "id long, text string")
-    out = {r.id: r.text for r in normalize_unicode(df, text_col="text").collect()}
-    assert out[1] == out[2] == composed
-    assert out[3] is None
-
-
-def test_nfkc_folds_compatibility(spark):
-    fullwidth = "１２３"   # full-width 123
-    df = spark.createDataFrame([(1, fullwidth)], "id long, text string")
-    out = normalize_unicode(df, text_col="text", form="NFKC").collect()[0].text
-    assert out == "123"
-    assert unicodedata.normalize("NFKC", fullwidth) == out
-
 
 def test_dedup_composes_after_normalization(spark):
     from leader_graph_spark.operators.dedup import exact_dedup_keys
 
-    df = spark.createDataFrame(
-        [(1, "café x"), (2, "café x")], "doc_id long, text string"
-    )
+    rows = [(1, "caf\u00e9 x"), (2, "cafe\u0301 x")]  # composed, decomposed
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     raw = exact_dedup_keys(df, id_col="doc_id", text_col="text")
     assert raw.select("content_hash").distinct().count() == 2  # under-dedup!
-    normed = exact_dedup_keys(
-        normalize_unicode(df, text_col="text"), id_col="doc_id", text_col="text"
+    normed = spark.createDataFrame(
+        [(i, unicodedata.normalize("NFC", t)) for i, t in rows], "doc_id long, text string"
     )
-    assert normed.select("content_hash").distinct().count() == 1
+    keys = exact_dedup_keys(normed, id_col="doc_id", text_col="text")
+    assert keys.select("content_hash").distinct().count() == 1
