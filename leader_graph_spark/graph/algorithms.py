@@ -63,14 +63,14 @@ def _ckpt_level(spark):
     conf when the state crowds execution out."""
     from pyspark.storagelevel import StorageLevel
 
-    if (spark.conf.get(CKPT_SER_CONF, "false") or "").lower() == "true":
+    if _conf_bool(spark, CKPT_SER_CONF, False):
         # PySpark's MEMORY_AND_DISK constant is the JVM's serialized
         # variant (deserialized=False) — exactly the compact form.
         return StorageLevel.MEMORY_AND_DISK
     return None  # engine default (JVM MEMORY_AND_DISK, deserialized)
 
 
-def _maybe_auto_serialize(spark, ckpt: DataFrame) -> DataFrame | None:
+def _maybe_auto_serialize(spark, ckpt: DataFrame, frac: float) -> DataFrame | None:
     """Auto-engage the serialized-checkpoint escape hatch (round 10,
     VERDICT r9 Next #5). The r9 spill battery diagnosed the 6g k-core
     death as STORAGE starving EXECUTION: a deserialized loop-state
@@ -83,7 +83,7 @@ def _maybe_auto_serialize(spark, ckpt: DataFrame) -> DataFrame | None:
     Decision, made AFTER each default-level checkpoint materializes
     (the footprint is then a fact, not an estimate): if the state's
     stored bytes (memory + any already-evicted disk portion) exceed
-    ``CKPT_AUTO_CONF`` (default 0.5) × the unified pool's CURRENT
+    ``frac`` (``CKPT_AUTO_CONF``, default 0.5) × the unified pool's CURRENT
     max on-heap storage capacity, set ``CKPT_SER_CONF=true`` so every
     subsequent loop checkpoint in this session lands serialized — AND
     convert the oversized state itself: re-checkpoint it at the
@@ -104,10 +104,6 @@ def _maybe_auto_serialize(spark, ckpt: DataFrame) -> DataFrame | None:
     to shed it. Telemetry-grade: any introspection failure silently
     keeps the default level and returns ``None`` (caller keeps the
     original state)."""
-    try:
-        frac = float(spark.conf.get(CKPT_AUTO_CONF, "0.5") or 0.0)
-    except ValueError:
-        return None
     if frac <= 0:
         return None
     try:
@@ -183,6 +179,7 @@ def _checkpoint_observed(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
     ContextCleaner drop the failed attempt's partial blocks before the
     retry."""
     spark = df.sparkSession
+    frac = _conf_float(spark, CKPT_AUTO_CONF, 0.5)
 
     def attempt():
         obs = Observation()
@@ -215,7 +212,7 @@ def _checkpoint_observed(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
     # budget; if it crowds execution out, auto-engage the serialized
     # level for the rest of the session AND swap in a serialized
     # conversion of this very state
-    return _maybe_auto_serialize(spark, out) or out, seen
+    return _maybe_auto_serialize(spark, out, frac) or out, seen
 
 
 def _release(*dfs: DataFrame | None) -> None:
@@ -291,6 +288,27 @@ def _conf_int(spark, key: str, default: int, minimum: int) -> int:
     if value < minimum:
         raise ValueError(f"{key} must be >= {minimum}, got {value}")
     return value
+
+
+def _conf_float(spark, key: str, default: float) -> float:
+    """Float session conf ``key`` (``default`` when unset); a value that
+    is not a number raises ``ValueError`` naming the key."""
+    raw = spark.conf.get(key, str(default))
+    try:
+        return float(raw)
+    except (TypeError, ValueError):
+        raise ValueError(f"{key} must be a number, got {raw!r}") from None
+
+
+def _conf_bool(spark, key: str, default: bool) -> bool:
+    """Boolean session conf ``key`` (``default`` when unset): ``true`` or
+    ``false`` in any case; anything else raises ``ValueError`` naming
+    the key."""
+    raw = spark.conf.get(key, str(default))
+    value = (raw or "").lower()
+    if value not in ("true", "false"):
+        raise ValueError(f"{key} must be true or false, got {raw!r}")
+    return value == "true"
 
 
 def _loop_confs(spark) -> tuple[int, int, int]:

@@ -601,9 +601,10 @@ def incremental_near_dup(
         .select(
             "doc_id",
             "dup_of",
-            (inter / (F.size("sh_1") + F.size("sh_2") - inter).cast("double")).alias(
-                "jaccard"
-            ),
+            # a row pair of two empty sets has no Jaccard: null, not 0/0
+            (inter / F.nullif(F.size("sh_1") + F.size("sh_2") - inter, F.lit(0)).cast(
+                "double"
+            )).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )

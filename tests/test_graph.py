@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from leader_graph_spark.graph.algorithms import (
     BCAST_FRONTIER_CONF,
+    CKPT_AUTO_CONF,
+    CKPT_SER_CONF,
     DRIVER_CC_CONF,
     PARTITIONED_MIN_CONF,
     STATIC_LOOP_CONF,
@@ -1294,17 +1296,20 @@ def test_connected_components_small_graph_solves_on_driver(spark):
             (STATIC_LOOP_CONF, ("4e6", "-1")),
             (PARTITIONED_MIN_CONF, ("many", "-1")),
             (BCAST_FRONTIER_CONF, ("1.5", "-2")),
+            (CKPT_SER_CONF, ("yes", "1")),
+            (CKPT_AUTO_CONF, ("half", "0.5x")),
         )
         for v in bad
     ],
 )
 def test_driver_max_edges_rejects_bad_value(spark, key, value):
     """Every loop conf (the driver-solve limit shared by CC and LPA, the
-    static-scope row limit, the partitioned-layout gate and the frontier
-    broadcast limit) is read once per loop before any job and fails
-    loudly, naming the key, instead of picking a branch from a value it
-    cannot read; 0 stays legal for the driver limit (it forces the loop)
-    and -1 for the broadcast limit (it disables the hint)."""
+    static-scope row limit, the partitioned-layout gate, the frontier
+    broadcast limit and the two checkpoint-level confs) is read before
+    the job it steers and fails loudly, naming the key, instead of
+    picking a branch from a value it cannot read; 0 stays legal for the
+    driver limit (it forces the loop) and -1 for the broadcast limit (it
+    disables the hint)."""
     edges = spark.createDataFrame([("a", "b")], "src string, dst string")
     verts = spark.createDataFrame([("a",), ("b",)], "id string")
     spark.conf.set(key, value)

@@ -548,6 +548,26 @@ def test_incremental_near_dup_planted(spark):
     assert not out[3].is_duplicate and out[3].dup_of is None and out[3].jaccard == 0.0
 
 
+def test_incremental_near_dup_empty_rows_alike_with_and_without_ansi(spark):
+    """A new id and an index id that both have a row with no shingles
+    pair two empty sets: that pair has no Jaccard (no 0/0 under ANSI),
+    and the text rows still match."""
+    from leader_graph_spark.operators.dedup import incremental_near_dup
+
+    text = "the quick brown fox jumps over the lazy dog again and again today"
+    new = spark.createDataFrame([(1, text), (1, "")], "doc_id long, text string")
+    index = spark.createDataFrame([(2, text), (2, None)], "doc_id long, text string")
+    rows = {}
+    for ansi in ("true", "false"):
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        try:
+            rows[ansi] = sorted(map(tuple, incremental_near_dup(new, index, threshold=0.5).collect()))
+        finally:
+            spark.conf.unset("spark.sql.ansi.enabled")
+    assert rows["true"] == rows["false"]
+    assert (1, True, 2, 1.0) in rows["true"]
+
+
 def test_remove_boilerplate_lines_planted(spark):
     from leader_graph_spark.operators.quality import remove_boilerplate_lines
 

@@ -100,3 +100,22 @@ def test_console_script_runs_a_query(installed_env):
         ],
     )
     assert r.returncode == 0, r.stderr
+
+
+def test_console_script_runs_a_python_worker_query(installed_env, sf_smoke):
+    """``infobox_person_details`` parses HTML in ``mapInPandas`` tasks, so
+    its Python workers must start from the installed package's daemon
+    (``spark.python.daemon.module``) with no checkout on any path."""
+    r = _run(
+        installed_env,
+        [
+            os.path.join(installed_env, "bin", "leader-graph-spark"),
+            "run",
+            "infobox_person_details",
+            "--sf-dir",
+            sf_smoke,
+            "--limit",
+            "3",
+        ],
+    )
+    assert r.returncode == 0, r.stderr
