@@ -266,6 +266,11 @@ DRIVER_CC_CONF = "spark.leader_graph_spark.cc.driverMaxEdges"
 # collect brings to the driver. 0 forces the loop with no raw-edge
 # checkpoint. merge_components bounds its quotient graph's driver solve
 # by it too (0 sends the quotient to the loop).
+# Small dimension joins have a driver-side gate too, with no conf: a
+# dimension whose parquet footer shows at most
+# sources.tables.INLINE_DIM_MAX_ROWS rows is looked up as an inlined
+# literal map (sources.tables.join_dim); the crossover measured against
+# the broadcast join is recorded there.
 DEDUP_DRIVER_CONF = "spark.leader_graph_spark.dedup.driverMaxBytes"
 # Bounds the driver-side MinHash near-dup solve
 # (operators.dedup.minhash_near_duplicates): a corpus whose (id, text)
@@ -319,6 +324,9 @@ def _loop_confs(spark) -> tuple[int, int, int]:
         _conf_int(spark, PARTITIONED_MIN_CONF, 10_000, 0),
         _conf_int(spark, BCAST_FRONTIER_CONF, 1_000_000, -1),
     )
+
+
+_AUTO_BCAST = "spark.sql.autoBroadcastJoinThreshold"
 
 
 class _loop_exec_conf:
@@ -409,7 +417,15 @@ class _Loop(_loop_exec_conf):
     best-of-7). Below the gate (default 10k rows) the extra job is a
     measured net loss (dedup_canonical_docs sf0.1: +0.7 s wall, −0
     shuffle bytes); under AQE a pinned layout cannot be proven to match
-    the coalesced partition counts, so it is never applied there.
+    the coalesced partition counts, so it is never applied there. With
+    the layout pinned the scope also turns Catalyst's own broadcasts off
+    (hints, ``broadcast`` below among them, still apply): a checkpoint
+    keeps the size estimate of the plan it materialized, so a state
+    estimated small was broadcast in every round, one job each, in
+    place of a join its layout already made exchange-free (measured on
+    ``pagerank_membership`` at sf0.1, 4 cores: 16 jobs with the
+    membership edges' inflated join estimate, 30 once the estimate was
+    realistic).
     Whether a graph is solved on the driver instead is decided before
     any loop is built (:func:`_driver_or_loop`).
 
@@ -453,6 +469,8 @@ class _Loop(_loop_exec_conf):
         try:
             if self._key and self.active and self.n_rows >= self.partitioned_min:
                 parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+                self.saved[_AUTO_BCAST] = self.spark.conf.get(_AUTO_BCAST)
+                self.spark.conf.set(_AUTO_BCAST, "-1")
                 self.step(
                     "base",
                     self.base.repartition(parts, self._key).sortWithinPartitions(self._key),
@@ -580,12 +598,15 @@ def _driver_or_loop(edges: DataFrame, *, key: str):
     through this job against 3.49–3.89 s entered directly.
     ``DRIVER_CC_CONF=0`` enters the loop directly, with no raw
     checkpoint. Every conf is read once, before any job, so a bad loop
-    conf fails on either branch."""
+    conf fails on either branch. ``symmetrize`` is planned only on the
+    branches that read it: a driver solve from the raw rows never
+    analyses its union and ``distinct``."""
     spark = edges.sparkSession
     limit = _conf_int(spark, DRIVER_CC_CONF, 100_000, 0)
     confs = _loop_confs(spark)
-    base, n_rows = symmetrize(edges), None
-    if limit:
+    if not limit:
+        base, n_rows = symmetrize(edges), None
+    else:
         small, seen = _checkpoint_observed(edges.select("src", "dst"), n=F.count(F.lit(1)))
         if seen["n"] > limit:
             sym, seen = _checkpoint_observed(symmetrize(small), n=F.count(F.lit(1)))
@@ -670,6 +691,31 @@ def _driver_label_propagation(
         labels = new
     schema = T.StructType(
         [T.StructField("id", id_type), T.StructField("community", id_type)]
+    )
+    return _driver_frame(spark, schema, [list(labels), list(labels.values())])
+
+
+def _driver_min_propagation(
+    spark, pairs: set, id_type: T.DataType, rounds: int
+) -> DataFrame:
+    """Exactly ``rounds`` min-label hops over a small symmetric pair set
+    (:func:`_collect_pairs`) → (id, component), the contract of
+    :func:`min_propagation`'s loop: the labelled vertices are the
+    distinct non-null ``src`` values, each starting with its own id, and
+    each hop lowers a label to the minimum over the vertex and its
+    neighbours (ids compare as the column's Spark ordering, as in
+    :func:`_driver_components`). A null endpoint joins nothing."""
+    nbrs: dict = {}
+    for src, dst in pairs:
+        if src is not None:
+            nbrs.setdefault(src, [])
+            if dst is not None:
+                nbrs[src].append(dst)
+    labels = {v: v for v in nbrs}
+    for _ in range(rounds):
+        labels = {v: min([labels[v], *(labels[u] for u in us)]) for v, us in nbrs.items()}
+    schema = T.StructType(
+        [T.StructField("id", id_type), T.StructField("component", id_type)]
     )
     return _driver_frame(spark, schema, [list(labels), list(labels.values())])
 
@@ -962,12 +1008,23 @@ def min_propagation(
     is ~0.3s of fixed scheduler latency (SCALE.md round-4 breakdown),
     so halving barriers recovers the pointer-jump's measured win with
     none of its risk; at cluster scale the same trade holds per
-    whole-cluster barrier round-trip."""
+    whole-cluster barrier round-trip.
+
+    Small graphs are solved on the driver (:func:`_driver_or_loop`, the
+    gate connected components and label propagation share): the rounds
+    run in Python (:func:`_driver_min_propagation`) and the labels come
+    back as an Arrow ``LocalRelation``, two jobs in place of one
+    checkpoint per ``hops_per_checkpoint`` hops and the broadcast
+    builds of their joins."""
     # Rounds run over the ACTIVE subgraph only (see _active_vertices);
     # edge-less vertices join back once at the end. Output is identical
     # to full-vertex propagation — an isolated vertex can neither give
     # nor receive a label — so the unrolled SQL oracle is unchanged.
-    with _Loop(symmetrize(edges), key="dst") as loop:
+    with _driver_or_loop(edges, key="dst") as (pairs, id_type, loop):
+        if loop is None:
+            return _with_isolated(
+                vertices, _driver_min_propagation(edges.sparkSession, pairs, id_type, rounds)
+            )
         labels = loop.step("labels", _active_vertices(loop.base))
         done = 0
         while done < rounds:

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from leader_graph_spark.functions.scalar import md5_key
-from leader_graph_spark.sources.tables import load_table
+from leader_graph_spark.sources.tables import join_dim, load_table
 
 
 def build_vertices(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,25 +65,36 @@ def build_vertices(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+def belongs_to_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BELONGS_TO hierarchy pairs (src = nation, dst = region), md5
+    vertex ids; the region is looked up as a dimension
+    (:func:`join_dim`)."""
+    nation = load_table(spark, sf_dir, "nation")
+    return join_dim(nation, "n_regionkey", sf_dir, "region", "r_regionkey", ["r_name"]).select(
+        md5_key(F.lit("nation"), "n_name").alias("src"),
+        md5_key(F.lit("region"), "r_name").alias("dst"),
+    )
+
+
+def works_for_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WORKS_FOR membership pairs (src = customer, dst = nation), md5
+    vertex ids, with the customer's ``c_custkey``; the nation is looked
+    up as a dimension (:func:`join_dim`)."""
+    customer = load_table(spark, sf_dir, "customer")
+    return join_dim(customer, "c_nationkey", sf_dir, "nation", "n_nationkey", ["n_name"]).select(
+        md5_key(F.lit("customer"), "c_name").alias("src"),
+        md5_key(F.lit("nation"), "n_name").alias("dst"),
+        "c_custkey",
+    )
+
+
 def build_membership_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Static edges: BELONGS_TO hierarchy + WORKS_FOR membership.
     src/dst are the md5 vertex ids; relationship is the edge type."""
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    customer = load_table(spark, sf_dir, "customer")
-
-    belongs = nation.join(
-        F.broadcast(region), nation.n_regionkey == region.r_regionkey
-    ).select(
-        md5_key(F.lit("nation"), "n_name").alias("src"),
-        md5_key(F.lit("region"), "r_name").alias("dst"),
-        F.lit("BELONGS_TO").alias("relationship"),
+    return belongs_to_edges(spark, sf_dir).withColumn(
+        "relationship", F.lit("BELONGS_TO")
+    ).unionByName(
+        works_for_edges(spark, sf_dir).select(
+            "src", "dst", F.lit("WORKS_FOR").alias("relationship")
+        )
     )
-    works_for = customer.join(
-        F.broadcast(nation), customer.c_nationkey == nation.n_nationkey
-    ).select(
-        md5_key(F.lit("customer"), "c_name").alias("src"),
-        md5_key(F.lit("nation"), "n_name").alias("dst"),
-        F.lit("WORKS_FOR").alias("relationship"),
-    )
-    return belongs.unionByName(works_for)

@@ -17,7 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from leader_graph_spark.graph.algorithms import connected_components, degrees
-from leader_graph_spark.graph.build import build_membership_edges, build_vertices
+from leader_graph_spark.graph.build import (
+    belongs_to_edges,
+    build_membership_edges,
+    build_vertices,
+    works_for_edges,
+)
 from leader_graph_spark.graph.derived import (
     current_colleague_edges,
     same_group_pairs,
@@ -803,29 +808,14 @@ def incremental_component_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     deltas, MinHash index probes, incremental join maintenance)."""
     from pyspark.sql import functions as F  # noqa: F811
 
-    from leader_graph_spark.functions.scalar import md5_key
     from leader_graph_spark.graph.algorithms import merge_components
 
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
     customer = load_table(spark, sf_dir, "customer")
-    belongs = nation.join(
-        F.broadcast(region), nation.n_regionkey == region.r_regionkey
-    ).select(
-        md5_key(F.lit("nation"), "n_name").alias("src"),
-        md5_key(F.lit("region"), "r_name").alias("dst"),
+    works = works_for_edges(spark, sf_dir)
+    base_edges = belongs_to_edges(spark, sf_dir).unionByName(
+        works.where(F.col("c_custkey") % 2 == 0).select("src", "dst")
     )
-    works = customer.join(
-        F.broadcast(nation), customer.c_nationkey == nation.n_nationkey
-    ).select(
-        md5_key(F.lit("customer"), "c_name").alias("src"),
-        md5_key(F.lit("nation"), "n_name").alias("dst"),
-        F.col("c_custkey").alias("ck"),
-    )
-    base_edges = belongs.unionByName(
-        works.where(F.col("ck") % 2 == 0).select("src", "dst")
-    )
-    delta_edges = works.where(F.col("ck") % 2 == 1).select("src", "dst")
+    delta_edges = works.where(F.col("c_custkey") % 2 == 1).select("src", "dst")
     base_vertices = (
         base_edges.select(F.col("src").alias("id"))
         .unionByName(base_edges.select(F.col("dst").alias("id")))
@@ -1460,29 +1450,13 @@ def motif_missing_shortcut_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     from leader_graph_spark.graph.frames import DFGraph
 
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    customer = load_table(spark, sf_dir, "customer")
-    from leader_graph_spark.functions.scalar import md5_key
-
-    works = customer.join(
-        F.broadcast(nation), customer.c_nationkey == nation.n_nationkey
-    ).select(
-        md5_key(F.lit("customer"), "c_name").alias("src"),
-        md5_key(F.lit("nation"), "n_name").alias("dst"),
-        F.col("c_custkey").alias("ck"),
-    )
-    belongs = nation.join(
-        F.broadcast(region), nation.n_regionkey == region.r_regionkey
-    ).select(
-        md5_key(F.lit("nation"), "n_name").alias("src"),
-        md5_key(F.lit("region"), "r_name").alias("dst"),
-    )
+    works = works_for_edges(spark, sf_dir)
+    belongs = belongs_to_edges(spark, sf_dir)
     b2 = belongs.select(
         F.col("src").alias("b_src"), F.col("dst").alias("b_dst")
     )
     shortcut = (
-        works.where(F.col("ck") % 2 == 0)
+        works.where(F.col("c_custkey") % 2 == 0)
         .join(b2, F.col("dst") == F.col("b_src"))
         .select("src", F.col("b_dst").alias("dst"))
     )

@@ -18,7 +18,7 @@ from leader_graph_spark.functions.scalar import (
 )
 from leader_graph_spark.operators.intervals import interval_overlap_self_join
 from leader_graph_spark.plans.registry import query
-from leader_graph_spark.sources.tables import load_table
+from leader_graph_spark.sources.tables import join_dim, load_table
 
 # ---------------------------------------------------------------------------
 # Flagship: interval-overlap self-join (J4/J6 colleague shape)
@@ -189,7 +189,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Hierarchy join (J2) + broadcast dimension join (J9/J1)
+# Hierarchy join (J2) + dimension lookup join (J9/J1)
 # ---------------------------------------------------------------------------
 
 _HIERARCHY_ORACLE = """
@@ -203,14 +203,16 @@ FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey
 def org_hierarchy_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BELONGS_TO hierarchy edges: child org joined to parent org on
     ``parent_uuid == uuid`` (``src/mysql2neo4j.py:204-227``), expressed
-    as nation→region with the parent side broadcast."""
+    as nation→region with the parent side looked up as a dimension
+    (:func:`join_dim`)."""
     nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    return nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey).select(
+    return join_dim(
+        nation, "n_regionkey", sf_dir, "region", "r_regionkey", {"r_name": "parent_name"}
+    ).select(
         F.col("n_nationkey").alias("child_key"),
         F.col("n_name").alias("child_name"),
-        F.col("r_regionkey").alias("parent_key"),
-        F.col("r_name").alias("parent_name"),
+        F.col("n_regionkey").alias("parent_key"),
+        "parent_name",
     )
 
 
@@ -227,21 +229,17 @@ LEFT JOIN region r ON n.n_regionkey = r.r_regionkey
 def customer_region_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left dimension-lookup join chain (the reference's J1 leader→org
     left join ``src/mysql2neo4j.py:110-121`` + J9 broadcast dict lookup
-    ``src/mysql2neo4j.py:130-151``). Both dims are broadcast — no shuffle
-    of the fact side."""
+    ``src/mysql2neo4j.py:130-151``). Both dims are looked up
+    (:func:`join_dim`) — no shuffle of the fact side."""
     customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    return (
-        customer.join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey, "left")
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey, "left")
-        .select(
-            "c_custkey",
-            "c_name",
-            F.col("n_name").alias("nation_name"),
-            F.col("r_name").alias("region_name"),
-        )
+    with_nation = join_dim(
+        customer, "c_nationkey", sf_dir, "nation", "n_nationkey",
+        {"n_name": "nation_name", "n_regionkey": "n_regionkey"}, "left",
     )
+    return join_dim(
+        with_nation, "n_regionkey", sf_dir, "region", "r_regionkey",
+        {"r_name": "region_name"}, "left",
+    ).select("c_custkey", "c_name", "nation_name", "region_name")
 
 
 # ---------------------------------------------------------------------------

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from leader_graph_spark.plans.registry import query
-from leader_graph_spark.sources.tables import load_table
+from leader_graph_spark.sources.tables import join_dim, load_table
 
 # ---------------------------------------------------------------------------
 # Per-nation price-over-time regression + correlation
@@ -79,10 +79,11 @@ def nation_price_trend_regression(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
     pts = (
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
+        join_dim(
+            orders.join(customer, orders.o_custkey == customer.c_custkey),
+            "c_nationkey", sf_dir, "nation", "n_nationkey", ["n_name"],
+        )
         .select(
             "n_name",
             F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date"))
@@ -502,7 +503,7 @@ def price_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     numerator would move to DECIMAL(38,0); at these SFs BIGINT holds
     with 9 digits of headroom.)
 
-    Scale shape: one fact-side join to broadcast dims, a (nation,
+    Scale shape: one fact-side join and a nation lookup, a (nation,
     cents) pre-aggregate that collapses duplicate price points
     map-side, then a nation-partitioned ordered window over DISTINCT
     price values only — the window never sees raw orders, and its
@@ -511,10 +512,11 @@ def price_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     one exchange."""
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
     px = (
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
+        join_dim(
+            orders.join(customer, orders.o_custkey == customer.c_custkey),
+            "c_nationkey", sf_dir, "nation", "n_nationkey", ["n_name"],
+        )
         .select(
             F.col("n_name").alias("nation"),
             F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").alias("cents"),

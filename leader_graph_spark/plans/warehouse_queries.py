@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from leader_graph_spark.operators.multimodal import attach_fake_payloads
 from leader_graph_spark.plans.registry import query
-from leader_graph_spark.sources.tables import load_table
+from leader_graph_spark.sources.tables import join_dim, load_table
 
 # ---------------------------------------------------------------------------
 # TPC-H Q3 shape: 3-way join + grouped revenue + deterministic top-k
@@ -595,34 +595,33 @@ GROUP BY supp_nation, cust_nation, l_year
 @query("nation_pair_trade_volume", _Q7_ORACLE, tags=("J1", "A1", "tpch-q7"))
 def nation_pair_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: bilateral volume between two nations by ship
-    year. The disjunctive nation-pair predicate lives on broadcast
-    dimension joins (both nation copies are 25 rows), so the fact scan
+    year. The disjunctive nation-pair predicate lives on the two nation
+    lookups (25 rows, inlined by :func:`join_dim`), so the fact scan
     carries only the shipdate range filter to parquet and the OR never
     blocks pushdown."""
     lineitem = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     supplier = load_table(spark, sf_dir, "supplier")
-    nation = load_table(spark, sf_dir, "nation")
     li = lineitem.filter(
         (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    n1 = nation.select(F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation"))
-    n2 = nation.select(F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation"))
     pair = (
         (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
     ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
     volume = F.col("l_extendedprice").cast("decimal(18,2)") * (
         F.lit(1) - F.col("l_discount").cast("decimal(18,4)")
     )
-    return (
+    joined = (
         li.join(F.broadcast(supplier.select("s_suppkey", "s_nationkey")), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders.select("o_orderkey", "o_custkey"), F.col("l_orderkey") == F.col("o_orderkey"))
         .join(customer.select("c_custkey", "c_nationkey"), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
-        .filter(pair)
+    )
+    for fact_key, name in (("s_nationkey", "supp_nation"), ("c_nationkey", "cust_nation")):
+        joined = join_dim(joined, fact_key, sf_dir, "nation", "n_nationkey", {"n_name": name})
+    return (
+        joined.filter(pair)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").cast("int").alias("l_year"))
         .agg(F.sum(volume).cast("decimal(28,6)").cast("double").alias("revenue"))
     )
@@ -654,13 +653,12 @@ FROM (
 def returned_item_losses(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: revenue lost to returns per customer over one
     year, top 20. Both selective filters (returnflag, orderdate range)
-    push to their parquet scans; nation broadcasts; the top-20 is a
-    TakeOrdered over the aggregated (customer-sized) side, never a
-    global sort of the fact table."""
+    push to their parquet scans; nation is a :func:`join_dim` lookup;
+    the top-20 is a TakeOrdered over the aggregated (customer-sized)
+    side, never a global sort of the fact table."""
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
-    nation = load_table(spark, sf_dir, "nation")
     o = orders.filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
@@ -672,10 +670,11 @@ def returned_item_losses(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice").cast("decimal(18,2)")
         * (F.lit(1) - F.col("l_discount").cast("decimal(18,4)"))
     ).cast("decimal(28,6)")
+    joined = li.join(o, li.l_orderkey == o.o_orderkey).join(
+        customer.select("c_custkey", "c_name", "c_nationkey"), o.o_custkey == F.col("c_custkey")
+    )
     return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(customer.select("c_custkey", "c_name", "c_nationkey"), o.o_custkey == F.col("c_custkey"))
-        .join(F.broadcast(nation.select("n_nationkey", "n_name")), F.col("c_nationkey") == F.col("n_nationkey"))
+        join_dim(joined, "c_nationkey", sf_dir, "nation", "n_nationkey", ["n_name"])
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(revenue.alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))

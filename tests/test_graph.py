@@ -19,6 +19,7 @@ from leader_graph_spark.graph.algorithms import (
     degrees,
     label_propagation_fixed,
     merge_components,
+    min_propagation,
 )
 from leader_graph_spark.graph.derived import (
     current_colleague_edges,
@@ -513,6 +514,9 @@ def test_iterative_loops_release_superseded_checkpoints(spark):
             edges, seeds, iterations=8
         ),
         "min_propagation": lambda: alg.min_propagation(vertices, edges, rounds=6),
+        "min_propagation loop": lambda: loop_branch(
+            lambda: alg.min_propagation(vertices, edges, rounds=6)
+        ),
         "khop": lambda: alg.khop_distances(edges, seeds, k=6),
         "multi-source": lambda: alg.multi_source_distances(edges, pivots, k=6),
         "sssp": lambda: alg.weighted_sssp(weighted, seeds, rounds=6),
@@ -993,9 +997,13 @@ def test_loop_partitioned_gate_and_layout(spark):
     pinned partition count, so per-round SMJs elide the exchange+sort
     on that side; below the gate the input checkpoint is used as it is
     (the up-front repartition job is a measured net loss for tiny loop
-    states)."""
+    states). With the layout pinned, Catalyst's own broadcasts are off
+    inside the scope (a small checkpointed state is joined by sort-merge
+    on its layout, not broadcast every round) and back on after it."""
     from leader_graph_spark.graph.algorithms import PARTITIONED_MIN_CONF, _Loop
 
+    auto_bcast = "spark.sql.autoBroadcastJoinThreshold"
+    session_bcast = spark.conf.get(auto_bcast)
     df = spark.range(100).select(
         F.col("id").cast("string").alias("src"), F.lit("x").alias("dst")
     )
@@ -1009,23 +1017,33 @@ def test_loop_partitioned_gate_and_layout(spark):
                 assert sorted(r.src for r in loop.base.collect()) == sorted(
                     str(i) for i in range(100)
                 )
+                state = loop.step("state", loop.base.select(F.col("src").alias("id")).distinct())
+                round_plan = (
+                    loop.base.join(state, loop.base.src == state.id)
+                    ._jdf.queryExecution().executedPlan().toString()
+                )
                 return (
                     plan.outputPartitioning().toString(),
                     plan.outputOrdering().toString(),
                     loop.base.rdd.getNumPartitions(),
                     int(spark.conf.get("spark.sql.shuffle.partitions")),
+                    "BroadcastHashJoin" in round_plan,
                 )
         finally:
             spark.conf.unset(PARTITIONED_MIN_CONF)
+            assert spark.conf.get(auto_bcast) == session_bcast
 
     # n = 100 rows >= a gate of 100: layout applied
-    part, order, n_parts, static_parts = layout("100")
+    part, order, n_parts, static_parts, broadcast = layout("100")
     assert part.startswith("hashpartitioning(src") and "ASC" in order
     assert n_parts == static_parts
-    # below the gate (conf or default 10k): the plain input checkpoint
+    assert not broadcast
+    # below the gate (conf or default 10k): the plain input checkpoint,
+    # whose small state the planner broadcasts as the session allows
     for min_rows in ("101", None):
-        part, *_ = layout(min_rows)
+        part, *_, broadcast = layout(min_rows)
         assert "hashpartitioning" not in part
+        assert broadcast
 
 
 def test_min_fold_equals_full_outer_fold(spark):
@@ -1261,6 +1279,60 @@ def test_connected_components_driver_and_loop_paths_agree(spark):
     assert {("n", "n"), ("m", "m"), (None, None)} <= via_driver
 
 
+def test_min_propagation_driver_and_loop_paths_agree(spark):
+    """``min_propagation`` solves small graphs on the driver; forcing
+    the loop (``DRIVER_CC_CONF=0``) gives the same labels hop for hop:
+    fewer rounds than a path's diameter leave it unconverged the same
+    way on both branches. The inputs carry duplicate rows, both
+    directions of an edge, self-loops, null endpoints, isolated
+    vertices and bigint ids past 2**53."""
+    from unittest import mock
+
+    from leader_graph_spark.graph import algorithms as alg
+
+    big = 2**62
+    cases = [
+        (
+            [("e", "d"), ("d", "c"), ("c", "b"), ("b", "a"), ("e", "d"), ("x", "x"),
+             ("y", "x"), ("n", None), (None, "m")],
+            list("abcdexynm") + ["z", None],
+            "string",
+        ),
+        (
+            [(big + 5, big + 4), (big + 4, big + 3), (big + 3, big + 1), (7, 5), (5, 7),
+             (5, 5), (9, None)],
+            [big + 1, big + 3, big + 4, big + 5, 5, 7, 9, 11],
+            "bigint",
+        ),
+    ]
+    labels = {}
+    for rows, ids, id_type in cases:
+        edges = spark.createDataFrame(rows, f"src {id_type}, dst {id_type}")
+        verts = spark.createDataFrame([(v,) for v in ids], f"id {id_type}")
+        for rounds in (1, 2, 5):
+            with mock.patch.object(
+                alg, "_driver_min_propagation", wraps=alg._driver_min_propagation
+            ) as solve:
+                driver = {tuple(r) for r in min_propagation(verts, edges, rounds=rounds).collect()}
+                assert solve.called
+                spark.conf.set(DRIVER_CC_CONF, "0")
+                try:
+                    solve.reset_mock()
+                    loop = {tuple(r) for r in min_propagation(verts, edges, rounds=rounds).collect()}
+                    assert not solve.called
+                finally:
+                    spark.conf.unset(DRIVER_CC_CONF)
+            assert driver == loop, (id_type, rounds)
+            assert len(driver) == len(set(ids))
+            labels[id_type, rounds] = driver
+    # two hops from the path's minimum reach c, not d; a null endpoint
+    # joins nothing
+    assert {("c", "a"), ("d", "b"), ("z", "z"), ("y", "x"), ("n", "n"), (None, None)} <= (
+        labels["string", 2]
+    )
+    assert ("e", "a") in labels["string", 5]
+
+
 def test_connected_components_small_graph_solves_on_driver(spark):
     """CC's driver branch submits only the raw edge checkpoint and one
     Arrow collect: two jobs of one stage each, no shuffle stage.
@@ -1318,6 +1390,8 @@ def test_driver_max_edges_rejects_bad_value(spark, key, value):
             connected_components(verts, edges)
         with pytest.raises(ValueError, match=re.escape(key)):
             label_propagation_fixed(edges, rounds=1)
+        with pytest.raises(ValueError, match=re.escape(key)):
+            min_propagation(verts, edges, rounds=1)
         if key == DRIVER_CC_CONF:
             labels = spark.createDataFrame([("a", "a")], "id string, component string")
             group = f"merge_bad_conf_{value}"

@@ -227,3 +227,19 @@ def test_small_graph_solves_on_driver(spark):
     assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
     cycle = [(v, (v + 1) % 30) for v in range(30)]
     assert {r.id: r.community for r in out.collect()} == _model(cycle, 3)
+
+
+def test_membership_lane_build_runs_only_the_driver_solve(spark, sf_smoke):
+    """``lpa_membership_communities`` builds its plan with two jobs, the
+    raw-edge checkpoint and its Arrow collect: nation and region are
+    looked up as inlined maps (``join_dim``), so no broadcast build job
+    runs, and the raw-edge plan holds no join or ``BroadcastExchange``."""
+    from leader_graph_spark.graph.build import build_membership_edges
+    from leader_graph_spark.metrics import measure_action
+    from leader_graph_spark.plans import REGISTRY
+
+    spec = REGISTRY["lpa_membership_communities"]
+    build = measure_action(spark, lambda: spec.spark(spark, sf_smoke))
+    assert build.jobs == 2, build.jobs
+    plan = build_membership_edges(spark, sf_smoke)._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan and "Join" not in plan, plan

@@ -83,12 +83,13 @@ BENCH_BUDGETS: dict[str, tuple[float, int]] = {
 # so their BENCH_BUDGETS entries above bound the distributed plan only
 # when that branch is off: test_distributed_minhash_bytes_budget runs
 # them at DEDUP_DRIVER_CONF=0 (measured at sf0.001: 0.42 MB / 5 jobs
-# and 0.51 MB / 11 jobs). These bound the driver branch the lanes take
+# and 0.43 MB / 9 jobs). These bound the driver branch the lanes take
 # by default, measured at 0 MB / 2 jobs (the collect and the action)
-# and 0.028 MB / 14 jobs (the propagation over the local pair list).
+# and 0.008 MB / 6 jobs (min_propagation solves the collected pair list
+# on the driver too; 0.028 MB / 14 jobs while it ran its loop).
 DRIVER_MINHASH_BUDGETS: dict[str, tuple[float, int]] = {
     "minhash_near_dup_docs": (0.0, 3),
-    "dedup_canonical_docs": (0.06, 18),
+    "dedup_canonical_docs": (0.03, 8),
 }
 
 

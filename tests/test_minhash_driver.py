@@ -18,7 +18,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
-from leader_graph_spark.graph.algorithms import DEDUP_DRIVER_CONF, _driver_frame
+from leader_graph_spark.graph.algorithms import DEDUP_DRIVER_CONF, DRIVER_CC_CONF, _driver_frame
 from leader_graph_spark.metrics import measure_action
 from leader_graph_spark.operators import dedup
 from leader_graph_spark.operators.dedup import (
@@ -261,6 +261,26 @@ def test_canonical_docs_both_branches(spark):
     assert (ran_driver, ran_loop) == (True, False)
     assert driver == distributed
     assert {r[0]: r[1] for r in driver} == {1: 1, 2: 1, 3: 1, 4: 4}
+
+
+def test_canonical_docs_propagation_driver_equals_loop(spark, sf_dir):
+    """The registry's ``dedup_canonical_docs`` at sf0.01: after the
+    MinHash collect, ``min_propagation`` solves the pair list on the
+    driver, so the build runs three jobs (the collect, the raw-edge
+    checkpoint and its Arrow collect) instead of a checkpoint per two
+    hops and the broadcast builds of their joins; forcing the loop
+    (``DRIVER_CC_CONF=0``) gives the same rows."""
+    spec = REGISTRY["dedup_canonical_docs"]
+    build = measure_action(spark, lambda: spec.spark(spark, sf_dir))
+    assert build.jobs <= 3, build.jobs
+    driver = sorted(map(tuple, build.result.collect()))
+    spark.conf.set(DRIVER_CC_CONF, "0")
+    try:
+        loop = sorted(map(tuple, spec.spark(spark, sf_dir).collect()))
+    finally:
+        spark.conf.unset(DRIVER_CC_CONF)
+    assert driver == loop
+    assert sum(kept for _, _, kept in driver) < len(driver)  # some docs collapse
 
 
 def test_registry_corpus_takes_driver_branch_without_shuffle(spark, sf_dir):

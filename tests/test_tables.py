@@ -1,6 +1,7 @@
 """Table loading: footer schemas equal Spark's inferred schemas, the
 footer cache misses on a rewritten file, and loading any table runs no
-Spark job and changes no session conf."""
+Spark job and changes no session conf. Dimension lookups
+(``join_dim``): the inlined map equals the broadcast join."""
 
 from __future__ import annotations
 
@@ -13,7 +14,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from leader_graph_spark.sources.tables import TABLES, _footer_schema, load_table
+from leader_graph_spark.sources import tables
+from leader_graph_spark.sources.tables import TABLES, _footer_schema, join_dim, load_table
 
 TESTDATA = "/root/testdata"
 
@@ -132,3 +134,85 @@ def test_loading_tables_runs_no_job_and_keeps_conf(spark, sf_smoke):
     events = _inferred(spark, f"{sf_smoke}/events.parquet")
     assert dfs["events"].schema == events.schema
     assert sorted(map(tuple, dfs["events"].collect())) == sorted(map(tuple, events.collect()))
+
+
+def _dims(tmp_path):
+    """Dimension files: a bigint key with null values of every inlined
+    value type, a string key, a duplicated key."""
+    dims = {
+        "dim_big": pa.table({
+            "k": pa.array([2**62, -5, 7, 0], pa.int64()),
+            "name": ["big", "neg", None, ""],
+            "flag": pa.array([True, None, False, True]),
+            "day": pa.array(
+                [datetime.date(2020, 1, 2), None, datetime.date(1, 1, 1), datetime.date(9999, 12, 31)]
+            ),
+            "amount": pa.array(
+                [decimal.Decimal("1.50"), None, decimal.Decimal("-12345678901234.01"), decimal.Decimal("0.00")],
+                pa.decimal128(20, 2),
+            ),
+            "small": pa.array([1, 2, None, -128], pa.int8()),
+        }),
+        "dim_str": pa.table({
+            "k": ["a", "", "é'\\x", "b"],
+            "v": pa.array([1, None, 3, 4], pa.int32()),
+        }),
+        "dim_dup": pa.table({
+            "k": pa.array([1, 2, 2], pa.int64()),
+            "name": ["one", "two", "two again"],
+        }),
+    }
+    for name, t in dims.items():
+        pq.write_table(t, tmp_path / f"{name}.parquet")
+    return str(tmp_path)
+
+
+_DIM_CASES = {
+    "bigint": ("dim_big", "bigint", [2**62, 7, None, 3, -5, 7, 0], ["name", "flag", "day", "amount", "small"]),
+    "string": ("dim_str", "string", ["a", None, "", "é'\\x", "zz", "a"], {"v": "value"}),
+    "int-fact-key": ("dim_big", "int", [7, None, 3, -5], ["name"]),
+    "duplicate-keys": ("dim_dup", "bigint", [1, 2, None, 3], ["name"]),
+}
+
+
+@pytest.mark.parametrize("how", ["inner", "left"])
+@pytest.mark.parametrize("case", sorted(_DIM_CASES))
+def test_join_dim_inline_equals_broadcast(spark, tmp_path, monkeypatch, case, how):
+    """``join_dim`` inlines a small dimension as a literal map and gives
+    the rows and schema of the broadcast join it replaces (forced with
+    ``INLINE_DIM_MAX_ROWS = 0``): null fact keys, keys the dimension
+    lacks, null dimension values, bigint and string keys. A dimension
+    whose key repeats, or whose key type differs from the fact's, is
+    joined instead."""
+    sf = _dims(tmp_path)
+    table, fk_type, keys, cols = _DIM_CASES[case]
+    fact = spark.createDataFrame([(i, k) for i, k in enumerate(keys)], f"row int, fk {fk_type}")
+
+    def run():
+        out = join_dim(fact, "fk", sf, table, "k", cols, how)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        return out.schema, sorted(map(tuple, out.collect())), "Join" in plan
+
+    schema, rows, joined = run()
+    monkeypatch.setattr(tables, "INLINE_DIM_MAX_ROWS", 0)
+    want_schema, want_rows, want_joined = run()
+    assert want_joined and joined == (case in ("duplicate-keys", "int-fact-key"))
+    assert schema == want_schema
+    assert rows == want_rows
+    if how == "left" and case != "duplicate-keys":
+        assert len(rows) == len(keys)
+    if case == "string" and how == "left":
+        assert rows == [
+            (0, "a", 1), (1, None, None), (2, "", None), (3, "é'\\x", 3), (4, "zz", None), (5, "a", 1)
+        ]
+
+
+def test_join_dim_rejects_clashes_and_other_joins(spark, tmp_path):
+    """An output column the fact already has, or a join other than
+    inner and left, raises instead of shadowing a column."""
+    sf = _dims(tmp_path)
+    fact = spark.createDataFrame([(1, "x")], "fk bigint, name string")
+    with pytest.raises(ValueError, match="name"):
+        join_dim(fact, "fk", sf, "dim_big", "k", ["name"])
+    with pytest.raises(ValueError, match="right"):
+        join_dim(fact, "fk", sf, "dim_big", "k", {"name": "n"}, "right")
