@@ -39,12 +39,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+# The engine's one session conf: the automatic switch below sets it
+# when a loop state crowds execution memory out, for that session only.
 CKPT_SER_CONF = "spark.leader_graph_spark.checkpoint.serialized"
 # Auto-engage threshold: when a materialized loop-state checkpoint's
 # storage footprint exceeds this fraction of the unified pool's
 # current storage capacity, subsequent checkpoints in the session
-# switch to the serialized level. <=0 disables the auto decision.
-CKPT_AUTO_CONF = "spark.leader_graph_spark.checkpoint.autoSerializeFraction"
+# switch to the serialized level. Half the pool separates the r9 spill
+# battery's 6g k-core state, which starved execution, from loop states
+# on healthy heaps, which sit far below it and so never pay the ~37%
+# serialization tax (:func:`_maybe_auto_serialize`).
+CKPT_AUTO_FRACTION = 0.5
 
 
 def _ckpt_level(spark):
@@ -60,17 +65,23 @@ def _ckpt_level(spark):
     Memory-pressure insurance, not a default; since round 10 the flip
     is AUTOMATIC: :func:`_maybe_auto_serialize` measures each
     materialized state against the live storage budget and sets this
-    conf when the state crowds execution out."""
+    conf when the state crowds execution out. A value other than
+    ``true`` or ``false`` (any case) raises ``ValueError`` naming the
+    conf."""
     from pyspark.storagelevel import StorageLevel
 
-    if _conf_bool(spark, CKPT_SER_CONF, False):
+    raw = spark.conf.get(CKPT_SER_CONF, "false")
+    value = (raw or "").lower()
+    if value not in ("true", "false"):
+        raise ValueError(f"{CKPT_SER_CONF} must be true or false, got {raw!r}")
+    if value == "true":
         # PySpark's MEMORY_AND_DISK constant is the JVM's serialized
         # variant (deserialized=False) — exactly the compact form.
         return StorageLevel.MEMORY_AND_DISK
     return None  # engine default (JVM MEMORY_AND_DISK, deserialized)
 
 
-def _maybe_auto_serialize(spark, ckpt: DataFrame, frac: float) -> DataFrame | None:
+def _maybe_auto_serialize(spark, ckpt: DataFrame) -> DataFrame | None:
     """Auto-engage the serialized-checkpoint escape hatch (round 10,
     VERDICT r9 Next #5). The r9 spill battery diagnosed the 6g k-core
     death as STORAGE starving EXECUTION: a deserialized loop-state
@@ -83,7 +94,7 @@ def _maybe_auto_serialize(spark, ckpt: DataFrame, frac: float) -> DataFrame | No
     Decision, made AFTER each default-level checkpoint materializes
     (the footprint is then a fact, not an estimate): if the state's
     stored bytes (memory + any already-evicted disk portion) exceed
-    ``frac`` (``CKPT_AUTO_CONF``, default 0.5) × the unified pool's CURRENT
+    ``CKPT_AUTO_FRACTION`` × the unified pool's CURRENT
     max on-heap storage capacity, set ``CKPT_SER_CONF=true`` so every
     subsequent loop checkpoint in this session lands serialized — AND
     convert the oversized state itself: re-checkpoint it at the
@@ -104,8 +115,6 @@ def _maybe_auto_serialize(spark, ckpt: DataFrame, frac: float) -> DataFrame | No
     to shed it. Telemetry-grade: any introspection failure silently
     keeps the default level and returns ``None`` (caller keeps the
     original state)."""
-    if frac <= 0:
-        return None
     try:
         plan = ckpt._jdf.queryExecution().analyzed()
         if not plan.getClass().getName().endswith(".LogicalRDD"):
@@ -123,7 +132,7 @@ def _maybe_auto_serialize(spark, ckpt: DataFrame, frac: float) -> DataFrame | No
             .memoryManager()
             .maxOnHeapStorageMemory()
         )
-        if max_storage > 0 and footprint > frac * max_storage:
+        if max_storage > 0 and footprint > CKPT_AUTO_FRACTION * max_storage:
             spark.conf.set(CKPT_SER_CONF, "true")
             import logging
 
@@ -132,7 +141,7 @@ def _maybe_auto_serialize(spark, ckpt: DataFrame, frac: float) -> DataFrame | No
                 "%.1f MB storage budget: switching session checkpoints to the "
                 "serialized level (%s=true) and converting the resident state",
                 footprint / 1e6,
-                frac * 100,
+                CKPT_AUTO_FRACTION * 100,
                 max_storage / 1e6,
                 CKPT_SER_CONF,
             )
@@ -179,7 +188,6 @@ def _checkpoint_observed(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
     ContextCleaner drop the failed attempt's partial blocks before the
     retry."""
     spark = df.sparkSession
-    frac = _conf_float(spark, CKPT_AUTO_CONF, 0.5)
 
     def attempt():
         obs = Observation()
@@ -212,7 +220,7 @@ def _checkpoint_observed(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
     # budget; if it crowds execution out, auto-engage the serialized
     # level for the rest of the session AND swap in a serialized
     # conversion of this very state
-    return _maybe_auto_serialize(spark, out, frac) or out, seen
+    return _maybe_auto_serialize(spark, out) or out, seen
 
 
 def _release(*dfs: DataFrame | None) -> None:
@@ -252,78 +260,35 @@ def _release(*dfs: DataFrame | None) -> None:
             df.unpersist()
 
 
-STATIC_LOOP_CONF = "spark.leader_graph_spark.loop.staticMaxRows"
-PARTITIONED_MIN_CONF = "spark.leader_graph_spark.loop.partitionedMinRows"
-BCAST_FRONTIER_CONF = "spark.leader_graph_spark.loop.broadcastFrontierMaxRows"
-DRIVER_CC_CONF = "spark.leader_graph_spark.cc.driverMaxEdges"
-# Bounds every driver-side graph solve — connected components' union-find
-# and label propagation's rounds (:func:`_driver_or_loop`): an edge list
-# whose OBSERVED raw row count is at or under it is solved from ONE Arrow
-# collect of those rows (the symmetric pair set built from them is at
-# most twice the limit); past it, one whose observed symmetric pair
-# count is at or under it is collected from that symmetric checkpoint
-# instead; otherwise the distributed loop runs. It bounds the rows a
-# collect brings to the driver. 0 forces the loop with no raw-edge
-# checkpoint. merge_components bounds its quotient graph's driver solve
-# by it too (0 sends the quotient to the loop).
-# Small dimension joins have a driver-side gate too, with no conf: a
-# dimension whose parquet footer shows at most
-# sources.tables.INLINE_DIM_MAX_ROWS rows is looked up as an inlined
-# literal map (sources.tables.join_dim); the crossover measured against
-# the broadcast join is recorded there.
-DEDUP_DRIVER_CONF = "spark.leader_graph_spark.dedup.driverMaxBytes"
-# Bounds the driver-side MinHash near-dup solve
-# (operators.dedup.minhash_near_duplicates): a corpus whose (id, text)
-# projection Spark's optimizer estimates at or under this many bytes is
-# shingled by Spark, collected once as Arrow and solved in Python; past
-# it the distributed plan runs. The estimate needs no job. The default
-# sits at half the crossover measured there. 0 forces the distributed
-# plan.
-
-
-def _conf_int(spark, key: str, default: int, minimum: int) -> int:
-    """Integer session conf ``key`` (``default`` when unset). A value
-    that is not an integer ``>= minimum`` raises ``ValueError`` naming
-    the key, instead of silently picking a branch."""
-    raw = spark.conf.get(key, str(default))
-    try:
-        value = int(raw)
-    except (TypeError, ValueError):
-        raise ValueError(f"{key} must be an integer >= {minimum}, got {raw!r}") from None
-    if value < minimum:
-        raise ValueError(f"{key} must be >= {minimum}, got {value}")
-    return value
-
-
-def _conf_float(spark, key: str, default: float) -> float:
-    """Float session conf ``key`` (``default`` when unset); a value that
-    is not a number raises ``ValueError`` naming the key."""
-    raw = spark.conf.get(key, str(default))
-    try:
-        return float(raw)
-    except (TypeError, ValueError):
-        raise ValueError(f"{key} must be a number, got {raw!r}") from None
-
-
-def _conf_bool(spark, key: str, default: bool) -> bool:
-    """Boolean session conf ``key`` (``default`` when unset): ``true`` or
-    ``false`` in any case; anything else raises ``ValueError`` naming
-    the key."""
-    raw = spark.conf.get(key, str(default))
-    value = (raw or "").lower()
-    if value not in ("true", "false"):
-        raise ValueError(f"{key} must be true or false, got {raw!r}")
-    return value == "true"
-
-
-def _loop_confs(spark) -> tuple[int, int, int]:
-    """The static-scope row limit, the partitioned-layout gate and the
-    frontier broadcast limit, read (and validated) before any job."""
-    return (
-        _conf_int(spark, STATIC_LOOP_CONF, 4_000_000, 0),
-        _conf_int(spark, PARTITIONED_MIN_CONF, 10_000, 0),
-        _conf_int(spark, BCAST_FRONTIER_CONF, 1_000_000, -1),
-    )
+# Loop gates, read at call time. The static AQE-off scope engages below
+# STATIC_LOOP_MAX_ROWS loop rows: at the x30 replica's 36M-row k-core
+# state AQE beat static execution, 30.5-31.2 s against 36.5-43.8 s
+# (:class:`_loop_exec_conf`). Inside it, a keyed loop input of at least
+# PARTITIONED_MIN_ROWS rows is re-checkpointed partitioned by its key;
+# below that the extra job lost 0.7 s on dedup_canonical_docs at sf0.1
+# (:class:`_Loop`). A frontier of at most BCAST_FRONTIER_MAX_ROWS
+# observed rows (tens of MB framed) takes a broadcast hint
+# (:meth:`_Loop.broadcast`).
+STATIC_LOOP_MAX_ROWS = 4_000_000
+PARTITIONED_MIN_ROWS = 10_000
+BCAST_FRONTIER_MAX_ROWS = 1_000_000
+# Bounds every driver-side graph solve — connected components' union-find,
+# label propagation's rounds and min_propagation's hops
+# (:func:`_driver_or_loop`): an edge list whose OBSERVED raw row count is
+# at or under it is solved from ONE Arrow collect of those rows (the
+# symmetric pair set built from them is at most twice the limit); past
+# it, one whose observed symmetric pair count is at or under it is
+# collected from that symmetric checkpoint instead; otherwise the
+# distributed loop runs. It bounds the rows a collect brings to the
+# driver. At the limit (39 718 vertices, 100 000 raw edges, 3 LPA
+# rounds, 4 cores) the driver solve still won, 1.36–1.96 s against the
+# loop's 1.88–2.88 s (:func:`label_propagation_fixed`). A limit of 0
+# enters the loop with no raw-edge checkpoint. merge_components bounds
+# its quotient graph's driver solve by it too. The other driver-side
+# gates are operators.dedup.DEDUP_DRIVER_MAX_BYTES (MinHash) and
+# sources.tables.INLINE_DIM_MAX_ROWS (dimension lookups), each with the
+# crossover it was set from.
+DRIVER_CC_MAX_EDGES = 100_000
 
 
 _AUTO_BCAST = "spark.sql.autoBroadcastJoinThreshold"
@@ -344,9 +309,9 @@ class _loop_exec_conf:
     28 jobs, 181 tasks — same bytes, half the wall (SCALE.md round-8).
 
     Scope rule (the 100 TB story): static mode engages ONLY when the
-    loop state is below ``spark.leader_graph_spark.loop.staticMaxRows``
-    (default 4M rows); partitions are derived from the row count
-    (≈250k rows each, floor 4 for local parallelism, cap 256). The
+    loop state is below ``STATIC_LOOP_MAX_ROWS`` (4M rows); partitions
+    are derived from the row count (≈250k rows each, floor 4 for local
+    parallelism, cap 256). The
     threshold is where the derived partition count crosses the slot
     count: below it the per-round cost is scheduling volume and static
     execution halves the wall (the incremental-merge A/B); above it
@@ -370,11 +335,11 @@ class _loop_exec_conf:
     sequentially; the bench and the driver harness both comply). A
     caller that needs concurrent queries during a loop should run
     the loop on ``spark.newSession()`` (separate SQLConf, shared
-    cluster) or raise ``STATIC_LOOP_CONF`` to 0 to keep AQE on."""
+    cluster)."""
 
     def __init__(self, spark, n_rows: int):
         self.spark = spark
-        self.active = n_rows < _conf_int(spark, STATIC_LOOP_CONF, 4_000_000, 0)
+        self.active = n_rows < STATIC_LOOP_MAX_ROWS
         self.n_rows = n_rows
         self.saved: dict[str, str] = {}
 
@@ -400,13 +365,11 @@ class _loop_exec_conf:
 class _Loop(_loop_exec_conf):
     """The loop kit of the module docstring, as one context manager.
 
-    ``with _Loop(base, key=...) as loop`` reads every loop conf once,
-    before any job (or takes them already read, as ``_confs``);
-    checkpoints ``base`` with its row count observed (``loop.base``,
-    ``loop.n_rows``), or adopts a ``base`` that is already such a
-    checkpoint of ``_n_rows`` rows; opens the static scope sized from that
-    count (``static=False`` keeps the session's settings); and, in an
-    active scope of at least ``PARTITIONED_MIN_CONF`` rows, re-checkpoints
+    ``with _Loop(base, key=...) as loop`` checkpoints ``base`` with its
+    row count observed (``loop.base``, ``loop.n_rows``), or adopts a
+    ``base`` that is already such a checkpoint of ``_n_rows`` rows;
+    opens the static scope sized from that count (``static=False`` keeps the session's settings); and, in an
+    active scope of at least ``PARTITIONED_MIN_ROWS`` rows, re-checkpoints
     the base hash-partitioned and sorted by ``key``. ``localCheckpoint``
     preserves ``outputPartitioning``/``outputOrdering``, so every round's
     sort-merge join then skips both the exchange and the sort on that
@@ -414,7 +377,7 @@ class _Loop(_loop_exec_conf):
     ``personalized_pagerank_regions``: the membership edge set was
     re-exchanged in all 8 iterations; pagerank_membership sf0.1, 15k
     edges × 8 rounds: shuffle 9.7 → 1.1 MB, wall 1.68 → 1.47 s
-    best-of-7). Below the gate (default 10k rows) the extra job is a
+    best-of-7). Below the gate (10k rows) the extra job is a
     measured net loss (dedup_canonical_docs sf0.1: +0.7 s wall, −0
     shuffle bytes); under AQE a pinned layout cannot be proven to match
     the coalesced partition counts, so it is never applied there. With
@@ -444,14 +407,9 @@ class _Loop(_loop_exec_conf):
         *,
         key: str | None = None,
         static: bool = True,
-        _confs: tuple[int, int, int] | None = None,
         _n_rows: int | None = None,
     ):
-        spark = base.sparkSession
-        self.static_max, self.partitioned_min, self.bcast_max = (
-            _confs or _loop_confs(spark)
-        )
-        self.spark, self.active, self.saved = spark, False, {}
+        self.spark, self.active, self.saved = base.sparkSession, False, {}
         self._input, self._key, self._static = base, key, static
         self._n_rows = _n_rows
         self._states: dict = {}
@@ -464,10 +422,10 @@ class _Loop(_loop_exec_conf):
         else:
             self._states["base"], self.seen = self._input, {"n": self._n_rows}
         self.n_rows = self.seen["n"]
-        self.active = self._static and self.n_rows < self.static_max
+        self.active = self._static and self.n_rows < STATIC_LOOP_MAX_ROWS
         super().__enter__()
         try:
-            if self._key and self.active and self.n_rows >= self.partitioned_min:
+            if self._key and self.active and self.n_rows >= PARTITIONED_MIN_ROWS:
                 parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
                 self.saved[_AUTO_BCAST] = self.spark.conf.get(_AUTO_BCAST)
                 self.spark.conf.set(_AUTO_BCAST, "-1")
@@ -502,16 +460,20 @@ class _Loop(_loop_exec_conf):
 
     def broadcast(self, df: DataFrame, n_rows: int) -> DataFrame:
         """Broadcast hint for a per-round FRONTIER side whose row count
-        ``n_rows`` is proven by an observation (r10, guide §2.4/§3.1):
-        checkpointed states are ``LogicalRDD`` leaves without statistics,
-        so Catalyst never broadcasts them on its own — every round then
-        sort-merge-joined the full static edge table (measured on
-        ``weighted_sssp_copurchase`` at sf0.1: the 18.4 MB symmetrized
-        edge set re-exchanged in all six rounds for frontiers of a few
-        thousand rows). The hint engages only at most
-        ``BCAST_FRONTIER_CONF`` rows (default 1M — tens of MB framed;
-        -1 disables it), so a 100 TB frontier stays shuffled."""
-        return F.broadcast(df) if 0 <= n_rows <= self.bcast_max else df
+        ``n_rows`` is proven by an observation (r10, guide §2.4/§3.1).
+        A ``localCheckpoint`` keeps the size estimate of the plan it
+        materialized, not the observed count, so Catalyst broadcasts a
+        state on its own only when that estimate falls under
+        ``spark.sql.autoBroadcastJoinThreshold``, and never inside a
+        scope whose layout this loop pinned. A frontier planned from
+        joins over the edge set estimates far above the rows it holds:
+        without the hint every round sort-merge-joined the full static
+        edge table (measured on ``weighted_sssp_copurchase`` at sf0.1:
+        the 18.4 MB symmetrized edge set re-exchanged in all six rounds
+        for frontiers of a few thousand rows). The hint engages only at
+        most ``BCAST_FRONTIER_MAX_ROWS`` rows (1M — tens of MB framed),
+        so a 100 TB frontier stays shuffled."""
+        return F.broadcast(df) if 0 <= n_rows <= BCAST_FRONTIER_MAX_ROWS else df
 
 
 def symmetrize(edges: DataFrame, *, disjoint_directions: bool = False) -> DataFrame:
@@ -581,9 +543,9 @@ def _driver_or_loop(edges: DataFrame, *, key: str):
     keyed by ``key``.
 
     The raw projection is checkpointed with its row count observed on
-    the same job — one job, no exchange. At most ``DRIVER_CC_CONF`` rows
-    it is collected once (:func:`_collect_pairs`), released, and solved
-    on the driver: the limit bounds the collected rows, and the
+    the same job — one job, no exchange. At most
+    ``DRIVER_CC_MAX_EDGES`` rows it is collected once
+    (:func:`_collect_pairs`), released, and solved on the driver: the limit bounds the collected rows, and the
     symmetric pair set built from them holds at most twice as many.
     Reading the raw edges, not their symmetric view, keeps the
     ``distinct`` shuffle off this branch: on the benchmark's LPA lane
@@ -595,15 +557,11 @@ def _driver_or_loop(edges: DataFrame, *, key: str):
     becomes the loop's base as it stands. Either way the graph pays one
     narrow checkpoint job more than a symmetric read would; measured on
     100 000 raw edges (4 cores, warm), CC's loop took 3.43–3.88 s
-    through this job against 3.49–3.89 s entered directly.
-    ``DRIVER_CC_CONF=0`` enters the loop directly, with no raw
-    checkpoint. Every conf is read once, before any job, so a bad loop
-    conf fails on either branch. ``symmetrize`` is planned only on the
-    branches that read it: a driver solve from the raw rows never
-    analyses its union and ``distinct``."""
-    spark = edges.sparkSession
-    limit = _conf_int(spark, DRIVER_CC_CONF, 100_000, 0)
-    confs = _loop_confs(spark)
+    through this job against 3.49–3.89 s entered directly. A limit of
+    0 enters the loop directly, with no raw checkpoint. ``symmetrize``
+    is planned only on the branches that read it: a driver solve from
+    the raw rows never analyses its union and ``distinct``."""
+    limit = DRIVER_CC_MAX_EDGES
     if not limit:
         base, n_rows = symmetrize(edges), None
     else:
@@ -618,7 +576,7 @@ def _driver_or_loop(edges: DataFrame, *, key: str):
             _release(small)
             yield pairs, id_type, None
             return
-    with _Loop(base, key=key, _confs=confs, _n_rows=n_rows) as loop:
+    with _Loop(base, key=key, _n_rows=n_rows) as loop:
         yield None, None, loop
 
 
@@ -764,75 +722,20 @@ def connected_components(
             return _with_isolated(
                 vertices, _driver_components(edges.sparkSession, pairs, id_type)
             )
-        labels = _converged_labels(loop, loop.base, max_iter)
+        # min-label propagation until no label changes (or max_iter
+        # rounds); the ``changed`` probe is a free column of the round join
+        sym = loop.base
+        labels = loop.step("labels", _active_vertices(sym))
+        for _ in range(max_iter):
+            labels = loop.step(
+                "labels",
+                _min_propagation_round(sym, labels, with_changed=True),
+                changed=F.sum(F.col("_changed").cast("long")),
+            ).select("id", "component")
+            if not loop.seen["changed"]:
+                break
+        loop.keep("labels")
     return _with_isolated(vertices, labels)
-
-
-def connected_components_narrow(
-    vertices: DataFrame,
-    edges: DataFrame,
-    *,
-    max_iter: int = 25,
-) -> DataFrame:
-    """Narrow-label scale twin of :func:`connected_components`: the
-    32-char md5 vertex ids this engine uses as content keys make every
-    propagation round shuffle ~40-byte label values; at 100 TB the
-    label stream IS the round cost. This variant ranks the vertex
-    universe once (:func:`ranked_vertices` — ascending id, so
-    min-rank ≡ min-id), propagates 8-byte BIGINT ranks, and maps back
-    to id labels in one final join. Output is bit-identical to the
-    string form (same min-reachable-id labeling; equality
-    test-pinned), with per-round shuffle width cut ~5x (measured in
-    bytes at the 10x replica: 3.0 -> 0.6 MB/round — SCALE.md round-7)."""
-    with _Loop(symmetrize(edges), static=False) as loop:
-        all_ids = (
-            vertices.select("id")
-            .unionByName(loop.base.select(F.col("src").alias("id")))
-            .distinct()
-        )
-        ranked = ranked_vertices(all_ids.select(F.col("id").alias("v")), checkpoint=True)
-        r_src = ranked.select(F.col("v").alias("src"), F.col("rank0").alias("isrc"))
-        r_dst = ranked.select(F.col("v").alias("dst"), F.col("rank0").alias("idst"))
-        # the int edge set replaces the string one as the loop's base
-        int_edges = loop.step(
-            "base",
-            loop.base.join(r_src, "src")
-            .join(r_dst, "dst")
-            .select(F.col("isrc").alias("src"), F.col("idst").alias("dst")),
-        )
-        labels = _converged_labels(loop, int_edges, max_iter)
-    # map int ranks back to id labels; isolated vertices label themselves
-    comp_name = ranked.select(
-        F.col("rank0").alias("component"), F.col("v").alias("component_id")
-    )
-    named = (
-        labels.join(ranked, labels.id == ranked.rank0)
-        .join(comp_name, "component")
-        .select(F.col("v").alias("id"), F.col("component_id").alias("component"))
-    )
-    return (
-        vertices.select("id")
-        .distinct()
-        .join(named, "id", "left")
-        .select("id", F.coalesce("component", F.col("id")).alias("component"))
-    )
-
-
-def _converged_labels(loop: _Loop, sym: DataFrame, max_iter: int) -> DataFrame:
-    """Min-label propagation over ``sym`` until no label changes (or
-    ``max_iter`` rounds) — the loop body of both CC variants. The
-    ``changed`` probe is a free column of the round join."""
-    labels = loop.step("labels", _active_vertices(sym))
-    for _ in range(max_iter):
-        labels = loop.step(
-            "labels",
-            _min_propagation_round(sym, labels, with_changed=True),
-            changed=F.sum(F.col("_changed").cast("long")),
-        ).select("id", "component")
-        if not loop.seen["changed"]:
-            break
-    loop.keep("labels")
-    return labels
 
 
 def _active_vertices(sym: DataFrame) -> DataFrame:
@@ -1385,8 +1288,8 @@ def label_propagation_fixed(edges: DataFrame, *, rounds: int) -> DataFrame:
     no round re-exchanges anything but the two narrow aggregates.
 
     Small graphs are solved on the driver instead: when the observed raw
-    edge count is at most ``DRIVER_CC_CONF`` (the limit shared with
-    connected components, default 100 000; 0 forces the loop), the raw
+    edge count is at most ``DRIVER_CC_MAX_EDGES`` (the limit shared
+    with connected components, 100 000), the raw
     edges are checkpointed and collected once with no shuffle, and past
     it a symmetric pair set within the limit is collected from its
     checkpoint (:func:`_driver_or_loop`); the
@@ -1533,8 +1436,8 @@ def merge_components(
 
     Scale swap (size-guarded like the ranked-vertex path): the
     quotient graph is sized by the DELTA's component touches, so for
-    typical incremental batches it is tiny — up to ``DRIVER_CC_CONF``
-    edges (read before any job) its components are solved by
+    typical incremental batches it is tiny — up to ``DRIVER_CC_MAX_EDGES``
+    edges its components are solved by
     driver-side union-find from ONE Arrow collect (the iterative quotient
     CC was ~60 scheduling barriers of pure fixed overhead, the single
     biggest local line item of the headline bench), with labels =
@@ -1542,8 +1445,7 @@ def merge_components(
     (min-reachable-id; ids compare as ASCII/UTF8 — equality
     test-pinned against the distributed path). Above the limit the
     distributed loop runs — a 100 TB delta touching millions of
-    components never lands on the driver; 0 forces the loop."""
-    limit = _conf_int(new_edges.sparkSession, DRIVER_CC_CONF, 100_000, 0)
+    components never lands on the driver."""
     sym = symmetrize(new_edges)
     lab_src = labels.select(F.col("id").alias("src"), F.col("component").alias("csrc"))
     lab_dst = labels.select(F.col("id").alias("dst"), F.col("component").alias("cdst"))
@@ -1558,7 +1460,7 @@ def merge_components(
         .distinct()
     )
     q_edges, seen = _checkpoint_observed(q_edges, n=F.count(F.lit(1)))
-    if limit and seen["n"] <= limit:
+    if DRIVER_CC_MAX_EDGES and seen["n"] <= DRIVER_CC_MAX_EDGES:
         pairs = _collect_pairs(q_edges)
         # driver path consumed the quotient in one collect — release it
         _release(q_edges)
@@ -1839,7 +1741,6 @@ def ranked_vertices(
     vertices: DataFrame,
     *,
     n_partitions: int | None = None,
-    checkpoint: bool = False,
 ) -> DataFrame:
     """(v, rank0) with rank0 = 0-indexed position of v in the globally
     sorted vertex universe — WITHOUT a global single-reducer window.
@@ -1854,13 +1755,7 @@ def ranked_vertices(
     ``sparkContext.defaultParallelism`` so rank-build parallelism
     tracks the cluster instead of capping at a constant — on a
     1000-executor cluster the range partitioner spreads |V| over the
-    real slot count, not 32.
-
-    ``checkpoint=True`` materializes the result and RELEASES the
-    internal ranged checkpoint (|V|-sized blocks that the lazy return
-    otherwise keeps referenced — and persisted — for as long as the
-    caller holds the plan); use it when the caller was going to
-    ``localCheckpoint()`` the result anyway (narrow CC does)."""
+    real slot count, not 32."""
     if n_partitions is None:
         n_partitions = max(vertices.sparkSession.sparkContext.defaultParallelism, 1)
     ranged = (
@@ -1878,13 +1773,9 @@ def ranked_vertices(
     carry = totals.select(
         "_pid", F.coalesce(F.sum("_ptotal").over(w_carry), F.lit(0)).alias("_carry")
     )
-    out = with_pos.join(F.broadcast(carry), "_pid").select(
+    return with_pos.join(F.broadcast(carry), "_pid").select(
         "v", (F.col("_carry") + F.col("_local")).cast("bigint").alias("rank0")
     )
-    if checkpoint:
-        out = out.localCheckpoint()
-        _release(ranged)
-    return out
 
 
 def link_prediction_pairs(

@@ -25,8 +25,13 @@ from pyspark.sql import functions as F
 
 from leader_graph_spark.functions.scalar import format_period
 
-PAIR_HOT_CAP_CONF = "spark.leader_graph_spark.pairs.hotGroupCap"
-PAIR_SALT_CONF = "spark.leader_graph_spark.pairs.saltBuckets"
+# skew_guarded_self_pairs: a group of more than PAIR_HOT_CAP rows is
+# hot (cap² ≈ 10¹⁰ pair-ops is the single-task straggler knee) and its
+# quadratic join cell is cut PAIR_SALT_BUCKETS ways. Both are read at
+# call time; PAIR_SALT_BUCKETS must stay >= 1 (pmod(..., 0) is null and
+# would drop every hot pair), and a cap of 0 salts every group.
+PAIR_HOT_CAP = 100_000
+PAIR_SALT_BUCKETS = 32
 
 
 def skew_guarded_self_pairs(
@@ -50,11 +55,9 @@ def skew_guarded_self_pairs(
       both join sides re-read the materialized rows instead of
       re-running the caller's upstream pipeline 3×.
     - Per-group fanout counts are aggregated (narrow: group key +
-      count) and groups over ``spark.leader_graph_spark.pairs.
-      hotGroupCap`` (default 100 000 — cap² ≈ 10¹⁰ pair-ops is the
-      single-task straggler knee) are BROADCAST; the set is empty on
-      bounded-fanout data, making the hot branch an AQE
-      empty-relation no-op.
+      count) and groups over ``PAIR_HOT_CAP`` rows are BROADCAST;
+      the set is empty on bounded-fanout data, making the hot branch
+      an AQE empty-relation no-op.
     - COLD groups take the original symmetric self-join: both sides
       are the identical subtree, so the one exchange is written once
       and read twice (ReuseExchange) — bytes unchanged vs. the
@@ -64,7 +67,7 @@ def skew_guarded_self_pairs(
       retried map tasks must re-derive identical buckets,
       SPARK-38388), the right side explodes k ways, and the join key
       becomes (group, bucket): the quadratic cell is cut k ways
-      (``spark.leader_graph_spark.pairs.saltBuckets``, default 32).
+      (``PAIR_SALT_BUCKETS``).
       Replication is paid by hot rows only. Every (a, b) combination
       is matched exactly once — b appears once per bucket value and
       a's own bucket selects exactly one replica — so the
@@ -74,23 +77,13 @@ def skew_guarded_self_pairs(
     aliased sides ``a``/``b``; ``ordered=True`` keeps ``a.id < b.id``
     (each unordered pair once), ``False`` keeps ``a.id != b.id``
     (both directions).
-
-    Raises ``ValueError`` naming the conf for ``saltBuckets < 1``
-    (``pmod(..., 0)`` is null and would drop every hot pair) or
-    ``hotGroupCap < 0``; a cap of 0 is legal and salts every group.
     """
-    spark = base.sparkSession
-    cap = int(spark.conf.get(PAIR_HOT_CAP_CONF, "100000"))
-    k = int(spark.conf.get(PAIR_SALT_CONF, "32"))
-    if k < 1:
-        raise ValueError(f"{PAIR_SALT_CONF} must be >= 1, got {k}")
-    if cap < 0:
-        raise ValueError(f"{PAIR_HOT_CAP_CONF} must be >= 0, got {cap}")
+    k = PAIR_SALT_BUCKETS
     ck = base.localCheckpoint()
     hot = F.broadcast(
         ck.groupBy(F.col(group_col).alias("_hg"))
         .agg(F.count(F.lit(1)).alias("_hn"))
-        .where(F.col("_hn") > cap)
+        .where(F.col("_hn") > PAIR_HOT_CAP)
         .select("_hg")
     )
     cold = ck.join(hot, ck[group_col] == hot["_hg"], "left_anti")

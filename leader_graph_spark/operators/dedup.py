@@ -27,12 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from leader_graph_spark.functions.scalar import bind
-from leader_graph_spark.graph.algorithms import (
-    DEDUP_DRIVER_CONF,
-    _conf_int,
-    _driver_frame,
-    _release,
-)
+from leader_graph_spark.graph.algorithms import _driver_frame, _release
 from leader_graph_spark.sources.tables import fan_out
 
 HEX = "0123456789abcdef"
@@ -263,7 +258,13 @@ def jaccard_on_pairs(
     )
 
 
-DEDUP_DRIVER_DEFAULT = 256 * 1024
+# Bounds the driver-side MinHash near-dup solve
+# (minhash_near_duplicates): a corpus whose (id, text) projection Spark's
+# optimizer estimates at or under this many bytes (no job) is shingled
+# by Spark, collected once as Arrow and solved in Python; past it the
+# distributed plan runs (always, at a limit of 0). The limit sits at
+# half the crossover, near 0.5 MB on 4 cores, that its docstring records.
+DEDUP_DRIVER_MAX_BYTES = 256 * 1024
 # Bounds the driver branch's LSH bucket member pairs (sum of m(m-1)/2
 # over buckets), counted before any pair is built; past it the
 # distributed plan runs. The byte estimate misses a corpus of many
@@ -288,7 +289,7 @@ def minhash_near_duplicates(
 
     Two branches, chosen before any job. When the optimizer's size
     estimate of the ``(id, text)`` projection is at most
-    ``DEDUP_DRIVER_CONF`` bytes (and the ids are integers or plain
+    ``DEDUP_DRIVER_MAX_BYTES`` (and the ids are integers or plain
     strings), the corpus is solved on the driver
     (:func:`_driver_near_duplicates`): ONE Arrow collect of Spark's own
     distinct shingle arrays, then hashing, banding and verification in
@@ -303,7 +304,7 @@ def minhash_near_duplicates(
     query's plan build plus a noop write), driver against distributed
     wall: 500 documents (26 KB estimated) 0.28 vs 0.98 s, 5 000
     (255 KB) 0.72 vs 0.97 s, 7 500 (386 KB) 0.99 vs 1.11 s, 10 000
-    (508 KB) 1.35 vs 1.40 s. The default limit, ``DEDUP_DRIVER_DEFAULT``
+    (508 KB) 1.35 vs 1.40 s. The limit, ``DEDUP_DRIVER_MAX_BYTES``
     (256 KiB), sits at half that crossover.
 
     Duplicate-heavy corpora estimate small (parquet dictionary-encodes
@@ -339,9 +340,8 @@ def minhash_near_duplicates(
     bucket stream outgrows it — a step function, linear in content on
     both sides. At cluster scale the SMJ regime is simply correct; an
     ever-growing bucket stream cannot stay broadcast."""
-    limit = _conf_int(df.sparkSession, DEDUP_DRIVER_CONF, DEDUP_DRIVER_DEFAULT, 0)
     docs = df.select(id_col, text_col)
-    if limit and _driver_solvable(docs, id_col, text_col, limit):
+    if DEDUP_DRIVER_MAX_BYTES and _driver_solvable(docs, id_col, text_col):
         near = _driver_near_duplicates(
             docs,
             id_col=id_col,
@@ -382,9 +382,9 @@ def minhash_near_duplicates(
     )
 
 
-def _driver_solvable(docs: DataFrame, id_col: str, text_col: str, limit: int) -> bool:
+def _driver_solvable(docs: DataFrame, id_col: str, text_col: str) -> bool:
     """Whether the driver branch may take ``docs``: the optimizer's size
-    estimate (no job) is within ``limit``, and Python compares the ids
+    estimate (no job) is within ``DEDUP_DRIVER_MAX_BYTES``, and Python compares the ids
     and shingles as Spark does — integer or default-collation string
     ids, default-collation text (a collated string would make Spark's
     distinct and intersect case- or accent-insensitive)."""
@@ -393,7 +393,8 @@ def _driver_solvable(docs: DataFrame, id_col: str, text_col: str, limit: int) ->
         return False
     if text_type != T.StringType():
         return False
-    return docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= limit
+    size = docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return size <= DEDUP_DRIVER_MAX_BYTES
 
 
 def driver_shingle_sets(df: DataFrame, *, id_col: str, text_col: str, n: int) -> DataFrame:

@@ -16,6 +16,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# ann_lsh_topk sizes its two Arrow seams to at least this many rows per
+# task, only ever below the default parallelism. With cores-sized tasks
+# a few hundred rows each, 32 cores ran the lane slower than 8 (best of
+# 5: 1.73 s against 1.07 s); at this size they ran alike (1.45 s against
+# 1.41 s) and the lane's shuffle fell from 5.0 to 2.9 MB.
+LSH_ROWS_PER_TASK = 4096
+
 
 def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     """Sequential left-to-right fold dot product of two double arrays.
@@ -212,11 +219,6 @@ def ann_lsh_topk(
     import pandas as pd
     from pyspark.sql import types as T
 
-    from leader_graph_spark.graph.algorithms import _conf_int
-
-    rows_per_task = _conf_int(
-        emb.sparkSession, "spark.leader_graph_spark.lsh.rowsPerTask", 4096, 1
-    )
     n_rows = None
     if target_bucket is not None:
         n_rows = emb.count()
@@ -231,13 +233,13 @@ def ann_lsh_topk(
     # rows — per-task Arrow stream setup dominates and 32 cores run
     # SLOWER than 8 (PERF_r10 scaling ratio 0.63 on this lane). When the
     # corpus count is already observed (the target_bucket path — no new
-    # action), size the seams to ≥ rowsPerTask rows per task and only
-    # ever SHRINK below the default parallelism: a corpus past
-    # cores × rowsPerTask rows keeps today's plan unchanged.
+    # action), size the seams to ≥ LSH_ROWS_PER_TASK rows per task and
+    # only ever SHRINK below the default parallelism: a corpus past
+    # cores × LSH_ROWS_PER_TASK rows keeps today's plan unchanged.
     default_par = emb.sparkSession.sparkContext.defaultParallelism
     hash_par = None
     if n_rows is not None:
-        hash_par = max(1, min(default_par, -(-n_rows // rows_per_task)))
+        hash_par = max(1, min(default_par, -(-n_rows // LSH_ROWS_PER_TASK)))
     buckets = srp_lsh_buckets(
         emb, id_col=id_col, vec_col=vec_col, n_planes=n_planes, n_tables=n_tables,
         dim=dim, parallelism=hash_par,
@@ -247,7 +249,7 @@ def ann_lsh_topk(
     )
     joined = buckets.join(vecs, buckets.id == vecs.vid).select("table", "bucket", "id", "v")
     if n_rows is not None:
-        verify_par = max(1, min(default_par, -(-n_rows * n_tables // rows_per_task)))
+        verify_par = max(1, min(default_par, -(-n_rows * n_tables // LSH_ROWS_PER_TASK)))
         if verify_par < default_par:
             # pre-key the verify exchange at the derived width; the
             # per-bucket applyInPandas reuses this partitioning, so it

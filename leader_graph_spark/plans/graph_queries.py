@@ -1002,6 +1002,13 @@ FROM deg d LEFT JOIN per_vertex p USING (id)
 WHERE d.d >= 2
 """
 
+# supplier_clustering_coefficients takes the bitset edge-iterator while
+# its adjacency prices at most this many bytes at a conservative 32 B
+# per broadcast map entry (key + bits + hashed-relation row overhead):
+# the sf1 replica's ~1.57 M entries price at ~50 MB and stay on it. Past
+# it the degree-oriented sparse path runs.
+LCC_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
+
 
 @query("supplier_clustering_coefficients", _LCC_ORACLE, bench=True, tags=("graph-motif", "clustering-coefficient"))
 def supplier_clustering_coefficients(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1042,10 +1049,7 @@ def supplier_clustering_coefficients(spark: SparkSession, sf_dir: str) -> DataFr
       EXPLODED from the adjacency rows themselves, so the owner's
       block map rides along and only the NEIGHBOR side is broadcast —
       one broadcast, not two (ADVICE r10), under
-      ``spark.leader_graph_spark.lcc.broadcastMaxBytes`` (default
-      64 MB against a conservative 32 B/entry: key + bits + hashed-
-      relation row overhead; the sf1 replica's ~1.57 M entries price
-      at ~50 MB and stay on this path). At sf0.1 (a complete K_1000,
+      ``LCC_BROADCAST_MAX_BYTES``. At sf0.1 (a complete K_1000,
       166.2M triangles) the triangle tail is sub-second (r10:
       array_intersect 2.6 s → bitset 0.64 s).
     - LARGE sparse adjacency: the round-9 DEGREE-ORIENTED path below
@@ -1054,16 +1058,9 @@ def supplier_clustering_coefficients(spark: SparkSession, sf_dir: str) -> DataFr
       graph must not ride a broadcast. Its edge list and degrees now
       also derive from the checkpointed block relation (one explode /
       one aggregate) instead of a second full pair shuffle."""
-    from leader_graph_spark.graph.algorithms import (
-        _checkpoint_observed,
-        _conf_int,
-        _release,
-    )
+    from leader_graph_spark.graph.algorithms import _checkpoint_observed, _release
     from leader_graph_spark.graph.derived import skew_guarded_self_pairs
 
-    bcast_max = _conf_int(
-        spark, "spark.leader_graph_spark.lcc.broadcastMaxBytes", 64 * 1024 * 1024, 0
-    )
     li = load_table(spark, sf_dir, "lineitem")
     sp = li.select(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")).distinct()
     pairs = skew_guarded_self_pairs(
@@ -1094,7 +1091,7 @@ def supplier_clustering_coefficients(spark: SparkSession, sf_dir: str) -> DataFr
         "filter(transform(sequence(0, 63), i -> CAST(blk AS BIGINT) * 64 + i),"
         " vv -> vv > u AND (shiftright(bits, CAST(vv % 64 AS INT)) & 1) = 1)"
     )
-    if seen["n_entries"] * ENTRY_BYTES <= bcast_max:
+    if seen["n_entries"] * ENTRY_BYTES <= LCC_BROADCAST_MAX_BYTES:
         badj = (
             nbr_blocks.groupBy("u")
             .agg(F.map_from_entries(F.collect_list(F.struct("blk", "bits"))).alias("bm"))
@@ -1480,23 +1477,16 @@ def motif_missing_shortcut_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "connected_components_narrow_labels",
     _CC_ORACLE,
-    tags=("graph-iterative", "scale-twin", "narrow-shuffle"),
+    tags=("graph-iterative", "scale-twin"),
 )
 def connected_components_narrow_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Narrow-label CC scale twin (round-6): identical converged
-    min-reachable-id labeling as ``connected_components_membership``
-    (same recursive-CTE oracle, full value hash), but every
-    propagation round shuffles 8-byte BIGINT ranks instead of 32-char
-    md5 strings — the rank table (ascending id, so min-rank ≡ min-id)
-    is built once with the two-phase distributed rank and mapped back
-    in one final join. At 100 TB the label stream IS the round cost;
-    cutting row width ~5x is the same narrow-shuffle-key argument
-    SCALE.md makes for the dedup lanes."""
-    from leader_graph_spark.graph.algorithms import connected_components_narrow
-
+    """The membership graph's converged min-reachable-id labeling, the
+    same query as ``connected_components_membership`` against the same
+    recursive-CTE oracle. Its narrow-label twin of
+    :func:`connected_components` was removed (SCALE.md round-7)."""
     vertices = build_vertices(spark, sf_dir)
     edges = build_membership_edges(spark, sf_dir)
-    return connected_components_narrow(vertices, edges)
+    return connected_components(vertices, edges)
 
 
 _SSSP_ROUNDS = 6
@@ -1558,8 +1548,8 @@ def weighted_sssp_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds every 250th customer at distance 0, exactly 6 Bellman-Ford
     relaxation rounds. Vertex ids are NARROW BIGINTs (customer ck·2,
     part pk·2+1 — the disjoint-parity encoding) rather than prefixed
-    strings: every relaxation round shuffles 8-byte keys, the same
-    narrow-key argument as ``connected_components_narrow_labels``, and
+    strings: every relaxation round shuffles 8-byte keys (the
+    narrow-key argument of SCALE.md round-7), and
     the unrolled oracle's six pipelined hash joins stay in memory
     where the string form OOMed DuckDB at the 10x replica. The
     bipartite topology gives real alternative paths (two customers
@@ -1945,7 +1935,7 @@ def betweenness_copurchase_sampled(spark: SparkSession, sf_dir: str) -> DataFram
     Scale: pivots stay FIXED as the graph grows (the Brandes-Pich
     estimator), so state is |V|·|pivots| lanes; narrow BIGINT vertex
     ids (ck·2/pk·2+1) keep every per-round shuffle at 8-byte keys, the
-    ``connected_components_narrow_labels`` argument."""
+    narrow-key argument of SCALE.md round-7."""
     from leader_graph_spark.graph.algorithms import pivot_betweenness
 
     orders = load_table(spark, sf_dir, "orders")

@@ -19,25 +19,24 @@ or from the propagation rounds (cluster-structure-driven):
                 the checkpoint seam is already inside the shipped op)
 
 Interleaved best-of-N on the sf0.1 documents table, with the
-driver-side MinHash branch turned off (``DEDUP_DRIVER_CONF=0``) so
-every stage is the distributed one.
+driver-side MinHash branch turned off (``DEDUP_DRIVER_MAX_BYTES``
+patched to 0) so every stage is the distributed one.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
+from unittest import mock
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from leader_graph_spark.graph.algorithms import (
-    DEDUP_DRIVER_CONF,
-    min_propagation,
-    symmetrize,
-)
+from leader_graph_spark.graph.algorithms import min_propagation, symmetrize
+from leader_graph_spark.operators import dedup
 from leader_graph_spark.operators.dedup import minhash_near_duplicates
 from leader_graph_spark.plans.dedup_queries import (
     BANDS,
@@ -68,10 +67,14 @@ def _pairs(spark, sf_dir):
 
 
 def main():
-    spark = get_spark("profile_dedup_stages")
     # Profile the distributed MinHash stages: a corpus within the limit
     # would otherwise be solved on the driver from one collect.
-    spark.conf.set(DEDUP_DRIVER_CONF, "0")
+    with mock.patch.object(dedup, "DEDUP_DRIVER_MAX_BYTES", 0):
+        _profile()
+
+
+def _profile():
+    spark = get_spark("profile_dedup_stages")
     dedup_canonical_docs(spark, WARM_DIR).write.format("noop").mode("overwrite").save()
     meta = {}
     timings: dict[str, list[float]] = {

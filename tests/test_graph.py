@@ -4,17 +4,14 @@
 from __future__ import annotations
 
 import re
+from unittest import mock
 
 import pytest
 from pyspark.sql import functions as F
 
+from leader_graph_spark.graph import algorithms as alg
 from leader_graph_spark.graph.algorithms import (
-    BCAST_FRONTIER_CONF,
-    CKPT_AUTO_CONF,
     CKPT_SER_CONF,
-    DRIVER_CC_CONF,
-    PARTITIONED_MIN_CONF,
-    STATIC_LOOP_CONF,
     connected_components,
     degrees,
     label_propagation_fixed,
@@ -125,11 +122,15 @@ def test_bucketed_interval_join_matches_naive(spark):
 
 
 def test_connected_components_two_islands(spark):
-    vertices = spark.createDataFrame([(v,) for v in "abcdefg"], "id string")
+    # duplicate vertex rows (a and the isolated g) label the vertex set:
+    # one row per id
+    vertices = spark.createDataFrame([(v,) for v in "abcdefgag"], "id string")
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("d", "e"), ("f", "e")], "src string, dst string"
     )
-    out = {r.id: r.component for r in connected_components(vertices, edges).collect()}
+    rows = connected_components(vertices, edges).collect()
+    assert len(rows) == 7
+    out = {r.id: r.component for r in rows}
     assert out["a"] == out["b"] == out["c"] == "a"
     assert out["d"] == out["e"] == out["f"] == "d"
     assert out["g"] == "g"
@@ -262,27 +263,36 @@ def test_two_phase_cc_matches_propagation(spark):
     assert {c for i, c in got if 100 <= i < 164} == {min(ids)}
 
 
-def test_two_phase_cc_round_count_beats_diameter(spark):
-    """The point of the algorithm: a 200-vertex path (diameter 199)
-    must converge in far fewer star rounds than propagation rounds —
-    the O(log^2 n) vs O(diameter) separation, observed not argued."""
-    from leader_graph_spark.graph import algorithms as alg
-
+def test_two_phase_cc_round_count_beats_diameter(spark, monkeypatch):
+    """The point of the algorithm: on a 200-vertex path (diameter 199)
+    whose ids descend along it, large-star/small-star converges on its
+    own within 12 star rounds, while min-label propagation capped at
+    the same 12 rounds (driver solve off) leaves the path unconverged —
+    the O(log^2 n) vs O(diameter) separation, counted not argued."""
     ids = list(range(200))
-    # adversarial ordering: ids descending along the path
     path = list(zip(ids[::-1], ids[::-1][1:]))
     edges = spark.createDataFrame(path, "src long, dst long")
     vertices = spark.createDataFrame([(i,) for i in ids], "id long")
+    steps = []
+    step = alg._Loop.step
+    monkeypatch.setattr(
+        alg._Loop, "step", lambda loop, name, df, **p: steps.append(name) or step(loop, name, df, **p)
+    )
 
-    rounds = {"n": 0}
-    orig = alg.symmetrize
+    out = alg.connected_components_two_phase(vertices, edges)
+    assert {r.component for r in out.collect()} == {0}
+    # steps: the loop input, its canonical edge set, then one per star
+    # round (the last one finds the fingerprint unchanged)
+    star_rounds = len(steps) - 2
+    assert 1 <= star_rounds <= 12, star_rounds
 
-    # count rounds via fingerprint calls is fragile; instead wrap the
-    # loop bound: run with decreasing max_iter until output degrades
-    out = alg.connected_components_two_phase(vertices, edges, max_iter=12)
+    steps.clear()
+    monkeypatch.setattr(alg, "DRIVER_CC_MAX_EDGES", 0)
+    out = connected_components(vertices, edges, max_iter=12)
     labels = {r.id: r.component for r in out.collect()}
-    assert set(labels.values()) == {0}, "must fully converge within 12 star rounds"
-    assert orig is alg.symmetrize and rounds["n"] == 0  # keep linters honest
+    assert steps.count("labels") == 1 + 12  # every round still changed a label
+    # after 12 hops a vertex knows the minimum within 12 steps of it
+    assert labels[199] == 187 and labels[12] == 0
 
 
 def test_kcore_peels_tendrils_and_converges(spark):
@@ -367,11 +377,8 @@ def test_merge_components_driver_path_equals_distributed(spark, monkeypatch):
         (r.id, r.component) for r in merge_components(labels, delta).collect()
     }
     assert not loops
-    spark.conf.set(DRIVER_CC_CONF, "0")
-    try:
+    with mock.patch.object(algorithms, "DRIVER_CC_MAX_EDGES", 0):
         via_dist = {(r.id, r.component) for r in merge_components(labels, delta).collect()}
-    finally:
-        spark.conf.unset(DRIVER_CC_CONF)
     assert loops
     assert via_driver == via_dist
     assert {c for i, c in via_driver if i in "abcd"} == {"a"}
@@ -427,29 +434,6 @@ def test_link_prediction_ranked_path_matches_broadcast(spark, sf_dir):
     assert [r0 for r0, _ in rows] == list(range(len(rows)))
 
 
-def test_narrow_cc_equals_string_cc(spark, sf_smoke):
-    """The narrow-label twin must be BIT-IDENTICAL to the string-label
-    CC — min int rank maps back to min id — including isolated
-    vertices and a duplicate-id vertex table (set semantics)."""
-    from leader_graph_spark.graph.algorithms import (
-        connected_components,
-        connected_components_narrow,
-    )
-    from leader_graph_spark.graph.build import build_membership_edges, build_vertices
-
-    v = build_vertices(spark, sf_smoke)
-    e = build_membership_edges(spark, sf_smoke)
-    want = {tuple(r) for r in connected_components(v, e).collect()}
-    got = {tuple(r) for r in connected_components_narrow(v, e).collect()}
-    assert got == want and got
-
-    # toy graph with an isolated vertex and duplicate vertex rows
-    v2 = spark.createDataFrame([("b",), ("a",), ("c",), ("z",), ("a",)], "id string")
-    e2 = spark.createDataFrame([("b", "a"), ("b", "c")], "src string, dst string")
-    got2 = {tuple(r) for r in connected_components_narrow(v2, e2).collect()}
-    assert got2 == {("a", "a"), ("b", "a"), ("c", "a"), ("z", "z")}
-
-
 def test_symmetrize_disjoint_directions_identity(spark):
     """The disjoint-directions fast path must be value-identical to the
     distinct form whenever its precondition holds (bipartite distinct
@@ -485,11 +469,8 @@ def test_iterative_loops_release_superseded_checkpoints(spark):
 
     def loop_branch(run):
         # force the distributed loop where a driver solve would run
-        spark.conf.set(DRIVER_CC_CONF, "0")
-        try:
+        with mock.patch.object(alg, "DRIVER_CC_MAX_EDGES", 0):
             return run()
-        finally:
-            spark.conf.unset(DRIVER_CC_CONF)
 
     # a path graph converges in several rounds — enough to leak if
     # superseded states weren't released
@@ -551,34 +532,6 @@ def test_iterative_loops_release_superseded_checkpoints(spark):
         # (6+ here) fails.
         leaked = n_persisted() - before
         assert leaked <= 3, f"{name} leaked checkpoints: {leaked}"
-
-
-def test_narrow_cc_releases_rank_and_edge_states(spark):
-    """Narrow CC holds the most intermediate checkpoints of any loop
-    (sym, rank build, int_edges, per-round labels) — after it returns
-    and the result is materialized, only the final label state and the
-    rank table (both referenced by the returned plan) may remain."""
-    from pyspark.sql import functions as F
-
-    from leader_graph_spark.graph.algorithms import connected_components_narrow
-
-    def n_persisted():
-        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-
-    edges = spark.createDataFrame(
-        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(10)], ["src", "dst"]
-    )
-    vertices = edges.select(F.col("src").alias("id")).unionByName(
-        edges.select(F.col("dst").alias("id"))
-    ).distinct()
-    base = n_persisted()
-    out = connected_components_narrow(vertices, edges)
-    out.count()
-    # live: final labels + ranked (the returned join references both).
-    # 10 propagation rounds would leak 10+ states without the release
-    # discipline.
-    leaked = n_persisted() - base
-    assert leaked <= 4, f"narrow CC left {leaked} persisted states"
 
 
 def test_scc_releases_phase_states(spark):
@@ -676,8 +629,8 @@ def test_release_of_live_state_fails_loudly(spark):
 def test_loop_exec_conf_scopes_and_restores(spark):
     """_loop_exec_conf: static AQE-off execution with derived partition
     count inside the scope, exact restoration outside, and a NO-OP
-    above the staticMaxRows threshold (the 100 TB guard)."""
-    from leader_graph_spark.graph.algorithms import STATIC_LOOP_CONF, _loop_exec_conf
+    above the STATIC_LOOP_MAX_ROWS threshold (the 100 TB guard)."""
+    from leader_graph_spark.graph.algorithms import _loop_exec_conf
 
     before_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     before_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -698,13 +651,10 @@ def test_loop_exec_conf_scopes_and_restores(spark):
         assert not c.active
         assert spark.conf.get("spark.sql.adaptive.enabled") == before_aqe
 
-    # threshold is a session conf
-    spark.conf.set(STATIC_LOOP_CONF, "1000")
-    try:
+    # the threshold is read when the scope opens
+    with mock.patch.object(alg, "STATIC_LOOP_MAX_ROWS", 1000):
         with _loop_exec_conf(spark, 5_000) as c:
             assert not c.active
-    finally:
-        spark.conf.unset(STATIC_LOOP_CONF)
 
 
 def test_loop_exec_conf_restores_on_exception(spark):
@@ -720,10 +670,9 @@ def test_loop_exec_conf_restores_on_exception(spark):
 
 
 def test_serialized_checkpoint_knob(spark):
-    """spark.leader_graph_spark.checkpoint.serialized=true must (a) be
-    honored by _ckpt_level and (b) leave every algorithm's output
-    unchanged — the level is a storage-format decision, never a
-    semantic one. The round-9 spill battery measured the payoff: the
+    """``CKPT_SER_CONF=true`` must (a) be honored by _ckpt_level and
+    (b) leave every algorithm's output unchanged — the level is a
+    storage-format decision, never a semantic one. The round-9 spill battery measured the payoff: the
     x30 k-core run dies at a 6g heap under deserialized checkpoint
     blocks (execution memory starvation) and completes in ~49s
     serialized."""
@@ -757,16 +706,14 @@ def test_serialized_checkpoint_knob(spark):
         spark.conf.set(CKPT_SER_CONF, "false")
 
 
-def test_auto_serialized_checkpoint_flips_under_pressure(spark):
+def test_auto_serialized_checkpoint_flips_under_pressure(spark, monkeypatch):
     """Round-10 VERDICT #5: when a materialized loop-state checkpoint
-    exceeds the configured fraction of the storage budget, subsequent
+    exceeds ``CKPT_AUTO_FRACTION`` of the storage budget, subsequent
     session checkpoints auto-switch to the serialized level. A
     microscopic fraction makes ANY state trip the trigger; results
     must be unchanged."""
-    from leader_graph_spark.graph.algorithms import CKPT_AUTO_CONF, CKPT_SER_CONF
-
     sess = spark.newSession()  # isolate the sticky conf flip
-    sess.conf.set(CKPT_AUTO_CONF, "1e-9")
+    monkeypatch.setattr(alg, "CKPT_AUTO_FRACTION", 1e-9)
     try:
         vertices = sess.createDataFrame([(v,) for v in "abcdefg"], "id string")
         edges = sess.createDataFrame(
@@ -777,7 +724,6 @@ def test_auto_serialized_checkpoint_flips_under_pressure(spark):
         assert out["d"] == out["e"] != out["a"]
         assert (sess.conf.get(CKPT_SER_CONF, "false") or "").lower() == "true"
     finally:
-        sess.conf.unset(CKPT_AUTO_CONF)
         sess.conf.unset(CKPT_SER_CONF)
 
 
@@ -785,8 +731,6 @@ def test_auto_serialized_checkpoint_stays_off_on_healthy_heap(spark):
     """Default fraction (0.5): a tiny loop state must NOT flip the
     session to serialized checkpoints — the ~37% healthy-heap tax
     stays out of the default path."""
-    from leader_graph_spark.graph.algorithms import CKPT_SER_CONF
-
     sess = spark.newSession()
     vertices = sess.createDataFrame([(v,) for v in "abcd"], "id string")
     edges = sess.createDataFrame([("a", "b"), ("c", "d")], "src string, dst string")
@@ -905,31 +849,17 @@ def test_lcc_adjacency_intersection_matches_naive(spark, sf_smoke):
     # edge-iterator; force the size guard to 1 byte to exercise the
     # degree-oriented large-graph fallback and pin both paths to the
     # same naive enumeration.
-    conf = "spark.leader_graph_spark.lcc.broadcastMaxBytes"
-    spark.conf.set(conf, "1")
-    try:
-        got_oriented = {
-            r["supp_id"]: (r["degree"], r["n_triangles"], r["lcc_ppm"])
-            for r in supplier_clustering_coefficients(spark, sf_smoke).collect()
-        }
-    finally:
-        spark.conf.unset(conf)
+    from leader_graph_spark.plans import graph_queries
+
+    with mock.patch.object(graph_queries, "LCC_BROADCAST_MAX_BYTES", 1):
+        oriented = supplier_clustering_coefficients(spark, sf_smoke)
+    plan = oriented._jdf.queryExecution().analyzed().toString()
+    assert "array_intersect" in plan and "map_zip_with" not in plan  # the sparse path ran
+    got_oriented = {
+        r["supp_id"]: (r["degree"], r["n_triangles"], r["lcc_ppm"])
+        for r in oriented.collect()
+    }
     assert got_oriented == expect
-
-
-@pytest.mark.parametrize("value", ["-1", "64MB"])
-def test_lcc_broadcast_limit_rejects_bad_values(spark, sf_smoke, value):
-    """A bad broadcast limit fails naming its key, before any job,
-    instead of silently picking the oriented path."""
-    from leader_graph_spark.plans.graph_queries import supplier_clustering_coefficients
-
-    conf = "spark.leader_graph_spark.lcc.broadcastMaxBytes"
-    spark.conf.set(conf, value)
-    try:
-        with pytest.raises(ValueError, match=re.escape(conf)):
-            supplier_clustering_coefficients(spark, sf_smoke)
-    finally:
-        spark.conf.unset(conf)
 
 
 def test_weighted_sssp_relaxes_cheaper_multihop(spark):
@@ -992,7 +922,7 @@ def test_temporal_earliest_arrival_respects_time_order(spark):
 
 def test_loop_partitioned_gate_and_layout(spark):
     """_Loop's static-side layout (r10): in an active static scope of at
-    least partitionedMinRows rows the loop input comes back
+    least PARTITIONED_MIN_ROWS rows the loop input comes back
     hash-partitioned and sorted on the round key with the scope's
     pinned partition count, so per-round SMJs elide the exchange+sort
     on that side; below the gate the input checkpoint is used as it is
@@ -1000,7 +930,7 @@ def test_loop_partitioned_gate_and_layout(spark):
     states). With the layout pinned, Catalyst's own broadcasts are off
     inside the scope (a small checkpointed state is joined by sort-merge
     on its layout, not broadcast every round) and back on after it."""
-    from leader_graph_spark.graph.algorithms import PARTITIONED_MIN_CONF, _Loop
+    from leader_graph_spark.graph.algorithms import _Loop
 
     auto_bcast = "spark.sql.autoBroadcastJoinThreshold"
     session_bcast = spark.conf.get(auto_bcast)
@@ -1008,11 +938,11 @@ def test_loop_partitioned_gate_and_layout(spark):
         F.col("id").cast("string").alias("src"), F.lit("x").alias("dst")
     )
 
-    def layout(min_rows):
-        if min_rows is not None:
-            spark.conf.set(PARTITIONED_MIN_CONF, min_rows)
+    def layout(min_rows=alg.PARTITIONED_MIN_ROWS):
         try:
-            with _Loop(df, key="src") as loop:
+            with mock.patch.object(alg, "PARTITIONED_MIN_ROWS", min_rows), _Loop(
+                df, key="src"
+            ) as loop:
                 plan = loop.base._jdf.queryExecution().executedPlan()
                 assert sorted(r.src for r in loop.base.collect()) == sorted(
                     str(i) for i in range(100)
@@ -1030,18 +960,17 @@ def test_loop_partitioned_gate_and_layout(spark):
                     "BroadcastHashJoin" in round_plan,
                 )
         finally:
-            spark.conf.unset(PARTITIONED_MIN_CONF)
             assert spark.conf.get(auto_bcast) == session_bcast
 
     # n = 100 rows >= a gate of 100: layout applied
-    part, order, n_parts, static_parts, broadcast = layout("100")
+    part, order, n_parts, static_parts, broadcast = layout(100)
     assert part.startswith("hashpartitioning(src") and "ASC" in order
     assert n_parts == static_parts
     assert not broadcast
-    # below the gate (conf or default 10k): the plain input checkpoint,
-    # whose small state the planner broadcasts as the session allows
-    for min_rows in ("101", None):
-        part, *_, broadcast = layout(min_rows)
+    # below the gate (patched or the default 10k): the plain input
+    # checkpoint, whose small state the planner broadcasts as the
+    # session allows
+    for part, *_, broadcast in (layout(101), layout()):
         assert "hashpartitioning" not in part
         assert broadcast
 
@@ -1101,8 +1030,8 @@ def test_min_fold_equals_full_outer_fold(spark):
 def test_kcore_broadcast_and_shuffled_survivor_paths_agree(spark):
     """kcore_subgraph (r10): the broadcast-guarded survivor semi-joins
     must return EXACTLY the shuffled path's core (guard forced off via
-    broadcastFrontierMaxRows=-1) — same vertices, same degrees."""
-    from leader_graph_spark.graph.algorithms import BCAST_FRONTIER_CONF, kcore_subgraph
+    BCAST_FRONTIER_MAX_ROWS=-1) — same vertices, same degrees."""
+    from leader_graph_spark.graph.algorithms import kcore_subgraph
 
     # K4 on a-d (core), plus a pendant chain e-f-g that peels off in
     # cascades, plus an isolated edge pair.
@@ -1111,18 +1040,26 @@ def test_kcore_broadcast_and_shuffled_survivor_paths_agree(spark):
         core + [("d", "e"), ("e", "f"), ("f", "g"), ("x", "y")],
         "src string, dst string",
     )
-    got_bcast = {
-        (r.id, r.degree)
-        for r in kcore_subgraph(edges, k=3, rounds=6).collect()
-    }
-    spark.conf.set(BCAST_FRONTIER_CONF, "-1")
-    try:
-        got_shuffled = {
-            (r.id, r.degree)
-            for r in kcore_subgraph(edges, k=3, rounds=6).collect()
-        }
-    finally:
-        spark.conf.unset(BCAST_FRONTIER_CONF)
+    bcast = alg._Loop.broadcast
+
+    def core(limit):
+        hinted = []
+
+        def spy(loop, df, n_rows):
+            out = bcast(loop, df, n_rows)
+            hinted.append(out is not df)
+            return out
+
+        with mock.patch.object(alg, "BCAST_FRONTIER_MAX_ROWS", limit), mock.patch.object(
+            alg._Loop, "broadcast", spy
+        ):
+            got = {(r.id, r.degree) for r in kcore_subgraph(edges, k=3, rounds=6).collect()}
+        return got, hinted
+
+    got_bcast, hinted = core(alg.BCAST_FRONTIER_MAX_ROWS)
+    assert hinted and all(hinted)
+    got_shuffled, hinted = core(-1)
+    assert hinted and not any(hinted)
     assert got_bcast == got_shuffled == {(v, 3) for v in "abcd"}
 
 
@@ -1131,21 +1068,24 @@ def test_skew_guarded_pairs_hot_key_split_exact(spark):
     fanout cap must route through the SALTED branch and still produce
     the exact pair multiset of the plain self-join — in both the
     ordered (a < b) and bidirectional (a != b) forms, with cold groups
-    riding the original symmetric join alongside."""
+    riding the original symmetric join alongside. A cap of 0 salts
+    every group and still gives the exact pairs."""
     from pyspark.sql import functions as F
 
-    from leader_graph_spark.graph.derived import (
-        PAIR_HOT_CAP_CONF,
-        PAIR_SALT_CONF,
-        skew_guarded_self_pairs,
-    )
+    from leader_graph_spark.graph import derived
+    from leader_graph_spark.graph.derived import skew_guarded_self_pairs
 
     rows = [("hot", i) for i in range(1, 12)] + [("cold", 1), ("cold", 2), ("cold", 3)]
     df = spark.createDataFrame(rows, "g string, id long")
-    spark.conf.set(PAIR_HOT_CAP_CONF, "5")   # 11-member group is hot
-    spark.conf.set(PAIR_SALT_CONF, "4")
-    try:
-        for ordered, op in ((True, lambda a, b: a < b), (False, lambda a, b: a != b)):
+    cases = [
+        (cap, ordered, op)
+        for cap in (5, 0)  # 5: the 11-member group is hot; 0: every group is
+        for ordered, op in ((True, lambda a, b: a < b), (False, lambda a, b: a != b))
+    ]
+    for cap, ordered, op in cases:
+        with mock.patch.object(derived, "PAIR_HOT_CAP", cap), mock.patch.object(
+            derived, "PAIR_SALT_BUCKETS", 4
+        ):
             out = skew_guarded_self_pairs(
                 df,
                 group_col="g",
@@ -1170,51 +1110,12 @@ def test_skew_guarded_pairs_hot_key_split_exact(spark):
             # explodes the (constant-folded) bucket sequence
             plan = out._jdf.queryExecution().optimizedPlan().toString()
             assert "pmod(xxhash64" in plan and "Generate explode" in plan
-    finally:
-        spark.conf.unset(PAIR_HOT_CAP_CONF)
-        spark.conf.unset(PAIR_SALT_CONF)
-
-
-def _skew_guarded_pairs_with_conf(spark, key, value):
-    from leader_graph_spark.graph.derived import skew_guarded_self_pairs
-
-    df = spark.createDataFrame([("g", 1), ("g", 2)], "g string, id long")
-    spark.conf.set(key, value)
-    try:
-        return skew_guarded_self_pairs(
-            df,
-            group_col="g",
-            id_col="id",
-            emit=lambda: [F.col("a.id").alias("id_1"), F.col("b.id").alias("id_2")],
-        )
-    finally:
-        spark.conf.unset(key)
-
-
-def test_skew_guarded_pairs_rejects_zero_salt_buckets(spark):
-    """saltBuckets < 1 would make pmod(xxhash64(id), 0) null and drop
-    every hot pair silently; it must fail loudly, naming the key."""
-    from leader_graph_spark.graph.derived import PAIR_SALT_CONF
-
-    with pytest.raises(ValueError, match=re.escape(PAIR_SALT_CONF)):
-        _skew_guarded_pairs_with_conf(spark, PAIR_SALT_CONF, "0")
-
-
-def test_skew_guarded_pairs_rejects_negative_hot_cap(spark):
-    """hotGroupCap < 0 is rejected, naming the key; 0 stays legal (it
-    forces every group through the salted branch)."""
-    from leader_graph_spark.graph.derived import PAIR_HOT_CAP_CONF
-
-    with pytest.raises(ValueError, match=re.escape(PAIR_HOT_CAP_CONF)):
-        _skew_guarded_pairs_with_conf(spark, PAIR_HOT_CAP_CONF, "-1")
-    out = _skew_guarded_pairs_with_conf(spark, PAIR_HOT_CAP_CONF, "0")
-    assert [tuple(r) for r in out.collect()] == [(1, 2)]
 
 
 def test_connected_components_driver_and_loop_paths_agree(spark):
     """ADVICE r10: the default driverMaxEdges guard routes every
     unit-scale graph through the driver union-find, leaving the
-    distributed loop untested. Force DRIVER_CC_CONF=0 and pin the two
+    distributed loop untested. Force DRIVER_CC_MAX_EDGES=0 and pin the two
     paths equal — same pattern as the kcore and LCC dual-path tests —
     on the inputs the driver read's Python de-duplication must get
     right (duplicate rows, both directions of an edge, a self-loop, a
@@ -1239,14 +1140,10 @@ def test_connected_components_driver_and_loop_paths_agree(spark):
         ),
     ]
 
-    def labels(edges, verts, limit=None):
-        if limit is not None:
-            spark.conf.set(DRIVER_CC_CONF, str(limit))
-        try:
+    def labels(edges, verts, limit=alg.DRIVER_CC_MAX_EDGES):
+        with mock.patch.object(alg, "DRIVER_CC_MAX_EDGES", limit):
             out = connected_components(verts, edges)
             return {(r.id, r.component) for r in out.collect()}, out
-        finally:
-            spark.conf.unset(DRIVER_CC_CONF)
 
     by_case = []
     for rows, ids, id_type in cases:
@@ -1281,15 +1178,11 @@ def test_connected_components_driver_and_loop_paths_agree(spark):
 
 def test_min_propagation_driver_and_loop_paths_agree(spark):
     """``min_propagation`` solves small graphs on the driver; forcing
-    the loop (``DRIVER_CC_CONF=0``) gives the same labels hop for hop:
+    the loop (``DRIVER_CC_MAX_EDGES=0``) gives the same labels hop for hop:
     fewer rounds than a path's diameter leave it unconverged the same
     way on both branches. The inputs carry duplicate rows, both
     directions of an edge, self-loops, null endpoints, isolated
     vertices and bigint ids past 2**53."""
-    from unittest import mock
-
-    from leader_graph_spark.graph import algorithms as alg
-
     big = 2**62
     cases = [
         (
@@ -1315,13 +1208,10 @@ def test_min_propagation_driver_and_loop_paths_agree(spark):
             ) as solve:
                 driver = {tuple(r) for r in min_propagation(verts, edges, rounds=rounds).collect()}
                 assert solve.called
-                spark.conf.set(DRIVER_CC_CONF, "0")
-                try:
-                    solve.reset_mock()
+                solve.reset_mock()
+                with mock.patch.object(alg, "DRIVER_CC_MAX_EDGES", 0):
                     loop = {tuple(r) for r in min_propagation(verts, edges, rounds=rounds).collect()}
-                    assert not solve.called
-                finally:
-                    spark.conf.unset(DRIVER_CC_CONF)
+                assert not solve.called
             assert driver == loop, (id_type, rounds)
             assert len(driver) == len(set(ids))
             labels[id_type, rounds] = driver
@@ -1359,59 +1249,21 @@ def test_connected_components_small_graph_solves_on_driver(spark):
     }
 
 
-@pytest.mark.parametrize(
-    "key, value",
-    [pytest.param(DRIVER_CC_CONF, v, id=v) for v in ("1e5", "many", "-1")]
-    + [
-        pytest.param(key, v, id=f"{key.rsplit('.', 1)[1]}-{v}")
-        for key, bad in (
-            (STATIC_LOOP_CONF, ("4e6", "-1")),
-            (PARTITIONED_MIN_CONF, ("many", "-1")),
-            (BCAST_FRONTIER_CONF, ("1.5", "-2")),
-            (CKPT_SER_CONF, ("yes", "1")),
-            (CKPT_AUTO_CONF, ("half", "0.5x")),
-        )
-        for v in bad
-    ],
-)
-def test_driver_max_edges_rejects_bad_value(spark, key, value):
-    """Every loop conf (the driver-solve limit shared by CC and LPA, the
-    static-scope row limit, the partitioned-layout gate, the frontier
-    broadcast limit and the two checkpoint-level confs) is read before
-    the job it steers and fails loudly, naming the key, instead of
-    picking a branch from a value it cannot read; 0 stays legal for the
-    driver limit (it forces the loop) and -1 for the broadcast limit (it
-    disables the hint)."""
+@pytest.mark.parametrize("value", ["yes", "1"])
+def test_checkpoint_serialized_rejects_bad_value(spark, value):
+    """``CKPT_SER_CONF``, the one session conf, is input from outside
+    the program: a value other than true or false fails loudly, naming
+    the key, in every loop entry point instead of picking a storage
+    level it cannot read."""
     edges = spark.createDataFrame([("a", "b")], "src string, dst string")
     verts = spark.createDataFrame([("a",), ("b",)], "id string")
-    spark.conf.set(key, value)
+    spark.conf.set(CKPT_SER_CONF, value)
     try:
-        with pytest.raises(ValueError, match=re.escape(key)):
+        with pytest.raises(ValueError, match=re.escape(CKPT_SER_CONF)):
             connected_components(verts, edges)
-        with pytest.raises(ValueError, match=re.escape(key)):
+        with pytest.raises(ValueError, match=re.escape(CKPT_SER_CONF)):
             label_propagation_fixed(edges, rounds=1)
-        with pytest.raises(ValueError, match=re.escape(key)):
+        with pytest.raises(ValueError, match=re.escape(CKPT_SER_CONF)):
             min_propagation(verts, edges, rounds=1)
-        if key == DRIVER_CC_CONF:
-            labels = spark.createDataFrame([("a", "a")], "id string, component string")
-            group = f"merge_bad_conf_{value}"
-            sc = spark.sparkContext
-            sc.setJobGroup(group, group)
-            try:
-                with pytest.raises(ValueError, match=re.escape(key)):
-                    merge_components(labels, edges)
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            assert not sc.statusTracker().getJobIdsForGroup(group)  # before any job
     finally:
-        spark.conf.unset(key)
-    spark.conf.set(DRIVER_CC_CONF, "0")
-    spark.conf.set(BCAST_FRONTIER_CONF, "-1")
-    try:
-        assert {tuple(r) for r in label_propagation_fixed(edges, rounds=1).collect()} == {
-            ("a", "b"),
-            ("b", "a"),
-        }
-    finally:
-        spark.conf.unset(DRIVER_CC_CONF)
-        spark.conf.unset(BCAST_FRONTIER_CONF)
+        spark.conf.unset(CKPT_SER_CONF)

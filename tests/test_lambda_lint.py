@@ -193,17 +193,17 @@ def test_dedup_and_text_queries_bind_per_row_inputs(spark, sf_smoke):
     """Every registered dedup and text query, at sf0.001 (only the
     plan is inspected). The MinHash lanes would hand back the driver
     branch's local result, so the distributed plan is forced
-    (``DEDUP_DRIVER_CONF=0``) and linted; the driver branch's collect
-    projection is linted in :func:`test_dedup_builders_bind_per_row_inputs`."""
-    from leader_graph_spark.graph.algorithms import DEDUP_DRIVER_CONF
+    (``DEDUP_DRIVER_MAX_BYTES`` patched to 0) and linted; the driver
+    branch's collect projection is linted in
+    :func:`test_dedup_builders_bind_per_row_inputs`."""
+    from unittest import mock
+
+    from leader_graph_spark.operators import dedup
 
     names = sorted(n for n, s in REGISTRY.items() if s.spark.__module__ in _TEXT_MODULES)
     assert len(names) >= 30
-    spark.conf.set(DEDUP_DRIVER_CONF, "0")
-    try:
+    with mock.patch.object(dedup, "DEDUP_DRIVER_MAX_BYTES", 0):
         _lint_queries(spark, names, sf_smoke)
-    finally:
-        spark.conf.unset(DEDUP_DRIVER_CONF)
 
 
 @pytest.mark.slow  # builds every registered query's plan at sf0.01, ~150 s

@@ -3,7 +3,7 @@ order, bipartite round-parity oscillation, and a python model replay.
 
 Every case runs both branches of ``label_propagation_fixed``: the
 default driver solve (small graphs) and the distributed loop
-(``DRIVER_CC_CONF=0``), and requires them to agree. Where the raw row
+(``DRIVER_CC_MAX_EDGES`` patched to 0), and requires them to agree. Where the raw row
 and symmetric pair counts differ, it also runs the driver solve at the
 smallest limit one of them meets and the loop one below it, both
 reached through the driver read's raw checkpoint."""
@@ -12,14 +12,13 @@ from __future__ import annotations
 
 import random
 from collections import Counter
+from unittest import mock
 
 import pytest
 from pyspark.sql import functions as F
 
-from leader_graph_spark.graph.algorithms import (
-    DRIVER_CC_CONF,
-    label_propagation_fixed,
-)
+from leader_graph_spark.graph import algorithms as alg
+from leader_graph_spark.graph.algorithms import label_propagation_fixed
 
 
 def _model(edges: list[tuple[str, str]], rounds: int) -> dict[str, str]:
@@ -45,12 +44,9 @@ def _model(edges: list[tuple[str, str]], rounds: int) -> dict[str, str]:
     return labels
 
 
-def _with_limit(spark, limit, run):
-    spark.conf.set(DRIVER_CC_CONF, str(limit))
-    try:
+def _with_limit(limit, run):
+    with mock.patch.object(alg, "DRIVER_CC_MAX_EDGES", limit):
         return run()
-    finally:
-        spark.conf.unset(DRIVER_CC_CONF)
 
 
 def _boundary_limit(edges) -> int | None:
@@ -63,7 +59,7 @@ def _boundary_limit(edges) -> int | None:
     return None if n_raw == n_sym else min(n_raw, n_sym)
 
 
-def _both_branches(spark, df, rounds, limit=None):
+def _both_branches(df, rounds, limit=None):
     """(driver result, loop result) as id -> community dicts; with a
     ``limit`` the driver solve at it and the loop one below it must
     equal both."""
@@ -74,10 +70,10 @@ def _both_branches(spark, df, rounds, limit=None):
         return {r.id: r.community for r in rows}, out
 
     via_driver = run()[0]
-    via_loop = _with_limit(spark, 0, run)[0]
+    via_loop = _with_limit(0, run)[0]
     if limit is not None:
         for at, on_driver in ((limit, True), (limit - 1, False)):
-            got, out = _with_limit(spark, at, run)
+            got, out = _with_limit(at, run)
             plan = out._jdf.queryExecution().analyzed()
             assert (plan.getClass().getSimpleName() == "LocalRelation") == on_driver, (
                 f"driver limit {at} took the wrong branch"
@@ -88,7 +84,7 @@ def _both_branches(spark, df, rounds, limit=None):
 
 def _run(spark, edges, rounds, ddl="src string, dst string"):
     via_driver, via_loop = _both_branches(
-        spark, spark.createDataFrame(edges, ddl), rounds, _boundary_limit(edges)
+        spark.createDataFrame(edges, ddl), rounds, _boundary_limit(edges)
     )
     assert via_driver == via_loop, "driver and loop branches disagree"
     return via_driver
@@ -172,11 +168,32 @@ def test_duplicate_reversed_and_self_loop_edges(spark):
         assert _run(spark, edges, rounds) == _model(edges, rounds)
 
 
+def test_loop_without_label_broadcasts(spark):
+    # the loop's label and pick sides take broadcast hints only within
+    # BCAST_FRONTIER_MAX_ROWS; at -1 every round joins them by shuffle,
+    # with the same labels
+    edges = [("a1", "a2"), ("a2", "a3"), ("a1", "a3"), ("a3", "b1"), ("b1", "b2")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    bcast, hinted = alg._Loop.broadcast, []
+
+    def spy(loop, frame, n_rows):
+        out = bcast(loop, frame, n_rows)
+        hinted.append(out is not frame)
+        return out
+
+    with mock.patch.object(alg, "BCAST_FRONTIER_MAX_ROWS", -1), mock.patch.object(
+        alg._Loop, "broadcast", spy
+    ):
+        got = _with_limit(0, lambda: label_propagation_fixed(df, rounds=3).collect())
+    assert hinted and not any(hinted)
+    assert {r.id: r.community for r in got} == _model(edges, 3)
+
+
 def test_empty_edge_set(spark):
     df = spark.createDataFrame([], "src bigint, dst bigint")
     out = label_propagation_fixed(df, rounds=2)
     assert out.schema.simpleString() == "struct<id:bigint,community:bigint>"
-    assert _both_branches(spark, df, 2) == ({}, {})
+    assert _both_branches(df, 2) == ({}, {})
 
 
 @pytest.mark.parametrize("rounds", [1, 2, 3, 4])

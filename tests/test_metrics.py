@@ -79,10 +79,10 @@ BENCH_BUDGETS: dict[str, tuple[float, int]] = {
 
 
 # The MinHash lanes solve every testdata corpus on the driver
-# (operators.dedup.minhash_near_duplicates within DEDUP_DRIVER_CONF),
+# (operators.dedup.minhash_near_duplicates within DEDUP_DRIVER_MAX_BYTES),
 # so their BENCH_BUDGETS entries above bound the distributed plan only
 # when that branch is off: test_distributed_minhash_bytes_budget runs
-# them at DEDUP_DRIVER_CONF=0 (measured at sf0.001: 0.42 MB / 5 jobs
+# them at DEDUP_DRIVER_MAX_BYTES=0 (measured at sf0.001: 0.42 MB / 5 jobs
 # and 0.43 MB / 9 jobs). These bound the driver branch the lanes take
 # by default, measured at 0 MB / 2 jobs (the collect and the action)
 # and 0.008 MB / 6 jobs (min_propagation solves the collected pair list
@@ -146,13 +146,12 @@ def test_bench_query_bytes_budget(spark, sf_smoke, name):
 
 @pytest.mark.parametrize("name", sorted(DRIVER_MINHASH_BUDGETS))
 def test_distributed_minhash_bytes_budget(spark, sf_smoke, name):
-    from leader_graph_spark.graph.algorithms import DEDUP_DRIVER_CONF
+    from unittest import mock
 
-    spark.conf.set(DEDUP_DRIVER_CONF, "0")
-    try:
+    from leader_graph_spark.operators import dedup
+
+    with mock.patch.object(dedup, "DEDUP_DRIVER_MAX_BYTES", 0):
         _bytes_budget(spark, sf_smoke, name, *BENCH_BUDGETS[name])
-    finally:
-        spark.conf.unset(DEDUP_DRIVER_CONF)
 
 
 @pytest.mark.parametrize("name", sorted(DRIVER_MINHASH_BUDGETS))

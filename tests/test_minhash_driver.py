@@ -2,8 +2,8 @@
 distributed plan, row for row.
 
 A corpus whose ``(id, text)`` size estimate is within
-``DEDUP_DRIVER_CONF`` is solved in Python from one Arrow collect; past
-it (and always at ``DEDUP_DRIVER_CONF=0``) the distributed plan runs.
+``DEDUP_DRIVER_MAX_BYTES`` is solved in Python from one Arrow collect;
+past it (and always at a limit of 0) the distributed plan runs.
 Every case here runs both branches on the same input and requires the
 same rows, so the branch the registry's small
 corpora take stays equal to the one larger corpora take.
@@ -13,12 +13,12 @@ from __future__ import annotations
 
 from unittest import mock
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
-from leader_graph_spark.graph.algorithms import DEDUP_DRIVER_CONF, DRIVER_CC_CONF, _driver_frame
+from leader_graph_spark.graph import algorithms
+from leader_graph_spark.graph.algorithms import _driver_frame
 from leader_graph_spark.metrics import measure_action
 from leader_graph_spark.operators import dedup
 from leader_graph_spark.operators.dedup import (
@@ -27,7 +27,7 @@ from leader_graph_spark.operators.dedup import (
 )
 from leader_graph_spark.plans import REGISTRY
 
-_FORCE_DRIVER = str(1 << 40)
+_FORCE_DRIVER = 1 << 40
 
 
 def _docs(spark, rows, id_type=T.LongType()):
@@ -48,15 +48,11 @@ def _driver_solves():
     )
 
 
-def _run(spark, limit: str, fn, *args, **kw):
+def _run(limit: int, fn, *args, **kw):
     """(driver branch ran, sorted rows) of ``fn`` at ``limit``."""
-    spark.conf.set(DEDUP_DRIVER_CONF, limit)
-    try:
-        with _driver_solves() as solve:
-            rows = sorted(map(tuple, fn(*args, **kw).collect()))
-        return solve.called, rows
-    finally:
-        spark.conf.unset(DEDUP_DRIVER_CONF)
+    with mock.patch.object(dedup, "DEDUP_DRIVER_MAX_BYTES", limit), _driver_solves() as solve:
+        rows = sorted(map(tuple, fn(*args, **kw).collect()))
+    return solve.called, rows
 
 
 def _both_branches(spark, df, **kw):
@@ -64,8 +60,8 @@ def _both_branches(spark, df, **kw):
     each branch was taken)."""
     kw = {"id_col": "doc_id", "text_col": "text", **kw}
     out = []
-    for limit, on_driver in ((_FORCE_DRIVER, True), ("0", False)):
-        ran_driver, rows = _run(spark, limit, minhash_near_duplicates, df, **kw)
+    for limit, on_driver in ((_FORCE_DRIVER, True), (0, False)):
+        ran_driver, rows = _run(limit, minhash_near_duplicates, df, **kw)
         assert ran_driver is on_driver
         out.append(rows)
     return out
@@ -188,17 +184,15 @@ def test_bucket_pair_guard_falls_back_to_distributed(spark):
     distributed plan (no local result), with the same rows."""
     text = " ".join(f"w{i}" for i in range(20))
     df = _docs(spark, [(1, text), (2, text), (3, text), (4, "x y z w")])
-    spark.conf.set(DEDUP_DRIVER_CONF, _FORCE_DRIVER)
     kw = dict(id_col="doc_id", text_col="text")
-    try:
-        results = []
-        for bound in (12, 11):
-            with mock.patch.object(dedup, "DEDUP_DRIVER_MAX_PAIRS", bound):
-                got = minhash_near_duplicates(df, **kw)
-                plan = got._jdf.queryExecution().optimizedPlan().toString()
-                results.append(("Join" in plan, sorted(map(tuple, got.collect()))))
-    finally:
-        spark.conf.unset(DEDUP_DRIVER_CONF)
+    results = []
+    for bound in (12, 11):
+        with mock.patch.object(dedup, "DEDUP_DRIVER_MAX_BYTES", _FORCE_DRIVER), mock.patch.object(
+            dedup, "DEDUP_DRIVER_MAX_PAIRS", bound
+        ):
+            got = minhash_near_duplicates(df, **kw)
+            plan = got._jdf.queryExecution().optimizedPlan().toString()
+            results.append(("Join" in plan, sorted(map(tuple, got.collect()))))
     (joined_at_12, rows_12), (joined_at_11, rows_11) = results
     assert (joined_at_12, joined_at_11) == (False, True)
     assert rows_12 == rows_11 == [(1, 2, 1.0), (1, 3, 1.0), (2, 3, 1.0)]
@@ -256,8 +250,8 @@ def test_canonical_docs_both_branches(spark):
     rows = [(1, base), (2, base + " x"), (3, base + " x y"), (4, "unrelated short text here")]
     df = _docs(spark, rows)
     kw = dict(id_col="doc_id", text_col="text")
-    ran_driver, driver = _run(spark, _FORCE_DRIVER, canonical_near_dup_docs, df, **kw)
-    ran_loop, distributed = _run(spark, "0", canonical_near_dup_docs, df, **kw)
+    ran_driver, driver = _run(_FORCE_DRIVER, canonical_near_dup_docs, df, **kw)
+    ran_loop, distributed = _run(0, canonical_near_dup_docs, df, **kw)
     assert (ran_driver, ran_loop) == (True, False)
     assert driver == distributed
     assert {r[0]: r[1] for r in driver} == {1: 1, 2: 1, 3: 1, 4: 4}
@@ -269,16 +263,13 @@ def test_canonical_docs_propagation_driver_equals_loop(spark, sf_dir):
     driver, so the build runs three jobs (the collect, the raw-edge
     checkpoint and its Arrow collect) instead of a checkpoint per two
     hops and the broadcast builds of their joins; forcing the loop
-    (``DRIVER_CC_CONF=0``) gives the same rows."""
+    (``DRIVER_CC_MAX_EDGES`` patched to 0) gives the same rows."""
     spec = REGISTRY["dedup_canonical_docs"]
     build = measure_action(spark, lambda: spec.spark(spark, sf_dir))
     assert build.jobs <= 3, build.jobs
     driver = sorted(map(tuple, build.result.collect()))
-    spark.conf.set(DRIVER_CC_CONF, "0")
-    try:
+    with mock.patch.object(algorithms, "DRIVER_CC_MAX_EDGES", 0):
         loop = sorted(map(tuple, spec.spark(spark, sf_dir).collect()))
-    finally:
-        spark.conf.unset(DRIVER_CC_CONF)
     assert driver == loop
     assert sum(kept for _, _, kept in driver) < len(driver)  # some docs collapse
 
@@ -300,13 +291,3 @@ def test_registry_corpus_takes_driver_branch_without_shuffle(spark, sf_dir):
     assert run.shuffle_write_bytes == 0 and run.shuffle_read_bytes == 0
     assert build.shuffle_write_bytes == 0
 
-
-@pytest.mark.parametrize("value", ["-1", "lots"])
-def test_bad_driver_limit_raises_naming_key(spark, value):
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    spark.conf.set(DEDUP_DRIVER_CONF, value)
-    try:
-        with pytest.raises(ValueError, match=DEDUP_DRIVER_CONF):
-            minhash_near_duplicates(df, id_col="doc_id", text_col="text")
-    finally:
-        spark.conf.unset(DEDUP_DRIVER_CONF)

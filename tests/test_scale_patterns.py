@@ -278,16 +278,15 @@ def test_minhash_shuffle_budget_both_branches(spark, sf_smoke):
     """``minhash_near_dup_docs`` takes the driver branch at every
     testdata scale, whose result is a local relation with no exchange;
     its ``SHUFFLE_BUDGETS`` entry bounds the distributed plan, forced
-    here with ``DEDUP_DRIVER_CONF=0``."""
-    from leader_graph_spark.graph.algorithms import DEDUP_DRIVER_CONF
+    here with ``DEDUP_DRIVER_MAX_BYTES`` patched to 0."""
+    from unittest import mock
+
+    from leader_graph_spark.operators import dedup
 
     name = "minhash_near_dup_docs"
     assert _bench_shuffles(spark, sf_smoke, name) == 0
-    spark.conf.set(DEDUP_DRIVER_CONF, "0")
-    try:
+    with mock.patch.object(dedup, "DEDUP_DRIVER_MAX_BYTES", 0):
         shuffles = _bench_shuffles(spark, sf_smoke, name)
-    finally:
-        spark.conf.unset(DEDUP_DRIVER_CONF)
     assert shuffles <= SHUFFLE_BUDGETS[name], (
         f"{name} distributed: {shuffles} shuffles > budget {SHUFFLE_BUDGETS[name]}"
     )

@@ -4,9 +4,6 @@ duplicates."""
 
 from __future__ import annotations
 
-import re
-
-import pytest
 from pyspark.sql import functions as F
 
 from leader_graph_spark.operators.dedup import (
@@ -63,18 +60,25 @@ def test_ann_lsh_recall_vs_bruteforce(spark, sf_dir):
     assert hits / total > 0.35, f"recall {hits}/{total}"
 
 
-@pytest.mark.parametrize("value", ["0", "-5", "many"])
-def test_lsh_rows_per_task_rejects_bad_values(spark, sf_smoke, value):
-    """A zero, negative or non-integer seam size fails naming its key,
-    instead of dividing by zero or silently picking one partition."""
-    conf = "spark.leader_graph_spark.lsh.rowsPerTask"
+def test_lsh_seam_width_leaves_rows_unchanged(spark, sf_smoke):
+    """With the corpus count observed, ``ann_lsh_topk`` narrows its
+    verify exchange to ``LSH_ROWS_PER_TASK`` rows per task; at 1 row per
+    task it keeps the cores-wide default. Both give the same rows."""
+    from unittest import mock
+
+    from leader_graph_spark.operators import similarity
+
     emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet").limit(50)
-    spark.conf.set(conf, value)
-    try:
-        with pytest.raises(ValueError, match=re.escape(conf)):
-            ann_lsh_topk(emb, k=5, dim=64, target_bucket=1024)
-    finally:
-        spark.conf.unset(conf)
+    outs = []
+    for rows_per_task in (similarity.LSH_ROWS_PER_TASK, 1):
+        with mock.patch.object(similarity, "LSH_ROWS_PER_TASK", rows_per_task):
+            out = ann_lsh_topk(emb, k=5, dim=64, target_bucket=1024)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        outs.append((out, "RepartitionByExpression [table" in plan))
+    (narrow, narrowed), (wide, widened) = outs
+    assert narrowed and not widened
+    assert narrow.exceptAll(wide).count() == 0 and wide.exceptAll(narrow).count() == 0
+    assert narrow.count() > 0
 
 
 def test_ann_ivf_structure(spark, sf_dir):
