@@ -2,26 +2,43 @@
 surface (SURVEY.md §2.8, X1-X7).
 
 The reference walks BeautifulSoup DOMs; no Catalyst expression walks a
-DOM, so these are Arrow-batched pandas UDFs over ``mapInPandas``. The
-parser is the stdlib ``html.parser`` (bs4 is not available in this
-environment, and the extraction rules only need linear tag events).
+DOM, so these run in Python behind ``mapInPandas``. The parser is the
+stdlib ``html.parser`` (bs4 is not available in this environment, and
+the extraction rules only need linear tag events). Two scanners cover
+every rule:
+
+- ``_PageParser`` keeps the event-ordered page state of X1, X3 and X4:
+  title, meta fields, heading sections, paragraph blocks, flattened
+  tables and anchors with the heading they sit under;
+- ``_Capture(match)`` records, in document order, the elements a
+  ``match(tag, attrs)`` rule selects, each with its keys, attributes,
+  descendant text and the selected elements open at its start. X2 keys
+  infobox label/content cells, X6 the person-description tiers, X7 the
+  image containers, the imgs, the ``<title>`` and the lemma-title div.
 
 Shapes reproduced:
 - X1 page → content struct: title, meta description, summary, ordered
   (heading, content) sections (``html_extractor/extract_content_from_remark.py:85-703``);
 - X2 rule-driven infobox: config-driven field → label-synonym mapping
-  over dt/dd pairs, first-hit-wins per field
+  over three label → content rules, first hit wins per field
   (``html_extractor/extract_table_from_remark.py:268-439``);
-- X3 link harvest under a heading (UDTF: 1 page row → N link rows)
-  with name cleaning + validity gate
-  (``leader/update_c_org_leader_info.py:75-206``).
+- X3 link harvest under a heading (1 page row → N link rows) with name
+  cleaning + validity gate (``leader/update_c_org_leader_info.py:75-206``);
+- X4-X6 career lines, person details, title/summary/person description
+  (``parser/baike_parser.py``);
+- X7 the six-method portrait-URL cascade
+  (``leader/update_leader_img_url.py:130-218``).
+
+Every Spark surface is one Arrow-batched pass (:func:`_map_pages`) that
+maps each page's ``(id, html)`` to its output rows.
 """
 
 from __future__ import annotations
 
 import hashlib
 import re
-from collections.abc import Iterator
+from collections.abc import Callable
+from dataclasses import dataclass
 from html.parser import HTMLParser
 
 import pandas as pd
@@ -48,9 +65,20 @@ def clean_text(s: str) -> str:
     return _WS_RE.sub(" ", _ZW_RE.sub("", _CITATION_RE.sub("", s))).strip()
 
 
+def _scan(parser: HTMLParser, html: str | None):
+    """Feed one page to ``parser``; None when the tag soup breaks it."""
+    try:
+        parser.feed(html or "")
+        parser.close()
+    except Exception:
+        return None
+    return parser
+
+
 class _PageParser(HTMLParser):
     """Linear scan collecting title, meta description, headings, text
-    runs, dt/dd pairs and anchors (with the heading they appear under)."""
+    runs, flattened tables and anchors (with the heading they appear
+    under)."""
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
@@ -60,7 +88,6 @@ class _PageParser(HTMLParser):
         self.sections: list[tuple[str, str]] = []
         self.pre_heading_text: list[str] = []
         self.pre_heading_blocks: list[str] = []  # individual para blocks
-        self.dt_dd: list[tuple[str, str]] = []
         self.links: list[tuple[str, str, str]] = []  # (heading, text, href)
         self.tables: list[tuple[str, str]] = []  # (enclosing heading, flat text)
         self._stack: list[str] = []
@@ -68,12 +95,9 @@ class _PageParser(HTMLParser):
         self._text_buf: list[str] = []
         self._blocks: list[str] = []  # cleaned paragraph/table blocks
         self._heading_buf: list[str] = []
-        self._cur_dt = ""
         self._in_link = False
         self._cur_href = ""
         self._link_buf: list[str] = []
-        self._dt_buf: list[str] | None = None
-        self._dd_buf: list[str] | None = None
         # Table flattening state (extract_content_from_remark.py:537-628):
         # one flat text per top-level table — optional caption row, then
         # one "cell | cell | cell" line per tr.
@@ -105,10 +129,6 @@ class _PageParser(HTMLParser):
             self._in_link = True
             self._cur_href = attrs.get("href", "")
             self._link_buf = []
-        elif tag == "dt":
-            self._dt_buf = []
-        elif tag == "dd":
-            self._dd_buf = []
         elif tag == "table":
             if self._table_depth == 0:
                 self._tbl_rows = []
@@ -137,15 +157,7 @@ class _PageParser(HTMLParser):
             self._stack.pop()
         if self._stack:
             self._stack.pop()
-        if tag == "dt":
-            self._cur_dt = clean_text(" ".join(self._dt_buf or []))
-            self._dt_buf = None
-        elif tag == "dd":
-            if self._cur_dt:
-                self.dt_dd.append((self._cur_dt, clean_text(" ".join(self._dd_buf or []))))
-                self._cur_dt = ""
-            self._dd_buf = None
-        elif tag in ("td", "th") and self._cell_buf is not None:
+        if tag in ("td", "th") and self._cell_buf is not None:
             cell = clean_text(" ".join(self._cell_buf))
             # link-suffix rule (extract_content_from_remark.py:612-617):
             # a cell link's text is appended as " [text]" only when the
@@ -227,10 +239,6 @@ class _PageParser(HTMLParser):
             return
         if self._table_depth:
             return  # stray text between table cells
-        if self._dt_buf is not None:
-            self._dt_buf.append(data)
-        elif self._dd_buf is not None:
-            self._dd_buf.append(data)
         self._text_buf.append(data)
 
     def close(self):
@@ -269,11 +277,8 @@ def parse_page(html: str) -> dict:
     into the heading-based path here: any h2 IS a section heading to
     this parser, and a table following it lands in that section's
     content."""
-    p = _PageParser()
-    try:
-        p.feed(html or "")
-        p.close()
-    except Exception:
+    p = _scan(_PageParser(), html)
+    if p is None:
         return dict(_EMPTY_PAGE)
     sections = [{"heading": h, "content": c} for h, c in p.sections]
     if not sections:
@@ -304,43 +309,47 @@ def parse_page(html: str) -> dict:
     }
 
 
-class _InfoboxParser(HTMLParser):
-    """Collects, in document order, every element the three infobox
-    extraction rules key on — its start position, which rule kinds
-    apply (``info-title`` / ``info-content`` / ``basicInfo-item`` class
-    tokens, ``dt`` / ``dd`` tags) and its full descendant text (the
-    bs4 ``get_text()`` analog). A linear event scan reproduces bs4's
-    ``find_next`` exactly: document order over start tags, descendants
-    included."""
+@dataclass(eq=False, slots=True)
+class _Elem:
+    """One element a :class:`_Capture` rule selected. Records compare by
+    identity, so ``container in elem.within`` asks whether ``elem``
+    starts inside that container."""
 
-    _CLASS_KINDS = (("info-title", "it"), ("info-content", "ic"), ("basicInfo-item", "bi"))
+    keys: set
+    attrs: dict
+    within: tuple  # the selected elements open at its start
+    text: list[str]  # descendant data chunks
 
-    def __init__(self) -> None:
+
+class _Capture(HTMLParser):
+    """Records, in document order (``elems``), every element for which
+    ``match(tag, attrs)`` returns a non-empty key set: its keys, its
+    attributes, its full descendant text (the bs4 ``get_text()``
+    analog) and the selected elements open at its start. Since the
+    records are in start order, a linear scan reproduces bs4's
+    ``find_next`` (the next selected element after another, descendants
+    included) and ``find_all`` order, and the n-th element of a kind is
+    the n-th record with that key. An end tag closes the innermost open
+    element of its name and every element opened inside it; void tags
+    never open."""
+
+    def __init__(self, match: Callable[[str, dict], set]) -> None:
         super().__init__(convert_charrefs=True)
-        self.elems: list[dict] = []  # {"order", "kinds", "buf"}
-        self._open: list[tuple[str, dict | None]] = []
-        self._order = 0
+        self._match = match
+        self.elems: list[_Elem] = []
+        self._open: list[tuple[str, _Elem | None]] = []
 
     def handle_starttag(self, tag, attrs):
-        self._order += 1
         attrs = dict(attrs)
-        toks = (attrs.get("class") or "").split()
-        kinds = {k for cls, k in self._CLASS_KINDS if cls in toks}
-        if tag == "dt":
-            kinds.add("dt")
-        elif tag == "dd":
-            kinds.add("dd")
         rec = None
-        if kinds:
-            rec = {"order": self._order, "kinds": kinds, "buf": []}
+        keys = self._match(tag, attrs)
+        if keys:
+            rec = _Elem(keys, attrs, tuple(e for _, e in self._open if e is not None), [])
             self.elems.append(rec)
-        if tag in _VOID_TAGS:
-            return
-        self._open.append((tag, rec))
+        if tag not in _VOID_TAGS:
+            self._open.append((tag, rec))
 
     def handle_endtag(self, tag):
-        if tag in _VOID_TAGS:
-            return
         for i in range(len(self._open) - 1, -1, -1):
             if self._open[i][0] == tag:
                 del self._open[i:]
@@ -349,12 +358,30 @@ class _InfoboxParser(HTMLParser):
     def handle_data(self, data):
         for _, rec in self._open:
             if rec is not None:
-                rec["buf"].append(data)
+                rec.text.append(data)
 
 
+def _capture(html: str | None, match: Callable[[str, dict], set]) -> list[_Elem] | None:
+    """The elements ``match`` selects on one page; None when the tag soup
+    breaks the parser."""
+    p = _scan(_Capture(match), html)
+    return None if p is None else p.elems
+
+
+# Infobox rule keys: class tokens ``info-title`` / ``info-content`` /
+# ``basicInfo-item`` and the ``dt`` / ``dd`` tags.
+_INFOBOX_CLASSES = (("info-title", "it"), ("info-content", "ic"), ("basicInfo-item", "bi"))
 # (label_kind, content_kind) per rule, tried in this order per field
 # (extract_table_from_remark.py:279-300).
 _INFOBOX_RULES = (("it", "ic"), ("dt", "dd"), ("bi", "bi"))
+
+
+def _infobox_keys(tag: str, attrs: dict) -> set:
+    toks = (attrs.get("class") or "").split()
+    keys = {k for cls, k in _INFOBOX_CLASSES if cls in toks}
+    if tag in ("dt", "dd"):
+        keys.add(tag)
+    return keys
 
 
 def extract_infobox(html: str, field_mapping: dict[str, list[str]]) -> dict[str, str | None]:
@@ -376,29 +403,25 @@ def extract_infobox(html: str, field_mapping: dict[str, list[str]]) -> dict[str,
     rule (:424-427); a rule that yields nothing falls through to the
     next rule. Rule order beats document order: a dt/dd hit earlier in
     the page loses to an info-title hit later in it."""
-    p = _InfoboxParser()
-    try:
-        p.feed(html or "")
-        p.close()
-    except Exception:
-        return {f: None for f in field_mapping}
-    elems = p.elems
+    out: dict[str, str | None] = {f: None for f in field_mapping}
+    elems = _capture(html, _infobox_keys)
+    if elems is None:
+        return out
     # space-join data chunks (the repo's long-pinned cell behavior;
     # clean_text collapses runs, label matching strips all whitespace)
-    texts = [" ".join(e["buf"]) for e in elems]
-    out: dict[str, str | None] = {f: None for f in field_mapping}
+    texts = [" ".join(e.text) for e in elems]
     for field, synonyms in field_mapping.items():
         syns = [_WS_RE.sub("", s) for s in synonyms]
         for label_kind, content_kind in _INFOBOX_RULES:
             found = None
             for i, e in enumerate(elems):
-                if label_kind not in e["kinds"]:
+                if label_kind not in e.keys:
                     continue
                 label = _WS_RE.sub("", texts[i])
                 if syns and not any(s in label for s in syns):
                     continue
                 nxt = next(
-                    (j for j in range(i + 1, len(elems)) if content_kind in elems[j]["kinds"]),
+                    (j for j in range(i + 1, len(elems)) if content_kind in elems[j].keys),
                     None,
                 )
                 if nxt is None:
@@ -451,11 +474,8 @@ def extract_person_links(
     """X3 UDTF shape: harvest /item/ links under a matching heading,
     clean + validate names, md5 uuid per canonical URL
     (``leader/update_c_org_leader_info.py:75-206``)."""
-    page = _PageParser()
-    try:
-        page.feed(html or "")
-        page.close()
-    except Exception:
+    page = _scan(_PageParser(), html)
+    if page is None:
         return []
     out = []
     for heading, text, href in page.links:
@@ -477,113 +497,6 @@ def extract_person_links(
             }
         )
     return out
-
-
-# ---------------------------------------------------------------------------
-# Spark surfaces
-# ---------------------------------------------------------------------------
-
-PAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("title", T.StringType()),
-        T.StructField("description", T.StringType()),
-        T.StructField("summary", T.StringType()),
-        T.StructField("update_time", T.StringType()),
-        T.StructField(
-            "sections",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("heading", T.StringType()),
-                        T.StructField("content", T.StringType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
-
-def parse_pages(df: DataFrame, *, id_col: str, html_col: str) -> DataFrame:
-    """X1 as mapInPandas: (id, html) → (id, title, description, summary,
-    sections). Arrow-batched; one Python pass per partition."""
-    out_schema = T.StructType(
-        [df.schema[id_col]] + list(PAGE_SCHEMA.fields)
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = pdf[html_col].map(parse_page)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "title": parsed.map(lambda d: d["title"]),
-                    "description": parsed.map(lambda d: d["description"]),
-                    "summary": parsed.map(lambda d: d["summary"]),
-                    "update_time": parsed.map(lambda d: d["update_time"]),
-                    "sections": parsed.map(
-                        lambda d: [(s["heading"], s["content"]) for s in d["sections"]]
-                    ),
-                }
-            )
-
-    return df.select(id_col, html_col).mapInPandas(run, out_schema)
-
-
-def extract_links_table(
-    df: DataFrame,
-    *,
-    id_col: str,
-    html_col: str,
-    heading_keywords: tuple[str, ...] = ("机构领导", "现任领导", "Leadership"),
-) -> DataFrame:
-    """X3 as a flatMap-shaped mapInPandas: one page row → N link rows
-    (org_id, name, url, uuid)."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("name", T.StringType()),
-            T.StructField("url", T.StringType()),
-            T.StructField("uuid", T.StringType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, html in zip(pdf[id_col], pdf[html_col]):
-                for link in extract_person_links(html, heading_keywords=heading_keywords):
-                    rows.append((rid, link["name"], link["url"], link["uuid"]))
-            yield pd.DataFrame(rows, columns=[id_col, "name", "url", "uuid"])
-
-    return df.select(id_col, html_col).mapInPandas(run, out_schema)
-
-
-def extract_infobox_table(
-    df: DataFrame,
-    *,
-    id_col: str,
-    html_col: str,
-    field_mapping: dict[str, list[str]],
-) -> DataFrame:
-    """X2 as mapInPandas: one page row → one row with a column per
-    configured field (None where no dt/dd label matched). The mapping
-    stays config data (``html_extractor/org_table_schema.json:1-14``
-    expanded at ``extract_table_from_remark.py:268-316``)."""
-    fields = list(field_mapping)
-    out_schema = T.StructType(
-        [df.schema[id_col]] + [T.StructField(f, T.StringType()) for f in fields]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            extracted = pdf[html_col].map(lambda h: extract_infobox(h, field_mapping))
-            data = {id_col: pdf[id_col]}
-            for f in fields:
-                data[f] = extracted.map(lambda d, f=f: d[f])
-            yield pd.DataFrame(data)
-
-    return df.select(id_col, html_col).mapInPandas(run, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -621,29 +534,6 @@ def extract_person_details(html: str) -> dict[str, str | None]:
     return extract_infobox(html, PERSON_DETAIL_MAPPING)
 
 
-def career_lines_table(df: DataFrame, *, id_col: str, html_col: str) -> DataFrame:
-    """X4 as a flatMap-shaped mapInPandas: one page row → N cleaned
-    career lines with their document-order position
-    (``parser/baike_parser.py:114-208``)."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("pos", T.IntegerType()),
-            T.StructField("line", T.StringType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, html in zip(pdf[id_col], pdf[html_col]):
-                for pos, line in enumerate(extract_career_sections(html)):
-                    rows.append((rid, pos, line))
-            yield pd.DataFrame(rows, columns=[id_col, "pos", "line"])
-
-    return df.select(id_col, html_col).mapInPandas(run, out_schema)
-
-
 def extract_title_summary(html: str) -> dict[str, str]:
     """X6 (``parser/baike_parser.py:74-113,210-259``): page title
     (suffix-stripped) + summary with the meta-description fallback."""
@@ -654,55 +544,12 @@ def extract_title_summary(html: str) -> dict[str, str]:
     }
 
 
-class _ClassCaptureParser(HTMLParser):
-    """Captures the full descendant text of elements matched by
-    (tag, class-spec) tiers. A spec containing a space matches the
-    EXACT class attribute string (bs4 ``class_='a b'`` semantics);
-    a single token matches any class token (bs4 single-string / CSS
-    ``.cls`` semantics)."""
-
-    def __init__(self, specs: tuple[tuple[str, str], ...]) -> None:
-        super().__init__(convert_charrefs=True)
-        self._specs = specs
-        self.hits: list[tuple[int, int, list[str]]] = []  # (spec idx, order, buf)
-        self._open: list[tuple[str, list[list[str]]]] = []
-        self._order = 0
-
-    def handle_starttag(self, tag, attrs):
-        self._order += 1
-        attrs = dict(attrs)
-        cls = attrs.get("class") or ""
-        toks = cls.split()
-        bufs: list[list[str]] = []
-        for idx, (want_tag, spec) in enumerate(self._specs):
-            if tag != want_tag:
-                continue
-            if (" " in spec and cls == spec) or (" " not in spec and spec in toks):
-                buf: list[str] = []
-                self.hits.append((idx, self._order, buf))
-                bufs.append(buf)
-        if tag in _VOID_TAGS:
-            return
-        self._open.append((tag, bufs))
-
-    def handle_endtag(self, tag):
-        if tag in _VOID_TAGS:
-            return
-        for i in range(len(self._open) - 1, -1, -1):
-            if self._open[i][0] == tag:
-                del self._open[i:]
-                break
-
-    def handle_data(self, data):
-        for _, bufs in self._open:
-            for buf in bufs:
-                buf.append(data)
-
-
 # X6 person-description cascade tiers (parser/baike_parser.py:89-110):
 # mobile li first, then the desktop hashed-class div, then the three
-# alternate desktop selectors. Tier 0 is an exact-attribute match
-# (bs4 class_ with a space); the rest are token matches.
+# alternate desktop selectors. A spec containing a space matches the
+# EXACT class attribute string (bs4 ``class_='a b'`` semantics, tier 0);
+# a single token matches any class token (bs4 single-string / CSS
+# ``.cls`` semantics).
 _PERSON_DESC_TIERS: tuple[tuple[str, str], ...] = (
     ("li", "extra-list-item extra-lemma-desc"),
     ("div", "lemmaDescText_WLOIg"),
@@ -710,6 +557,14 @@ _PERSON_DESC_TIERS: tuple[tuple[str, str], ...] = (
     ("div", "basic-info"),
     ("div", "lemmaWgt-subjectNav"),
 )
+
+
+def _person_desc_keys(tag: str, attrs: dict) -> set:
+    cls = attrs.get("class") or ""
+    return {
+        tier for tier, (want_tag, spec) in enumerate(_PERSON_DESC_TIERS)
+        if tag == want_tag and (cls == spec if " " in spec else spec in cls.split())
+    }
 
 
 def extract_person_desc(html: str) -> str:
@@ -720,53 +575,13 @@ def extract_person_desc(html: str) -> str:
     selector. Tiers 0-1 return ``.strip()`` text verbatim; the
     alternate selectors (tiers 2-4) additionally collapse internal
     whitespace (:104-110)."""
-    p = _ClassCaptureParser(_PERSON_DESC_TIERS)
-    try:
-        p.feed(html or "")
-        p.close()
-    except Exception:
-        return ""
+    elems = _capture(html, _person_desc_keys) or []
     for tier in range(len(_PERSON_DESC_TIERS)):
-        for idx, _, buf in sorted(
-            (h for h in p.hits if h[0] == tier), key=lambda h: h[1]
-        ):
-            text = "".join(buf).strip()
-            if not text:
-                continue
-            if tier >= 2:
-                text = _WS_RE.sub(" ", text).strip()
-            return text
+        for e in elems:
+            text = "".join(e.text).strip() if tier in e.keys else ""
+            if text:
+                return _WS_RE.sub(" ", text).strip() if tier >= 2 else text
     return ""
-
-
-def title_summary_desc_table(df: DataFrame, *, id_col: str, html_col: str) -> DataFrame:
-    """X6 as mapInPandas: (id, html) → (id, title, summary,
-    description, person_desc) in ONE Python pass per row — the W6
-    coalesce over summary/description stays Spark-side in callers."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("title", T.StringType()),
-            T.StructField("summary", T.StringType()),
-            T.StructField("description", T.StringType()),
-            T.StructField("person_desc", T.StringType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = pdf[html_col].map(parse_page)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "title": parsed.map(lambda d: d["title"]),
-                    "summary": parsed.map(lambda d: d["summary"]),
-                    "description": parsed.map(lambda d: d["description"]),
-                    "person_desc": pdf[html_col].map(extract_person_desc),
-                }
-            )
-
-    return df.select(id_col, html_col).mapInPandas(run, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -792,84 +607,24 @@ def is_valid_image_url(url: str) -> bool:
     return any(p in url for p in _IMG_VALID_PATTERNS)
 
 
-class _ImageCascadeParser(HTMLParser):
-    """Collects every <img> with the container context the cascade
-    tiers key on: which abstractAlbum_* / summary-pic /
-    data-module-type=image / lemma-picture div instances enclose it,
-    and whether those lemma-picture instances start after the
-    lemmaWgt-lemmaTitle-title div. Containers are matched on
-    class TOKENS (bs4's class_ semantics)."""
-
-    _KINDS = ("aa", "sp", "im", "lp")
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.imgs: list[dict] = []  # {src, alt, order, aa/sp/im/lp: set[int]}
-        self.title = ""
-        self.title_div_order: int | None = None  # lemmaWgt-lemmaTitle-title
-        self.lp_starts: dict[int, int] = {}  # lemma-picture instance -> order
-        self._order = 0
-        self._counts = dict.fromkeys(self._KINDS, 0)
-        self._stack: list[tuple[str, dict[str, int]]] = []  # (tag, kind->inst)
-        self._in_title = False
-
-    @staticmethod
-    def _div_kinds(attrs: dict) -> list[str]:
-        toks = (attrs.get("class") or "").split()
-        kinds = []
-        if any(t.startswith("abstractAlbum_") for t in toks):
-            kinds.append("aa")
-        if "summary-pic" in toks:
-            kinds.append("sp")
-        if attrs.get("data-module-type") == "image":
-            kinds.append("im")
-        if "lemma-picture" in toks:
-            kinds.append("lp")
-        return kinds
-
-    def handle_starttag(self, tag, attrs):
-        self._order += 1
-        attrs = dict(attrs)
-        if tag == "img":
-            rec = {
-                "src": attrs.get("src", ""),
-                "alt": attrs.get("alt", ""),
-                "order": self._order,
-            }
-            for kind in self._KINDS:
-                rec[kind] = {m[kind] for _, m in self._stack if kind in m}
-            self.imgs.append(rec)
-            return  # void element: never on the stack
-        if tag == "title":
-            self._in_title = True
-        marks: dict[str, int] = {}
-        if tag == "div":
-            toks = (attrs.get("class") or "").split()
-            if "lemmaWgt-lemmaTitle-title" in toks and self.title_div_order is None:
-                self.title_div_order = self._order
-            for kind in self._div_kinds(attrs):
-                inst = self._counts[kind]
-                self._counts[kind] += 1
-                marks[kind] = inst
-                if kind == "lp":
-                    self.lp_starts[inst] = self._order
-        if tag in _VOID_TAGS:
-            return
-        self._stack.append((tag, marks))
-
-    def handle_endtag(self, tag):
-        if tag in _VOID_TAGS:
-            return
-        if tag == "title":
-            self._in_title = False
-        for i in range(len(self._stack) - 1, -1, -1):
-            if self._stack[i][0] == tag:
-                del self._stack[i:]
-                break
-
-    def handle_data(self, data):
-        if self._in_title:
-            self.title += data
+def _image_keys(tag: str, attrs: dict) -> set:
+    """X7's keys: every img, the <title>, and the divs the cascade tiers
+    key on, matched on class TOKENS (bs4's class_ semantics):
+    abstractAlbum_* (``aa``), summary-pic (``sp``),
+    data-module-type=image (``im``), lemma-picture (``lp``) and the
+    lemmaWgt-lemmaTitle-title div (``lt``)."""
+    if tag in ("img", "title"):
+        return {tag}
+    if tag != "div":
+        return set()
+    toks = (attrs.get("class") or "").split()
+    keys = {k for cls, k in (("summary-pic", "sp"), ("lemma-picture", "lp"),
+                             ("lemmaWgt-lemmaTitle-title", "lt")) if cls in toks}
+    if any(t.startswith("abstractAlbum_") for t in toks):
+        keys.add("aa")
+    if attrs.get("data-module-type") == "image":
+        keys.add("im")
+    return keys
 
 
 def select_portrait_url(html: str) -> dict:
@@ -884,85 +639,173 @@ def select_portrait_url(html: str) -> dict:
        one passes the gate;
     3. first img of the first ``summary-pic`` div;
     4. first img of the first ``div[data-module-type=image]``;
-    5. if the <title> carries the ``_百度百科`` suffix, the first img
-       whose alt or src contains the page name;
+    5. if the first <title> (bs4's ``soup.title``) carries the
+       ``_百度百科`` suffix, the first img whose alt or src contains
+       the page name;
     6. the first img anywhere with a gate-passing src.
 
     Returns ``{"url": str | None, "method": int | None}`` — method is
     the 1-based tier that produced the URL (None when nothing passed),
     surfaced so tests and the oracle can pin the cascade ORDER, not
     just the final string."""
-    p = _ImageCascadeParser()
-    try:
-        p.feed(html or "")
-        p.close()
-    except Exception:
+    elems = _capture(html, _image_keys)
+    if elems is None:
         return {"url": None, "method": None}
-    imgs = p.imgs
+    imgs = [(e, e.attrs.get("src") or "") for e in elems if "img" in e.keys]
 
-    def first_img_of(kind: str, inst: int):
-        cands = [i for i in imgs if inst in i[kind]]
-        return min(cands, key=lambda i: i["order"]) if cands else None
+    def first_src(container: _Elem | None) -> str | None:
+        """The gate-passing src of the container's first img, if any
+        (None also for no container: no img is within None)."""
+        src = next((s for e, s in imgs if container in e.within), None)
+        return src if src and is_valid_image_url(src) else None
+
+    def first(key: str) -> _Elem | None:
+        return next((e for e in elems if key in e.keys), None)
 
     # 1: first abstractAlbum div's first img only
-    img = first_img_of("aa", 0)
-    if img and img["src"] and is_valid_image_url(img["src"]):
-        return {"url": img["src"], "method": 1}
+    if src := first_src(first("aa")):
+        return {"url": src, "method": 1}
     # 2: lemma-picture divs strictly after the lemma-title div, in
     # document order; first img of each, first valid wins
-    if p.title_div_order is not None:
-        insts = sorted(
-            (o, i) for i, o in p.lp_starts.items() if o > p.title_div_order
-        )
-        for _, inst in insts:
-            img = first_img_of("lp", inst)
-            if img and img["src"] and is_valid_image_url(img["src"]):
-                return {"url": img["src"], "method": 2}
+    title_div = first("lt")
+    if title_div is not None:
+        after = elems[elems.index(title_div) + 1:]
+        for div in (e for e in after if "lp" in e.keys):
+            if src := first_src(div):
+                return {"url": src, "method": 2}
     # 3 / 4: first summary-pic / image-module div's first img only
-    for kind, method in (("sp", 3), ("im", 4)):
-        img = first_img_of(kind, 0)
-        if img and img["src"] and is_valid_image_url(img["src"]):
-            return {"url": img["src"], "method": method}
+    for key, method in (("sp", 3), ("im", 4)):
+        if src := first_src(first(key)):
+            return {"url": src, "method": method}
     # 5: name-matched img (name from the suffixed <title> only)
-    title = p.title.strip()
-    if "_百度百科" in title:
-        name = title.split("_百度百科")[0].strip()
-        if name:
-            for img in sorted(imgs, key=lambda i: i["order"]):
-                if (
-                    (name in img["alt"] or name in img["src"])
-                    and img["src"]
-                    and is_valid_image_url(img["src"])
-                ):
-                    return {"url": img["src"], "method": 5}
+    title = first("title")
+    title = "".join(title.text).strip() if title else ""
+    name = title.split("_百度百科")[0].strip() if "_百度百科" in title else ""
+    valid = [(e, s) for e, s in imgs if is_valid_image_url(s)]
+    for e, src in valid:
+        if name and (name in (e.attrs.get("alt") or "") or name in src):
+            return {"url": src, "method": 5}
     # 6: first valid img anywhere
-    for img in sorted(imgs, key=lambda i: i["order"]):
-        if img["src"] and is_valid_image_url(img["src"]):
-            return {"url": img["src"], "method": 6}
+    if valid:
+        return {"url": valid[0][1], "method": 6}
     return {"url": None, "method": None}
 
 
-def portrait_url_table(df: DataFrame, *, id_col: str, html_col: str) -> DataFrame:
-    """X7 as mapInPandas: (id, html) → (id, portrait_url, method).
-    Arrow-batched like every X surface; blobs never shuffle — the
-    select prunes to exactly the two input columns."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("portrait_url", T.StringType()),
-            T.StructField("method", T.IntegerType()),
-        ]
-    )
+# ---------------------------------------------------------------------------
+# Spark surfaces
+# ---------------------------------------------------------------------------
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+def _map_pages(
+    df: DataFrame,
+    *,
+    id_col: str,
+    html_col: str,
+    fields: list[T.StructField],
+    rows: Callable[[str], list[tuple]],
+) -> DataFrame:
+    """The one Spark surface shape: an Arrow-batched ``mapInPandas``
+    pass that maps each page's ``(id, html)`` to ``rows(html)``, its
+    output rows (one for a per-page surface, N for a flatMap-shaped
+    one), each prefixed with the page id. The select prunes the input
+    to exactly those two columns, so blobs never shuffle."""
+    schema = T.StructType([df.schema[id_col], *fields])
+    names = schema.fieldNames()
+
+    def run(batches):
         for pdf in batches:
-            picked = pdf[html_col].map(select_portrait_url)
             yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "portrait_url": picked.map(lambda d: d["url"]),
-                    "method": picked.map(lambda d: d["method"]).astype("Int32"),
-                }
+                [(rid, *row) for rid, html in zip(pdf[id_col], pdf[html_col])
+                 for row in rows(html)],
+                columns=names,
             )
 
-    return df.select(id_col, html_col).mapInPandas(run, out_schema)
+    return df.select(id_col, html_col).mapInPandas(run, schema)
+
+
+def _strings(*names: str) -> list[T.StructField]:
+    return [T.StructField(n, T.StringType()) for n in names]
+
+
+def parse_pages(df: DataFrame, *, id_col: str, html_col: str) -> DataFrame:
+    """X1: (id, html) → (id, title, description, summary, update_time,
+    sections[{heading, content}])."""
+    section = T.StructType(_strings("heading", "content"))
+
+    def rows(html):
+        d = parse_page(html)
+        return [(d["title"], d["description"], d["summary"], d["update_time"],
+                 [(s["heading"], s["content"]) for s in d["sections"]])]
+
+    fields = _strings("title", "description", "summary", "update_time")
+    fields.append(T.StructField("sections", T.ArrayType(section)))
+    return _map_pages(df, id_col=id_col, html_col=html_col, fields=fields, rows=rows)
+
+
+def extract_links_table(
+    df: DataFrame,
+    *,
+    id_col: str,
+    html_col: str,
+    heading_keywords: tuple[str, ...] = ("机构领导", "现任领导", "Leadership"),
+) -> DataFrame:
+    """X3, flatMap-shaped: one page row → N link rows
+    (id, name, url, uuid)."""
+    return _map_pages(
+        df, id_col=id_col, html_col=html_col, fields=_strings("name", "url", "uuid"),
+        rows=lambda html: [
+            (link["name"], link["url"], link["uuid"])
+            for link in extract_person_links(html, heading_keywords=heading_keywords)
+        ],
+    )
+
+
+def extract_infobox_table(
+    df: DataFrame,
+    *,
+    id_col: str,
+    html_col: str,
+    field_mapping: dict[str, list[str]],
+) -> DataFrame:
+    """X2: one page row → one row with a column per configured field
+    (None where no label matched). The mapping stays config data
+    (``html_extractor/org_table_schema.json:1-14`` expanded at
+    ``extract_table_from_remark.py:268-316``)."""
+    return _map_pages(
+        df, id_col=id_col, html_col=html_col, fields=_strings(*field_mapping),
+        rows=lambda html: [tuple(extract_infobox(html, field_mapping).values())],
+    )
+
+
+def career_lines_table(df: DataFrame, *, id_col: str, html_col: str) -> DataFrame:
+    """X4, flatMap-shaped: one page row → N cleaned career lines with
+    their document-order position (``parser/baike_parser.py:114-208``)."""
+    fields = [T.StructField("pos", T.IntegerType()), *_strings("line")]
+    return _map_pages(
+        df, id_col=id_col, html_col=html_col, fields=fields,
+        rows=lambda html: list(enumerate(extract_career_sections(html))),
+    )
+
+
+def title_summary_desc_table(df: DataFrame, *, id_col: str, html_col: str) -> DataFrame:
+    """X6: (id, html) → (id, title, summary, description, person_desc) —
+    the W6 coalesce over summary/description stays Spark-side in
+    callers."""
+
+    def rows(html):
+        d = parse_page(html)
+        return [(d["title"], d["summary"], d["description"], extract_person_desc(html))]
+
+    return _map_pages(
+        df, id_col=id_col, html_col=html_col,
+        fields=_strings("title", "summary", "description", "person_desc"), rows=rows,
+    )
+
+
+def portrait_url_table(df: DataFrame, *, id_col: str, html_col: str) -> DataFrame:
+    """X7: (id, html) → (id, portrait_url, method)."""
+    fields = [*_strings("portrait_url"), T.StructField("method", T.IntegerType())]
+    return _map_pages(
+        df, id_col=id_col, html_col=html_col, fields=fields,
+        rows=lambda html: [tuple(select_portrait_url(html).values())],
+    )

@@ -709,19 +709,24 @@ def connected_components(
     convergence, and the dual-path equality is pinned by
     ``test_connected_components_driver_and_loop_paths_agree``.
     """
-    # Size-guarded driver swap (r10, same policy and limit family as
-    # merge_components' quotient path): a provably-small edge set is
-    # solved by union-find from ONE collect instead of O(diameter)
-    # checkpointed rounds — at sf0.1 the base-CC loop of
-    # incremental_component_merge was ~20 stages of near-zero CPU,
-    # pure scheduling barriers. Labels are bit-identical (min member
-    # id, pinned by test + oracle). A 100 TB edge set never collects:
-    # the guard reads the OBSERVED count, not an estimate.
+    return _with_isolated(vertices, _edge_components(edges, max_iter=max_iter))
+
+
+def _edge_components(edges: DataFrame, *, max_iter: int) -> DataFrame:
+    """(id, component) for every vertex that appears in an edge: the
+    labelling :func:`connected_components` extends to isolated vertices.
+
+    Size-guarded driver swap (r10; merge_components' quotient graph goes
+    through the same gate): a provably-small edge set is solved by
+    union-find from ONE collect instead of O(diameter) checkpointed
+    rounds — at sf0.1 the base-CC loop of incremental_component_merge
+    was ~20 stages of near-zero CPU, pure scheduling barriers. Labels
+    are bit-identical (min member id, pinned by test + oracle). A 100 TB
+    edge set never collects: the guard reads the OBSERVED count, not an
+    estimate."""
     with _driver_or_loop(edges, key="dst") as (pairs, id_type, loop):
         if loop is None:
-            return _with_isolated(
-                vertices, _driver_components(edges.sparkSession, pairs, id_type)
-            )
+            return _driver_components(edges.sparkSession, pairs, id_type)
         # min-label propagation until no label changes (or max_iter
         # rounds); the ``changed`` probe is a free column of the round join
         sym = loop.base
@@ -735,7 +740,7 @@ def connected_components(
             if not loop.seen["changed"]:
                 break
         loop.keep("labels")
-    return _with_isolated(vertices, labels)
+    return labels
 
 
 def _active_vertices(sym: DataFrame) -> DataFrame:
@@ -1434,18 +1439,18 @@ def merge_components(
     old AND newly-introduced vertices — identical to a full recompute
     (oracle-checked for the registered query).
 
-    Scale swap (size-guarded like the ranked-vertex path): the
-    quotient graph is sized by the DELTA's component touches, so for
-    typical incremental batches it is tiny — up to ``DRIVER_CC_MAX_EDGES``
-    edges its components are solved by
-    driver-side union-find from ONE Arrow collect (the iterative quotient
-    CC was ~60 scheduling barriers of pure fixed overhead, the single
-    biggest local line item of the headline bench), with labels =
-    min member id, bit-identical to :func:`connected_components`
-    (min-reachable-id; ids compare as ASCII/UTF8 — equality
-    test-pinned against the distributed path). Above the limit the
-    distributed loop runs — a 100 TB delta touching millions of
-    components never lands on the driver."""
+    The quotient graph is sized by the DELTA's component touches, so
+    for typical incremental batches it is tiny: it goes through the
+    same driver-or-loop gate as :func:`connected_components`
+    (``DRIVER_CC_MAX_EDGES``), which solves it by driver-side
+    union-find from ONE Arrow collect (the iterative quotient CC was
+    ~60 scheduling barriers of pure fixed overhead, the single biggest
+    local line item of the headline bench). Labels are the min member
+    id either way, bit-identical to the loop (ids compare as
+    ASCII/UTF8 — equality test-pinned against the distributed path). A
+    100 TB delta touching millions of components never lands on the
+    driver. Every quotient vertex is an edge endpoint, so the labelling
+    needs no isolated-vertex join."""
     sym = symmetrize(new_edges)
     lab_src = labels.select(F.col("id").alias("src"), F.col("component").alias("csrc"))
     lab_dst = labels.select(F.col("id").alias("dst"), F.col("component").alias("cdst"))
@@ -1459,26 +1464,9 @@ def merge_components(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    q_edges, seen = _checkpoint_observed(q_edges, n=F.count(F.lit(1)))
-    if DRIVER_CC_MAX_EDGES and seen["n"] <= DRIVER_CC_MAX_EDGES:
-        pairs = _collect_pairs(q_edges)
-        # driver path consumed the quotient in one collect — release it
-        _release(q_edges)
-        mapping = _driver_components(
-            q_edges.sparkSession, pairs, q_edges.schema["src"].dataType
-        ).select(
-            F.col("id").alias("component"),
-            F.col("component").alias("new_component"),
-        )
-    else:
-        q_vertices = (
-            q_edges.select(F.col("src").alias("id"))
-            .unionByName(q_edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        mapping = connected_components(q_vertices, q_edges, max_iter=max_iter).select(
-            F.col("id").alias("component"), F.col("component").alias("new_component")
-        )
+    mapping = _edge_components(q_edges, max_iter=max_iter).select(
+        F.col("id").alias("component"), F.col("component").alias("new_component")
+    )
     # all ids that must appear: previously labeled + delta endpoints
     all_ids = (
         labels.select("id")

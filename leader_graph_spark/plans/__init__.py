@@ -14,9 +14,6 @@ from leader_graph_spark.plans import (  # noqa: E402,F401
     text_queries,
     warehouse_queries,
 )
-# Imported after the core modules so these register at the end of the
-# unverified block (behind the round-2 sweep window, ahead of the
-# already-verified rotation below).
 from leader_graph_spark.plans import mlprep_queries  # noqa: E402,F401
 
 # Round-4 additions: file-boundary round-trip queries (S1/S4/K3/K4/S6
@@ -27,155 +24,5 @@ from leader_graph_spark.plans import retrieval_queries  # noqa: E402,F401
 from leader_graph_spark.plans import stats_queries  # noqa: E402,F401
 from leader_graph_spark.plans import behavior_queries  # noqa: E402,F401
 from leader_graph_spark.plans import dq_queries  # noqa: E402,F401
-
-# The driver's correctness sweep covers the registry in iteration order
-# with a finite per-round budget (50 entries observed in round 1), so
-# queries that already have a green CORRECTNESS row are rotated to the
-# back: everything still awaiting a driver verdict — plus anything whose
-# output contract changed since its last sweep (e.g. an op that was
-# rows-only but has since gained an oracle) — iterates first.
-
-import json as _json
-import pathlib as _pathlib
-
-
-def _verified_names() -> set[str]:
-    """Names already green in any prior round's CORRECTNESS_r*.json.
-
-    A query counts as verified only against its CURRENT contract: an
-    oracle-bearing query needs a hash_match:true row; a rows-only query
-    needs a completed no_oracle row. A query that had a rows-only pass
-    but has since gained an oracle re-queues for the stronger verdict,
-    and green rows recorded before a contract change
-    (``_STALE_GREEN_BEFORE``) don't count.
-    """
-    root = _pathlib.Path(__file__).resolve().parents[2]
-    ok: set[str] = set()
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        try:
-            round_num = int(path.stem.rsplit("_r", 1)[-1])
-        except ValueError:
-            round_num = 0
-        try:
-            rows = _json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        for name, r in rows.items():
-            spec = REGISTRY.get(name)
-            if spec is None or not isinstance(r, dict):
-                continue
-            if round_num < _STALE_GREEN_BEFORE.get(name, 0):
-                continue
-            if spec.oracle is not None:
-                if r.get("hash_match") is True:
-                    ok.add(name)
-            elif r.get("err") == "no_oracle" and r.get("spark_rows") is not None:
-                ok.add(name)
-    return ok
-
-
-# Green rows recorded before the given round verified a STALE contract
-# and don't count toward rotation; a green row in that round or later
-# re-verifies the current contract and moves the query to the back.
-# local_supplier_volume: its r2 green row matched 0==0 rows (the
-# regenerated round-3 testdata renamed regions, so the old REGION_0
-# predicate was vacuous); the oracle now filters ASIA.
-# corpus_mixture_report: round 4 replaced the round(…, 6) share column
-# (engine rounding-mode dependent at exact ties) with exact
-# global_chars + floor-ppm columns — the r3 green row verified the old
-# output contract.
-_STALE_GREEN_BEFORE: dict[str, int] = {
-    "local_supplier_volume": 3,
-    "corpus_mixture_report": 4,
-    # round 9 extended X1: update_time column + embedded-table content
-    # blocks joined the output contract, so pre-r9 greens verified the
-    # slimmer surface.
-    "extracted_sections_explode": 9,
-    # round 10 closed the extraction-fidelity tail, changing these
-    # queries' contracts: infobox now exercises the full three-rule
-    # cascade over four page layouts; title_summary gained the
-    # person_desc cascade column; person_links plants the widened
-    # 88-keyword blacklist fixtures (as-executed branch semantics);
-    # clean_and_validate's alternation carries the full vocabulary;
-    # the sectioning fallback applies the per-paragraph length filter.
-    "infobox_person_details": 10,
-    "title_summary_fallbacks": 10,
-    "person_links_harvest": 10,
-    "clean_and_validate_text": 10,
-    "sectioning_fallback_report": 10,
-}
-
-
-# Queries first registered in rounds 2/3: they defer behind the older
-# pending backlog inside the pending block, so queries with an existing
-# red CORRECTNESS row (a fix waiting to flip green) spend the sweep
-# budget before net-new coverage does. Harmless once verified — the
-# CORRECTNESS rotation moves green rows to the back regardless.
-_REGISTERED_R2: frozenset[str] = frozenset(
-    {
-        "extracted_sections_explode",
-        "career_structuring_pipeline",  # rows-only in r1; oracle added in r2
-        "connected_components_membership",  # rows-only in r1; closure oracle added in r2
-        "embedding_near_dup_lsh",
-        "clean_and_validate_text",
-        "doc_repetition_signals",
-        "benchmark_decontamination",
-        "pii_redaction",
-        "incremental_near_dup_batch",
-        "boilerplate_line_dedup",
-        "unigram_lm_quality",
-        "mixture_resample_by_lang",
-        "embedding_quantization_report",
-        "user_state_scd2",
-        "semantic_dedup_clusters",
-        "membership_khop_distances",
-        "token_budget_packs",
-        "greedy_packs_no_overflow",  # rows-only in r1-era; oracle added in r2
-        "stratified_doc_sample",
-    }
-)
-
-_REGISTERED_R3: frozenset[str] = frozenset(
-    {
-        "infobox_person_details",
-        "person_links_harvest",
-        "career_section_lines",
-        "news_entity_extraction",
-        "title_summary_fallbacks",
-        "corpus_mixture_report",
-        "news_title_gate",
-        "heading_match_semantics",
-        "sink_safe_filenames",
-        "salted_event_enrichment",
-        "order_price_distribution_ranks",
-        "ansi_safe_return_ratios",
-        "bitmap_distinct_users",
-        "snapshot_diff_cdc",
-    }
-)
-
-
-def _rotate_verified_to_back() -> None:
-    """Order the registry: unverified oracle-bearing queries first (they
-    can earn a full value-hash verdict; round-1-era backlog ahead of
-    round-2 additions), then unverified no-oracle queries (rows-only
-    check — weaker, so they spend sweep budget last among the pending
-    set), then previously-verified queries."""
-    back_set = _verified_names()
-    pending = [n for n in REGISTRY if n not in back_set]
-    pending_oracle = [n for n in pending if REGISTRY[n].oracle is not None]
-    # Oldest backlog first: re-queued fixes (red rows) → r2 additions →
-    # r3 additions. Stable sort preserves registration order per tier.
-    pending_oracle.sort(
-        key=lambda n: 2 if n in _REGISTERED_R3 else (1 if n in _REGISTERED_R2 else 0)
-    )
-    pending_rows_only = [n for n in pending if REGISTRY[n].oracle is None]
-    back = [n for n in REGISTRY if n in back_set]
-    ordered = {n: REGISTRY[n] for n in pending_oracle + pending_rows_only + back}
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-_rotate_verified_to_back()
 
 __all__ = ["REGISTRY", "QuerySpec", "bench_queries", "query"]

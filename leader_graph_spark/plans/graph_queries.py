@@ -221,7 +221,6 @@ def schoolmate_edges_dedup_antijoin(spark: SparkSession, sf_dir: str) -> DataFra
         )
     )
     from leader_graph_spark.functions.scalar import format_period
-    from leader_graph_spark.operators.intervals import interval_overlap_self_join
 
     a, b = study.alias("a"), study.alias("b")
     cond = (F.col("a.school") == F.col("b.school")) & (
@@ -1472,21 +1471,6 @@ def motif_missing_shortcut_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return motif.select(
         F.col("p.id").alias("person_id"), F.col("r.id").alias("region_id")
     )
-
-
-@query(
-    "connected_components_narrow_labels",
-    _CC_ORACLE,
-    tags=("graph-iterative", "scale-twin"),
-)
-def connected_components_narrow_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The membership graph's converged min-reachable-id labeling, the
-    same query as ``connected_components_membership`` against the same
-    recursive-CTE oracle. Its narrow-label twin of
-    :func:`connected_components` was removed (SCALE.md round-7)."""
-    vertices = build_vertices(spark, sf_dir)
-    edges = build_membership_edges(spark, sf_dir)
-    return connected_components(vertices, edges)
 
 
 _SSSP_ROUNDS = 6

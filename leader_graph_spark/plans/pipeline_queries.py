@@ -13,11 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from leader_graph_spark.operators.llm import structured_extraction
-from leader_graph_spark.operators.validation import (
-    event_violations,
-    repair_events,
-    validate_events_reject,
-)
+from leader_graph_spark.operators.validation import repair_events, validate_events_reject
 from leader_graph_spark.plans.registry import query
 from leader_graph_spark.sources.tables import load_table
 

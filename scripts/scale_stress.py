@@ -95,12 +95,11 @@ QUERIES = [
     "image_phash_codec_roundtrip",
     "readability_flesch_scores",
     "kmv_customer_overlap",
-    # round-6 additions: motif compiler (positive + negated forms),
-    # the narrow-label CC twin, and the char-n-gram prefix lane whose
-    # naive form this battery caught blowing up
+    # round-6 additions: motif compiler (positive + negated forms) and
+    # the char-n-gram prefix lane whose naive form this battery caught
+    # blowing up
     "motif_two_hop_membership",
     "motif_missing_shortcut_edges",
-    "connected_components_narrow_labels",
     "char_ngram_dup_docs",
 ]
 

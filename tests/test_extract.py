@@ -288,6 +288,8 @@ def test_portrait_tier5_name_match_beats_first_valid():
         "</body></html>"
     )
     assert _pick(html) == {"url": VALID.format(5), "method": 5}
+    # a valueless alt attribute matches no name and raises nothing
+    assert _pick(html.replace("<img src", "<img alt src", 1)) == _pick(html)
 
 
 def test_portrait_tier5_requires_suffixed_title():
@@ -553,3 +555,97 @@ def test_infobox_real_baike_desktop_shape():
     )
     out = extract_infobox(html, {"ethnicity": ["民族"], "alma_mater": ["毕业院校"]})
     assert out == {"ethnicity": "汉族", "alma_mater": "清华大学"}
+
+
+# ---------------------------------------------------------------------------
+# The element-capture scanner and the page mapper
+# ---------------------------------------------------------------------------
+
+
+def test_capture_closes_containers_with_an_outer_end_tag():
+    from leader_graph_spark.extract.html import _capture, _image_keys
+
+    # </p> closes the unclosed summary-pic div opened inside the <p>, so
+    # the img after it is outside that container
+    html = (
+        f"<p><div class='summary-pic'><span>x</p><img src='{VALID.format(1)}'>"
+        f"<div class='summary-pic'><img src='{VALID.format(2)}'></div>"
+    )
+    elems = _capture(html, _image_keys)
+    assert [sorted(e.keys) for e in elems] == [["sp"], ["img"], ["sp"], ["img"]]
+    assert elems[1].within == ()
+    assert elems[3].within == (elems[2],)
+    assert "".join(elems[0].text) == "x"
+    # the first summary-pic holds no img, so method 3 finds none there
+    # and falls through to the first valid img anywhere
+    assert _pick(html) == {"url": VALID.format(1), "method": 6}
+    assert _pick(html.replace("</p>", "</span>")) == {"url": VALID.format(1), "method": 3}
+
+
+def test_portrait_second_title_leaves_the_page_name_unchanged():
+    body = (
+        f"<p><img alt='李四' src='{VALID.format(4)}'></p>"
+        f"<p><img alt='张三' src='{VALID.format(3)}'></p>"
+    )
+    named = f"<html><head><title>张三_百度百科</title></head><body>{body}</body></html>"
+    unnamed = f"<html><head><title>张三</title></head><body>{body}</body></html>"
+    assert _pick(named) == {"url": VALID.format(3), "method": 5}
+    assert _pick(unnamed) == {"url": VALID.format(4), "method": 6}
+    # the page name comes from the first <title> only (bs4's soup.title):
+    # joining every title's text would name the unnamed page 张三
+    for page in (named, unnamed):
+        second = page.replace("<body>", "<body><title>_百度百科</title>")
+        assert _pick(second) == _pick(page)
+
+
+def test_page_surfaces_give_typed_empty_frames(spark):
+    from pyspark.sql import types as T
+
+    from leader_graph_spark.extract.html import (
+        PERSON_DETAIL_MAPPING,
+        career_lines_table,
+        extract_infobox_table,
+        portrait_url_table,
+        title_summary_desc_table,
+    )
+
+    surfaces = {
+        "pages": parse_pages,
+        "links": extract_links_table,
+        "infobox": lambda df, **kw: extract_infobox_table(
+            df, field_mapping=PERSON_DETAIL_MAPPING, **kw),
+        "career": career_lines_table,
+        "title": title_summary_desc_table,
+        "portrait": portrait_url_table,
+    }
+    one = spark.createDataFrame([(7, "<p>no links, no career</p>")], "doc_id long, html string")
+    none = one.where("doc_id < 0")
+    for name, surface in surfaces.items():
+        want = surface(one, id_col="doc_id", html_col="html")
+        assert want.schema[0] == T.StructField("doc_id", T.LongType())
+        # a batch with no pages
+        got = surface(none, id_col="doc_id", html_col="html")
+        assert got.schema == want.schema and got.collect() == [], name
+    # a page that yields zero rows
+    for surface, cols in ((extract_links_table, ["doc_id", "name", "url", "uuid"]),
+                          (career_lines_table, ["doc_id", "pos", "line"])):
+        got = surface(one, id_col="doc_id", html_col="html")
+        assert got.columns == cols and got.collect() == []
+
+
+def test_portrait_table_method_is_a_nullable_int(spark):
+    from pyspark.sql import types as T
+
+    from leader_graph_spark.extract.html import portrait_url_table
+
+    rows = [
+        (1, f"<div class='summary-pic'><img src='{VALID.format(1)}'></div>"),
+        (2, "<p>none</p>"),
+        (3, f"<p><img src='{VALID.format(3)}'></p>"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, html string").repartition(1)
+    out = portrait_url_table(df, id_col="doc_id", html_col="html")
+    assert out.schema["method"] == T.StructField("method", T.IntegerType(), True)
+    got = {r.doc_id: r.method for r in out.collect()}
+    assert got == {1: 3, 2: None, 3: 6}
+    assert all(type(m) is int for m in got.values() if m is not None)

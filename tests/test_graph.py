@@ -384,6 +384,43 @@ def test_merge_components_driver_path_equals_distributed(spark, monkeypatch):
     assert {c for i, c in via_driver if i in "abcd"} == {"a"}
 
 
+def test_merge_components_loop_adds_no_quotient_checkpoint(spark, monkeypatch):
+    """At ``DRIVER_CC_MAX_EDGES=0`` the quotient graph runs the loop and
+    gets the driver's labels, and merge_components checkpoints nothing
+    of its own: its checkpoint jobs are exactly those of connected
+    components over the same quotient. A private quotient checkpoint in
+    front of the gate would add one."""
+    base = spark.createDataFrame([(1, 2), (3, 4), (7, 8)], "src long, dst long")
+    verts = spark.createDataFrame([(v,) for v in (1, 2, 3, 4, 7, 8)], "id long")
+    labels = connected_components(verts, base).localCheckpoint()
+    delta = spark.createDataFrame([(2, 3), (9, 10), (10, 4), (1, 4)], "src long, dst long")
+    comp = {r.id: r.component for r in labels.collect()}
+    quotient = {
+        (comp.get(a, a), comp.get(b, b)) for a, b in delta.collect()
+        if comp.get(a, a) != comp.get(b, b)
+    }
+    q_edges = spark.createDataFrame(
+        sorted(quotient | {(b, a) for a, b in quotient}), "src long, dst long")
+    q_verts = q_edges.select(F.col("src").alias("id")).distinct()
+
+    jobs = []
+    observed = alg._checkpoint_observed
+    monkeypatch.setattr(
+        alg, "_checkpoint_observed", lambda df, **p: jobs.append(1) or observed(df, **p))
+    via_driver = {(r.id, r.component) for r in merge_components(labels, delta).collect()}
+    assert len(jobs) == 1  # the gate's raw-edge checkpoint, then one collect
+    jobs.clear()
+    with mock.patch.object(alg, "DRIVER_CC_MAX_EDGES", 0):
+        via_loop = {(r.id, r.component) for r in merge_components(labels, delta).collect()}
+        merge_jobs = len(jobs)
+        jobs.clear()
+        connected_components(q_verts, q_edges).collect()
+        cc_jobs = len(jobs)
+    assert via_loop == via_driver
+    assert {c for i, c in via_loop if i in (1, 2, 3, 4, 9, 10)} == {1}
+    assert merge_jobs == cc_jobs > 0
+
+
 def test_personalized_pagerank_decays_from_seeds(spark):
     """PPR semantics: teleport mass only on seeds ⇒ rank decays with
     distance from the seed set and unreachable vertices score 0 (plus

@@ -19,6 +19,28 @@ def test_all_queries_have_oracles():
     assert [n for n, s in REGISTRY.items() if s.oracle is None] == []
 
 
+def test_registry_iterates_in_registration_order():
+    """``list(REGISTRY)`` is the order the queries register in: one block
+    per plans module, in ``plans/__init__.py``'s import order, each block
+    in source order. Nothing reorders it after import, whatever files
+    sit next to the package."""
+    import ast
+    from pathlib import Path
+
+    import leader_graph_spark.plans as plans
+
+    init = ast.parse(Path(plans.__file__).read_text())
+    imported = [
+        f"{node.module}.{a.name}" for node in init.body
+        if isinstance(node, ast.ImportFrom) and node.module == plans.__name__
+        for a in node.names
+    ]
+    specs = list(REGISTRY.values())
+    want = sorted(specs, key=lambda s: (
+        imported.index(s.spark.__module__), s.spark.__code__.co_firstlineno))
+    assert [s.name for s in specs] == [s.name for s in want]
+
+
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_parity(spark, sf_dir, name):
     spec = REGISTRY[name]

@@ -1,6 +1,7 @@
 """Reachability lint: every top-level function, class and constant in
 ``leader_graph_spark`` is reached from what the engine serves, so code
-that only its own tests call cannot grow back.
+that only its own tests call cannot grow back. A second check fails on
+an import that binds a name its module or function never reads.
 
 Roots:
 - every function decorated with ``@query`` (the registry);
@@ -14,7 +15,7 @@ Edges run only through identifiers inside a reached definition: names,
 attribute names and import aliases. Docstrings and comments are never
 followed. Resolution is by bare name, so a name reached anywhere keeps
 every definition of that name: the lint can miss dead code but never
-flags live code. Spark-free: the check parses the source."""
+flags live code. Spark-free: both checks parse the source."""
 
 from __future__ import annotations
 
@@ -191,3 +192,82 @@ def test_lint_on_a_toy_module():
     # a root file or a bare root name reaches what it names
     assert scan({"lib": lib}, ["dead_doc", "DEAD_CONST"], ["x = only_tested()\n"]) == [
         "lib.helper"]
+
+
+def _probes(node: ast.Try) -> bool:
+    """A ``try`` that catches ImportError: its imports test availability."""
+    caught = [h.type for h in node.handlers if h.type is not None]
+    caught += [e for t in caught if isinstance(t, ast.Tuple) for e in t.elts]
+    return any(getattr(t, "id", "") in ("ImportError", "ModuleNotFoundError") for t in caught)
+
+
+def _scope_imports(scope: ast.AST):
+    """Import statements bound in ``scope`` itself, not in a nested
+    function or class, and not availability probes."""
+    todo = list(scope.body)
+    while todo:
+        node = todo.pop()
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            yield node
+        elif isinstance(node, ast.Try) and _probes(node):
+            todo.extend(node.handlers + node.orelse + node.finalbody)
+        elif not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                   ast.ClassDef, ast.Lambda)):
+            todo.extend(ast.iter_child_nodes(node))
+
+
+def unused_imports(src: str, *, reexports: bool = False) -> list[str]:
+    """``line:name`` of every import whose bound name its module or
+    function scope never reads (nested functions read their enclosing
+    scope's names). ``reexports`` exempts the module scope, as in an
+    ``__init__.py``."""
+    tree = ast.parse(src)
+    scopes = [tree] + [n for n in ast.walk(tree)
+                       if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+    found = []
+    for scope in scopes[1:] if reexports else scopes:
+        read = {n.id for n in ast.walk(scope)
+                if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)}
+        for imp in _scope_imports(scope):
+            if isinstance(imp, ast.ImportFrom) and imp.module == "__future__":
+                continue
+            for a in imp.names:
+                bound = a.asname or a.name.split(".")[0]
+                if bound != "*" and bound not in read:
+                    found.append(f"{imp.lineno}:{bound}")
+    return sorted(found, key=lambda h: int(h.split(":")[0]))
+
+
+def test_no_unused_imports():
+    unused = [
+        f"{path.relative_to(_PKG)}:{hit}"
+        for path in sorted(_PKG.rglob("*.py"))
+        for hit in unused_imports(path.read_text(), reexports=path.name == "__init__.py")
+    ]
+    assert not unused, f"imported and never read: {unused}"
+
+
+def test_unused_import_check_on_a_toy_module():
+    src = (
+        "from __future__ import annotations\n"
+        "import os\n"
+        "import os.path as osp\n"
+        "import json, re\n"
+        "from typing import Any\n"
+        "try:\n"
+        "    import numpy  # availability probe\n"
+        "except ImportError:\n"
+        "    import math\n"
+        "def f(x: Any):\n"
+        "    from itertools import chain\n"
+        "    from functools import reduce\n"
+        "    def inner():\n"
+        "        return chain(x)\n"
+        "    return inner, os.sep\n"
+        "def g():\n"
+        "    import sys\n"
+        "    return re\n"
+    )
+    assert unused_imports(src) == ["3:osp", "4:json", "9:math", "12:reduce", "17:sys"]
+    # a package __init__ re-exports at module scope; functions still count
+    assert unused_imports(src, reexports=True) == ["12:reduce", "17:sys"]
