@@ -33,6 +33,7 @@ itself (``tests/test_loop_lint.py`` fails when one does):
 from __future__ import annotations
 
 from contextlib import contextmanager
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
@@ -272,8 +273,8 @@ def _release(*dfs: DataFrame | None) -> None:
 STATIC_LOOP_MAX_ROWS = 4_000_000
 PARTITIONED_MIN_ROWS = 10_000
 BCAST_FRONTIER_MAX_ROWS = 1_000_000
-# Bounds every driver-side graph solve — connected components' union-find,
-# label propagation's rounds and min_propagation's hops
+# Bounds every driver-side graph solve — the min-label hops of connected
+# components and the rounds of label propagation
 # (:func:`_driver_or_loop`): an edge list whose OBSERVED raw row count is
 # at or under it is solved from ONE Arrow collect of those rows (the
 # symmetric pair set built from them is at most twice the limit); past
@@ -284,7 +285,9 @@ BCAST_FRONTIER_MAX_ROWS = 1_000_000
 # rounds, 4 cores) the driver solve still won, 1.36–1.96 s against the
 # loop's 1.88–2.88 s (:func:`label_propagation_fixed`). A limit of 0
 # enters the loop with no raw-edge checkpoint. merge_components bounds
-# its quotient graph's driver solve by it too. The other driver-side
+# its quotient graph's driver solve by it too. It moves work, never
+# results: each algorithm's driver kernel computes its loop's function,
+# ``max_iter`` and ``rounds`` included. The other driver-side
 # gates are operators.dedup.DEDUP_DRIVER_MAX_BYTES (MinHash) and
 # sources.tables.INLINE_DIM_MAX_ROWS (dimension lookups), each with the
 # crossover it was set from.
@@ -501,10 +504,10 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def _driver_frame(spark, schema: T.StructType, columns: list[list]) -> DataFrame:
+def _driver_frame(spark, schema: T.StructType, columns: list) -> DataFrame:
     """Hand a driver-side result back to Spark as one Arrow table, one
-    Python list per schema field. The table becomes a ``LocalRelation``:
-    no job, no Python worker, and plan statistics for the joins above
+    Python list or Arrow array per schema field. The table becomes a
+    ``LocalRelation``: no job, no Python worker, and plan statistics for the joins above
     it. ``createDataFrame(list)`` would instead parallelize pickled rows
     behind a ``PipelinedRDD`` — Python workers on first use and a
     stat-less ``LogicalRDD`` (measured for the LPA handoff on the
@@ -521,32 +524,113 @@ def _driver_frame(spark, schema: T.StructType, columns: list[list]) -> DataFrame
     return spark.createDataFrame(table, schema)
 
 
-def _collect_pairs(edges: DataFrame) -> set:
-    """The symmetric distinct ``(src, dst)`` pair set of a provably-small
-    edge list — the set :func:`symmetrize` computes — from ONE Arrow
-    collect (``toArrow``: no Python worker, no pickled rows) and Python
-    set building, so no shuffle. Pairs compare as Python values: ids
-    exactly as the column's Spark ordering and equality (bigints
-    numerically, strings as UTF8), and a null endpoint equal to another
-    null, as in ``distinct``. Callers guard the collect with an observed
-    row count; this function never decides size itself."""
-    table = edges.select("src", "dst").toArrow()
-    src, dst = table.column("src").to_pylist(), table.column("dst").to_pylist()
-    return set(zip(src, dst)) | set(zip(dst, src))
+class _DriverGraph(NamedTuple):
+    """A provably-small edge list collected to the driver, as columns.
+
+    ``ids`` is the sorted dictionary of its distinct non-null endpoints
+    (an Arrow array of the column's type); a vertex's code is its
+    position there. Arrow sorts ids as Spark orders them (bigints
+    numerically, strings by UTF-8 bytes), so the minimum code is the
+    minimum id. ``src``/``dst`` hold the distinct symmetric code pairs
+    (int64, sorted by ``src`` then ``dst``) — the pair set
+    :func:`symmetrize` computes — with every pair that has a null
+    endpoint dropped: such a pair joins nothing in the loops'
+    equi-joins. ``has_null`` records whether there was one."""
+
+    ids: object
+    src: object
+    dst: object
+    has_null: bool
+    id_type: T.DataType
+
+
+def _driver_graph(table, id_type: T.DataType | None) -> _DriverGraph:
+    """Build a :class:`_DriverGraph` from an Arrow table with ``src`` and
+    ``dst`` columns of ids of the Spark type ``id_type``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    src, dst = table.column("src"), table.column("dst")
+    ids = pc.unique(pa.chunked_array(src.chunks + dst.chunks, type=src.type)).drop_null()
+    ids = ids.take(pc.sort_indices(ids))
+    s, d = pc.index_in(src, value_set=ids), pc.index_in(dst, value_set=ids)
+    valid = pc.and_(pc.is_valid(s), pc.is_valid(d))
+    s, d = (c.filter(valid).to_numpy().astype(np.int64) for c in (s, d))
+    n = len(ids)
+    s, d = np.divmod(np.unique(np.concatenate([s * n + d, d * n + s])), n)
+    return _DriverGraph(ids, s, d, src.null_count + dst.null_count > 0, id_type)
+
+
+def _min_label_hops(graph: _DriverGraph, max_iter: int):
+    """Min-label propagation on the driver: every vertex starts with its
+    own code and each hop lowers it to the minimum over the vertex and
+    its neighbours, for ``max_iter`` hops or until a hop changes
+    nothing — the function the loop of :func:`_edge_components`
+    computes. Returns each code's label code."""
+    import numpy as np
+
+    labels = np.arange(len(graph.ids))
+    for _ in range(max_iter):
+        nxt = labels.copy()
+        np.minimum.at(nxt, graph.src, labels[graph.dst])
+        if np.array_equal(nxt, labels):
+            break
+        labels = nxt
+    return labels
+
+
+def _lpa_votes(graph: _DriverGraph, rounds: int):
+    """``rounds`` synchronous LPA rounds on the driver, the contract of
+    :func:`label_propagation_fixed`'s loop: each round a vertex adopts
+    the label most of its neighbours carry, count ties to the minimum
+    label, and keeps its label with no neighbour. Votes are counted per
+    int64 key ``vertex * n + label``. Returns each code's label code."""
+    import numpy as np
+
+    n = len(graph.ids)
+    labels = np.arange(n)
+    for _ in range(rounds):
+        keys, counts = np.unique(graph.src * n + labels[graph.dst], return_counts=True)
+        vertex, label = np.divmod(keys, n)
+        order = np.lexsort((label, -counts, vertex))
+        vertex, label = vertex[order], label[order]
+        first = np.diff(vertex, prepend=-1) != 0
+        labels[vertex[first]] = label[first]
+    return labels
+
+
+def _driver_labels(
+    spark, graph: _DriverGraph, labels, column: str, *, null_row: bool = False
+) -> DataFrame:
+    """(id, ``column``) for every vertex of a driver graph, in id order,
+    from the label codes a kernel returned, with a ``(null, null)`` row
+    appended on ``null_row``."""
+    import pyarrow as pa
+
+    cols = [graph.ids, graph.ids.take(labels)]
+    if null_row:
+        cols = [pa.concat_arrays([c, pa.nulls(1, c.type)]) for c in cols]
+    schema = T.StructType(
+        [T.StructField("id", graph.id_type), T.StructField(column, graph.id_type)]
+    )
+    return _driver_frame(spark, schema, cols)
 
 
 @contextmanager
 def _driver_or_loop(edges: DataFrame, *, key: str):
     """Read a graph's ``(src, dst)`` edge list ONCE and decide where to
-    solve it. Yields ``(pairs, id_type, None)`` for a driver solve or
-    ``(None, None, loop)``, a :class:`_Loop` over ``symmetrize(edges)``
-    keyed by ``key``.
+    solve it. Yields ``(graph, None)``, a :class:`_DriverGraph` for a
+    driver solve, or ``(None, loop)``, a :class:`_Loop` over
+    ``symmetrize(edges)`` keyed by ``key``.
 
     The raw projection is checkpointed with its row count observed on
     the same job — one job, no exchange. At most
-    ``DRIVER_CC_MAX_EDGES`` rows it is collected once
-    (:func:`_collect_pairs`), released, and solved on the driver: the limit bounds the collected rows, and the
-    symmetric pair set built from them holds at most twice as many.
+    ``DRIVER_CC_MAX_EDGES`` rows it is collected once (``toArrow``: no
+    Python worker, no pickled rows, no shuffle) into a
+    :class:`_DriverGraph`, released, and solved on the driver: the
+    limit bounds the collected rows, and the symmetric pair set built
+    from them holds at most twice as many.
     Reading the raw edges, not their symmetric view, keeps the
     ``distinct`` shuffle off this branch: on the benchmark's LPA lane
     (about 3 000 edges) that shuffle carried all of the workload's
@@ -571,111 +655,12 @@ def _driver_or_loop(edges: DataFrame, *, key: str):
             _release(small)
             small, base, n_rows = sym, sym, seen["n"]
         if seen["n"] <= limit:
-            pairs = _collect_pairs(small)
-            id_type = small.schema["src"].dataType
+            graph = _driver_graph(small.toArrow(), small.schema["src"].dataType)
             _release(small)
-            yield pairs, id_type, None
+            yield graph, None
             return
     with _Loop(base, key=key, _n_rows=n_rows) as loop:
-        yield None, None, loop
-
-
-def _driver_components(spark, pairs: set, id_type: T.DataType) -> DataFrame:
-    """Union-find over a small symmetric pair set (:func:`_collect_pairs`)
-    → (id, component = minimum member id), bit-identical to converged
-    min-label propagation (ids compare exactly as the column's Spark
-    ordering — the same equivalence ``merge_components`` pins in tests).
-    A pair with a null endpoint joins nothing, as in the loop's
-    equi-joins, and a null id gets no label here."""
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:
-            parent[x], x = root, parent[x]
-        return root
-
-    for src, dst in pairs:
-        if src is None or dst is None:
-            continue
-        ra, rb = find(src), find(dst)
-        if ra != rb:
-            parent[ra] = rb
-    members = set(parent)
-    for v in list(members):
-        members.add(find(v))
-    comp_min: dict = {}
-    for v in members:
-        r = find(v)
-        m = comp_min.get(r)
-        comp_min[r] = v if m is None or v < m else m
-    ids = sorted(members)
-    schema = T.StructType(
-        [T.StructField("id", id_type), T.StructField("component", id_type)]
-    )
-    return _driver_frame(spark, schema, [ids, [comp_min[find(v)] for v in ids]])
-
-
-def _driver_label_propagation(
-    spark, pairs: set, id_type: T.DataType, rounds: int
-) -> DataFrame:
-    """``rounds`` synchronous LPA rounds over a small symmetric pair set
-    (:func:`_collect_pairs`) → (id, community), the exact contract of
-    :func:`label_propagation_fixed`'s loop: the vertices are the distinct
-    ``src`` values; each round a vertex adopts the most frequent label
-    among its neighbors, count ties to the MINIMUM label (ids compare as
-    the column's Spark ordering, as in :func:`_driver_components`), and
-    keeps its label with no neighbor. Null endpoints behave as the loop's
-    equi-joins make them: a null ``src`` votes for no one, a vote for a
-    null ``dst`` is dropped, and the null vertex keeps its null label."""
-    from collections import Counter
-
-    voters: dict = {}
-    for src, dst in pairs:
-        voters.setdefault(src, [])
-        if src is not None and dst is not None:
-            voters.setdefault(dst, []).append(src)
-    labels = {v: v for v in voters}
-    for _ in range(rounds):
-        new = {}
-        for v, us in voters.items():
-            if us:
-                counts = Counter(labels[u] for u in us)
-                new[v] = min(counts.items(), key=lambda lc: (-lc[1], lc[0]))[0]
-            else:
-                new[v] = labels[v]
-        labels = new
-    schema = T.StructType(
-        [T.StructField("id", id_type), T.StructField("community", id_type)]
-    )
-    return _driver_frame(spark, schema, [list(labels), list(labels.values())])
-
-
-def _driver_min_propagation(
-    spark, pairs: set, id_type: T.DataType, rounds: int
-) -> DataFrame:
-    """Exactly ``rounds`` min-label hops over a small symmetric pair set
-    (:func:`_collect_pairs`) → (id, component), the contract of
-    :func:`min_propagation`'s loop: the labelled vertices are the
-    distinct non-null ``src`` values, each starting with its own id, and
-    each hop lowers a label to the minimum over the vertex and its
-    neighbours (ids compare as the column's Spark ordering, as in
-    :func:`_driver_components`). A null endpoint joins nothing."""
-    nbrs: dict = {}
-    for src, dst in pairs:
-        if src is not None:
-            nbrs.setdefault(src, [])
-            if dst is not None:
-                nbrs[src].append(dst)
-    labels = {v: v for v in nbrs}
-    for _ in range(rounds):
-        labels = {v: min([labels[v], *(labels[u] for u in us)]) for v, us in nbrs.items()}
-    schema = T.StructType(
-        [T.StructField("id", id_type), T.StructField("component", id_type)]
-    )
-    return _driver_frame(spark, schema, [list(labels), list(labels.values())])
+        yield None, loop
 
 
 def connected_components(
@@ -686,65 +671,71 @@ def connected_components(
 ) -> DataFrame:
     """Connected components by iterative min-label propagation.
 
-    Each vertex starts labeled with its own id; every round each vertex
+    Each vertex starts labeled with its own id; every hop each vertex
     takes the min of its label and its neighbors' labels; converges in
-    O(graph diameter) rounds. At 100 TB scale the same loop applies
+    O(graph diameter) hops. At 100 TB scale the same loop applies
     (diameter of social-style graphs is small); for adversarial
     long-path graphs swap in the large-star/small-star variant — the
     per-round primitive (join + min-agg) is identical.
 
-    Returns (id, component) where component is the minimum vertex id in
-    the component.
+    Returns (id, component). The labels are those of exactly
+    ``max_iter`` hops (propagation is idempotent at its fixed point, so
+    stopping there changes nothing): the minimum vertex id in the
+    component whenever ``max_iter`` is at least the component diameter,
+    and otherwise the minimum id within ``max_iter`` hops — a
+    deterministic plan an unrolled SQL oracle reproduces row for row.
 
     Small graphs are solved on the driver (:func:`_driver_or_loop`: one
-    narrow checkpoint of the raw edges, one Arrow collect, union-find in
-    Python); the rest run the loop.
-
-    Semantics note (ADVICE r10): the size-guarded DRIVER union-find
-    always returns the fully CONVERGED labeling — ``max_iter``
-    bounds only the distributed loop. For graphs under the driver
-    threshold whose component diameter exceeds ``max_iter`` the two
-    paths would differ; every registered caller either uses the
-    default 25 (>> the diameters of these graphs) or wants
-    convergence, and the dual-path equality is pinned by
-    ``test_connected_components_driver_and_loop_paths_agree``.
-    """
+    narrow checkpoint of the raw edges, one Arrow collect, the same hops
+    in numpy); the rest run the loop. Both branches compute the same
+    function at every size
+    (``test_connected_components_driver_and_loop_paths_agree``)."""
     return _with_isolated(vertices, _edge_components(edges, max_iter=max_iter))
+
+
+# Min-label hops composed into one checkpointed step of the CC loop: a
+# pure plan-shape constant (the labels are those of as many single
+# hops) that halves the materialization barriers. At sf0.1 each
+# checkpoint costs ~0.3 s of fixed scheduler latency (SCALE.md round-4).
+_HOPS_PER_STEP = 2
 
 
 def _edge_components(edges: DataFrame, *, max_iter: int) -> DataFrame:
     """(id, component) for every vertex that appears in an edge: the
     labelling :func:`connected_components` extends to isolated vertices.
 
-    Size-guarded driver swap (r10; merge_components' quotient graph goes
-    through the same gate): a provably-small edge set is solved by
-    union-find from ONE collect instead of O(diameter) checkpointed
-    rounds — at sf0.1 the base-CC loop of incremental_component_merge
-    was ~20 stages of near-zero CPU, pure scheduling barriers. Labels
-    are bit-identical (min member id, pinned by test + oracle). A 100 TB
-    edge set never collects: the guard reads the OBSERVED count, not an
-    estimate."""
-    with _driver_or_loop(edges, key="dst") as (pairs, id_type, loop):
+    Size-guarded driver swap (merge_components' quotient graph goes
+    through the same gate): a provably-small edge set is solved from ONE
+    collect (:func:`_min_label_hops`) instead of O(diameter)
+    checkpointed rounds — at sf0.1 the base-CC loop of
+    incremental_component_merge was ~20 stages of near-zero CPU, pure
+    scheduling barriers. A 100 TB edge set never collects: the guard
+    reads the OBSERVED count, not an estimate."""
+    with _driver_or_loop(edges, key="dst") as (graph, loop):
         if loop is None:
-            return _driver_components(edges.sparkSession, pairs, id_type)
-        # min-label propagation until no label changes (or max_iter
-        # rounds); the ``changed`` probe is a free column of the round join
-        sym = loop.base
-        labels = loop.step("labels", _active_vertices(sym))
-        for _ in range(max_iter):
+            return _driver_labels(
+                edges.sparkSession, graph, _min_label_hops(graph, max_iter), "component"
+            )
+        # _HOPS_PER_STEP hops per checkpoint, ``max_iter`` in all, until a
+        # step's last hop changes no label; the ``changed`` probe is a
+        # free column of that hop's join. max_iter 0 still checkpoints
+        # the initial labels.
+        labels = _active_vertices(loop.base)
+        for done in range(0, max(max_iter, 1), _HOPS_PER_STEP):
+            for _ in range(min(_HOPS_PER_STEP, max_iter - done)):
+                labels = _min_propagation_round(loop.base, labels)
             labels = loop.step(
-                "labels",
-                _min_propagation_round(sym, labels, with_changed=True),
-                changed=F.sum(F.col("_changed").cast("long")),
-            ).select("id", "component")
+                "labels", labels, changed=F.sum(F.col("_changed").cast("long"))
+            )
             if not loop.seen["changed"]:
                 break
         loop.keep("labels")
-    return labels
+    return labels.select("id", "component")
 
 
 def _active_vertices(sym: DataFrame) -> DataFrame:
-    """Initial labels over ONLY the vertices that appear in an edge.
+    """Initial labels over ONLY the vertices that appear in an edge,
+    each its own component and counted as changed.
 
     A vertex with no edge is its own component by definition — dragging
     it through every propagation round just multiplies the shuffled
@@ -758,7 +749,7 @@ def _active_vertices(sym: DataFrame) -> DataFrame:
     return (
         sym.select(F.col("src").alias("id"))
         .distinct()
-        .withColumn("component", F.col("id"))
+        .select("id", F.col("id").alias("component"), F.lit(True).alias("_changed"))
     )
 
 
@@ -778,9 +769,8 @@ def _with_isolated(vertices: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def _min_propagation_round(
-    sym: DataFrame, labels: DataFrame, *, with_changed: bool = False
-) -> DataFrame:
+def _min_propagation_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
+    """One min-label hop: (id, component, _changed) from (id, component)."""
     neighbor_min = (
         sym.join(labels, sym.dst == labels.id)
         .groupBy(F.col("src").alias("id"))
@@ -790,10 +780,9 @@ def _min_propagation_round(
         F.col("component"),
         F.coalesce(F.col("neighbor_component"), F.col("component")),
     )
-    cols = ["id", new_comp.alias("component")]
-    if with_changed:
-        cols.append((new_comp != F.col("component")).alias("_changed"))
-    return labels.join(neighbor_min, "id", "left").select(*cols)
+    return labels.join(neighbor_min, "id", "left").select(
+        "id", new_comp.alias("component"), (new_comp != F.col("component")).alias("_changed")
+    )
 
 
 def connected_components_two_phase(
@@ -890,58 +879,6 @@ def connected_components_two_phase(
             "id", F.least(F.col("id"), F.col("nmin")).alias("component")
         )
     )
-    return _with_isolated(vertices, labels)
-
-
-def min_propagation(
-    vertices: DataFrame,
-    edges: DataFrame,
-    *,
-    rounds: int,
-    hops_per_checkpoint: int = 2,
-) -> DataFrame:
-    """Exactly ``rounds`` min-label propagation rounds with NO
-    convergence check — a deterministic plan an unrolled SQL oracle can
-    reproduce row-for-row (propagation is idempotent once converged, so
-    extra rounds don't change labels). Exact equality to the converged
-    :func:`connected_components` holds iff ``rounds`` ≥ the component
-    diameter — true by construction for near-dup clusters (small,
-    dense), asserted in tests for the shipped data.
-
-    ``hops_per_checkpoint`` composes that many neighbor-min hops into
-    ONE checkpointed stage — a pure plan-shape knob: the computed
-    function is identical (it IS ``rounds`` plain hops, just fewer
-    materialization barriers), unlike the retired pointer-jump whose
-    reduced ROUND COUNT was unsound. At sf0.1 the per-checkpoint cost
-    is ~0.3s of fixed scheduler latency (SCALE.md round-4 breakdown),
-    so halving barriers recovers the pointer-jump's measured win with
-    none of its risk; at cluster scale the same trade holds per
-    whole-cluster barrier round-trip.
-
-    Small graphs are solved on the driver (:func:`_driver_or_loop`, the
-    gate connected components and label propagation share): the rounds
-    run in Python (:func:`_driver_min_propagation`) and the labels come
-    back as an Arrow ``LocalRelation``, two jobs in place of one
-    checkpoint per ``hops_per_checkpoint`` hops and the broadcast
-    builds of their joins."""
-    # Rounds run over the ACTIVE subgraph only (see _active_vertices);
-    # edge-less vertices join back once at the end. Output is identical
-    # to full-vertex propagation — an isolated vertex can neither give
-    # nor receive a label — so the unrolled SQL oracle is unchanged.
-    with _driver_or_loop(edges, key="dst") as (pairs, id_type, loop):
-        if loop is None:
-            return _with_isolated(
-                vertices, _driver_min_propagation(edges.sparkSession, pairs, id_type, rounds)
-            )
-        labels = loop.step("labels", _active_vertices(loop.base))
-        done = 0
-        while done < rounds:
-            hops = min(hops_per_checkpoint, rounds - done)
-            for _ in range(hops):
-                labels = _min_propagation_round(loop.base, labels)
-            labels = loop.step("labels", labels)
-            done += hops
-        loop.keep("labels")
     return _with_isolated(vertices, labels)
 
 
@@ -1298,11 +1235,11 @@ def label_propagation_fixed(edges: DataFrame, *, rounds: int) -> DataFrame:
     edges are checkpointed and collected once with no shuffle, and past
     it a symmetric pair set within the limit is collected from its
     checkpoint (:func:`_driver_or_loop`); the
-    rounds run in Python with the same contract
-    (:func:`_driver_label_propagation`) and the labels come back as an
-    Arrow ``LocalRelation`` — two jobs in place of a checkpoint per
-    round. At small sizes the loop's cost is scheduling, not compute:
-    on ``lpa_membership_communities`` at sf0.01 (about 3 000 symmetric
+    rounds run in numpy with the same contract (:func:`_lpa_votes`;
+    a null endpoint leaves the null vertex with its null label) and the
+    labels come back as an Arrow ``LocalRelation`` — two jobs in place
+    of a checkpoint per round. At small sizes the loop's cost is
+    scheduling, not compute: on ``lpa_membership_communities`` at sf0.01 (about 3 000 symmetric
     edges, 4 cores) the forced loop runs 15 jobs / 22 stages / 82 tasks
     and shuffles 679 kB, the driver solve 5 / 5 / 10 and no bytes. At
     the limit (39 718 vertices, 100 000 raw and 200 000 symmetric edges,
@@ -1312,9 +1249,12 @@ def label_propagation_fixed(edges: DataFrame, *, rounds: int) -> DataFrame:
 
     Returns (id, community).
     """
-    with _driver_or_loop(edges, key="src") as (pairs, id_type, loop):
+    with _driver_or_loop(edges, key="src") as (graph, loop):
         if loop is None:
-            return _driver_label_propagation(edges.sparkSession, pairs, id_type, rounds)
+            return _driver_labels(
+                edges.sparkSession, graph, _lpa_votes(graph, rounds), "community",
+                null_row=graph.has_null,
+            )
         sym = loop.base
         nodes = sym.select(F.col("src").alias("id")).distinct()
         labels = loop.step(
@@ -1350,8 +1290,9 @@ def kcore_subgraph(
     ``rounds`` is the unroll depth — peeling is monotone (a dropped
     vertex never returns) and idempotent at the fixed point, so the
     result equals the true k-core whenever ``rounds`` ≥ the peel depth
-    (the same deterministic-unroll contract as :func:`min_propagation`
-    and the LPA oracle; convergence within the registered round count
+    (the same deterministic-unroll contract as
+    :func:`connected_components` under ``max_iter`` and the LPA oracle;
+    convergence within the registered round count
     is test-asserted for the shipped data).
 
     The k-core is the classic graph-curation filter — vertices with
@@ -1442,27 +1383,25 @@ def merge_components(
     The quotient graph is sized by the DELTA's component touches, so
     for typical incremental batches it is tiny: it goes through the
     same driver-or-loop gate as :func:`connected_components`
-    (``DRIVER_CC_MAX_EDGES``), which solves it by driver-side
-    union-find from ONE Arrow collect (the iterative quotient CC was
-    ~60 scheduling barriers of pure fixed overhead, the single biggest
-    local line item of the headline bench). Labels are the min member
-    id either way, bit-identical to the loop (ids compare as
-    ASCII/UTF8 — equality test-pinned against the distributed path). A
-    100 TB delta touching millions of components never lands on the
-    driver. Every quotient vertex is an edge endpoint, so the labelling
-    needs no isolated-vertex join."""
-    sym = symmetrize(new_edges)
+    (``DRIVER_CC_MAX_EDGES``), which solves it on the driver from ONE
+    Arrow collect (the iterative quotient CC was ~60 scheduling
+    barriers of pure fixed overhead, the single biggest local line item
+    of the headline bench), with the same ``max_iter`` hops either
+    way. A 100 TB delta touching millions of components never lands on
+    the driver. The quotient edges are the delta's mapped through the
+    labels, one direction and duplicates kept: the gate symmetrizes and
+    de-duplicates them once. Every quotient vertex is an edge endpoint,
+    so the labelling needs no isolated-vertex join."""
     lab_src = labels.select(F.col("id").alias("src"), F.col("component").alias("csrc"))
     lab_dst = labels.select(F.col("id").alias("dst"), F.col("component").alias("cdst"))
     q_edges = (
-        sym.join(lab_src, "src", "left")
+        new_edges.join(lab_src, "src", "left")
         .join(lab_dst, "dst", "left")
         .select(
             F.coalesce("csrc", F.col("src")).alias("src"),
             F.coalesce("cdst", F.col("dst")).alias("dst"),
         )
         .where(F.col("src") != F.col("dst"))
-        .distinct()
     )
     mapping = _edge_components(q_edges, max_iter=max_iter).select(
         F.col("id").alias("component"), F.col("component").alias("new_component")
@@ -1470,7 +1409,8 @@ def merge_components(
     # all ids that must appear: previously labeled + delta endpoints
     all_ids = (
         labels.select("id")
-        .unionByName(sym.select(F.col("src").alias("id")))
+        .unionByName(new_edges.select(F.col("src").alias("id")))
+        .unionByName(new_edges.select(F.col("dst").alias("id")))
         .distinct()
     )
     with_old = all_ids.join(labels, "id", "left").select(

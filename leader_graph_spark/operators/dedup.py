@@ -939,9 +939,10 @@ def canonical_near_dup_docs(
     """The dedup END PRODUCT: cluster near-duplicate pairs into groups
     and elect one canonical document per group (min id wins).
 
-    MinHash-LSH pairs (:func:`minhash_near_duplicates`) feed a
-    fixed-``rounds`` min-label propagation
-    (:func:`leader_graph_spark.graph.algorithms.min_propagation`) —
+    MinHash-LSH pairs (:func:`minhash_near_duplicates`) feed
+    ``rounds`` hops of min-label propagation
+    (:func:`leader_graph_spark.graph.algorithms.connected_components`
+    with ``max_iter=rounds``) —
     transitive closure, so A~B~C collapses to ONE kept doc even when
     (A,C) itself was never a candidate pair. Returns every input doc as
     ``(id, canonical_id, is_kept)``; the filtered corpus is
@@ -951,7 +952,7 @@ def canonical_near_dup_docs(
     fixed unroll equals converged components on real corpora (asserted
     in tests); the bounded round count is what keeps the whole operator
     expressible as one deterministic plan — and one SQL oracle."""
-    from leader_graph_spark.graph.algorithms import min_propagation
+    from leader_graph_spark.graph.algorithms import connected_components
 
     pairs = minhash_near_duplicates(
         df,
@@ -971,7 +972,7 @@ def canonical_near_dup_docs(
     # splitting a dup chain into several clusters — round-5 advice
     # fix); the jump survives only as an accelerator that keeps the
     # full neighbor-round count, which buys nothing here.
-    labels = min_propagation(ids, edges, rounds=rounds)
+    labels = connected_components(ids, edges, max_iter=rounds)
     return labels.select(
         F.col("id").alias(id_col),
         F.col("component").alias("canonical_id"),

@@ -758,7 +758,8 @@ def kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     support for neighborhood signals (the same graph
     ``copurchase_link_prediction`` scores; a 1-core vertex can never
     contribute a shared-neighbor feature). Fixed {rounds}-round unroll
-    = the deterministic-oracle contract of ``min_propagation``/LPA:
+    = the deterministic-oracle contract of
+    ``connected_components(max_iter=…)`` and LPA:
     peeling is monotone and idempotent, equality to the true core
     holds whenever rounds ≥ peel depth (test-asserted: the shipped
     graph converges by round 4). Per round: one map-side-combinable

@@ -2,8 +2,8 @@
 expensive entry (round-4 VERDICT item 5).
 
 The shipped operator (``operators/dedup.py:canonical_near_dup_docs``)
-is MinHash-LSH candidate pairs -> 4 rounds of min-label propagation
-over a localCheckpoint'ed edge list -> min-id canonical election, all
+is MinHash-LSH candidate pairs -> 4 hops of min-label propagation
+(``connected_components(max_iter=4)``) -> min-id canonical election, all
 in one deterministic plan. This script times each stage behind an
 explicit materialization boundary so round 5 can tell whether cost
 growth comes from the pair-producing pipeline (corpus/shape-driven)
@@ -11,8 +11,9 @@ or from the propagation rounds (cluster-structure-driven):
 
   pairs       — MinHash signatures + banding + candidate join +
                 Jaccard filter, materialized via localCheckpoint
-  propagation — 4 chained (join + min-agg) rounds over the
-                checkpointed edges, labels materialized per round
+  propagation — 4 min-label hops over the materialized pairs: one
+                narrow checkpoint and one collect for a pair list
+                within ``DRIVER_CC_MAX_EDGES``, as in the shipped query
   election    — final keep/drop select + noop write
   shipped     — the registered query end-to-end, for reconciliation
                 (pairs + propagation + election should ~= shipped;
@@ -35,7 +36,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from leader_graph_spark.graph.algorithms import min_propagation, symmetrize
+from leader_graph_spark.graph.algorithms import connected_components, symmetrize
 from leader_graph_spark.operators import dedup
 from leader_graph_spark.operators.dedup import minhash_near_duplicates
 from leader_graph_spark.plans.dedup_queries import (
@@ -87,7 +88,7 @@ def _profile():
         n_pairs = pairs.count()
         timings["pairs"].append(round(time.perf_counter() - t0, 3))
 
-        # propagation: 4 rounds over already-materialized edges
+        # propagation: 4 hops over already-materialized edges
         docs_ids = (
             load_table(spark, SF_DIR, "documents")
             .select(F.col("doc_id").alias("id"))
@@ -95,7 +96,7 @@ def _profile():
         )
         edges = pairs.select(F.col("id_1").alias("src"), F.col("id_2").alias("dst"))
         t0 = time.perf_counter()
-        labels = min_propagation(docs_ids, edges, rounds=4)
+        labels = connected_components(docs_ids, edges, max_iter=4)
         labels.write.format("noop").mode("overwrite").save()
         timings["propagation"].append(round(time.perf_counter() - t0, 3))
 

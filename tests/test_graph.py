@@ -16,7 +16,6 @@ from leader_graph_spark.graph.algorithms import (
     degrees,
     label_propagation_fixed,
     merge_components,
-    min_propagation,
 )
 from leader_graph_spark.graph.derived import (
     current_colleague_edges,
@@ -145,7 +144,6 @@ def test_degrees(spark):
 def test_min_propagation_fixed_rounds_equals_converged(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from leader_graph_spark.graph.algorithms import connected_components, min_propagation
     from leader_graph_spark.operators.dedup import minhash_near_duplicates
     from leader_graph_spark.sources.tables import load_table
 
@@ -153,7 +151,9 @@ def test_min_propagation_fixed_rounds_equals_converged(spark, sf_dir):
     pairs = minhash_near_duplicates(docs, id_col="doc_id", text_col="text")
     ids = docs.select(F.col("doc_id").alias("id"))
     edges = pairs.select(F.col("id_1").alias("src"), F.col("id_2").alias("dst"))
-    fixed = {(r.id, r.component) for r in min_propagation(ids, edges, rounds=4).collect()}
+    fixed = {
+        (r.id, r.component) for r in connected_components(ids, edges, max_iter=4).collect()
+    }
     converged = {
         (r.id, r.component) for r in connected_components(ids, edges).collect()
     }
@@ -185,13 +185,11 @@ def test_khop_distance_strata(spark, sf_smoke):
 
 
 def _assert_min_propagation_labels(spark, edge_rows, rounds, want):
-    from leader_graph_spark.graph.algorithms import min_propagation
-
     edges = spark.createDataFrame(edge_rows, "src long, dst long")
     vertices = spark.createDataFrame([(i,) for i in want], "id long")
     got = {
         r.id: r.component
-        for r in min_propagation(vertices, edges, rounds=rounds).collect()
+        for r in connected_components(vertices, edges, max_iter=rounds).collect()
     }
     assert got == want
 
@@ -287,10 +285,16 @@ def test_two_phase_cc_round_count_beats_diameter(spark, monkeypatch):
     assert 1 <= star_rounds <= 12, star_rounds
 
     steps.clear()
+    hops = []
+    hop = alg._min_propagation_round
+    monkeypatch.setattr(
+        alg, "_min_propagation_round", lambda sym, labels: hops.append(1) or hop(sym, labels)
+    )
     monkeypatch.setattr(alg, "DRIVER_CC_MAX_EDGES", 0)
     out = connected_components(vertices, edges, max_iter=12)
     labels = {r.id: r.component for r in out.collect()}
-    assert steps.count("labels") == 1 + 12  # every round still changed a label
+    # 12 hops, two per checkpoint: every step's last hop still changed a label
+    assert len(hops) == 12 and steps.count("labels") == 6
     # after 12 hops a vertex knows the minimum within 12 steps of it
     assert labels[199] == 187 and labels[12] == 0
 
@@ -350,7 +354,7 @@ def test_merge_components_chained_batches(spark):
 
 
 def test_merge_components_driver_path_equals_distributed(spark, monkeypatch):
-    """The size-guarded driver-side union-find over the quotient graph
+    """The size-guarded driver solve of the quotient graph
     must be bit-identical to the distributed quotient CC it replaces
     (``cc.driverMaxEdges=0`` forces the loop, and the loop must run)."""
     from leader_graph_spark.graph import algorithms
@@ -419,6 +423,35 @@ def test_merge_components_loop_adds_no_quotient_checkpoint(spark, monkeypatch):
     assert via_loop == via_driver
     assert {c for i, c in via_loop if i in (1, 2, 3, 4, 9, 10)} == {1}
     assert merge_jobs == cc_jobs > 0
+
+
+def test_merge_components_loop_symmetrizes_the_quotient_once(spark, sf_dir):
+    """Past ``DRIVER_CC_MAX_EDGES`` (patched to 0) the quotient graph of
+    ``incremental_component_merge`` enters the loop symmetrized and
+    de-duplicated once, by the gate: the optimized plan of the loop's
+    base checkpoint holds as many Aggregate and Union nodes as the base
+    CC's edge set, the bloom-filter aggregates of runtime join filters
+    aside (a quotient built from ``symmetrize(new_edges)`` and ended in
+    ``distinct()`` was symmetrized again: 5 and 3)."""
+    from leader_graph_spark.plans import REGISTRY
+
+    def nodes(plan: str, name: str) -> int:
+        return len(re.findall(rf"(?m)^[\s:+|-]*{name} (?!\[bloom_filter_agg)", plan))
+
+    bases = []
+    enter = alg._Loop.__enter__
+
+    def spy(loop):
+        plan = loop._input._jdf.queryExecution().optimizedPlan().toString()
+        bases.append((nodes(plan, "Aggregate"), nodes(plan, "Union")))
+        return enter(loop)
+
+    with mock.patch.object(alg, "DRIVER_CC_MAX_EDGES", 0), mock.patch.object(
+        alg._Loop, "__enter__", spy
+    ):
+        REGISTRY["incremental_component_merge"].spark(spark, sf_dir)
+    base_cc, quotient = bases
+    assert quotient == base_cc == (1, 1), bases
 
 
 def test_personalized_pagerank_decays_from_seeds(spark):
@@ -531,9 +564,9 @@ def test_iterative_loops_release_superseded_checkpoints(spark):
         "personalized pagerank": lambda: alg.personalized_pagerank_fixed_point(
             edges, seeds, iterations=8
         ),
-        "min_propagation": lambda: alg.min_propagation(vertices, edges, rounds=6),
-        "min_propagation loop": lambda: loop_branch(
-            lambda: alg.min_propagation(vertices, edges, rounds=6)
+        "CC 6 hops": lambda: alg.connected_components(vertices, edges, max_iter=6),
+        "CC 6 hops loop": lambda: loop_branch(
+            lambda: alg.connected_components(vertices, edges, max_iter=6)
         ),
         "khop": lambda: alg.khop_distances(edges, seeds, k=6),
         "multi-source": lambda: alg.multi_source_distances(edges, pivots, k=6),
@@ -1150,60 +1183,86 @@ def test_skew_guarded_pairs_hot_key_split_exact(spark):
 
 
 def test_connected_components_driver_and_loop_paths_agree(spark):
-    """ADVICE r10: the default driverMaxEdges guard routes every
-    unit-scale graph through the driver union-find, leaving the
-    distributed loop untested. Force DRIVER_CC_MAX_EDGES=0 and pin the two
-    paths equal — same pattern as the kcore and LCC dual-path tests —
-    on the inputs the driver read's Python de-duplication must get
-    right (duplicate rows, both directions of an edge, a self-loop, a
-    null endpoint, bigint ids past 2**53), and at the smallest limit one
-    of the two observed counts meets — raw rows <= limit < symmetric
-    pairs (solved from the raw rows) and raw rows > limit >= symmetric
-    pairs (solved from the symmetric checkpoint) — and one below it,
-    where the loop runs over that symmetric checkpoint."""
+    """The default ``DRIVER_CC_MAX_EDGES`` routes every unit-scale graph
+    through the driver kernel; forcing the loop (limit 0) must give the
+    same labels, converged and hop for hop: a ``max_iter`` below a
+    path's diameter leaves it unconverged the same way on both branches.
+    The inputs carry what the driver graph's de-duplication must get
+    right (duplicate rows, both directions of an edge, self-loops, null
+    endpoints, isolated vertices, bigint ids past 2**53), an empty and
+    an all-null edge set, and each runs at the smallest limit one of the
+    two observed counts meets — raw rows <= limit < symmetric pairs
+    (solved from the raw rows) and raw rows > limit >= symmetric pairs
+    (solved from the symmetric checkpoint) — and one below it, where
+    the loop runs over that symmetric checkpoint."""
     big = 2**62
-    cases = [
+    converged = [
         (
+            "strings",
             [("a", "b"), ("a", "b"), ("b", "a"), ("b", "c"), ("x", "y"), ("x", "x"),
              ("p", "q"), ("q", "r"), ("r", "s"), ("n", None), (None, "m")],
             list("abcxypqrsnm") + ["z", None],
             "string",
         ),
         (
+            "bigints",
             [(big + 3, big + 1), (big + 1, big + 3), (big + 2, big + 1),
              (7, 5), (7, 5), (5, 7), (7, 5), (5, 5), (5, 5)],
             [big + 1, big + 2, big + 3, 5, 7, 9],
             "bigint",
         ),
+        ("empty", [], ["a", "b", None], "string"),
+        ("all null", [(None, None), (None, None)], ["a", None], "string"),
+    ]
+    bounded = [
+        (
+            "string path",
+            [("e", "d"), ("d", "c"), ("c", "b"), ("b", "a"), ("e", "d"), ("x", "x"),
+             ("y", "x"), ("n", None), (None, "m")],
+            list("abcdexynm") + ["z", None],
+            "string",
+        ),
+        (
+            "bigint path",
+            [(big + 5, big + 4), (big + 4, big + 3), (big + 3, big + 1), (7, 5), (5, 7),
+             (5, 5), (9, None)],
+            [big + 1, big + 3, big + 4, big + 5, 5, 7, 9, 11],
+            "bigint",
+        ),
+    ]
+    cases = [(*c, 25) for c in converged] + [
+        (*c, max_iter) for c in bounded for max_iter in (1, 2, 5)
     ]
 
-    def labels(edges, verts, limit=alg.DRIVER_CC_MAX_EDGES):
+    def labels(edges, verts, max_iter, limit=alg.DRIVER_CC_MAX_EDGES):
         with mock.patch.object(alg, "DRIVER_CC_MAX_EDGES", limit):
-            out = connected_components(verts, edges)
+            out = connected_components(verts, edges, max_iter=max_iter)
             return {(r.id, r.component) for r in out.collect()}, out
 
-    by_case = []
-    for rows, ids, id_type in cases:
+    by_case = {}
+    for name, rows, ids, id_type, max_iter in cases:
         edges = spark.createDataFrame(rows, f"src {id_type}, dst {id_type}")
         verts = spark.createDataFrame([(v,) for v in ids], f"id {id_type}")
-        via_driver, driver_out = labels(edges, verts)
+        via_driver, driver_out = labels(edges, verts, max_iter)
         # the driver labels enter the plan as an Arrow LocalRelation, not
         # a LogicalRDD over Python workers
         assert "LocalRelation" in driver_out._jdf.queryExecution().analyzed().toString()
-        via_loop = labels(edges, verts, 0)[0]
-        assert via_driver == via_loop
-        by_case.append(via_driver)
+        via_loop = labels(edges, verts, max_iter, 0)[0]
+        assert via_driver == via_loop, (name, max_iter)
+        assert len(via_driver) == len(set(ids))
+        by_case[name, max_iter] = via_driver
         n_raw = len(rows)
         n_sym = len({(s, d) for s, d in rows} | {(d, s) for s, d in rows})
-        assert n_raw != n_sym
+        if n_raw == n_sym:
+            continue
         boundary = min(n_raw, n_sym)
         for limit, on_driver in ((boundary, True), (boundary - 1, False)):
-            at_limit, out = labels(edges, verts, limit)
+            at_limit, out = labels(edges, verts, max_iter, limit)
             plan = out._jdf.queryExecution().analyzed().toString()
             assert ("LocalRelation" in plan) == on_driver, f"limit {limit}: wrong branch"
             assert at_limit == via_loop, f"driver limit {limit} disagrees with the loop"
 
-    via_driver = by_case[0]
+    via_driver = by_case["strings", 25]
     assert ("z", "z") in via_driver  # isolated vertex keeps its own label
     assert {c for i, c in via_driver if i in tuple("pqrs")} == {"p"}
     assert {c for i, c in via_driver if i in tuple("abc")} == {"a"}
@@ -1211,53 +1270,16 @@ def test_connected_components_driver_and_loop_paths_agree(spark):
     # a null endpoint joins nothing: n and m stay their own components,
     # and the null vertex has no label
     assert {("n", "n"), ("m", "m"), (None, None)} <= via_driver
-
-
-def test_min_propagation_driver_and_loop_paths_agree(spark):
-    """``min_propagation`` solves small graphs on the driver; forcing
-    the loop (``DRIVER_CC_MAX_EDGES=0``) gives the same labels hop for hop:
-    fewer rounds than a path's diameter leave it unconverged the same
-    way on both branches. The inputs carry duplicate rows, both
-    directions of an edge, self-loops, null endpoints, isolated
-    vertices and bigint ids past 2**53."""
-    big = 2**62
-    cases = [
-        (
-            [("e", "d"), ("d", "c"), ("c", "b"), ("b", "a"), ("e", "d"), ("x", "x"),
-             ("y", "x"), ("n", None), (None, "m")],
-            list("abcdexynm") + ["z", None],
-            "string",
-        ),
-        (
-            [(big + 5, big + 4), (big + 4, big + 3), (big + 3, big + 1), (7, 5), (5, 7),
-             (5, 5), (9, None)],
-            [big + 1, big + 3, big + 4, big + 5, 5, 7, 9, 11],
-            "bigint",
-        ),
-    ]
-    labels = {}
-    for rows, ids, id_type in cases:
-        edges = spark.createDataFrame(rows, f"src {id_type}, dst {id_type}")
-        verts = spark.createDataFrame([(v,) for v in ids], f"id {id_type}")
-        for rounds in (1, 2, 5):
-            with mock.patch.object(
-                alg, "_driver_min_propagation", wraps=alg._driver_min_propagation
-            ) as solve:
-                driver = {tuple(r) for r in min_propagation(verts, edges, rounds=rounds).collect()}
-                assert solve.called
-                solve.reset_mock()
-                with mock.patch.object(alg, "DRIVER_CC_MAX_EDGES", 0):
-                    loop = {tuple(r) for r in min_propagation(verts, edges, rounds=rounds).collect()}
-                assert not solve.called
-            assert driver == loop, (id_type, rounds)
-            assert len(driver) == len(set(ids))
-            labels[id_type, rounds] = driver
-    # two hops from the path's minimum reach c, not d; a null endpoint
-    # joins nothing
-    assert {("c", "a"), ("d", "b"), ("z", "z"), ("y", "x"), ("n", "n"), (None, None)} <= (
-        labels["string", 2]
-    )
-    assert ("e", "a") in labels["string", 5]
+    # two hops from the path's minimum reach c, not d (converged, d
+    # would be labelled a)
+    assert {("c", "a"), ("d", "b"), ("e", "c"), ("z", "z"), ("y", "x"), ("n", "n"),
+            (None, None)} <= by_case["string path", 2]
+    assert ("e", "a") in by_case["string path", 5] and ("c", "b") in by_case["string path", 1]
+    assert (big + 5, big + 3) in by_case["bigint path", 2]
+    assert (big + 5, big + 1) in by_case["bigint path", 5]
+    # no edge, or only null ones: every vertex is its own component
+    assert by_case["empty", 25] == {("a", "a"), ("b", "b"), (None, None)}
+    assert by_case["all null", 25] == {("a", "a"), (None, None)}
 
 
 def test_connected_components_small_graph_solves_on_driver(spark):
@@ -1301,6 +1323,6 @@ def test_checkpoint_serialized_rejects_bad_value(spark, value):
         with pytest.raises(ValueError, match=re.escape(CKPT_SER_CONF)):
             label_propagation_fixed(edges, rounds=1)
         with pytest.raises(ValueError, match=re.escape(CKPT_SER_CONF)):
-            min_propagation(verts, edges, rounds=1)
+            merge_components(verts.select("id", F.col("id").alias("component")), edges)
     finally:
         spark.conf.unset(CKPT_SER_CONF)

@@ -196,6 +196,12 @@ def test_empty_edge_set(spark):
     assert _both_branches(df, 2) == ({}, {})
 
 
+def test_all_null_edge_set(spark):
+    # every endpoint null: the null vertex is the only one, and it keeps
+    # its null label on both branches
+    assert _run(spark, [(None, None), (None, None)], 2) == {None: None}
+
+
 @pytest.mark.parametrize("rounds", [1, 2, 3, 4])
 def test_count_ties_on_random_graph(spark, rounds):
     # a sparse random graph (mean degree 2.5): most vertices see several

@@ -31,7 +31,7 @@ BENCH_BUDGETS: dict[str, tuple[float, int]] = {
     # the per-round guard (VERDICT r9 Next #7); measured at sf0.001
     # in round 10 (0.0 MB / 3 jobs — broadcast-only at smoke scale)
     "current_colleague_customers": (0.5, 5),
-    # round-8 min_propagation static scope: measured 15
+    # round-8 static scope for its min-label loop: measured 15
     "dedup_canonical_docs": (1.1, 22),
     "dup_span_coverage": (2.5, 10),
     "events_tumbling_hourly": (0.2, 5),
@@ -42,7 +42,7 @@ BENCH_BUDGETS: dict[str, tuple[float, int]] = {
     "hourly_gap_filled_series": (0.2, 7),
     "image_phash_codec_roundtrip": (0.01, 4),
     # probes fused into checkpoint jobs + driver-side quotient
-    # union-find (round 7): 105 -> 62 and 17 -> 13 driver actions;
+    # solve (round 7): 105 -> 62 and 17 -> 13 driver actions;
     # static-loop execution (round 8) cut the AQE sub-jobs: measured 38
     "incremental_component_merge": (1.3, 48),
     # tightened after the bipartite symmetrize fast path dropped the
@@ -85,8 +85,8 @@ BENCH_BUDGETS: dict[str, tuple[float, int]] = {
 # them at DEDUP_DRIVER_MAX_BYTES=0 (measured at sf0.001: 0.42 MB / 5 jobs
 # and 0.43 MB / 9 jobs). These bound the driver branch the lanes take
 # by default, measured at 0 MB / 2 jobs (the collect and the action)
-# and 0.008 MB / 6 jobs (min_propagation solves the collected pair list
-# on the driver too; 0.028 MB / 14 jobs while it ran its loop).
+# and 0.008 MB / 6 jobs (connected_components solves the collected pair
+# list on the driver too; 0.028 MB / 14 jobs while it ran its loop).
 DRIVER_MINHASH_BUDGETS: dict[str, tuple[float, int]] = {
     "minhash_near_dup_docs": (0.0, 3),
     "dedup_canonical_docs": (0.03, 8),

@@ -259,8 +259,8 @@ def test_canonical_docs_both_branches(spark):
 
 def test_canonical_docs_propagation_driver_equals_loop(spark, sf_dir):
     """The registry's ``dedup_canonical_docs`` at sf0.01: after the
-    MinHash collect, ``min_propagation`` solves the pair list on the
-    driver, so the build runs three jobs (the collect, the raw-edge
+    MinHash collect, ``connected_components(max_iter=rounds)`` solves
+    the pair list on the driver, so the build runs three jobs (the collect, the raw-edge
     checkpoint and its Arrow collect) instead of a checkpoint per two
     hops and the broadcast builds of their joins; forcing the loop
     (``DRIVER_CC_MAX_EDGES`` patched to 0) gives the same rows."""
