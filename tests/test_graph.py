@@ -1182,57 +1182,15 @@ def test_skew_guarded_pairs_hot_key_split_exact(spark):
             assert "pmod(xxhash64" in plan and "Generate explode" in plan
 
 
-def test_connected_components_driver_and_loop_paths_agree(spark):
-    """The default ``DRIVER_CC_MAX_EDGES`` routes every unit-scale graph
-    through the driver kernel; forcing the loop (limit 0) must give the
-    same labels, converged and hop for hop: a ``max_iter`` below a
-    path's diameter leaves it unconverged the same way on both branches.
-    The inputs carry what the driver graph's de-duplication must get
-    right (duplicate rows, both directions of an edge, self-loops, null
-    endpoints, isolated vertices, bigint ids past 2**53), an empty and
-    an all-null edge set, and each runs at the smallest limit one of the
-    two observed counts meets — raw rows <= limit < symmetric pairs
+def _driver_and_loop_labels(spark, cases):
+    """Labels of ``connected_components`` per ``(name, max_iter)`` case,
+    asserting that the driver kernel (the default ``DRIVER_CC_MAX_EDGES``
+    routes every unit-scale graph to it) and the forced loop (limit 0)
+    agree hop for hop. Each case also runs at the smallest limit one of
+    the two observed counts meets — raw rows <= limit < symmetric pairs
     (solved from the raw rows) and raw rows > limit >= symmetric pairs
-    (solved from the symmetric checkpoint) — and one below it, where
-    the loop runs over that symmetric checkpoint."""
-    big = 2**62
-    converged = [
-        (
-            "strings",
-            [("a", "b"), ("a", "b"), ("b", "a"), ("b", "c"), ("x", "y"), ("x", "x"),
-             ("p", "q"), ("q", "r"), ("r", "s"), ("n", None), (None, "m")],
-            list("abcxypqrsnm") + ["z", None],
-            "string",
-        ),
-        (
-            "bigints",
-            [(big + 3, big + 1), (big + 1, big + 3), (big + 2, big + 1),
-             (7, 5), (7, 5), (5, 7), (7, 5), (5, 5), (5, 5)],
-            [big + 1, big + 2, big + 3, 5, 7, 9],
-            "bigint",
-        ),
-        ("empty", [], ["a", "b", None], "string"),
-        ("all null", [(None, None), (None, None)], ["a", None], "string"),
-    ]
-    bounded = [
-        (
-            "string path",
-            [("e", "d"), ("d", "c"), ("c", "b"), ("b", "a"), ("e", "d"), ("x", "x"),
-             ("y", "x"), ("n", None), (None, "m")],
-            list("abcdexynm") + ["z", None],
-            "string",
-        ),
-        (
-            "bigint path",
-            [(big + 5, big + 4), (big + 4, big + 3), (big + 3, big + 1), (7, 5), (5, 7),
-             (5, 5), (9, None)],
-            [big + 1, big + 3, big + 4, big + 5, 5, 7, 9, 11],
-            "bigint",
-        ),
-    ]
-    cases = [(*c, 25) for c in converged] + [
-        (*c, max_iter) for c in bounded for max_iter in (1, 2, 5)
-    ]
+    (solved from the symmetric checkpoint) — and one below it, where the
+    loop runs over that symmetric checkpoint."""
 
     def labels(edges, verts, max_iter, limit=alg.DRIVER_CC_MAX_EDGES):
         with mock.patch.object(alg, "DRIVER_CC_MAX_EDGES", limit):
@@ -1261,6 +1219,35 @@ def test_connected_components_driver_and_loop_paths_agree(spark):
             plan = out._jdf.queryExecution().analyzed().toString()
             assert ("LocalRelation" in plan) == on_driver, f"limit {limit}: wrong branch"
             assert at_limit == via_loop, f"driver limit {limit} disagrees with the loop"
+    return by_case
+
+
+def test_connected_components_driver_and_loop_paths_agree(spark):
+    """Converged labels agree on the driver and in the loop. The inputs
+    carry what the driver graph's de-duplication must get right
+    (duplicate rows, both directions of an edge, self-loops, null
+    endpoints, isolated vertices, bigint ids past 2**53), an empty and
+    an all-null edge set."""
+    big = 2**62
+    converged = [
+        (
+            "strings",
+            [("a", "b"), ("a", "b"), ("b", "a"), ("b", "c"), ("x", "y"), ("x", "x"),
+             ("p", "q"), ("q", "r"), ("r", "s"), ("n", None), (None, "m")],
+            list("abcxypqrsnm") + ["z", None],
+            "string",
+        ),
+        (
+            "bigints",
+            [(big + 3, big + 1), (big + 1, big + 3), (big + 2, big + 1),
+             (7, 5), (7, 5), (5, 7), (7, 5), (5, 5), (5, 5)],
+            [big + 1, big + 2, big + 3, 5, 7, 9],
+            "bigint",
+        ),
+        ("empty", [], ["a", "b", None], "string"),
+        ("all null", [(None, None), (None, None)], ["a", None], "string"),
+    ]
+    by_case = _driver_and_loop_labels(spark, [(*c, 25) for c in converged])
 
     via_driver = by_case["strings", 25]
     assert ("z", "z") in via_driver  # isolated vertex keeps its own label
@@ -1270,16 +1257,44 @@ def test_connected_components_driver_and_loop_paths_agree(spark):
     # a null endpoint joins nothing: n and m stay their own components,
     # and the null vertex has no label
     assert {("n", "n"), ("m", "m"), (None, None)} <= via_driver
+    # no edge, or only null ones: every vertex is its own component
+    assert by_case["empty", 25] == {("a", "a"), ("b", "b"), (None, None)}
+    assert by_case["all null", 25] == {("a", "a"), (None, None)}
+
+
+def test_min_propagation_driver_and_loop_paths_agree(spark):
+    """Fixed-round propagation (``max_iter`` below a path's diameter)
+    leaves it unconverged the same way on the driver and in the loop.
+    The inputs carry duplicate rows, both directions of an edge,
+    self-loops, null endpoints, isolated vertices and bigint ids past
+    2**53."""
+    big = 2**62
+    bounded = [
+        (
+            "string path",
+            [("e", "d"), ("d", "c"), ("c", "b"), ("b", "a"), ("e", "d"), ("x", "x"),
+             ("y", "x"), ("n", None), (None, "m")],
+            list("abcdexynm") + ["z", None],
+            "string",
+        ),
+        (
+            "bigint path",
+            [(big + 5, big + 4), (big + 4, big + 3), (big + 3, big + 1), (7, 5), (5, 7),
+             (5, 5), (9, None)],
+            [big + 1, big + 3, big + 4, big + 5, 5, 7, 9, 11],
+            "bigint",
+        ),
+    ]
+    by_case = _driver_and_loop_labels(
+        spark, [(*c, max_iter) for c in bounded for max_iter in (1, 2, 5)]
+    )
     # two hops from the path's minimum reach c, not d (converged, d
-    # would be labelled a)
+    # would be labelled a); a null endpoint joins nothing
     assert {("c", "a"), ("d", "b"), ("e", "c"), ("z", "z"), ("y", "x"), ("n", "n"),
             (None, None)} <= by_case["string path", 2]
     assert ("e", "a") in by_case["string path", 5] and ("c", "b") in by_case["string path", 1]
     assert (big + 5, big + 3) in by_case["bigint path", 2]
     assert (big + 5, big + 1) in by_case["bigint path", 5]
-    # no edge, or only null ones: every vertex is its own component
-    assert by_case["empty", 25] == {("a", "a"), ("b", "b"), (None, None)}
-    assert by_case["all null", 25] == {("a", "a"), (None, None)}
 
 
 def test_connected_components_small_graph_solves_on_driver(spark):
