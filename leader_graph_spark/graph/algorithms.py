@@ -28,6 +28,15 @@ itself (``tests/test_loop_lint.py`` fails when one does):
 - A superseded state is released only after its successor has
   materialized, and every state the result does not reference is
   released when the loop exits.
+
+One relaxation loop. BFS (``khop_distances``, ``multi_source_distances``),
+``weighted_sssp``, ``temporal_earliest_arrival``, the loop branch of
+connected components and both phases of SCC (forward colouring, backward
+mark) differ only in their relax rule, and all run :func:`_min_relax`: a
+per-key minimum folded from candidate values, where only the keys that
+improved in the last hop send their value on, one checkpoint per step
+with the improved count observed on the same job, and a stop at the
+first step that improves nothing.
 """
 
 from __future__ import annotations
@@ -693,9 +702,10 @@ def connected_components(
     return _with_isolated(vertices, _edge_components(edges, max_iter=max_iter))
 
 
-# Min-label hops composed into one checkpointed step of the CC loop: a
-# pure plan-shape constant (the labels are those of as many single
-# hops) that halves the materialization barriers. At sf0.1 each
+# Relaxation hops composed into one checkpointed step of a dense
+# :func:`_min_relax` (CC, SCC colouring): a pure plan-shape constant
+# (the labels are those of as many single hops) that halves the
+# materialization barriers. At sf0.1 each
 # checkpoint costs ~0.3 s of fixed scheduler latency (SCALE.md round-4).
 _HOPS_PER_STEP = 2
 
@@ -710,47 +720,33 @@ def _edge_components(edges: DataFrame, *, max_iter: int) -> DataFrame:
     checkpointed rounds — at sf0.1 the base-CC loop of
     incremental_component_merge was ~20 stages of near-zero CPU, pure
     scheduling barriers. A 100 TB edge set never collects: the guard
-    reads the OBSERVED count, not an estimate."""
-    with _driver_or_loop(edges, key="dst") as (graph, loop):
+    reads the OBSERVED count, not an estimate.
+
+    The loop seeds every edge vertex with its own id and relaxes
+    neighbour labels (:func:`_min_relax`, dense): ``max_iter`` hops,
+    ``_HOPS_PER_STEP`` per checkpoint, until a step's last hop changes
+    no label. Only the vertices whose label changed in the last hop
+    send it on, which is exact at every hop count: an unchanged
+    neighbour's label was folded in the hop before. Edge-less vertices
+    are never in the state (on a 100 TB corpus the dup-pair graph
+    touches a few percent of docs)."""
+    with _driver_or_loop(edges, key="src") as (graph, loop):
         if loop is None:
             return _driver_labels(
                 edges.sparkSession, graph, _min_label_hops(graph, max_iter), "component"
             )
-        # _HOPS_PER_STEP hops per checkpoint, ``max_iter`` in all, until a
-        # step's last hop changes no label; the ``changed`` probe is a
-        # free column of that hop's join. max_iter 0 still checkpoints
-        # the initial labels.
-        labels = _active_vertices(loop.base)
-        for done in range(0, max(max_iter, 1), _HOPS_PER_STEP):
-            for _ in range(min(_HOPS_PER_STEP, max_iter - done)):
-                labels = _min_propagation_round(loop.base, labels)
-            labels = loop.step(
-                "labels", labels, changed=F.sum(F.col("_changed").cast("long"))
-            )
-            if not loop.seen["changed"]:
-                break
-        loop.keep("labels")
-    return labels.select("id", "component")
-
-
-def _active_vertices(sym: DataFrame) -> DataFrame:
-    """Initial labels over ONLY the vertices that appear in an edge,
-    each its own component and counted as changed.
-
-    A vertex with no edge is its own component by definition — dragging
-    it through every propagation round just multiplies the shuffled
-    label state (on a 100 TB corpus the dup-pair graph touches a few
-    percent of docs; propagating over all of them is a ~25-50× larger
-    state than the active subgraph). At sf0.1-local this is
-    time-neutral (per-round cost there is scheduler/checkpoint fixed
-    overhead — measured 1.15s for 4 rounds with either label set); the
-    win is the shuffled-state reduction, which only matters once label
-    state dwarfs fixed costs."""
-    return (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("component"), F.lit(True).alias("_changed"))
-    )
+        sym = loop.base
+        labels = _min_relax(
+            loop,
+            sym,
+            sym.select(F.col("src").alias("id"), F.col("src").alias("component")),
+            "component",
+            _to_dst("component"),
+            rounds=max_iter,
+            dense=True,
+        )
+        loop.keep("state")
+    return labels
 
 
 def _with_isolated(vertices: DataFrame, labels: DataFrame) -> DataFrame:
@@ -766,22 +762,6 @@ def _with_isolated(vertices: DataFrame, labels: DataFrame) -> DataFrame:
     recursive oracle's GROUP BY emitted the set."""
     return vertices.select("id").distinct().join(labels, "id", "left").select(
         "id", F.coalesce("component", F.col("id")).alias("component")
-    )
-
-
-def _min_propagation_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
-    """One min-label hop: (id, component, _changed) from (id, component)."""
-    neighbor_min = (
-        sym.join(labels, sym.dst == labels.id)
-        .groupBy(F.col("src").alias("id"))
-        .agg(F.min("component").alias("neighbor_component"))
-    )
-    new_comp = F.least(
-        F.col("component"),
-        F.coalesce(F.col("neighbor_component"), F.col("component")),
-    )
-    return labels.join(neighbor_min, "id", "left").select(
-        "id", new_comp.alias("component"), (new_comp != F.col("component")).alias("_changed")
     )
 
 
@@ -963,12 +943,21 @@ def khop_distances(
     """Multi-source BFS over the undirected view: shortest hop distance
     (≤ ``k``) from ANY source vertex — the "everyone within N hops of
     X" reachability query of a leadership/social graph. One merged
-    frontier (:func:`_lane_bfs` with lane ``["id"]``).
+    frontier: unit-cost :func:`_min_relax` keyed by ``id``, where
+    "improved" means "reached for the first time", so total work is
+    O(edges within k hops), not O(walks).
 
-    Returns (id, dist) for every vertex reachable within k hops;
-    sources themselves are dist 0 (``dist`` INT).
+    Returns (id, dist) for every vertex reachable within k hops, one
+    row per vertex; sources themselves are dist 0 (``dist`` INT).
     """
-    return _lane_bfs(edges, sources.select("id", F.lit(0).alias("dist")), ["id"], k)
+    return _delta_relax(
+        symmetrize(edges),
+        sources.select("id", F.lit(0).alias("dist")),
+        "dist",
+        _to_dst((F.col("dist") + 1).alias("dist")),
+        rounds=k,
+        key="src",
+    )
 
 
 def multi_source_distances(
@@ -979,8 +968,8 @@ def multi_source_distances(
     (closeness, harmonic, eccentricity estimates), where
     ``khop_distances``' single merged frontier only answers "distance
     from ANY source". State and frontier carry (id, pivot) pairs
-    (:func:`_lane_bfs` with lane ``["id", "pivot"]``), so per-round work
-    is bounded by |V| x |pivots| rather than walks. At scale the pivot
+    (:func:`_min_relax` with lane ``pivot``), so per-round work is
+    bounded by |V| x |pivots| rather than walks. At scale the pivot
     set is the sampling knob: Eppstein-Wang style centrality estimation
     keeps |pivots| fixed as V grows, so the state stays a constant
     multiple of the vertex set.
@@ -988,58 +977,22 @@ def multi_source_distances(
     Returns (id, pivot, dist) for every vertex within k hops of each
     pivot; each pivot itself appears at dist 0 (``dist`` BIGINT).
     """
-    # dedupe seeds: a pivot id supplied twice (e.g. a dimension
-    # table replicated at a scale twin) would otherwise plant
-    # duplicate (id, pivot) dist-0 lanes that the per-lane
-    # anti-join preserves forever, inflating every count built on
-    # the result (caught by the sf1 replica, where nation rows are
-    # duplicated 10x and n_reached read 14 instead of 5).
-    seeds = (
-        pivots.select("id")
-        .distinct()
-        .select("id", F.col("id").alias("pivot"), F.lit(0).cast("bigint").alias("dist"))
+    return _delta_relax(
+        symmetrize(edges),
+        pivots.select("id", F.col("id").alias("pivot"), F.lit(0).cast("bigint").alias("dist")),
+        "dist",
+        _to_dst("pivot", (F.col("dist") + 1).alias("dist")),
+        rounds=k,
+        key="src",
+        lane=("pivot",),
     )
-    return _lane_bfs(edges, seeds, ["id", "pivot"], k)
 
 
-def _lane_bfs(edges: DataFrame, seeds: DataFrame, lane: list[str], k: int) -> DataFrame:
-    """Pregel-style frontier expansion over the undirected view, exactly
-    ``k`` fixed rounds (no convergence action, so an unrolled SQL oracle
-    reproduces it). ``seeds`` carries the ``lane`` columns (``id`` first)
-    plus ``dist`` 0, whose type every round keeps. Each round joins the
-    frontier to the edge list (shuffle keyed by vertex id — the BFS
-    shape GraphFrames/GraphX compile to), and an anti-join against the
-    visited set on the whole lane keeps every lane's FIRST (= minimum)
-    hop count and stops re-expansion, so total work is O(edges within k
-    hops), not O(walks). An empty frontier makes remaining rounds no-ops
-    (joins against zero rows), keeping the plan deterministic for the
-    oracle rather than data-dependent."""
-    with _Loop(symmetrize(edges), key="src") as loop:
-        sym = loop.base
-        visited = loop.step("visited", seeds)
-        dist_type = visited.schema["dist"].dataType
-        frontier = visited.select(*lane)
-        for r in range(1, k + 1):
-            frontier = loop.step(
-                "frontier",
-                sym.join(frontier, sym.src == frontier.id)
-                .select(F.col("dst").alias("id"), *lane[1:])
-                .distinct()
-                .join(visited, lane, "left_anti"),
-            )
-            visited = loop.step(
-                "visited",
-                visited.unionByName(
-                    frontier.select(*lane, F.lit(r).cast(dist_type).alias("dist"))
-                ),
-            )
-        loop.keep("visited")
-    return visited
-
-
-def _min_fold(state: DataFrame, relaxed: DataFrame, col: str) -> DataFrame:
+def _min_fold(
+    state: DataFrame, relaxed: DataFrame, col: str, keys: tuple = ("id",)
+) -> DataFrame:
     """One-exchange min-fold of a relaxation stream into the running
-    per-vertex minimum state (r10 optimization, guide §2.2/§3.2).
+    per-key minimum state (r10 optimization, guide §2.2/§3.2).
 
     Replaces the loop-round full-outer join + ``least`` fold — whose
     per-round cost was TWO exchanges (the state side of the
@@ -1049,71 +1002,161 @@ def _min_fold(state: DataFrame, relaxed: DataFrame, col: str) -> DataFrame:
     partial aggregate before it ever shuffles (the candidate-side
     pre-``groupBy`` the join form needed as a separate exchange).
 
-    Equivalence to ``state FULL OUTER JOIN min(relaxed) ON id``:
-    the state is one row per id (seeds are deduped and every fold
-    groups by id), so the per-id min over the union splits exactly
-    into (old value, min of candidates); ``least`` skips nulls in
-    both forms; ``_improved`` matches the join form's
+    Equivalence to ``state FULL OUTER JOIN min(relaxed) ON keys``:
+    the state is one row per key (seeds are folded and every fold
+    groups by the key), so the per-key min over the union splits
+    exactly into (old value, min of candidates); ``least`` skips nulls
+    in both forms; ``_improved`` matches the join form's
     ``old.isNull() | (new < old)`` case-for-case (no old row → true;
     no candidate → false/null, which filters and sum-counts the same;
-    both present → strict improvement). Pinned by
+    both present → strict improvement), except that a key whose old
+    value is null (CC's null vertex) is not improved forever. Pinned by
     ``test_min_fold_equals_full_outer_fold``.
 
-    ``state`` carries (id, <col>); ``relaxed`` carries candidate
-    (id, <col>) rows, many per id allowed. Returns
-    (id, n<col>, _improved)."""
+    ``state`` carries (*keys, <col>); ``relaxed`` carries candidate
+    (*keys, <col>) rows, many per key allowed. Returns
+    (*keys, <col>, _improved)."""
     tagged = state.select(
-        "id", F.col(col).alias("_v"), F.lit(True).alias("_old")
+        *keys, F.col(col).alias("_v"), F.lit(True).alias("_old")
     ).unionByName(
-        relaxed.select("id", F.col(col).alias("_v"), F.lit(False).alias("_old"))
+        relaxed.select(*keys, F.col(col).alias("_v"), F.lit(False).alias("_old"))
     )
     return (
-        tagged.groupBy("id")
+        tagged.groupBy(*keys)
         .agg(
+            F.max("_old").alias("_had"),
             F.min(F.when(F.col("_old"), F.col("_v"))).alias("_oldv"),
             F.min(F.when(~F.col("_old"), F.col("_v"))).alias("_newv"),
         )
         .select(
-            "id",
-            F.least(F.col("_oldv"), F.col("_newv")).alias("n" + col),
-            (
-                F.col("_oldv").isNull() | (F.col("_newv") < F.col("_oldv"))
-            ).alias("_improved"),
+            *keys,
+            F.least(F.col("_oldv"), F.col("_newv")).alias(col),
+            (~F.col("_had") | (F.col("_newv") < F.col("_oldv"))).alias("_improved"),
         )
     )
+
+
+def _to_dst(*cols):
+    """Relax rule that sends ``cols`` (names or columns) to each edge's
+    ``dst``: candidate rows (id = dst, *cols)."""
+    return lambda e: e.select(F.col("dst").alias("id"), *cols)
+
+
+def _min_relax(
+    loop: _Loop,
+    edges: DataFrame,
+    seeds: DataFrame,
+    col: str,
+    relax,
+    *,
+    rounds: int,
+    lane: tuple = (),
+    dense: bool = False,
+    slot="state",
+    must_converge: str | None = None,
+) -> DataFrame:
+    """The module's one min-relaxation loop, run inside ``loop``: BFS,
+    SSSP, temporal arrival, connected components and both SCC phases
+    are this loop with their own relax rule.
+
+    The state holds the minimum ``col`` per key, the key being ``id``
+    plus the ``lane`` columns. It starts as the fold of ``seeds``
+    (*keys, ``col``), so duplicate seeds give one row per key. A hop
+    joins ``edges`` to the frontier on ``src = id``; ``relax`` maps the
+    joined rows to candidate (*keys, ``col``) rows, and
+    :func:`_min_fold` folds them into the state. The frontier is the
+    keys whose value improved in the last hop — provably enough,
+    because min-folding is monotone: a key that did not improve sent
+    its value in the hop where it last did — and it takes a broadcast
+    hint when its count, observed on the checkpoint that made it, is
+    small (:meth:`_Loop.broadcast`).
+
+    Each checkpoint, into ``slot``, holds the state with its
+    ``_improved`` flags and the improved count observed on the same
+    job. ``rounds`` caps the hops. A step whose last hop improves
+    nothing is a fixed point: every remaining hop is a provable no-op
+    (monotone and idempotent), so the loop stops there. Sparse seeds
+    (the default) are checkpointed on their own first, so round 1's
+    frontier is broadcast by its count, then each hop is one step.
+    ``dense`` seeds cover the whole vertex set, whose frontier is never
+    small: they fold inside the first step, and ``_HOPS_PER_STEP`` hops
+    share each checkpoint. With ``must_converge`` (a phase name) a loop
+    still improving after ``rounds`` hops raises instead of returning
+    a partial fixed point. Returns the state's (*keys, ``col``)."""
+    keys = ["id", *lane]
+    state = seeds.groupBy(*keys).agg(F.min(col).alias(col)).withColumn(
+        "_improved", F.lit(True)
+    )
+    if dense:
+        steps = [
+            min(_HOPS_PER_STEP, rounds - done)
+            for done in range(0, max(rounds, 1), _HOPS_PER_STEP)
+        ]
+    else:
+        steps = [0] + [1] * rounds
+    n_frontier = -1
+    for hops in steps:
+        for _ in range(hops):
+            fr = loop.broadcast(
+                state.where(F.col("_improved")).drop("_improved"), n_frontier
+            )
+            state = _min_fold(
+                state.drop("_improved"), relax(edges.join(fr, edges.src == fr.id)), col, keys
+            )
+            n_frontier = -1
+        state = loop.step(slot, state, n=F.sum(F.col("_improved").cast("long")))
+        n_frontier = loop.seen["n"] or 0
+        if not n_frontier:
+            break
+    else:
+        if must_converge:
+            raise RuntimeError(
+                f"{must_converge} did not converge within {rounds} rounds "
+                "(diameter exceeds budget)"
+            )
+    return state.drop("_improved")
+
+
+def _delta_relax(
+    edges: DataFrame, seeds: DataFrame, col: str, relax, *, rounds: int, key=None, lane=()
+) -> DataFrame:
+    """:func:`_min_relax` from sparse ``seeds`` in a loop of its own
+    over ``edges``, partitioned by ``key``."""
+    with _Loop(edges, key=key) as loop:
+        out = _min_relax(loop, loop.base, seeds, col, relax, rounds=rounds, lane=lane)
+        loop.keep("state")
+    return out
 
 
 def weighted_sssp(
     edges: DataFrame, sources: DataFrame, *, rounds: int
 ) -> DataFrame:
     """Multi-source WEIGHTED shortest paths by synchronous Bellman-Ford
-    relaxation, exactly ``rounds`` fixed rounds: the returned ``dist``
+    relaxation, at most ``rounds`` rounds: the returned ``dist``
     is the minimum total edge weight over paths of at most ``rounds``
     edges from any source — itself a well-defined quantity (bounded-hop
     cheapest reach), and equal to the true shortest distance whenever
-    ``rounds`` ≥ the weighted-path hop depth. Fixed rounds keep the
+    ``rounds`` ≥ the weighted-path hop depth. Bounded rounds keep the
     unrolled-SQL-oracle contract of ``khop_distances`` /
     ``pagerank_fixed_point``.
 
     ``edges`` must carry (src, dst, w) with the directions the caller
     wants relaxed (symmetrize first for undirected graphs); ``sources``
-    carries (id), seeded at dist 0. Unlike BFS, a visited anti-join is
-    WRONG here (a later path may be cheaper than the first), so each
-    round relaxes only the DELTA frontier (:func:`_delta_relax`). At
-    100 TB the round primitive (join keyed by vertex id +
-    map-side-combinable min) is the same shuffle shape GraphX/Pregel
-    compile SSSP to.
+    carries (id), seeded at dist 0. Unlike BFS, a first-reach shortcut
+    is WRONG here (a later path may be cheaper than the first), so a
+    vertex re-enters the frontier whenever its distance improves
+    (:func:`_min_relax`). At 100 TB the round primitive (join keyed by
+    vertex id + map-side-combinable min) is the same shuffle shape
+    GraphX/Pregel compile SSSP to.
 
     Returns (id, dist) for every vertex reached within ``rounds``
     relaxations; sources themselves are dist 0.
     """
     return _delta_relax(
         edges,
-        sources,
+        sources.select("id", F.lit(0).cast("bigint").alias("dist")),
         "dist",
-        lambda e: e.select(
-            F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("dist")
-        ),
+        _to_dst((F.col("dist") + F.col("w")).alias("dist")),
         rounds=rounds,
     )
 
@@ -1129,9 +1172,9 @@ def temporal_earliest_arrival(
     static reachability overstates (a contact that happened BEFORE the
     source itself was reached cannot transmit). Relaxation per round:
     ``arr'(v) = min(arr(v), min{t : (u,v,t) ∈ contacts, t ≥ arr(u)})``,
-    exactly ``rounds`` rounds (bounded-hop earliest arrival — the
-    fixed-round oracle contract and delta-frontier relaxation of
-    ``weighted_sssp``, :func:`_delta_relax`). Scale shape per round:
+    at most ``rounds`` rounds (bounded-hop earliest arrival — the
+    oracle contract and delta-frontier relaxation of
+    ``weighted_sssp``, :func:`_min_relax`). Scale shape per round:
     one join keyed by vertex id against the contact list
     (broadcast-hash while the frontier is provably small) plus one
     map-side-combined min-fold aggregate — contacts shuffle ONCE up
@@ -1143,7 +1186,7 @@ def temporal_earliest_arrival(
     """
     return _delta_relax(
         contacts,
-        seeds,
+        seeds.select("id", F.lit(0).cast("bigint").alias("arrival")),
         "arrival",
         lambda e: e.where(F.col("t") >= F.col("arrival")).select(
             F.col("dst").alias("id"), F.col("t").alias("arrival")
@@ -1151,57 +1194,6 @@ def temporal_earliest_arrival(
         rounds=rounds,
         key="src",
     )
-
-
-def _delta_relax(
-    edges: DataFrame,
-    seeds: DataFrame,
-    col: str,
-    relax,
-    *,
-    rounds: int,
-    key: str | None = None,
-) -> DataFrame:
-    """Delta-frontier min relaxation shared by :func:`weighted_sssp` and
-    :func:`temporal_earliest_arrival`: the running per-vertex minimum
-    ``col`` starts at 0 on the (deduped) seeds; each round ``relax``
-    maps the edges joined to the frontier — the vertices whose value
-    improved last round, broadcast while their observed count is small
-    — to candidate (id, ``col``) rows, and :func:`_min_fold` folds them
-    into the state (one tagged-union hash aggregate — value-identical to
-    the full-outer join + ``least`` fold it replaced, at one exchange
-    per round instead of two). Work per round is O(edges incident to
-    improved vertices), provably equal to all-edge relaxation because
-    min-folding is monotone. A round that improves nothing is a fixed
-    point: every remaining unrolled round is a provable no-op (monotone
-    and idempotent), so the loop stops there. ``key`` partitions the
-    edge side for the round join."""
-    with _Loop(edges, key=key) as loop:
-        # dedupe seeds: duplicate source rows would ride through the
-        # fold as duplicate per-id rows in every round and the final
-        # result (same hazard multi_source_distances guards).
-        state = loop.step(
-            "state",
-            seeds.select("id").distinct().select("id", F.lit(0).cast("bigint").alias(col)),
-            n=F.count(F.lit(1)),
-        )
-        frontier, n_frontier = state, loop.seen["n"]
-        for _ in range(rounds):
-            fr = loop.broadcast(frontier, n_frontier)
-            folded = loop.step(
-                "state",
-                _min_fold(state, relax(loop.base.join(fr, loop.base.src == fr.id)), col),
-                i=F.sum(F.col("_improved").cast("bigint")),
-            )
-            n_frontier = loop.seen["i"] or 0
-            state = folded.select("id", F.col("n" + col).alias(col))
-            frontier = folded.where(F.col("_improved")).select(
-                "id", F.col("n" + col).alias(col)
-            )
-            if n_frontier == 0:
-                break
-        loop.keep("state")
-    return state.select("id", col)
 
 
 def label_propagation_fixed(edges: DataFrame, *, rounds: int) -> DataFrame:
@@ -1440,9 +1432,10 @@ def strongly_connected_components(
        own label). A DAG trims away entirely, so phases are paid only
        for actual cycles.
     2. COLOR: converged min-label propagation along edge DIRECTION:
-       color(v) = min id that can reach v.
+       color(v) = min id that can reach v (:func:`_min_relax`, dense).
     3. MARK: from each color root r (color(r) = r), walk edges
-       BACKWARD restricted to vertices of the same color; everything
+       BACKWARD restricted to vertices of the same color
+       (:func:`_min_relax` over the reversed edges); everything
        marked is exactly SCC(r), labeled r — which is also the
        minimum member id (any smaller member would reach r and lower
        r's own color; proof in the docstring test). Extract, repeat
@@ -1494,71 +1487,37 @@ def strongly_connected_components(
                 remaining, n_remaining = keep, n_keep
             if n_remaining == 0:
                 break
-            # -- forward min-color to convergence --------------------------
+            # -- forward min-color to convergence, then backward mark ------
+            # MARK walks the reversed edges from each colour root and stays
+            # inside the root's colour class; its final state is the
+            # phase's extracted SCCs.
             e_r = loop.step(
                 "e_r",
                 e_all.join(remaining.withColumnRenamed("id", "src"), "src", "semi")
                 .join(remaining.withColumnRenamed("id", "dst"), "dst", "semi"),
             )
-            colors = remaining.select("id", F.col("id").alias("color"))
-            for _ in range(max_rounds):
-                pred_min = (
-                    e_r.join(colors, e_r.src == colors.id)
-                    .groupBy(F.col("dst").alias("id"))
-                    .agg(F.min("color").alias("pmin"))
-                )
-                new_color = F.least(
-                    F.col("color"), F.coalesce(F.col("pmin"), F.col("color"))
-                )
-                colors = loop.step(
-                    "colors",
-                    colors.join(pred_min, "id", "left").select(
-                        "id",
-                        new_color.alias("color"),
-                        (new_color != F.col("color")).alias("_changed"),
-                    ),
-                    changed=F.sum(F.col("_changed").cast("long")),
-                ).select("id", "color")
-                if not loop.seen["changed"]:
-                    break
-            else:
-                # Exhausting the round budget mid-propagation would hand MARK
-                # non-converged colors and silently mislabel high-diameter
-                # cycle chains — the docstring's no-partial-labels contract
-                # must hold for the inner loops too, not just max_phases.
-                raise RuntimeError(
-                    f"SCC forward coloring did not converge within "
-                    f"{max_rounds} rounds (diameter exceeds budget)"
-                )
-            # -- backward mark within color classes ------------------------
-            marked = loop.step("marked", colors.where(F.col("id") == F.col("color")))
-            frontier = marked
-            for _ in range(max_rounds):
-                preds = (
-                    e_r.join(frontier, e_r.dst == frontier.id)
-                    .select(F.col("src").alias("id"), "color")
-                    .distinct()
-                )
-                # stay inside the color class, and only newly marked rows
-                same_color = preds.join(colors, ["id", "color"], "semi")
-                frontier = loop.step(
-                    "frontier", same_color.join(marked, "id", "anti"), n=F.count(F.lit(1))
-                )
-                if not loop.seen["n"]:
-                    break
-                marked = loop.step("marked", marked.unionByName(frontier))
-            else:
-                # A frontier still alive after max_rounds means the extracted
-                # set is a PARTIAL SCC; its unmarked members would get a
-                # different label next phase. Raise instead.
-                raise RuntimeError(
-                    f"SCC backward mark did not converge within "
-                    f"{max_rounds} rounds (diameter exceeds budget)"
-                )
-            assigned.append(loop.step(
-                ("assigned", len(assigned)),
-                marked.select("id", F.col("color").alias("component")),
-            ))
+            colors = _min_relax(
+                loop,
+                e_r,
+                remaining.select("id", F.col("id").alias("color")),
+                "color",
+                _to_dst("color"),
+                rounds=max_rounds,
+                dense=True,
+                slot="colors",
+                must_converge="SCC forward coloring",
+            )
+            marked = _min_relax(
+                loop,
+                e_r.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+                colors.where(F.col("id") == F.col("color")),
+                "color",
+                lambda e: _to_dst("color")(e).join(colors, ["id", "color"], "semi"),
+                rounds=max_rounds,
+                slot=("assigned", len(assigned)),
+                must_converge="SCC backward mark",
+            )
+            assigned.append(marked.select("id", F.col("color").alias("component")))
             remaining = loop.step(
                 "remaining", remaining.join(marked, "id", "anti"), n=F.count(F.lit(1))
             )
@@ -1803,37 +1762,34 @@ def ancestor_closure(parents: DataFrame, *, max_rounds: int) -> DataFrame:
     in a forest each node has exactly one parent, so every
     node→ancestor path is unique and the closure needs no distinct.
 
-    Pregel-style: each round joins the frontier's current ancestor
+    Pregel-style: each round joins the deepest level (the frontier)
     back to the parent table to climb one level (shuffle keyed by the
-    ancestor id), accumulating (node, anc, depth) rows. Fixed
-    ``max_rounds`` (an empty frontier makes remaining rounds no-op
-    joins) so a recursive-CTE oracle reproduces it exactly; chains
-    stop naturally at nodes with no parent row. Output size is O(nodes × depth) —
+    ancestor id) and checkpoints the closure with the new level
+    appended, that level's row count observed on the same job. At most
+    ``max_rounds`` levels, so a recursive-CTE oracle reproduces it
+    exactly; chains stop naturally at nodes with no parent row, and a
+    round that adds no row ends the loop (every later round would add
+    none either). Output size is O(nodes × depth) —
     bounded for the shallow trees org hierarchies actually are
     (fanout-f forests have depth log_f n).
     """
     with _Loop(parents.select("child", "parent")) as loop:
-        par = loop.base
-        closure = loop.step(
-            "closure",
-            par.select(
-                F.col("child").alias("node"),
-                F.col("parent").alias("anc"),
-                F.lit(1).alias("depth"),
-            ),
+        up = loop.base.select(F.col("child").alias("anc"), F.col("parent").alias("up"))
+        closure = up.select(
+            F.col("anc").alias("node"), F.col("up").alias("anc"), F.lit(1).alias("depth")
         )
-        frontier = closure
-        for _ in range(2, max_rounds + 1):
-            frontier = loop.step(
-                "frontier",
-                frontier.join(par, frontier.anc == par.child).select(
-                    frontier.node,
-                    par.parent.alias("anc"),
-                    (frontier.depth + 1).alias("depth"),
+        for depth in range(2, max_rounds + 1):
+            climbed = closure.where(F.col("depth") == depth - 1).join(up, "anc")
+            closure = loop.step(
+                "closure",
+                closure.unionByName(
+                    climbed.select("node", F.col("up").alias("anc"), F.lit(depth).alias("depth"))
                 ),
+                n=F.sum((F.col("depth") == depth).cast("long")),
             )
-            closure = loop.step("closure", closure.unionByName(frontier))
-        loop.keep("closure")
+            if not loop.seen["n"]:
+                break
+        loop.keep("closure" if max_rounds > 1 else "base")
     return closure
 
 

@@ -248,18 +248,33 @@ SELECT event_id, ts, user_id, event_type, value FROM events
 
 
 def _fresh_tmp(name: str) -> str:
-    """A NEW scratch dir per call: streaming checkpoints remember which
-    files were processed, so reusing one across driver re-runs would
-    make the replay emit nothing the second time. Prior calls' dirs
-    are best-effort removed first so repeated driver runs don't
-    accumulate scratch."""
+    """A NEW scratch dir per call, named ``lgs_{name}_{pid}_*``:
+    streaming checkpoints remember which files were processed, so
+    reusing one across driver re-runs would make the replay emit
+    nothing the second time. This process's earlier dirs, and those of
+    processes that are no longer alive, are best-effort removed first
+    so repeated driver runs don't accumulate scratch; another live
+    process's dir (its streaming checkpoint mid-run) is left alone."""
     import glob
     import shutil
     import tempfile
 
-    for stale in glob.glob(os.path.join(tempfile.gettempdir(), f"lgs_{name}_*")):
-        shutil.rmtree(stale, ignore_errors=True)
-    return tempfile.mkdtemp(prefix=f"lgs_{name}_")
+    prefix = f"lgs_{name}_"
+    for stale in glob.glob(os.path.join(tempfile.gettempdir(), prefix + "*")):
+        pid = os.path.basename(stale)[len(prefix):].split("_")[0]
+        if pid.isdigit() and (int(pid) == os.getpid() or not _pid_alive(int(pid))):
+            shutil.rmtree(stale, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=f"{prefix}{os.getpid()}_")
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, owned by another user
+        pass
+    return True
 
 
 @query(

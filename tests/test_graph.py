@@ -225,6 +225,65 @@ def test_min_propagation_adversarial_path(spark):
     )
 
 
+def test_khop_distances_dedupes_duplicate_sources(spark):
+    """A source listed twice is one dist-0 row: k-hop returns one row
+    per vertex, as its oracle's GROUP BY id and multi_source_distances
+    do (the shared min-relaxation fold dedupes its seeds)."""
+    from leader_graph_spark.graph.algorithms import khop_distances
+
+    edges = spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string")
+    sources = spark.createDataFrame([("a",), ("a",)], "id string")
+    out = sorted(tuple(r) for r in khop_distances(edges, sources, k=2).collect())
+    assert out == [("a", 0), ("b", 1), ("c", 2)]
+    # with no hop at all, only the seed fold stands between the
+    # duplicate and the result
+    assert [tuple(r) for r in khop_distances(edges, sources, k=0).collect()] == [("a", 0)]
+
+
+def test_relaxation_loops_take_one_checkpoint_per_round(spark, monkeypatch):
+    """On the path v0 -> v6 with round budgets far past its length, BFS,
+    SSSP, SCC's backward mark and ancestor_closure take one checkpoint
+    per round actually run on top of their fixed prologue, and none
+    after the first round that finds nothing new."""
+    n = 7
+    path = [(f"v{i}", f"v{i + 1}") for i in range(n - 1)]
+    edges = spark.createDataFrame(path, "src string, dst string")
+    seeds = spark.createDataFrame([("v0",)], "id string")
+    calls, steps = [], []
+    ckpt, step = alg._checkpoint_observed, alg._Loop.step
+    monkeypatch.setattr(
+        alg, "_checkpoint_observed", lambda df, **p: calls.append(1) or ckpt(df, **p)
+    )
+    monkeypatch.setattr(
+        alg._Loop, "step", lambda loop, name, df, **p: steps.append(name) or step(loop, name, df, **p)
+    )
+
+    def checkpoints(run):
+        calls.clear()
+        steps.clear()
+        run().collect()
+        return len(calls)
+
+    # prologue: the loop input and the seeds; rounds 1-6 each reach one
+    # vertex more, round 7 reaches none
+    assert checkpoints(lambda: alg.khop_distances(edges, seeds, k=20)) == 2 + n
+    assert checkpoints(lambda: alg.multi_source_distances(edges, seeds, k=20)) == 2 + n
+    weighted = edges.withColumn("w", F.lit(3).cast("long"))
+    assert checkpoints(lambda: alg.weighted_sssp(weighted, seeds, rounds=20)) == 2 + n
+    contacts = edges.withColumn("t", F.lit(3).cast("long"))
+    assert checkpoints(lambda: alg.temporal_earliest_arrival(contacts, seeds, rounds=20)) == 2 + n
+    # prologue: the parent table; rounds 2-6 add a level, round 7 none
+    parents = edges.select(F.col("dst").alias("child"), F.col("src").alias("parent"))
+    assert checkpoints(lambda: alg.ancestor_closure(parents, max_rounds=20)) == n
+    # on the cycle v0 -> ... -> v6 -> v0 the mark checkpoints its root,
+    # then runs rounds 1-6 that mark one vertex each and round 7 that
+    # marks none; every checkpoint is a loop step
+    cycle = spark.createDataFrame(path + [(f"v{n - 1}", "v0")], "src string, dst string")
+    verts = cycle.select(F.col("src").alias("id"))
+    assert checkpoints(lambda: alg.strongly_connected_components(verts, cycle)) == len(steps)
+    assert steps.count(("assigned", 0)) == 1 + n
+
+
 def test_two_phase_cc_matches_propagation(spark):
     """Large-star/small-star must produce exactly the converged
     min-reachable-id labels on adversarial shapes: long paths with
@@ -286,15 +345,14 @@ def test_two_phase_cc_round_count_beats_diameter(spark, monkeypatch):
 
     steps.clear()
     hops = []
-    hop = alg._min_propagation_round
-    monkeypatch.setattr(
-        alg, "_min_propagation_round", lambda sym, labels: hops.append(1) or hop(sym, labels)
-    )
+    fold = alg._min_fold
+    monkeypatch.setattr(alg, "_min_fold", lambda *a, **kw: hops.append(1) or fold(*a, **kw))
     monkeypatch.setattr(alg, "DRIVER_CC_MAX_EDGES", 0)
     out = connected_components(vertices, edges, max_iter=12)
     labels = {r.id: r.component for r in out.collect()}
-    # 12 hops, two per checkpoint: every step's last hop still changed a label
-    assert len(hops) == 12 and steps.count("labels") == 6
+    # 12 relaxation hops, two per checkpoint: every step's last hop
+    # still changed a label
+    assert len(hops) == 12 and steps.count("state") == 6
     # after 12 hops a vertex knows the minimum within 12 steps of it
     assert labels[199] == 187 and labels[12] == 0
 
@@ -990,6 +1048,45 @@ def test_temporal_earliest_arrival_respects_time_order(spark):
     assert out == {"a": 0, "b": 5, "d": 7, "c": 9}
 
 
+def test_relaxation_loops_agree_under_static_scope_and_aqe(spark, monkeypatch):
+    """Every caller of the min-relaxation loop returns the same rows
+    inside the static AQE-off scope (the default at this size) and with
+    STATIC_LOOP_MAX_ROWS patched to 0, where its loops run under the
+    session's AQE settings."""
+    big = 2**62
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 4), (6, 7), (big, 1), (8, 8), (1, 2)],
+        "src bigint, dst bigint",
+    )
+    verts = spark.createDataFrame([(i,) for i in (1, 2, 3, 4, 5, 6, 7, 8, 99, big)], "id bigint")
+    seeds = spark.createDataFrame([(1,), (1,), (6,), (99,)], "id bigint")
+    weighted = edges.withColumn("w", F.col("src") % 3 + 1)
+    contacts = edges.withColumn("t", (F.col("dst") * 7) % 5)
+    runs = {
+        "khop": lambda: alg.khop_distances(edges, seeds, k=3),
+        "multi-source": lambda: alg.multi_source_distances(edges, seeds, k=3),
+        "sssp": lambda: alg.weighted_sssp(weighted, seeds, rounds=6),
+        "temporal": lambda: alg.temporal_earliest_arrival(contacts, seeds, rounds=6),
+        "CC loop": lambda: alg.connected_components(verts, edges),
+        "SCC": lambda: alg.strongly_connected_components(verts, edges),
+    }
+    monkeypatch.setattr(alg, "DRIVER_CC_MAX_EDGES", 0)
+    active = []
+    step = alg._Loop.step
+    monkeypatch.setattr(
+        alg._Loop, "step", lambda loop, *a, **p: active.append(loop.active) or step(loop, *a, **p)
+    )
+    for name, run in runs.items():
+        active.clear()
+        static = sorted(tuple(r) for r in run().collect())
+        assert any(active), name
+        with mock.patch.object(alg, "STATIC_LOOP_MAX_ROWS", 0):
+            active.clear()
+            adaptive = sorted(tuple(r) for r in run().collect())
+            assert not any(active), name
+        assert static and static == adaptive, name
+
+
 def test_loop_partitioned_gate_and_layout(spark):
     """_Loop's static-side layout (r10): in an active static scope of at
     least PARTITIONED_MIN_ROWS rows the loop input comes back
@@ -1065,7 +1162,7 @@ def test_min_fold_equals_full_outer_fold(spark):
         "id string, dist long",
     )
     got = {
-        (r.id): (r.ndist, bool(r._improved) if r._improved is not None else None)
+        (r.id): (r.dist, bool(r._improved) if r._improved is not None else None)
         for r in _min_fold(state, relaxed, "dist").collect()
     }
     # reference: the retired full-outer join + least fold, verbatim

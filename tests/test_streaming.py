@@ -247,3 +247,35 @@ def test_foreach_batch_crash_recovery_exactly_once(spark, tmp_path):
     assert {(r.k, r.v) for r in got.collect()} == set(src_rows)
     # no duplicate keys survived the replay
     assert got.groupBy("k").count().where(F.col("count") > 1).count() == 0
+
+
+def test_fresh_tmp_spares_a_live_process_dir():
+    """_fresh_tmp removes this process's earlier scratch dirs and those
+    of processes that are gone, and leaves the dir of a live process
+    (its streaming checkpoint mid-run) in place."""
+    import glob
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    from leader_graph_spark.plans.boundary_queries import _fresh_tmp
+
+    name = "fresh_tmp_probe"
+    dead = subprocess.Popen([sys.executable, "-c", "pass"])
+    dead.wait()
+    live = subprocess.Popen([sys.executable, "-c", "import time; time.sleep(60)"])
+    try:
+        live_dir = tempfile.mkdtemp(prefix=f"lgs_{name}_{live.pid}_")
+        dead_dir = tempfile.mkdtemp(prefix=f"lgs_{name}_{dead.pid}_")
+        first = _fresh_tmp(name)
+        assert os.path.basename(first).startswith(f"lgs_{name}_{os.getpid()}_")
+        assert not os.path.exists(dead_dir)
+        second = _fresh_tmp(name)
+        assert not os.path.exists(first) and os.path.isdir(second)
+        assert os.path.isdir(live_dir)
+    finally:
+        live.kill()
+        live.wait()
+        for d in glob.glob(os.path.join(tempfile.gettempdir(), f"lgs_{name}_*")):
+            shutil.rmtree(d, ignore_errors=True)
