@@ -13,7 +13,12 @@ semantics:
   earliest-end (``:280-311``); excluded school (``:265``).
 - COLLEAGUES (J5 current / J6 historical): current pairs carry
   ``overlapPeriod='till now'`` (``:373-396``); historical pairs require
-  all four date parts non-null on both sides (``:398-489``).
+  all four date parts non-null on both sides (``:398-489``) and are the
+  interval-overlap join (``operators.intervals``) over those rows.
+
+Every builder pairs rows through ``operators.pairs.keyed_pairs``, whose
+keys compare with SQL ``=``: a person whose group, school or org is
+null pairs with no one, as in the reference's Cypher ``MATCH``.
 """
 
 from __future__ import annotations
@@ -24,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from leader_graph_spark.functions.scalar import format_period
+from leader_graph_spark.operators.intervals import interval_overlap_self_join
+from leader_graph_spark.operators.pairs import keyed_pairs
 
 # skew_guarded_self_pairs: a group of more than PAIR_HOT_CAP rows is
 # hot (cap² ≈ 10¹⁰ pair-ops is the single-task straggler knee) and its
@@ -87,33 +94,14 @@ def skew_guarded_self_pairs(
         .select("_hg")
     )
     cold = ck.join(hot, ck[group_col] == hot["_hg"], "left_anti")
-    pair_id = (
-        (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        if ordered
-        else (F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-    )
-    cold_pairs = (
-        cold.alias("a")
-        .join(
-            cold.alias("b"),
-            (F.col(f"a.{group_col}") == F.col(f"b.{group_col}")) & pair_id,
-        )
-        .select(*emit())
-    )
+    cold_pairs = keyed_pairs(cold, [group_col], id_col, ordered=ordered).select(*emit())
     hot_rows = ck.join(hot, ck[group_col] == hot["_hg"], "left_semi")
     hl = hot_rows.withColumn("_pb", F.pmod(F.xxhash64(F.col(id_col)), F.lit(k)))
     hr = hot_rows.withColumn(
-        "_pj", F.explode(F.sequence(F.lit(0).cast("bigint"), F.lit(k - 1).cast("bigint")))
+        "_pb", F.explode(F.sequence(F.lit(0).cast("bigint"), F.lit(k - 1).cast("bigint")))
     )
-    hot_pairs = (
-        hl.alias("a")
-        .join(
-            hr.alias("b"),
-            (F.col(f"a.{group_col}") == F.col(f"b.{group_col}"))
-            & (F.col("a._pb") == F.col("b._pj"))
-            & pair_id,
-        )
-        .select(*emit())
+    hot_pairs = keyed_pairs(hl, [group_col, "_pb"], id_col, other=hr, ordered=ordered).select(
+        *emit()
     )
     return cold_pairs.unionByName(hot_pairs)
 
@@ -132,15 +120,11 @@ def same_group_pairs(
     base = df.filter(
         F.col(group_col).isNotNull() & (F.col(group_col).cast("string") != "")
     )
-    a, b = base.alias("a"), base.alias("b")
-    cond = (F.col(f"a.{group_col}") == F.col(f"b.{group_col}")) & (
-        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    )
     out = [F.col(f"a.{group_col}").alias(group_col)]
     out += [F.col(f"a.{id_col}").alias(f"{id_col}_1"), F.col(f"b.{id_col}").alias(f"{id_col}_2")]
     for c in carry_cols:
         out += [F.col(f"a.{c}").alias(f"{c}_1"), F.col(f"b.{c}").alias(f"{c}_2")]
-    return a.join(b, cond).select(*out)
+    return keyed_pairs(base, [group_col], id_col).select(*out)
 
 
 def _months(year: Column, month: Column, default_month: int) -> Column:
@@ -236,20 +220,15 @@ def historical_colleague_edges(
         & F.col(end_year).isNotNull()
         & F.col(end_month).isNotNull()
     )
-    a, b = complete.alias("a"), complete.alias("b")
-    cond = (F.col(f"a.{org_col}") == F.col(f"b.{org_col}")) & (
-        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    months = complete.select(
+        org_col,
+        id_col,
+        (F.col(start_year) * 12 + F.col(start_month)).alias("start_m"),
+        (F.col(end_year) * 12 + F.col(end_month)).alias("end_m"),
     )
-    a_start = F.col(f"a.{start_year}") * 12 + F.col(f"a.{start_month}")
-    a_end = F.col(f"a.{end_year}") * 12 + F.col(f"a.{end_month}")
-    b_start = F.col(f"b.{start_year}") * 12 + F.col(f"b.{start_month}")
-    b_end = F.col(f"b.{end_year}") * 12 + F.col(f"b.{end_month}")
-    overlaps = (a_start <= b_end) & (b_start <= a_end)
-    return a.join(b, cond & overlaps).select(
-        F.col(f"a.{org_col}").alias(org_col),
-        F.col(f"a.{id_col}").alias(f"{id_col}_1"),
-        F.col(f"b.{id_col}").alias(f"{id_col}_2"),
-        format_period(F.greatest(a_start, b_start), F.least(a_end, b_end)).alias(
-            "overlap_period"
-        ),
+    return interval_overlap_self_join(months, key_cols=[org_col], id_col=id_col).select(
+        org_col,
+        f"{id_col}_1",
+        f"{id_col}_2",
+        format_period(F.col("overlap_start"), F.col("overlap_end")).alias("overlap_period"),
     )

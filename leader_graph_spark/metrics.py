@@ -31,6 +31,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
@@ -100,14 +101,30 @@ def _stage_list(spark: SparkSession):
         return store.stageList(jvm.java.util.ArrayList())
 
 
+def _last_id(spark: SparkSession, kind: str) -> int:
+    """Largest ``kind`` ("job" or "stage") id in the status store, read
+    as the first row of the store's natural index in reverse; -1 when
+    empty."""
+    cls = spark._jvm.java.lang.Class.forName(f"org.apache.spark.status.{kind.title()}DataWrapper")
+    it = _store(spark).store().view(cls).reverse().max(1).iterator()
+    return getattr(it.next().info(), f"{kind}Id")() if it.hasNext() else -1
+
+
 def _max_ids(spark: SparkSession) -> tuple[int, int]:
     """(max job id, max stage id) currently in the status store; -1 when empty."""
-    store = _store(spark)
-    jobs = store.jobsList(spark._jvm.java.util.ArrayList())
-    max_job = max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
-    stages = _stage_list(spark)
-    max_stage = max((stages.apply(i).stageId() for i in range(stages.size())), default=-1)
-    return max_job, max_stage
+    return _last_id(spark, "job"), _last_id(spark, "stage")
+
+
+def _read_after(spark: SparkSession, kind: str, read: Callable[[int], Any], after: int) -> list:
+    """``read(id)`` for every id above ``after`` up to the store's
+    largest; ids the store does not hold are skipped."""
+    out = []
+    for i in range(after + 1, _last_id(spark, kind) + 1):
+        try:
+            out.append(read(i))
+        except Py4JJavaError:  # NoSuchElementException
+            continue
+    return out
 
 
 def measure_action(spark: SparkSession, action: Callable[[], Any]) -> Ledger:
@@ -115,9 +132,11 @@ def measure_action(spark: SparkSession, action: Callable[[], Any]) -> Ledger:
     ``.count()``, a noop-sink write, a whole pipeline) and return the
     Ledger of everything it executed.
 
-    The status-store listener processes events asynchronously on the
-    driver event bus; after the action returns we wait (bounded) until
-    the store has no ACTIVE stages newer than the start mark so
+    Jobs and stages newer than the start mark are read by id, so the
+    cost follows the action's own job and stage count, not the history
+    the store retains. The status-store listener processes events
+    asynchronously on the driver event bus; after the action returns we
+    wait (bounded) until no new stage is still ACTIVE or PENDING so
     completed metrics are final.
     """
     start_job, start_stage = _max_ids(spark)
@@ -126,26 +145,22 @@ def measure_action(spark: SparkSession, action: Callable[[], Any]) -> Ledger:
     led.result = action()
     led.wall_sec = time.perf_counter() - t0
 
-    # Let the async AppStatusListener drain: poll until no new-stage is
-    # still ACTIVE/PENDING (bounded at 5s — local event buses drain in
-    # milliseconds; the bound only guards a wedged bus).
-    deadline = time.time() + 5.0
-    while time.time() < deadline:
-        stages = _stage_list(spark)
-        busy = any(
-            stages.apply(i).stageId() > start_stage
-            and str(stages.apply(i).status()) in ("ACTIVE", "PENDING")
-            for i in range(stages.size())
-        )
-        if not busy:
-            break
-        time.sleep(0.05)
+    store = _store(spark)
 
-    stages = _stage_list(spark)
-    for i in range(stages.size()):
-        s = stages.apply(i)
-        if s.stageId() <= start_stage:
-            continue
+    def new_stages() -> list:
+        return _read_after(spark, "stage", store.lastStageAttempt, start_stage)
+
+    # Let the async listener drain, bounded at 5s: local event buses
+    # drain in milliseconds; the bound only guards a wedged bus.
+    deadline = time.time() + 5.0
+    stages = new_stages()
+    while time.time() < deadline and any(
+        str(s.status()) in ("ACTIVE", "PENDING") for s in stages
+    ):
+        time.sleep(0.05)
+        stages = new_stages()
+
+    for s in stages:
         if str(s.status()) == "SKIPPED":
             led.skipped_stages += 1
             continue
@@ -155,8 +170,7 @@ def measure_action(spark: SparkSession, action: Callable[[], Any]) -> Ledger:
         led.shuffle_read_bytes += s.shuffleReadBytes()
         led.mem_spill_bytes += s.memoryBytesSpilled()
         led.disk_spill_bytes += s.diskBytesSpilled()
-    jobs = _store(spark).jobsList(spark._jvm.java.util.ArrayList())
-    led.jobs = sum(1 for i in range(jobs.size()) if jobs.apply(i).jobId() > start_job)
+    led.jobs = len(_read_after(spark, "job", store.job, start_job))
     return led
 
 

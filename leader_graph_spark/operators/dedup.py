@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 
 from leader_graph_spark.functions.scalar import bind
 from leader_graph_spark.graph.algorithms import _driver_frame, _release
+from leader_graph_spark.operators.pairs import keyed_pairs
 from leader_graph_spark.sources.tables import fan_out
 
 HEX = "0123456789abcdef"
@@ -196,14 +197,8 @@ def lsh_candidate_pairs(
     buckets = lsh_band_buckets(
         signatures, id_col=id_col, num_hashes=num_hashes, bands=bands
     )
-    a, b = buckets.alias("a"), buckets.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        keyed_pairs(buckets, ["band", "key"], id_col)
         .select(
             F.col(f"a.{id_col}").alias("id_1"), F.col(f"b.{id_col}").alias("id_2")
         )
@@ -643,12 +638,7 @@ def ngram_jaccard_pairs(
     fanned = fan_out(df)
     sh = shingle_rows(fanned, id_col=id_col, text_col=text_col, n=shingle_n)
     pairs = (
-        sh.alias("a")
-        .join(
-            sh.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        keyed_pairs(sh, ["shingle"], id_col)
         .select(
             F.col(f"a.{id_col}").alias("id_1"), F.col(f"b.{id_col}").alias("id_2")
         )
@@ -718,7 +708,6 @@ def jaccard_prefix_candidates(
             "pos",
         )
     )
-    a, b = prefix.alias("a"), prefix.alias("b")
     ubound = (
         F.least(
             F.col("a.sz") - F.col("a.pos"), F.col("b.sz") - F.col("b.pos")
@@ -726,11 +715,11 @@ def jaccard_prefix_candidates(
         + 1
     )
     return (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.pid") < F.col("b.pid"))
-            & (F.lit(t_den) * F.col("a.sz") >= F.lit(t_num) * F.col("b.sz"))
+        keyed_pairs(
+            prefix,
+            ["shingle"],
+            "pid",
+            where=(F.lit(t_den) * F.col("a.sz") >= F.lit(t_num) * F.col("b.sz"))
             & (F.lit(t_den) * F.col("b.sz") >= F.lit(t_num) * F.col("a.sz"))
             & (
                 F.lit(t_num + t_den) * ubound
@@ -903,14 +892,8 @@ def simhash_near_dup_pairs(
     buckets = sims.select(
         F.col(id_col), F.col("simhash"), F.explode(F.array(*band_cols)).alias("bk")
     ).select(id_col, "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a, b = buckets.alias("a"), buckets.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        keyed_pairs(buckets, ["band", "key"], id_col)
         .select(
             F.col(f"a.{id_col}").alias("id_1"),
             F.col(f"b.{id_col}").alias("id_2"),

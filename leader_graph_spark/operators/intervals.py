@@ -14,7 +14,11 @@ Semantics reproduced exactly:
 - overlap test ``s1.start <= s2.end AND s2.start <= s1.end``;
 - overlap bounds via greatest(start)/least(end) (collapsing the
   reference's 24-line CASE ladders at ``src/mysql2neo4j.py:280-311``);
-- pair dedup by ``id1 < id2`` (``src/mysql2neo4j.py:267,402``).
+- pair dedup by ``id1 < id2`` (``src/mysql2neo4j.py:267,402``);
+- keys compare with SQL ``=``, so a row whose key is null pairs with no
+  row (the reference's ``MATCH`` and the flagship oracle's
+  ``a.c_nationkey = b.c_nationkey``). Both joins build their pairs
+  through ``operators.pairs.keyed_pairs``.
 
 Scale design (100 TB): the naive equi-join on the shared key is correct
 but a hot key (one giant school) produces O(n^2) pairs in a single
@@ -32,19 +36,36 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from leader_graph_spark.operators.pairs import keyed_pairs
 
-def _pairs(
+
+def _overlap_pairs(
     df: DataFrame,
+    join_keys: Sequence[str],
     key_cols: Sequence[str],
     id_col: str,
-    join_keys: Sequence[Column],
-) -> tuple[DataFrame, DataFrame, Column]:
-    a = df.alias("a")
-    b = df.alias("b")
-    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    for k in join_keys:
-        cond = cond & k
-    return a, b, cond
+    start_col: str,
+    end_col: str,
+    carry_cols: Sequence[str],
+    anchor: Column | None = None,
+) -> DataFrame:
+    a_start, b_start = F.col(f"a.{start_col}"), F.col(f"b.{start_col}")
+    a_end, b_end = F.col(f"a.{end_col}"), F.col(f"b.{end_col}")
+    where = (a_start <= b_end) & (b_start <= a_end)
+    if anchor is not None:
+        where = where & anchor
+    out_cols = [F.col(f"a.{k}").alias(k) for k in key_cols]
+    out_cols += [
+        F.col(f"a.{id_col}").alias(f"{id_col}_1"),
+        F.col(f"b.{id_col}").alias(f"{id_col}_2"),
+    ]
+    for c in carry_cols:
+        out_cols += [F.col(f"a.{c}").alias(f"{c}_1"), F.col(f"b.{c}").alias(f"{c}_2")]
+    out_cols += [
+        F.greatest(a_start, b_start).alias("overlap_start"),
+        F.least(a_end, b_end).alias("overlap_end"),
+    ]
+    return keyed_pairs(df, join_keys, id_col, where=where).select(*out_cols)
 
 
 def interval_overlap_self_join(
@@ -62,24 +83,7 @@ def interval_overlap_self_join(
     Output columns: key_cols, ``{id_col}_1``/``_2``, carry cols suffixed
     ``_1``/``_2``, ``overlap_start`` / ``overlap_end`` month-scalars.
     """
-    a, b, cond = _pairs(
-        df, key_cols, id_col, [F.col(f"a.{k}").eqNullSafe(F.col(f"b.{k}")) for k in key_cols]
-    )
-    overlap = (F.col(f"a.{start_col}") <= F.col(f"b.{end_col}")) & (
-        F.col(f"b.{start_col}") <= F.col(f"a.{end_col}")
-    )
-    out_cols = [F.col(f"a.{k}").alias(k) for k in key_cols]
-    out_cols += [
-        F.col(f"a.{id_col}").alias(f"{id_col}_1"),
-        F.col(f"b.{id_col}").alias(f"{id_col}_2"),
-    ]
-    for c in carry_cols:
-        out_cols += [F.col(f"a.{c}").alias(f"{c}_1"), F.col(f"b.{c}").alias(f"{c}_2")]
-    out_cols += [
-        F.greatest(F.col(f"a.{start_col}"), F.col(f"b.{start_col}")).alias("overlap_start"),
-        F.least(F.col(f"a.{end_col}"), F.col(f"b.{end_col}")).alias("overlap_end"),
-    ]
-    return a.join(b, cond & overlap).select(*out_cols)
+    return _overlap_pairs(df, key_cols, key_cols, id_col, start_col, end_col, carry_cols)
 
 
 def interval_overlap_self_join_bucketed(
@@ -112,29 +116,18 @@ def interval_overlap_self_join_bucketed(
             )
         ),
     )
-    a = bucketed.alias("a")
-    b = bucketed.alias("b")
-    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    for k in key_cols:
-        cond = cond & F.col(f"a.{k}").eqNullSafe(F.col(f"b.{k}"))
-    cond = cond & (F.col("a.__bucket") == F.col("b.__bucket"))
-    overlap = (F.col(f"a.{start_col}") <= F.col(f"b.{end_col}")) & (
-        F.col(f"b.{start_col}") <= F.col(f"a.{end_col}")
-    )
     later_start = F.greatest(F.col(f"a.{start_col}"), F.col(f"b.{start_col}"))
     anchor = (later_start / bucket_months).cast("long") == F.col("a.__bucket")
-    out_cols = [F.col(f"a.{k}").alias(k) for k in key_cols]
-    out_cols += [
-        F.col(f"a.{id_col}").alias(f"{id_col}_1"),
-        F.col(f"b.{id_col}").alias(f"{id_col}_2"),
-    ]
-    for c in carry_cols:
-        out_cols += [F.col(f"a.{c}").alias(f"{c}_1"), F.col(f"b.{c}").alias(f"{c}_2")]
-    out_cols += [
-        later_start.alias("overlap_start"),
-        F.least(F.col(f"a.{end_col}"), F.col(f"b.{end_col}")).alias("overlap_end"),
-    ]
-    return a.join(b, cond & overlap & anchor).select(*out_cols)
+    return _overlap_pairs(
+        bucketed,
+        [*key_cols, "__bucket"],
+        key_cols,
+        id_col,
+        start_col,
+        end_col,
+        carry_cols,
+        anchor,
+    )
 
 
 def point_in_interval_join(

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from leader_graph_spark.operators.pairs import keyed_pairs
+
 
 def _deletion_variants_expr(col: str, k: int) -> str:
     """SQL expression: array of all strings obtained by deleting at
@@ -96,10 +98,8 @@ def similar_string_pairs(
             F.array_distinct(F.expr(_deletion_variants_expr("name", k)))
         ).alias("variant"),
     ).select("name", F.xxhash64("variant").alias("vh"))
-    a = variants.alias("a")
-    b = variants.alias("b")
     cand = (
-        a.join(b, (F.col("a.vh") == F.col("b.vh")) & (F.col("a.name") < F.col("b.name")))
+        keyed_pairs(variants, ["vh"], "name")
         .select(F.col("a.name").alias("name_a"), F.col("b.name").alias("name_b"))
         .distinct()
     )

@@ -28,6 +28,7 @@ from leader_graph_spark.graph.derived import (
     same_group_pairs,
     schoolmate_edges,
 )
+from leader_graph_spark.operators.pairs import keyed_pairs
 from leader_graph_spark.plans.registry import query
 from leader_graph_spark.sources.tables import load_table
 
@@ -222,14 +223,10 @@ def schoolmate_edges_dedup_antijoin(spark: SparkSession, sf_dir: str) -> DataFra
     )
     from leader_graph_spark.functions.scalar import format_period
 
-    a, b = study.alias("a"), study.alias("b")
-    cond = (F.col("a.school") == F.col("b.school")) & (
-        F.col("a.person_id") < F.col("b.person_id")
-    )
     overlaps = (F.col("a.start_m") <= F.col("b.end_m")) & (
         F.col("b.start_m") <= F.col("a.end_m")
     )
-    edges = a.join(b, cond).select(
+    edges = keyed_pairs(study, ["school"], "person_id").select(
         F.col("a.school").alias("school"),
         F.col("a.person_id").alias("person_id_1"),
         F.col("b.person_id").alias("person_id_2"),
@@ -1316,8 +1313,7 @@ def supplier_role_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     sp = li.select(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")).distinct().localCheckpoint()
     pairs = (
-        sp.alias("a")
-        .join(sp.alias("b"), (F.col("a.p") == F.col("b.p")) & (F.col("a.s") < F.col("b.s")))
+        keyed_pairs(sp, ["p"], "s")
         .select(F.col("a.s").alias("s1"), F.col("b.s").alias("s2"))
         .distinct()
     )

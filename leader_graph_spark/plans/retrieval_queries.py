@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from leader_graph_spark.operators.pairs import keyed_pairs
 from leader_graph_spark.plans.registry import query
 from leader_graph_spark.sources.tables import fan_out, load_table
 
@@ -226,11 +227,8 @@ def copurchase_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Broadcast the capped-degree table onto ONE side before the pair
     # expansion: super-node parts never reach the self-join at all.
-    a = cp.join(F.broadcast(deg), "part").alias("a")
-    b = cp.alias("b")
-    pairs = a.join(
-        b, (F.col("a.part") == F.col("b.part")) & (F.col("a.cust") < F.col("b.cust"))
-    ).select(
+    capped = cp.join(F.broadcast(deg), "part")
+    pairs = keyed_pairs(capped, ["part"], "cust", other=cp).select(
         F.col("a.cust").alias("cust_a"),
         F.col("b.cust").alias("cust_b"),
         F.col("a.wt").alias("wt"),

@@ -157,3 +157,62 @@ def test_distributed_minhash_bytes_budget(spark, sf_smoke, name):
 @pytest.mark.parametrize("name", sorted(DRIVER_MINHASH_BUDGETS))
 def test_driver_minhash_bytes_budget(spark, sf_smoke, name):
     _bytes_budget(spark, sf_smoke, name, *DRIVER_MINHASH_BUDGETS[name])
+
+
+def _listed_ledger(spark, mark: tuple[int, int]) -> dict:
+    """Reference ledger: list the whole status store and sum every entry
+    newer than ``mark``."""
+    from leader_graph_spark.metrics import _stage_list, _store
+
+    job_mark, stage_mark = mark
+    out = dict.fromkeys(
+        ("jobs", "stages", "skipped_stages", "tasks", "shuffle_write_bytes", "shuffle_read_bytes"), 0
+    )
+    stages = _stage_list(spark)
+    for s in (stages.apply(i) for i in range(stages.size())):
+        if s.stageId() <= stage_mark:
+            continue
+        if str(s.status()) == "SKIPPED":
+            out["skipped_stages"] += 1
+            continue
+        out["stages"] += 1
+        out["tasks"] += s.numTasks()
+        out["shuffle_write_bytes"] += s.shuffleWriteBytes()
+        out["shuffle_read_bytes"] += s.shuffleReadBytes()
+    jobs = _store(spark).jobsList(spark._jvm.java.util.ArrayList())
+    out["jobs"] = sum(1 for i in range(jobs.size()) if jobs.apply(i).jobId() > job_mark)
+    return out
+
+
+def _listed_max_ids(spark) -> tuple[int, int]:
+    from leader_graph_spark.metrics import _stage_list, _store
+
+    jobs = _store(spark).jobsList(spark._jvm.java.util.ArrayList())
+    stages = _stage_list(spark)
+    return (
+        max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1),
+        max((stages.apply(i).stageId() for i in range(stages.size())), default=-1),
+    )
+
+
+def test_measure_by_id_matches_the_store_listing(spark):
+    """The ledger reads each job and stage above the start mark by id;
+    after a long session history it must count what listing the whole
+    store counts: jobs, stages, skipped stages, tasks and bytes."""
+    from leader_graph_spark.metrics import _max_ids
+
+    for _ in range(50):
+        spark.range(1).collect()
+    mark = _listed_max_ids(spark)
+    assert _max_ids(spark) == mark
+
+    def multi_stage():
+        a = spark.range(200_000).groupBy((F.col("id") % 13).alias("k")).count()
+        b = spark.range(100_000).groupBy((F.col("id") % 7).alias("k")).agg(F.sum("id").alias("s"))
+        return a.join(b.hint("shuffle_merge"), "k").groupBy("count").agg(F.sum("s"))
+
+    led = measure_query(spark, multi_stage)
+    want = _listed_ledger(spark, mark)
+    assert want["jobs"] >= 2 and want["stages"] >= 3 and want["skipped_stages"] >= 1, want
+    got = {k: getattr(led, k) for k in want}
+    assert got == want

@@ -9,7 +9,7 @@ through one Spark job to keep the suite fast."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -110,11 +110,12 @@ def test_run_timestamp_injectable(spark):
 # Interval-overlap self-join invariants (the flagship J4/J6 primitive):
 # against a brute-force Python reference on arbitrary generated
 # intervals — pair direction, exact pair set, and overlap-window bounds.
+# Keys compare with SQL ``=``: a null key pairs with no row.
 # ---------------------------------------------------------------------------
 
 intervals = st.lists(
     st.tuples(
-        st.integers(min_value=0, max_value=3),      # key (few groups → collisions)
+        st.one_of(st.none(), st.integers(min_value=0, max_value=3)),  # key (few groups → collisions)
         st.integers(min_value=23800, max_value=23860),  # start month-scalar
         st.integers(min_value=0, max_value=40),     # duration months
     ),
@@ -123,8 +124,13 @@ intervals = st.lists(
 )
 
 
+# two null-key rows whose intervals overlap
+_NULL_KEY_OVERLAP = [(None, 24000, 10), (None, 24005, 15)]
+
+
 @settings(**_SETTINGS)
 @given(intervals)
+@example(_NULL_KEY_OVERLAP)
 def test_interval_overlap_join_matches_bruteforce(spark, rows):
     from leader_graph_spark.operators.intervals import interval_overlap_self_join
 
@@ -139,13 +145,14 @@ def test_interval_overlap_join_matches_bruteforce(spark, rows):
     expect = set()
     for i1, k1, s1, e1 in data:
         for i2, k2, s2, e2 in data:
-            if k1 == k2 and i1 < i2 and s1 <= e2 and s2 <= e1:
+            if k1 is not None and k1 == k2 and i1 < i2 and s1 <= e2 and s2 <= e1:
                 expect.add((k1, i1, i2, s1, e1, s2, e2))
     assert got == expect
 
 
 @settings(**_SETTINGS)
 @given(intervals)
+@example(_NULL_KEY_OVERLAP)
 def test_bucketed_interval_join_equals_naive(spark, rows):
     """The month-bucket blocking variant (the 100 TB skew path) must
     produce exactly the naive join's pair set — no duplicates from a
@@ -166,7 +173,7 @@ def test_bucketed_interval_join_equals_naive(spark, rows):
         (k1, i1, i2)
         for i1, k1, s1, e1 in data
         for i2, k2, s2, e2 in data
-        if k1 == k2 and i1 < i2 and s1 <= e2 and s2 <= e1
+        if k1 is not None and k1 == k2 and i1 < i2 and s1 <= e2 and s2 <= e1
     }
     assert got == expect
 
